@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 object Bench {
   /** Executor-CPU tap: sums taskMetrics.executorCpuTime (ns) across task
@@ -22,22 +22,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // ASOF SQL + native fns
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bounded-buffer udaf aggregates must keep HASH aggregation past
-      // 128 keys (see GraftSession: the 49 GB knn spill finding)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 18).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-respecting AQE coalescing (see GraftSession scaladoc): tiny
-      // shuffles collapse to few tasks instead of one-per-core
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096") // see GraftSession
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the one session config, shared with Verify: it checks the plans timed here
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Each query runs SPARK_GRAFT_REPEAT times (default 2) and reports the
     // per-query MINIMUM wall time: the r5/r6 adjudications both hinged on

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object MiniBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -8,18 +7,7 @@ object MiniBench {
       .flatMap(_.split(";")).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
     val spark = overrides.foldLeft(
-      SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions) // ASOF SQL + native fns
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bounded-buffer udaf aggregates must keep HASH aggregation past
-      // 128 keys (see GraftSession: the 49 GB knn spill finding)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 18).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
+      graft.core.GraftSession.builder("local[32]", 32)
     ) { (b, kv) => b.config(kv._1, kv._2) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions.{col, sum}

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,23 +15,8 @@ object Verify {
         sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // ASOF SQL + native fns
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bounded-buffer udaf aggregates must keep HASH aggregation past
-      // 128 keys (see GraftSession: the 49 GB knn spill finding)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 18).toString)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size-respecting AQE coalescing, same as the bench session (results
-      // are partition-count invariant — spec-pinned; this keeps the
-      // verify surface on the same plans the bench times)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096") // see GraftSession
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the one session config: Verify checks the plans Bench times
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

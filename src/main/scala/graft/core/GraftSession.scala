@@ -25,8 +25,17 @@ object GraftSession {
       // scale-adaptive choice — the same 64 MB target yields the right
       // partition widths at 100 TB (Spark's own docs recommend false for
       // production); shuffle.partitions stays the upper bound / skew
-      // escape hatch.
+      // escape hatch. Writers are the exception: per-file cost, not
+      // bytes, dominates them, so they route series with an explicit
+      // partition count (CandleStore.bySeries), which AQE never coalesces.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // Cached frames are coalesced by size like any other shuffle (default
+      // false: a cache keeps all shuffle.partitions outputs). Backfill's
+      // cached 1m frame otherwise started every cascade op with 32 tiny
+      // tasks (~0.5 s of wall per op over ~70k rows on a 4-core local[4]).
+      // Spark ≥ 3.5.1 carries the SPARK-45592 fix for joins over such
+      // caches; CachedCascadeSpec pins exactness.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by

@@ -21,18 +21,20 @@ final class CandleStore(val root: String) {
     * partition overwrite: re-writing an already-ingested window replaces
     * exactly the touched partitions — idempotent, no global rewrite.
     *
-    * Rows are sorted by bucket_ts within each task before the write, so
-    * every parquet row group covers a narrow time slice and its min/max
-    * statistics prune time-range scans BELOW the partition level —
-    * partition pruning picks the series directory, row-group stats skip
-    * most of the files inside it.
+    * Each series is routed to one writer task (`CandleStore.bySeries`),
+    * so it lands as one file; the writer stage keeps one task per core,
+    * because per-file cost, not bytes, dominates it. Rows are sorted by
+    * bucket_ts within each task before the write, so every parquet row
+    * group covers a narrow time slice and its min/max statistics prune
+    * time-range scans BELOW the partition level — partition pruning picks
+    * the series directory, row-group stats skip most of the files inside
+    * it.
     */
   def write(candles: DataFrame, exchange: String, tf: Timeframe): Unit =
-    candles
-      .withColumn("exchange", lit(exchange))
-      .withColumn("timeframe", lit(tf.toString))
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+    CandleStore.bySeries(candles
+        .withColumn("exchange", lit(exchange))
+        .withColumn("timeframe", lit(tf.toString)),
+      Seq("symbol"), "bucket_ts")
       .write
       .partitionBy("exchange", "symbol", "timeframe")
       .option("partitionOverwriteMode", "dynamic")
@@ -117,10 +119,8 @@ final class CandleStore(val root: String) {
         Candles.mergePartials(clean,
           Seq("exchange", "symbol", "timeframe", "bucket_ts"))
       else clean
-    folded
-      .repartition(col("exchange"), col("symbol"), col("timeframe"))
-      .sortWithinPartitions(col("exchange"), col("symbol"), col("timeframe"),
-        col("bucket_ts")) // time-sorted row groups: stats prune range scans
+    // time-sorted row groups: stats prune range scans
+    CandleStore.bySeries(folded, Seq("exchange", "symbol", "timeframe"), "bucket_ts")
       .write
       .partitionBy("exchange", "symbol", "timeframe")
       .option("compression", "zstd")
@@ -155,4 +155,17 @@ final class CandleStore(val root: String) {
       .sort(col("bucket_ts"))
       .coalesce(1)
       .write.option("header", "true").mode(SaveMode.Overwrite).csv(out)
+}
+
+object CandleStore {
+
+  /** Route each series (the `series` key) to exactly one task, rows sorted
+    * by series then `time`, for writers that emit one file per series.
+    * The explicit partition count (one per core) is what keeps the
+    * fan-out: AQE coalesces a count-free `repartition` by bytes, which for
+    * candle-sized data collapses every series onto ONE writer task.
+    */
+  private[graft] def bySeries(df: DataFrame, series: Seq[String], time: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, series.map(col): _*)
+      .sortWithinPartitions((series :+ time).map(col): _*)
 }

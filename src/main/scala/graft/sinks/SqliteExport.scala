@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.core.Timeframe
+import graft.ohlcv.CandleStore
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,10 +13,13 @@ import org.apache.spark.sql.functions._
   * export writes real SQLite files (see SqliteFile) with the same table
   * schema and directory layout.
   *
-  * Scale design: the export is a per-series fan-out — `repartition` on the
-  * series key routes each symbol's candles to one task, sorted within the
-  * partition so rowids (timestamps) arrive ascending and the b-tree
-  * bulk-loads in one pass. Each task writes only its own series' files;
+  * Scale design: the export is a per-series fan-out — `CandleStore.bySeries`
+  * routes each symbol's candles to one task, sorted within the partition
+  * so rowids (timestamps) arrive ascending and the b-tree bulk-loads in
+  * one pass. The fan-out keeps one task per core however small the data:
+  * per-file cost, not bytes, dominates a writer, so the byte-sized AQE
+  * coalescing that suits other shuffles would serialise every series
+  * file onto one task. Each task writes only its own series' files;
   * on a cluster, point `rootDir` at a shared mount (each .sqlite file is
   * written by exactly one task — no coordination needed). A single series
   * must fit one task's memory — inherent to emitting a single SQLite file
@@ -48,16 +52,15 @@ object SqliteExport {
     val spark = candles.sparkSession
     import spark.implicits._
     val tfName = tf.toString
-    val prepared = candles.select(
+    val prepared = CandleStore.bySeries(candles.select(
         col("symbol"),
         unix_millis(col("bucket_ts")).as("ts_ms"),
         col("open").cast("string").as("o"),
         col("high").cast("string").as("h"),
         col("low").cast("string").as("l"),
         col("close").cast("string").as("c"),
-        col("volume").cast("string").as("v"))
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("ts_ms"))
+        col("volume").cast("string").as("v")),
+      Seq("symbol"), "ts_ms")
     prepared.mapPartitions { it =>
       val buffered = it.buffered
       val written = Seq.newBuilder[String]
