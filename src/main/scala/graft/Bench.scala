@@ -1,5 +1,6 @@
 package graft
 import graft.core.GraftSession
+import graft.tools.Diagnostics
 
 object Bench {
   /** Executor-CPU tap: sums taskMetrics.executorCpuTime (ns) across task
@@ -21,9 +22,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the one session config, shared with Verify: it checks the plans timed here
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // Each query runs SPARK_GRAFT_REPEAT times (default 2) and reports the
     // per-query MINIMUM wall time: the r5/r6 adjudications both hinged on
@@ -31,20 +31,8 @@ object Bench {
     // one-sided noise (a contended run can only be slower, never faster).
     // The cpu/load fields still expose any residual contention.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt
-    // Warm the engine (executor threads, codegen, shuffle machinery) with a
-    // data-free job so the alphabetically-first query doesn't absorb the
-    // whole session cold-start; benched tables themselves stay untouched.
-    locally {
-      import org.apache.spark.sql.functions.{col, sum}
-      spark.range(1 << 20).repartition(cpus.toInt)
-        .agg(sum(col("id"))).collect()
-      // warm the parquet read/write machinery on a throwaway file so the
-      // first benched query doesn't absorb datasource initialization
-      val tmp = java.nio.file.Files.createTempDirectory("bench-warmup")
-        .resolve("t.parquet").toString
-      spark.range(100).write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).count()
-    }
+    // benched tables themselves stay untouched by the warmup
+    Diagnostics.warm(spark)
     // Process-CPU clock: lets a reader separate wall-time inflation caused
     // by EXTERNAL box load (wall grows, this process's CPU doesn't) from a
     // real regression (both grow) — the BENCH_r05 adjudication, made
@@ -54,43 +42,6 @@ object Bench {
     def cpuSec: Double = osBean.getProcessCpuTime / 1e9
     val tap = new CpuTap
     spark.sparkContext.addSparkListener(tap)
-    // drain the async listener bus so a tap snapshot covers every task of
-    // the action that just returned (the ScaleProbe flush, inlined)
-    // NonFatal only, logged ONCE: if the reflective drain ever breaks on a
-    // Spark upgrade the fixed-sleep fallback under-drains the bus and
-    // per-query ecpu deltas silently bleed into the next query — a logged
-    // fallback makes that artifact diagnosable instead of invisible. An
-    // interrupt re-asserts the flag and skips the sleep (don't swallow it).
-    var flushBusWarned = false
-    def flushBus(): Unit =
-      try {
-        val bus = classOf[org.apache.spark.SparkContext]
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch {
-        // Method.invoke wraps the callee's throw in
-        // InvocationTargetException, so an interrupt inside
-        // waitUntilEmpty arrives as ITE(cause = InterruptedException) —
-        // unwrap BEFORE classifying, or the interrupt would be
-        // misreported as "drain broke" and swallowed by the sleep
-        case e: java.lang.reflect.InvocationTargetException
-            if e.getCause.isInstanceOf[InterruptedException] =>
-          Thread.currentThread().interrupt()
-        case _: InterruptedException => Thread.currentThread().interrupt()
-        case scala.util.control.NonFatal(e) =>
-          if (!flushBusWarned) {
-            flushBusWarned = true
-            val root = e match {
-              case ite: java.lang.reflect.InvocationTargetException
-                  if ite.getCause != null => ite.getCause
-              case other => other
-            }
-            System.err.println(s"[bench] listener-bus drain broke " +
-              s"(${root.getClass.getSimpleName}: ${root.getMessage}); falling " +
-              "back to fixed 300 ms sleeps — ecpu attribution is degraded")
-          }
-          Thread.sleep(300)
-      }
     val cpu0 = cpuSec
     val wall0 = System.nanoTime()
     // Load gate (r14 verdict ask #5): a leg that never saw a quiet box
@@ -124,7 +75,8 @@ object Bench {
         // and late-alphabet queries run under eviction pressure — the
         // round-4 dedup_minhash/simhash regression.
         graft.core.Materialize.inScope { scope =>
-          flushBus()
+          // the tap snapshots must cover every task of the timed action
+          Diagnostics.drainListenerBus(spark)
           val e0 = tap.cpuNs.get
           val c0 = cpuSec
           val t0 = System.nanoTime()
@@ -136,7 +88,7 @@ object Bench {
           }
           val dt = (System.nanoTime() - t0) / 1e9
           val dc = cpuSec - c0
-          flushBus()
+          Diagnostics.drainListenerBus(spark)
           val de = (tap.cpuNs.get - e0) / 1e9
           scope.release(spark, blocking = true)
           // a cut made OFF the query thread (e.g. a future foreachBatch-

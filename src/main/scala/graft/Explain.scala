@@ -12,8 +12,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("ohlcv_1m", "q1_pricing", "q5_region", "vwap", "dedup_minhash", "ann_topk")
-    val spark = GraftSession.builder(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

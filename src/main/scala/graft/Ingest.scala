@@ -2,6 +2,7 @@ package graft
 
 import graft.core.{GraftSession, Tables, Timeframe}
 import graft.ohlcv.{Candles, CandleStore}
+import org.apache.spark.sql.SparkSession
 
 /** CLI equivalent of the reference fetcher's workflow
   * (ccxt-ohlcv-fetch.py:304-309): ingest a trade batch, resample to the
@@ -9,23 +10,29 @@ import graft.ohlcv.{Candles, CandleStore}
   * resume point, optionally export CSV.
   *
   * Usage: Ingest <tradesDir> <storeRoot> <exchange> <timeframe>
-  *               [csvOut] [--since=2024-01-15T00:00:00Z]
+  *               [csvOut] [--since=2024-01-15T00:00:00Z] [--sqlite=DIR]
   *
-  * `--since` mirrors the reference's flag (ccxt-ohlcv-fetch.py:193-195);
-  * without it, ingest starts from each symbol's stored resume point
-  * exactly like the reference's default (:274-285).
+  * `--since` mirrors the reference's flag (ccxt-ohlcv-fetch.py:193-195)
+  * and resamples only trades at or after it. Without it, ingest resamples
+  * the WHOLE tape; it does not start from the stored resume point, which
+  * it only prints afterwards. Resuming from the store, as the reference
+  * does by default (:274-285), is ROADMAP item 1.
   */
 object Ingest {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.builder(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val (flags, pos) = args.partition(_.startsWith("--"))
     require(pos.length >= 4,
       "usage: Ingest <tradesDir> <storeRoot> <exchange> <timeframe> [csvOut] " +
         "[--since=ISO8601] [--sqlite=DIR]")
     val Array(tradesDir, storeRoot, exchange, tfStr) = pos.take(4)
     val tf = Timeframe.parse(tfStr)
-    val spark = GraftSession.builder(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val store = new CandleStore(storeRoot)
     val since = flags.collectFirst { case f if f.startsWith("--since=") =>
@@ -43,9 +50,11 @@ object Ingest {
       val resume = store.resumeSince(spark, exchange, sym, tf)
       println(s"[ingest] $exchange/$sym/$tf resume_since=${resume.orNull}")
     }
-    pos.lift(4).foreach { csvOut =>
-      store.exportCsv(spark, csvOut, exchange, symbols.head, tf)
-      println(s"[ingest] exported ${symbols.head} -> $csvOut")
+    // a batch with no candles (e.g. --since past the last trade) has
+    // nothing to export
+    for (csvOut <- pos.lift(4); sym <- symbols.headOption) {
+      store.exportCsv(spark, csvOut, exchange, sym, tf)
+      println(s"[ingest] exported $sym -> $csvOut")
     }
     // --sqlite=DIR additionally emits the reference's literal per-series
     // .sqlite files (gen_db_name layout) for downstream sqlite tooling
@@ -56,6 +65,5 @@ object Ingest {
       println(s"[ingest] sqlite export: ${files.length} series files under $dir")
     }
     println(s"[ingest] wrote ${candles.count()} candles for ${symbols.length} symbols")
-    spark.stop()
   }
 }

@@ -14,9 +14,8 @@ object Verify {
         System.err.println("usage: graft.Verify <sfDir> <outDir> [onlyCsv]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the one session config: Verify checks the plans Bench times
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

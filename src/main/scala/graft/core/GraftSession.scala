@@ -63,7 +63,14 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
 
-  def get(): SparkSession = builder().getOrCreate()
+  /** The session the mains run: `local[n]` with one shuffle partition per
+    * core, n = `SPARK_GRAFT_CPUS` (default 4), so the plans Verify checks
+    * and the diagnostics inspect are the ones Bench times.
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    builder(s"local[$cpus]", cpus).getOrCreate()
+  }
 }
 
 /** Canonical readers for the test star schema + the trade-stream mapping

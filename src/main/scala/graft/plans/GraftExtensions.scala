@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extensions registering graft's native expressions for SQL use.
-  * Install via `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * `GraftSession.builder` installs them; any other builder takes
+  * `.withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -786,7 +786,8 @@ private[graft] object OlapRegistry {
           col("med"), col("mad"), (col("adev") > col("mad") * 3).as("outlier"))
     }),
     "profile_lineitem" -> ((s, dir) =>
-      // single-pass data-quality profile (rows-only: HLL estimates inside)
+      // single-pass data-quality profile with EXACT distinct counts
+      // (count_distinct, which Catalyst expands ×columns; ROADMAP item 5)
       graft.ops.Profile.profile(Tables.table(s, dir, "lineitem"))),
     "dq_check" -> ((s, dir) => {
       // declarative constraint suite in ONE aggregation pass (Deequ idea):

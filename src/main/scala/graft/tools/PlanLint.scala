@@ -51,10 +51,6 @@ object PlanLint {
       "documented at ops/Dedup.scala sourceMinhash)")
   )
 
-  /** Walk one physical plan (pre-AQE `sparkPlan` — cartesians and
-    * windows are visible before adaptive re-planning) and return the
-    * violations found. `where` labels the plan in messages.
-    */
   /** Queries allowed to plan a Scala UDF: the engine's rule is native
     * functions / Catalyst expressions (codegen) everywhere — the ONE
     * standing exception is the broadcast Bloom-sketch probe, which has
@@ -87,6 +83,10 @@ object PlanLint {
     }
   }
 
+  /** Walk one physical plan (pre-AQE `sparkPlan` — cartesians and
+    * windows are visible before adaptive re-planning) and return the
+    * violations found. `where` labels the plan in messages.
+    */
   def violationsIn(p: SparkPlan, query: String, where: String,
                    strict: Boolean = false): Seq[String] = {
     val out = scala.collection.mutable.Buffer.empty[String]
@@ -146,17 +146,11 @@ object PlanLint {
         }
       }
 
-  /** CLI: `runMain graft.tools.PlanLint [sfDir]` prints violations. */
+  /** CLI: `runMain graft.tools.PlanLint <sfDir>` prints violations. */
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.nonEmpty, "usage: PlanLint <sfDir>")
+    val sfDir = args(0)
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val vs = sweep(spark, sfDir, strict = sys.env.contains("PLANLINT_STRICT"))
     if (vs.isEmpty) println("[planlint] clean: no violations")

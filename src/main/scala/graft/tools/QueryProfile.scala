@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query breakdown the bench's single wall number hides (guide §1:
   * measure first): for each named query, run it once cold inside a
@@ -14,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   *   - executor cpu vs wall (the parallelism verdict: ecpu >> wall/cores
   *     means the compute is real; wall >> ecpu means driver/scheduling).
   *
-  * Diagnostic main (not part of the bench contract). Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.QueryProfile <sfDir> q1 q2 ..."
+  * Diagnostic main (not part of the bench contract), on the session
+  * config Bench times. Usage:
+  *   SPARK_GRAFT_CPUS=4 sbt "runMain graft.tools.QueryProfile <sfDir> q1 q2 ..."
   */
 object QueryProfile {
   private final class JobTap extends SparkListener {
@@ -48,29 +48,12 @@ object QueryProfile {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    require(args.nonEmpty, "usage: QueryProfile <sfDir> [query ...]")
+    val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 18).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions.{col, sum}
-    spark.range(1 << 20).repartition(cpus.toInt).agg(sum(col("id"))).collect()
-    locally { // parquet warmup
-      val tmp = java.nio.file.Files.createTempDirectory("qp").resolve("t.parquet").toString
-      spark.range(100).write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).count()
-    }
+    Diagnostics.warm(spark)
 
     // Catalyst phase tracker totals across every execution in the query
     val phases = new java.util.concurrent.ConcurrentHashMap[String, Long]()
@@ -104,14 +87,9 @@ object QueryProfile {
       val cc0 = (ccTime.getCount, ccTime.getSnapshot.getMean * ccTime.getCount)
       graft.core.Materialize.inScope { scope =>
         val t0 = System.nanoTime()
-        SparkEntryBridge.run(spark, sfDir, name)
+        graft.SparkEntry.queries(name)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        // drain listener bus so the tap is complete
-        try {
-          val bus = classOf[org.apache.spark.SparkContext]
-            .getMethod("listenerBus").invoke(spark.sparkContext)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case scala.util.control.NonFatal(_) => Thread.sleep(300) }
+        Diagnostics.drainListenerBus(spark) // so the tap is complete
         val js = tap.jobs.synchronized(tap.jobs.values.toSeq)
         val jobWall = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
         val ecpu = js.map(_.cpuNs).sum / 1e9
@@ -143,12 +121,4 @@ object QueryProfile {
     }
     spark.stop()
   }
-}
-
-/** Indirection so this diagnostic never holds a compile-time dependency
-  * cycle with the registry package.
-  */
-private object SparkEntryBridge {
-  def run(spark: SparkSession, sfDir: String, name: String): Long =
-    graft.SparkEntry.queries(name)(spark, sfDir).count()
 }

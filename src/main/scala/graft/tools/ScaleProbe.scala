@@ -1,736 +1,53 @@
 package graft.tools
 
-import graft.core.Tables
+import graft.core.{GraftSession, Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-growth probe (not part of the driver contract): replicates the
-  * pipeline tables k× with remapped ids and times the heavy operators,
-  * so BENCH_NOTES can report measured growth curves instead of claims.
+/** Scale-growth probe (not part of the bench contract): amplifies the
+  * corpus k× in memory (`AmplifyCorpus`' growth model) and times the
+  * heavy operators with their shuffle and spill bytes, so BENCH_NOTES can
+  * report measured growth curves instead of claims. It runs on the one
+  * session config (`GraftSession.local`, `SPARK_GRAFT_CPUS` cores).
+  *
+  * Run: `runMain graft.tools.ScaleProbe <sfDir> [mode [k ...]]`, modes:
+  *  - `curve [k ...]` (default; k = 1 8 27): the dedup, text and ANN
+  *    operators at each amplification;
+  *  - `recall`: recall-vs-cost curves of the approximate ANN paths;
+  *  - `r15knnrecall [k]` (default 27): what the kNN-graph candidate cap
+  *    costs in neighbours and bytes;
+  *  - `r16layout`: whether `Dedup.clusters`' sealed layout widens with edge
+  *    bytes.
   */
 object ScaleProbe {
-
-  /** Recall-vs-cost curves for the approximate ANN paths: recall@k against
-    * the exact brute-force top-k as the cost knob turns (IVF: cells
-    * probed; multi-LSH: table count). Candidate sets are supersets as the
-    * knob grows (probes are top-nprobe cells; tables 0..T-1 ⊆ 0..T), so
-    * recall is monotone by construction (spec-pinned); these curves put
-    * numbers on the tradeoff at two corpus scales. Run:
-    * `runMain graft.tools.ScaleProbe recall`.
-    */
-  private def recallCurves(spark: SparkSession): Unit = {
-    import graft.ops.{Ivf, Similarity}
-    val k = 10
-    Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { dir =>
-      val emb = Tables.table(spark, dir, "embeddings").cache()
-      val n = emb.count()
-      val q = emb.where(col("vec_id") < 20)
-      val exact = Similarity.bruteForceTopK(spark, emb, q, k).cache()
-      exact.count()
-      def probe(label: String)(f: => DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val approx = f
-        val r = Similarity.recallAtK(exact, approx)
-        println(f"[recall] $dir ($n vecs) $label%-22s recall@$k=$r%.3f  ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      val model = Ivf.train(emb, 16, 2)
-      Seq(1, 2, 4, 8, 16).foreach { p =>
-        probe(s"ivf nprobe=$p/16")(Ivf.searchTopKWith(emb, q, k, model, p))
-      }
-      // compressed-domain paths: plain PQ vs the residual IVF-PQ index at
-      // the same code bytes (m=4 x 16 entries), pruning knob swept
-      probe("pq m=4,k=16")(Ivf.pqSearch(emb, q, k))
-      val m1 = Ivf.train(emb, 16, 1)
-      val enc = Ivf.ivfPqReconFrame(emb, m1, 4, 16).cache()
-      enc.count()
-      Seq(4, 8, 16).foreach { p =>
-        probe(s"ivfpq nprobe=$p/16")(Ivf.ivfPqSearchWith(enc, m1, q, k, p))
-      }
-      // exact re-rank of the ADC top-4k: recall dominates plain ADC at
-      // each nprobe, but is only NEAR-FLAT in nprobe, not strictly
-      // monotone — the k' cut is ADC-ordered, so candidate sets are not
-      // supersets as nprobe grows (measured ±0.01 dips; see
-      // ivfPqSearchRerank's scaladoc and SURVEY §34s)
-      Seq(4, 8, 16).foreach { p =>
-        probe(s"ivfpq_rerank nprobe=$p/16")(
-          Ivf.ivfPqRerankWith(enc, emb, m1, q, k, p))
-      }
-      enc.unpersist()
-      Seq(1, 2, 4, 8).foreach { t =>
-        probe(s"lsh_multi tables=$t")(
-          Similarity.lshTopKMulti(spark, emb, q, k, numPlanes = 6, numTables = t))
-      }
-      exact.unpersist(); emb.unpersist()
+  def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: ScaleProbe <sfDir> [curve|recall|r15knnrecall|r16layout] [k ...]")
+    val spark = GraftSession.local()
+    spark.sparkContext.setLogLevel("WARN")
+    Diagnostics.warm(spark)
+    val probe = new ScaleProbe(spark, args(0))
+    val ks = args.drop(2).map(_.toInt).toSeq
+    try args.lift(1).getOrElse("curve") match {
+      case "curve"        => probe.curve(if (ks.isEmpty) Seq(1, 8, 27) else ks)
+      case "recall"       => probe.recall()
+      case "r15knnrecall" => probe.knnRecall(ks.headOption.getOrElse(27))
+      case "r16layout"    => probe.layout()
+      case other => System.err.println(s"unknown ScaleProbe mode: $other")
+    } finally {
+      Materialize.releaseAll(spark, blocking = true)
+      spark.stop()
     }
   }
+}
 
-  /** Growth curves for the round-4 second-pass families: distributed
-    * NTILE (ops.Rank), asymmetric containment, PQ encode/search, rolling
-    * distinct reach, session journeys. Run:
-    * `runMain graft.tools.ScaleProbe newops`.
-    */
-  private def newOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-36s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val orders = (0 until k).map { i =>
-        Tables.table(spark, dir, "orders").select(
-          (col("o_orderkey") + lit(i * 1000000000L)).as("o_orderkey"),
-          (col("o_custkey") + lit(i * 1000000L)).as("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-          col("o_orderpriority"))
-      }.reduce(_ unionByName _).cache()
-      orders.count()
-      time(s"global_ntile x$k (${15000 * k} custs)") {
-        val spend = orders.groupBy(col("o_custkey").as("custkey"))
-          .agg(sum(col("o_totalprice")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-            .cast("double").as("spend"))
-        graft.ops.Rank.withNtile(spend, 4,
-          Seq(col("spend").desc, col("custkey"))).count()
-      }
-      orders.unpersist()
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      docs.count()
-      time(s"containment_pairs x$k (${5000 * k} docs)") {
-        graft.ops.Dedup.containmentPairs(docs).count()
-      }
-      docs.unpersist()
-      val emb = (0 until k).map { i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _).cache()
-      emb.count()
-      time(s"pq_encode x$k (${2000 * k} vecs)") {
-        graft.ops.Ivf.pqEncode(emb).count()
-      }
-      time(s"pq_search x$k") {
-        graft.ops.Ivf.pqSearch(emb, emb.where(col("vec_id") < 10), 5).count()
-      }
-      emb.unpersist()
-      val events = (0 until k).map { i =>
-        Tables.events(spark, dir).select(
-          (col("event_id") + lit(i * 1000000000L)).as("event_id"),
-          col("ts"), (col("user_id") + lit(i * 1000000L)).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionByName _).cache()
-      events.count()
-      time(s"active_users_7d x$k (${120000 * k} events)") {
-        graft.ops.Events.rollingActiveUsers(events).count()
-      }
-      time(s"session_paths x$k") {
-        graft.ops.Events.sessionPaths(events).count()
-      }
-      events.unpersist()
-    }
-  }
-
-  /** Growth curves for the round-6 families: distributed prefix scan
-    * (pack_plan), mix rebalancing, semantic sample/near-dup. Run:
-    * `runMain graft.tools.ScaleProbe r6ops`.
-    */
-  private def r6OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-36s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      docs.count()
-      time(s"pack_plan x$k (${5000 * k} docs)") {
-        graft.ops.TextAnalysis.packPlan(docs).count()
-      }
-      time(s"mix_rebalance x$k") {
-        graft.ops.TextAnalysis.mixRebalance(docs).count()
-      }
-      docs.unpersist()
-      val emb = (0 until k).map { i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _).cache()
-      emb.count()
-      time(s"semantic_sample x$k (${2000 * k} vecs)") {
-        graft.ops.Ivf.semanticSample(emb).count()
-      }
-      time(s"semantic_neardup x$k") {
-        val n = graft.ops.Ivf.semanticNearDup(emb).count()
-        graft.core.Materialize.releaseAll(spark, blocking = true)
-        n
-      }
-      emb.unpersist()
-    }
-  }
-
-  /** Growth curves for the round-7 families: IVF-PQ residual
-    * encode/search (pure corpus growth — map-only encode, linear
-    * candidates), BPE tokenization (map-only, memo-cached), and
-    * semantic_dedup (on replicated vectors every copy set is a genuine
-    * duplicate cluster, so pair count — and with it runtime — tracks the
-    * TRUE answer size, the same output-bound caveat semantic_neardup's
-    * round-6 curve documents). Run: `runMain graft.tools.ScaleProbe r7ops`.
-    */
-  private def r7OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-36s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val bpe = graft.ops.Bpe.fromMergesLines(Seq("t h", "th e", "i n", "a n").iterator)
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      docs.count()
-      time(s"bpe_tokens x$k (${5000 * k} docs)") {
-        graft.ops.Bpe.withTokens(docs, bpe)
-          .agg(sum(col("n_tokens"))).collect().head.getLong(0)
-      }
-      docs.unpersist()
-      val emb = (0 until k).map { i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _).cache()
-      emb.count()
-      time(s"ivfpq_encode x$k (${2000 * k} vecs)") {
-        graft.ops.Ivf.ivfPqEncode(emb).count()
-      }
-      time(s"ann_ivfpq x$k") {
-        graft.ops.Ivf.ivfPqSearch(emb, emb.where(col("vec_id") < 10), 5).count()
-      }
-      time(s"semantic_dedup x$k (output-bound)") {
-        graft.ops.Ivf.semanticDedup(emb).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      // fixed nightly batch, corpus grown k× — the screen cap must make
-      // this FLAT (each cell contributes <= maxCell members regardless
-      // of corpus size)
-      time(s"semantic_incremental x$k (fixed batch)") {
-        graft.ops.Ivf.incrementalSemantic(
-          Tables.table(spark, dir, "embeddings")
-            .where(col("vec_id") % 10 === 0),
-          emb.where(col("vec_id") % 10 =!= 0)).count()
-      }
-      // cleanup OUTSIDE the timed region — a blocking release grows with
-      // the materialized assignment and would inflate the curve
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist()
-    }
-  }
-
-  /** Round-8 growth curves: the alignment-invariant stride-1 substring
-    * dedup, mix_temperature, and the IVF-PQ exact re-rank stage, on
-    * 1/8/27× amplified sf0.1 corpora (same harness as the r6/r7 curves).
-    * Run: `runMain graft.tools.ScaleProbe r8ops`.
-    */
-  private def r8OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          // salted words: copies share no shingles — pure corpus-size
-          // growth for the stride-1 probe stream, constant true-dup rate
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      docs.count()
-      time(s"dedup_substring x$k (${5000 * k} docs)") {
-        graft.ops.Dedup.substringDedup(docs).count()
-      }
-      time(s"mix_temperature x$k") {
-        graft.ops.TextAnalysis.mixTemperature(docs).count()
-      }
-      docs.unpersist()
-      val emb = (0 until k).map { i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _).cache()
-      emb.count()
-      val q = emb.where(col("vec_id") < 10)
-      time(s"ann_ivfpq_rerank x$k (${2000 * k} vecs)") {
-        graft.ops.Ivf.ivfPqSearchRerank(emb, q, 5).count()
-      }
-      emb.unpersist()
-    }
-  }
-
-  /** Round-10 wave-4/5 growth curves: the triangle kernel under corpus
-    * replication (wedge fan-out is the claimed bound) and the pair
-    * analytics under SYMBOL-UNIVERSE growth — pairs grow quadratically in
-    * the symbol count, which is the axis that actually scales for
-    * cross-asset operators (bucket count is calendar-bounded). Run:
-    * `runMain graft.tools.ScaleProbe r10w4`.
-    */
-  private def r10w4OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 4, 8).foreach { k =>
-      val emb = (0 until k).map { i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _).cache()
-      emb.count()
-      time(s"knn_triangles x$k (${2000 * k} vecs)") {
-        graft.ops.Graph.triangles(
-          graft.ops.Ivf.knnGraph(emb)
-            .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))).count()
-      }
-      emb.unpersist()
-    }
-    Seq(1, 2, 4).foreach { m =>
-      val t = (0 until m).map { i =>
-        Tables.trades(spark, dir)
-          .withColumn("symbol", concat(col("symbol"), lit(s"_$i")))
-      }.reduce(_ unionByName _).cache()
-      t.count()
-      val candles = graft.ohlcv.Candles
-        .fromTrades(t, graft.core.Timeframe.parse("1h")).cache()
-      val nsym = candles.select("symbol").distinct().count()
-      time(s"lead_lag $nsym syms (${nsym * (nsym - 1) / 2} pairs)") {
-        graft.ohlcv.Studies.leadLag(candles).count()
-      }
-      time(s"pair_spread $nsym syms") {
-        graft.ohlcv.Studies.pairSpread(candles).count()
-      }
-      candles.unpersist(); t.unpersist()
-    }
-  }
-
-  /** Growth curves for the round-10 wave-7-10 operators (r11 verdict ask
-    * #5): volume-clock bars + VPIN under per-symbol trade growth (symbol
-    * fan-out m× — MORE sequential chains, the dimension that matters for
-    * the per-symbol window/sweep families), span dedup / winnowing /
-    * heaps curve under corpus growth k× (salted copies — pure size
-    * growth, constant dup rate), and KAMA as the sequential-sweep family
-    * representative (recursive per-symbol fold via mapPartitions).
-    * Run: `runMain graft.tools.ScaleProbe r10w7`.
-    */
-  private def r10w7OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 4, 8).foreach { m =>
-      val t = (0 until m).map { i =>
-        Tables.trades(spark, dir)
-          .withColumn("symbol", concat(col("symbol"), lit(s"_$i")))
-      }.reduce(_ unionByName _).cache()
-      val nt = t.count()
-      time(s"volume_bars x$m ($nt trades)") {
-        graft.ohlcv.Microstructure.volumeBars(t).count()
-      }
-      time(s"vpin x$m") {
-        graft.ohlcv.Microstructure.vpin(t).count()
-      }
-      val candles = graft.ohlcv.Candles
-        .fromTrades(t, graft.core.Timeframe.parse("1h")).cache()
-      candles.count()
-      time(s"kama x$m (sweep family)") {
-        graft.ohlcv.Analytics.kama(candles).count()
-      }
-      candles.unpersist(); t.unpersist()
-    }
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"span_dedup x$k ($nd docs)") {
-        graft.ops.Dedup.spanDedup(docs).count()
-      }
-      time(s"winnow_fingerprint x$k") {
-        graft.ops.Dedup.winnowFingerprint(docs).count()
-      }
-      time(s"heaps_curve x$k") {
-        graft.ops.Dedup.heapsCurve(docs).count()
-      }
-      time(s"image_dedup x$k") {
-        graft.ops.Dedup.imageDedup(docs).count()
-      }
-      docs.unpersist()
-    }
-  }
-
-  /** Growth curves for the round-11 operators: perceptual video dedup
-    * under corpus growth k× (frame fan-out ×k, aligned banding join ×k
-    * — expect flat-to-linear like image_dedup) and the logistic-
-    * regression trainer at fixed epochs under the same growth (each
-    * epoch is one shuffle-free treeAggregate — expect linear in docs
-    * with k-scale driver state). Run: `runMain graft.tools.ScaleProbe
-    * r11`.
-    */
-  private def r11OpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"video_dedup x$k ($nd docs)") {
-        graft.ops.Dedup.videoDedup(docs).count()
-      }
-      time(s"logreg_train 10ep x$k") {
-        graft.ops.LogReg.train(docs, col("text").contains("window"),
-          d = 1024, epochs = 10).weights.length.toLong
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist()
-    }
-  }
-
-  /** Growth curves for the round-11 continuation: the z-order layout
-    * family under fact-table growth (zorderSkip is one corpus scan + two
-    * 64-row aggregations — expect scan-bound linear; clusterWrite is one
-    * range exchange + local sort — the compaction cost itself), plus the
-    * CC family refreshed AFTER the kernel re-plan (sum-convergence, no
-    * self-union, edge pre-partitioning) so the curves in BENCH_NOTES
-    * reflect the shipped kernel. Run: `runMain graft.tools.ScaleProbe
-    * r11b`.
-    */
-  private def r11bOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      // pure size growth: replicated rows keep the key domains (and so
-      // the normalized 8-bit grid) fixed — the 100 TB axis for a layout
-      // op is rows, not key cardinality
-      val li = (0 until k).map(_ =>
-        Tables.table(spark, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey")))
-        .reduce(_ unionByName _).cache()
-      val n = li.count()
-      time(s"zorder_skip x$k ($n rows)") {
-        graft.ops.Layout.zorderSkip(li, "l_partkey", "l_suppkey").count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"hilbert_skip x$k") {
-        graft.ops.Layout.curveSkip(li, "l_partkey", "l_suppkey").count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      if (k <= 8) {
-        val out = java.nio.file.Files.createTempDirectory("zw").toString
-        time(s"cluster_write x$k (8 files)") {
-          graft.ops.Layout.clusterWrite(
-            li.withColumn("xn", col("l_partkey").bitwiseAND(lit(255L)))
-              .withColumn("yn", col("l_suppkey").bitwiseAND(lit(255L))),
-            Seq("xn", "yn"), 8, s"$out/z", 8)
-          spark.read.parquet(s"$out/z").count()
-        }
-      }
-      li.unpersist()
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"corpus_dedup x$k ($nd docs, new CC)") {
-        graft.ops.Dedup.corpusDedup(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist()
-    }
-  }
-
-  /** kFactor → recall curve for the exact re-rank stage: recall@10 of
-    * ivfpq_rerank at k′ = kFactor·k for kFactor ∈ {1,2,4,8}, each at
-    * nprobe 4/8/16, against plain ADC at the same nprobe, at both corpus
-    * scales — puts the measurement behind §4's "kFactor is the knob that
-    * always helps" claim (kFactor=1 re-scores the ADC top-k without
-    * widening it; larger k′ monotonically widens the exact-scored
-    * candidate pool at fixed nprobe, so recall in kFactor IS
-    * superset-monotone, unlike nprobe under an ADC-ordered cut).
-    * Run: `runMain graft.tools.ScaleProbe rerank`.
-    */
-  private def rerankKnobCurves(spark: SparkSession): Unit = {
-    import graft.ops.{Ivf, Similarity}
-    val k = 10
-    Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { dir =>
-      val emb = Tables.table(spark, dir, "embeddings").cache()
-      val n = emb.count()
-      val q = emb.where(col("vec_id") < 20)
-      val exact = Similarity.bruteForceTopK(spark, emb, q, k).cache()
-      exact.count()
-      val m1 = Ivf.train(emb, 16, 1)
-      val enc = Ivf.ivfPqReconFrame(emb, m1, 4, 16).cache()
-      enc.count()
-      Seq(4, 8, 16).foreach { p =>
-        val adc = Similarity.recallAtK(exact, Ivf.ivfPqSearchWith(enc, m1, q, k, p))
-        val line = Seq(1, 2, 4, 8).map { kf =>
-          val r = Similarity.recallAtK(
-            exact, Ivf.ivfPqRerankWith(enc, emb, m1, q, k, p, kf))
-          f"k'=${kf}k $r%.3f"
-        }.mkString("  ")
-        println(f"[rerank] $dir ($n vecs) nprobe=$p/16  adc $adc%.3f  $line")
-      }
-      enc.unpersist(); exact.unpersist(); emb.unpersist()
-    }
-  }
-
-  /** r11c: growth curves for the session-2 additions — ann_recall (one
-    * materialized corpus scan, two top-k branches) on an amplified
-    * embedding table, corpus_diff (one co-partitioned full-outer join +
-    * dim agg) on amplified document snapshots.
-    */
-  private def r11cOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _).cache()
-      val ne = emb.count()
-      time(s"ann_recall x$k ($ne vecs)") {
-        graft.ops.Ivf.annRecall(emb,
-          emb.where(col("vec_id") < 10), 5).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist()
-      val docs = (0 until k).map(i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars")))
-        .reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"corpus_diff x$k ($nd docs)") {
-        val prior = docs.where(col("doc_id") % 2 === 0)
-        val today = docs.where(col("doc_id") % 7 =!= 3)
-          .withColumn("text", when(col("doc_id") % 10 === 0,
-            concat(col("text"), lit(" rev2"))).otherwise(col("text")))
-        graft.ops.TextAnalysis.corpusDiff(prior, today).count()
-      }
-      docs.unpersist()
-    }
-  }
-
-  /** r11d: growth curves for the retrieval-fusion wave, each on ITS
-    * scaling axis. hybrid_rrf and source_minhash grow with the corpus
-    * (both are one-scan + bounded/dim-scale closers — expect
-    * scan-linear). mmr_rerank grows with the QUERY COUNT at fixed
-    * corpus — the operator's claim is that the greedy loop is frames
-    * all the way down, so 10 or 10M queries rerank with the same plan;
-    * candidates and the pair matrix are linear in queries. skew_report
-    * grows with the fact table (one map-side-combined count agg).
-    */
-  private def r11dOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _).cache()
-      emb.count()
-      time(s"hybrid_rrf x$k ($nd docs)") {
-        graft.ops.Retrieval.hybridRrf(docs,
-          emb, Seq("spark", "join", "data"), 3L).count()
-      }
-      time(s"source_minhash x$k") {
-        graft.ops.Dedup.sourceMinhash(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist(); emb.unpersist()
-      val events = (0 until k).map(i =>
-        Tables.events(spark, dir).select(
-          (col("event_id") + lit(i * 1000000000L)).as("event_id"),
-          col("ts"), col("user_id"), col("event_type"), col("value")))
-        .reduce(_ unionByName _).cache()
-      val ne = events.count()
-      time(s"skew_report x$k ($ne events)") {
-        graft.ops.Dq.skewReport(events, "user_id").count()
-      }
-      events.unpersist()
-    }
-    // mmr_rerank: QUERY-count growth at fixed corpus — the frames-not-
-    // driver-state claim. 10/80/270 queries over the sf0.1 embeddings.
-    val emb = Tables.table(spark, dir, "embeddings").cache()
-    emb.count()
-    Seq(10, 80, 270).foreach { q =>
-      time(s"mmr_rerank $q queries (fixed corpus)") {
-        val n = graft.ops.Retrieval.mmrRerank(spark, emb,
-          emb.where(col("vec_id") < q)).count()
-        graft.core.Materialize.releaseAll(spark, blocking = true)
-        n
-      }
-    }
-    emb.unpersist()
-  }
-
-  /** r11e: growth curves for the ExactSubstr/fuzzy wave, each on ITS
-    * axis. longest_repeat is the wave's most scale-sensitive kernel
-    * (global suffix order = a range sort over corpus×cap int arrays —
-    * expect sort-dominant growth). exactsubstr_prune shares the corpus
-    * axis but has NO sort (map-side-combined gram counts + anti-join —
-    * expect scan-linear, cheaper than the diagnostic). edit_join grows
-    * with the dictionary; replicated copies carry suffixes pairwise ≥2
-    * edits apart so no cross-copy ED-1 pairs form — output stays linear
-    * and the measurement is the input axis, not a pair explosion.
-    * Doc copies are word-salted (the amplifyDocs convention) so repeated-
-    * gram mass grows linearly with the corpus, not quadratically.
-    */
-  private def r11eOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"longest_repeat x$k ($nd docs)") {
-        graft.ops.Dedup.longestRepeat(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"exactsubstr_prune x$k") {
-        graft.ops.Dedup.exactSubstrPrune(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist()
-      // suffix "$i$i": any two distinct copies differ by ≥2 edits
-      // (equal-length suffixes need ≥2 substitutions, unequal ≥2 edits),
-      // so the only ED-1 pairs are within-copy — linear output
-      val sup = (0 until k).map { i =>
-        Tables.table(spark, dir, "supplier").select(
-          (col("s_suppkey") + lit(i * 1000000L)).as("s_suppkey"),
-          concat(col("s_name"), lit(s"_$i$i")).as("s_name"))
-      }.reduce(_ unionByName _).cache()
-      val ns = sup.count()
-      time(s"edit_join x$k ($ns names)") {
-        graft.ops.Fuzzy.editJoin(sup, "s_suppkey", "s_name").count()
-      }
-      sup.unpersist()
-    }
-  }
-
-  /** r11f: growth curves for the decontamination/entity-resolution
-    * closers. decontam_scrub grows with the CORPUS at a fixed benchmark
-    * (the benchmark gram set stays one broadcast — expect the
-    * exactsubstr_prune scan-bound shape without the repeat count);
-    * edit_cluster adds the CC rounds on top of edit_join's flat join
-    * profile (copies suffixed ≥2 edits apart: component structure is
-    * per-copy, so rounds stay constant and growth is the edge volume).
-    */
-  private def r11fOpsCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(1, 8, 27).foreach { k =>
-      // corpus copies word-salted; the benchmark partition (source src0)
-      // kept ONLY in copy 0 so the dictionary is fixed while the corpus
-      // grows — the serving-shape axis
-      val docs = (0 until k).map { i =>
-        val base = Tables.table(spark, dir, "documents")
-        val c = if (i == 0) base else base.where(col("source") =!= "src0")
-        c.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          (if (i == 0) col("text")
-           else regexp_replace(col("text"), "(\\S+)", s"$$1_$i")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).cache()
-      val nd = docs.count()
-      time(s"decontam_scrub x$k ($nd docs)") {
-        graft.ops.Dedup.spanScrub(docs, col("source") === "src0").count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist()
-      val sup = (0 until k).map { i =>
-        Tables.table(spark, dir, "supplier").select(
-          (col("s_suppkey") + lit(i * 1000000L)).as("s_suppkey"),
-          concat(col("s_name"), lit(s"_$i$i")).as("s_name"))
-      }.reduce(_ unionByName _).cache()
-      val ns = sup.count()
-      time(s"edit_cluster x$k ($ns names)") {
-        graft.ops.Fuzzy.editCluster(sup, "s_suppkey", "s_name").count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      sup.unpersist()
-    }
-  }
+private final class ScaleProbe(spark: SparkSession, dir: String) {
 
   /** Stage-metric tap: accumulates shuffle read/write bytes and spill
     * across every completed stage, so a timed region's byte deltas ride
-    * next to its wall-clock — the r11 verdict's #1 ask (every 100 TB
-    * claim extrapolated from wall-clock alone).
+    * next to its wall-clock (a 100 TB claim extrapolated from wall-clock
+    * alone hides whether the plan is linear).
     */
-  private final class ByteTap extends org.apache.spark.scheduler.SparkListener {
+  private object tap extends org.apache.spark.scheduler.SparkListener {
     import java.util.concurrent.atomic.AtomicLong
     private val read = new AtomicLong
     private val write = new AtomicLong
@@ -746,972 +63,210 @@ object ScaleProbe {
     }
     def snap: (Long, Long, Long) = (read.get, write.get, spill.get)
   }
+  spark.sparkContext.addSparkListener(tap)
 
-  /** Per-stage task histograms — duration, GC time, shuffle bytes PER
-    * TASK — the r13 ask-#1 instrumentation for the longest_repeat ×243
-    * wall anomaly: ByteTap said the PLAN is linear (bytes exactly ∝ n,
-    * zero spill) while the wall grew 10× for 3× data, so the explanation
-    * must live at task granularity — skew (p99 ≫ p50 in one stage), GC
-    * churn (gc share of run time), or stragglers (max ≫ p99).
+  /** Times `f` and prints its wall, shuffle and spill bytes, and its
+    * result (a row count, a recall figure, ...).
     */
-  private final class TaskTap extends org.apache.spark.scheduler.SparkListener {
-    import scala.collection.mutable.ArrayBuffer
-    private final case class T(dur: Long, gc: Long, sr: Long, sw: Long)
-    // listener events arrive on one bus thread, but reset()/report() run
-    // on the MAIN thread — flushListeners drains the queue yet creates no
-    // happens-before edge, so every access synchronizes on the maps' lock
-    // (the r13 ADVICE finding: unsynchronized cross-thread reads could
-    // see stale or mid-update state)
-    private val lock = new Object
-    private val tasks = scala.collection.mutable.Map.empty[Int, ArrayBuffer[T]]
-    private val names = scala.collection.mutable.Map.empty[Int, String]
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) lock.synchronized {
-        tasks.getOrElseUpdate(e.stageId, ArrayBuffer.empty) += T(
-          m.executorRunTime, m.jvmGCTime,
-          m.shuffleReadMetrics.totalBytesRead,
-          m.shuffleWriteMetrics.bytesWritten)
-      }
+  private def time[T](label: String)(f: => T): T = {
+    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
+    Diagnostics.drainListenerBus(spark)
+    val (r0, w0, s0) = tap.snap
+    val t0 = System.nanoTime()
+    val out = f
+    val secs = (System.nanoTime() - t0) / 1e9
+    Diagnostics.drainListenerBus(spark)
+    val (r1, w1, s1) = tap.snap
+    val shown = out match {
+      case _: org.apache.spark.sql.Dataset[_] => ""
+      case v => s"  -> $v"
     }
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      lock.synchronized {
-        names(s.stageInfo.stageId) = s.stageInfo.name.takeWhile(_ != '\n')
-      }
-    def reset(): Unit = lock.synchronized { tasks.clear(); names.clear() }
-    def report(): Unit = {
-      def pct(a: Seq[Long], p: Double): Long =
-        if (a.isEmpty) 0L
-        else a.sorted.apply(math.min(a.size - 1, (p * a.size).toInt))
-      val (snap, nm) = lock.synchronized {
-        (tasks.toSeq.map { case (sid, ts) => (sid, ts.toVector) },
-          names.toMap)
-      }
-      snap.sortBy(_._1).foreach { case (sid, ts) =>
-        val d = ts.map(_.dur).toSeq; val g = ts.map(_.gc).toSeq
-        println(f"[task] stage $sid%4d ${nm.getOrElse(sid, "?").take(40)}%-40s " +
-          f"n=${ts.size}%4d run ${d.sum / 1e3}%8.1fs " +
-          f"p50 ${pct(d, .5) / 1e3}%7.2f p99 ${pct(d, .99) / 1e3}%7.2f " +
-          f"max ${d.max / 1e3}%7.2f " +
-          f"gc ${g.sum / 1e3}%7.1fs (${100.0 * g.sum / math.max(1L, d.sum)}%4.1f%%) " +
-          f"shufR ${ts.map(_.sr).sum / 1e6}%9.1fMB shufW ${ts.map(_.sw).sum / 1e6}%9.1fMB")
-      }
-    }
+    println(f"[scale] $label%-44s $secs%8.2f s  shufR ${mb(r1 - r0)}  " +
+      f"shufW ${mb(w1 - w0)}  spill ${mb(s1 - s0)}$shown")
+    out
   }
 
-  /** Drain the async listener bus so a ByteTap snapshot covers every
-    * stage of the action that just returned. private[spark] is public
-    * at the bytecode level, so plain reflection reaches the bus; the
-    * fallback sleep only matters if the API moves.
-    */
-  private def flushListeners(spark: SparkSession): Unit =
-    try {
-      val bus = classOf[org.apache.spark.SparkContext]
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(500) }
+  private def table(name: String): DataFrame = Tables.table(spark, dir, name)
 
-  /** r12: scale evidence past 27× for the operators whose 100 TB story
-    * rests on the priciest primitives — longest_repeat (range sort),
-    * dedup_minhash (banded join), corpus_dedup(_stable) (iterative CC),
-    * knn_components (mutual-kNN + CC) — with shuffle-byte and spill
-    * accounting per leg. Doc copies are word-salted (constant dup rate,
-    * pure size growth); embeddings get √n quantizer cells (cells ∝ √n
-    * keeps BOTH the assignment flops and the cell-local candidate block
-    * subquadratic — the standard IVF sizing; assignment is map-only so
-    * the shuffle-byte columns isolate the CC rounds, the claim under
-    * test). Run: `runMain graft.tools.ScaleProbe r12` (legs 1/27/81) or
-    * `... r12x243` (the 243 leg alone — same curves, bigger box time).
+  /** The growth curve (ROADMAP item 2): dedup, text and ANN operators
+    * over k× corpora. Doc copies are word-salted, so the dup rate stays
+    * constant and only the corpus size grows.
     */
-  private def r12ScaleCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nd = docs.count()
-      time(s"longest_repeat x$k ($nd docs)") {
-        graft.ops.Dedup.longestRepeat(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"dedup_minhash x$k") {
-        graft.ops.Dedup.minhashLsh(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"corpus_dedup x$k") {
-        graft.ops.Dedup.corpusDedup(docs).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"corpus_dedup_stable x$k") {
-        // the registry's nightly-replay shape: prior labels from the
-        // even-doc_id half, signatures computed once via corpusBase
-        val base = graft.ops.Dedup.corpusBase(docs)
-        val prior = graft.ops.Dedup
-          .corpusDedupFromBase(base.where(col("doc_id") % 2 === 0))
-          .select(col("doc_id"), col("cluster_id"))
-        graft.ops.Dedup.corpusDedupStableFromBase(base, prior).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist(blocking = true)
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val cells = math.max(16, 16 * math.sqrt(k.toDouble)).toInt
-      time(s"knn_components x$k ($ne vecs, $cells cells)") {
-        graft.ops.Ivf.knnComponents(emb, numCells = cells).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** knn_components legs alone (27/81/243) — the r12 spill fix A/B: the
-    * ×243 leg measured 49 GB of sort-fallback spill under the default
-    * ObjectHashAggregate threshold of 128 keys; this rerun rides the
-    * session-level raised threshold. Run: `runMain graft.tools.ScaleProbe
-    * r12knn`.
-    */
-  private def r12KnnCurves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    Seq(27, 81, 243).foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val cells = math.max(16, 16 * math.sqrt(k.toDouble)).toInt
-      time(s"knn_components x$k ($ne vecs, $cells cells)") {
-        graft.ops.Ivf.knnComponents(emb, numCells = cells).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** r12b: the two-level quantizer A/B — the measured answer to the ×243
-    * finding ("the remaining wall is the honest compute cost of the √n-
-    * cells configuration"). Flat knnComponents at √n cells (cell size
-    * grows as √n → per-vector candidates grow as √n → total n^1.5) vs
-    * knnComponentsTwoLevel at CONSTANT cell size ≈250 (k1 = k2 =
-    * ⌈√(n/250)⌉ → effective cells ∝ n → total candidates ∝ n, and per-row
-    * assignment cost k1 + k2 = O(√cells), which is what makes cells ∝ n
-    * affordable at all — flat assignment at n/250 cells would itself be
-    * quadratic). Same byte tap as r12. Run: `runMain graft.tools.ScaleProbe
-    * r12b` (legs 27/81) or `... r12bx243`.
-    */
-  private def r12TwoLevelCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val flatCells = math.max(16, 16 * math.sqrt(k.toDouble)).toInt
-      time(s"knn_components flat x$k ($ne vecs, $flatCells cells)") {
-        graft.ops.Ivf.knnComponents(emb, numCells = flatCells).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      val k12 = math.ceil(math.sqrt(ne / 250.0)).toInt
-      time(s"knn_components 2level x$k (${k12}x$k12 cells)") {
-        graft.ops.Ivf.knnComponentsTwoLevel(emb, k1 = k12, k2 = k12).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** r13 ask #1: longest_repeat ×81/×243 with per-stage task histograms
-    * (TaskTap) on top of the byte tap — root-causing the ×243 wall
-    * (305.5 s vs 31.6 s at ×81 in r12, 10× for 3× data, bytes linear,
-    * zero spill). Run: `runMain graft.tools.ScaleProbe r13lr` (81+243)
-    * or `... r13lrx243` / `... r13lrx81` (one leg).
-    */
-  private def r13LongestRepeatCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    val tt = new TaskTap
-    spark.sparkContext.addSparkListener(tap)
-    spark.sparkContext.addSparkListener(tt)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val docs = (0 until k).map { i =>
-        Tables.table(spark, dir, "documents").select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nd = docs.count()
-      flushListeners(spark); tt.reset()
-      time(s"longest_repeat x$k ($nd docs)") {
-        graft.ops.Dedup.longestRepeat(docs).count()
-      }
-      flushListeners(spark); tt.report()
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      docs.unpersist(blocking = true)
-    }
-  }
-
-  /** r13 ask #3: the two-level SEMANTIC faces A/B'd END-TO-END at
-    * ×27/×81/×243 (pairs → CC → keeper) with the byte tap — r12 A/B'd
-    * only the knn pair, and SemDeDup's keeper join and CC rounds ride
-    * different shuffles than the graph kernel. Flat √n cells vs
-    * two-level constant-cell (≈250) at the same corpus, the r12b sizing.
-    * Run: `... r13sem` (27+81) or `... r13semx243`.
-    */
-  private def r13SemanticCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val flatCells = math.max(16, 16 * math.sqrt(k.toDouble)).toInt
-      time(s"semantic_dedup flat x$k ($ne vecs, $flatCells cells)") {
-        graft.ops.Ivf.semanticDedup(emb, numCells = flatCells).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      val k12 = math.ceil(math.sqrt(ne / 250.0)).toInt
-      time(s"semantic_dedup 2level x$k (${k12}x$k12 cells)") {
-        graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k12, k2 = k12).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** r13 ask #2 measurement: the IVF-PQ SERVING family A/B — flat coarse
-    * quantizer (√n cells, the r12b sizing) vs two-level (constant cell
-    * size ≈250) at ×27/×81/×243, end-to-end index build (train + residual
-    * encode over the full corpus) + a 10-query ADC search. Both sides
-    * iters=0 so the A/B isolates the STRUCTURE (routing flops + candidate
-    * volume), not Lloyd rounds. Run: `... r13pq` (27+81) or `r13pqx243`.
-    */
-  private def r13PqCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val q = emb.where(col("vec_id") < 10)
-      val flatCells = math.max(16, 16 * math.sqrt(k.toDouble)).toInt
-      time(s"ann_ivfpq flat x$k ($ne vecs, $flatCells cells)") {
-        graft.ops.Ivf.ivfPqSearch(emb, q, 5,
-          numCells = flatCells, iters = 0, nprobe = 4).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      val k12 = math.ceil(math.sqrt(ne / 250.0)).toInt
-      time(s"ann_ivfpq 2level x$k (${k12}x$k12 cells)") {
-        graft.ops.Ivf.ivfPqSearchTwoLevel(emb, q, 5,
-          k1 = k12, k2 = k12, nprobe1 = 2, nprobe = 4).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** r13 ask #6: the ×729 leg for the hierarchy's headline pair —
-    * knn_components_2level (does the near-flat wall hold another 3×?)
-    * and corpus_dedup_stable (do the CC rounds bend?) — with byte/spill
-    * columns AND the TaskTap histograms, so any wall bend gets the
-    * ask-#1 treatment in the same run. Run: `... r13x729`.
-    */
-  private def r13x729Curves(spark: SparkSession): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val k = 729
-    val tap = new ByteTap
-    val tt = new TaskTap
-    spark.sparkContext.addSparkListener(tap)
-    spark.sparkContext.addSparkListener(tt)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val emb = (0 until k).map(i =>
-      Tables.table(spark, dir, "embeddings").select(
-        (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ne = emb.count()
-    val k12 = math.ceil(math.sqrt(ne / 250.0)).toInt
-    flushListeners(spark); tt.reset()
-    time(s"knn_components 2level x$k ($ne vecs, ${k12}x$k12)") {
-      graft.ops.Ivf.knnComponentsTwoLevel(emb, k1 = k12, k2 = k12).count()
-    }
-    flushListeners(spark); tt.report()
-    graft.core.Materialize.releaseAll(spark, blocking = true)
-    emb.unpersist(blocking = true)
-    val docs = (0 until k).map { i =>
-      Tables.table(spark, dir, "documents").select(
-        (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def curve(ks: Seq[Int]): Unit = ks.foreach { k =>
+    val docs = AmplifyCorpus.documents(table("documents"), k).cache()
     val nd = docs.count()
-    flushListeners(spark); tt.reset()
-    time(s"corpus_dedup_stable x$k ($nd docs)") {
-      val base = graft.ops.Dedup.corpusBase(docs)
-      val prior = graft.ops.Dedup
-        .corpusDedupFromBase(base.where(col("doc_id") % 2 === 0))
-        .select(col("doc_id"), col("cluster_id"))
-      graft.ops.Dedup.corpusDedupStableFromBase(base, prior).count()
+    time(s"dedup_minhash x$k ($nd docs)") {
+      graft.ops.Dedup.minhashLsh(docs).count()
     }
-    flushListeners(spark); tt.report()
-    graft.core.Materialize.releaseAll(spark, blocking = true)
-    docs.unpersist(blocking = true)
+    time(s"corpus_dedup x$k") {
+      graft.ops.Dedup.corpusDedup(docs).count()
+    }
+    time(s"contamination_check x$k") {
+      graft.ops.TextAnalysis.contaminationCheck(docs).count()
+    }
+    time(s"dedup_substring x$k") {
+      graft.ops.Dedup.substringDedup(docs).count()
+    }
+    time(s"dedup_incremental x$k") {
+      graft.ops.Dedup.incrementalDedup(
+        docs.where(col("source") === "src0"),
+        docs.where(col("source") =!= "src0")).count()
+    }
+    time(s"tfidf_topterms x$k") {
+      graft.ops.TextAnalysis.tfidfTopTerms(docs).count()
+    }
+    docs.unpersist()
+    Materialize.releaseAll(spark, blocking = true)
+    val emb = AmplifyCorpus.embeddings(table("embeddings"), k).cache()
+    val ne = emb.count()
+    val q = emb.where(col("vec_id") < 10)
+    time(s"ann_ivf x$k ($ne vecs)") {
+      graft.ops.Ivf.searchTopK(emb, q, 5, iters = 0).count()
+    }
+    time(s"ann_lsh_multi x$k") {
+      graft.ops.Similarity.lshTopKMulti(spark, emb, q, 5).count()
+    }
+    emb.unpersist()
+    Materialize.releaseAll(spark, blocking = true)
   }
 
-  /** r14 ask #1 measurement: the CAPPED semantic dedup byte curve under
-    * VERBATIM amplification (every copy is an exact dup, so dup-cluster
-    * size grows ∝ k — the regime whose ×81→×243 byte step measured 4.6×
-    * for 3× data in r13sem), A/B'd against the effectively-uncapped
-    * control (maxCell = 2²⁰ ≥ any cell) on the same frame, plus the
-    * RECALL FLOOR: of the vectors the uncapped face drops (keep=false),
-    * the fraction the capped face also drops — the curation-decision
-    * recall, the §4 LSH methodology applied to cells.
-    * Run: `... r14sem` (27+81) or `r14semx243`.
+  /** Recall-vs-cost curves for the approximate ANN paths (ROADMAP item
+    * 8): recall@k against the exact brute-force top-k as the cost knob
+    * turns (IVF: cells probed; multi-LSH: table count). Candidate sets
+    * are supersets as the knob grows (probes are top-nprobe cells; tables
+    * 0..T-1 ⊆ 0..T), so recall is monotone by construction (spec-pinned);
+    * these curves put numbers on the tradeoff.
     */
-  private def r14SemanticCapCurves(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-48s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
+  def recall(): Unit = {
+    import graft.ops.{Ivf, Similarity}
+    val k = 10
+    val emb = table("embeddings").cache()
+    val n = emb.count()
+    val q = emb.where(col("vec_id") < 20)
+    val exact = Similarity.bruteForceTopK(spark, emb, q, k).cache()
+    exact.count()
+    def probe(label: String)(f: => DataFrame): Unit =
+      time(s"$label ($n vecs)")(f"recall@$k=${Similarity.recallAtK(exact, f)}%.3f")
+    val model = Ivf.train(emb, 16, 2)
+    Seq(1, 2, 4, 8, 16).foreach { p =>
+      probe(s"ivf nprobe=$p/16")(Ivf.searchTopKWith(emb, q, k, model, p))
     }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val (k1, k2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-      time(s"semantic_dedup 2level CAPPED x$k ($ne vecs, ${k1}x$k2)") {
-        graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-          maxCell = 64).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      time(s"semantic_dedup 2level UNCAPPED x$k (${k1}x$k2)") {
-        graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-          maxCell = 1 << 20).count()
-      }
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      // recall floor: dropped-set agreement, computed distributed (the
-      // pair space is quadratic inside dup clusters; the DECISION set is
-      // linear). keep=false rows are the curation action.
-      val capped = graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-        maxCell = 64).where(!col("keep")).select(col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val uncapped = graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-        maxCell = 1 << 20).where(!col("keep")).select(col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nu = uncapped.count(); val nc = capped.count()
-      val hit = capped.join(uncapped, Seq("vec_id"), "left_semi").count()
-      println(f"[recall] x$k drop-decisions: uncapped $nu%9d  capped $nc%9d  " +
-        f"agree $hit%9d  recall ${if (nu == 0) 1.0 else hit.toDouble / nu}%.4f")
-      capped.unpersist(blocking = true); uncapped.unpersist(blocking = true)
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
+    // compressed-domain paths: plain PQ vs the residual IVF-PQ index at
+    // the same code bytes (m=4 x 16 entries), pruning knob swept
+    probe("pq m=4,k=16")(Ivf.pqSearch(emb, q, k))
+    val m1 = Ivf.train(emb, 16, 1)
+    val enc = Ivf.ivfPqReconFrame(emb, m1, 4, 16).cache()
+    enc.count()
+    Seq(4, 8, 16).foreach { p =>
+      probe(s"ivfpq nprobe=$p/16")(Ivf.ivfPqSearchWith(enc, m1, q, k, p))
     }
+    // exact re-rank of the ADC top-4k: recall dominates plain ADC at
+    // each nprobe, but is only NEAR-FLAT in nprobe, not strictly
+    // monotone — the k' cut is ADC-ordered, so candidate sets are not
+    // supersets as nprobe grows (measured ±0.01 dips; see
+    // ivfPqSearchRerank's scaladoc and SURVEY §34s)
+    Seq(4, 8, 16).foreach { p =>
+      probe(s"ivfpq_rerank nprobe=$p/16")(
+        Ivf.ivfPqRerankWith(enc, emb, m1, q, k, p))
+    }
+    enc.unpersist()
+    Seq(1, 2, 4, 8).foreach { t =>
+      probe(s"lsh_multi tables=$t")(
+        Similarity.lshTopKMulti(spark, emb, q, k, numPlanes = 6, numTables = t))
+    }
+    exact.unpersist(); emb.unpersist()
   }
 
-  /** r14 knn candidate-cap A/B under verbatim dup-flood: at ×729 with
-    * cells-∝-n sizing every dup family (729 copies) overflows its
-    * ~250-target cell, so the uncapped kernel pays m² per cell while the
-    * capped one pays m·256. Run: `... r14knn729`.
+  /** What the kNN-graph candidate cap costs (ROADMAP item 8), at a scale
+    * where the UNCAPPED kernel still runs: (a) edge recall, the fraction
+    * of uncapped top-k edges the capped graph keeps; (b) score recall,
+    * the mean per-vector cosine gap between capped and uncapped neighbour
+    * lists (in a near-identical dup family the neighbour ids are
+    * interchangeable — the curation question is whether the kept
+    * neighbours are as close); (c) the byte curve of each kernel.
     */
-  /** r15 verdict ask #4: close the kNN-graph candidate cap's QUALITY
-    * measurement the way r14sem closed the semantic cap's — the r14knn
-    * commit measured walls (52.1 vs 76.8 s at ×729) but not what the cap
-    * costs in neighbors. At scales where the UNCAPPED kernel still runs,
-    * measure (a) edge recall: the fraction of uncapped top-k edges the
-    * capped graph keeps, (b) score recall: the mean per-vector cosine
-    * gap between capped and uncapped neighbor lists (in a near-identical
-    * dup family the specific neighbor ids are interchangeable — the
-    * CURATION-relevant question is whether the kept neighbors are as
-    * close, not whether they are the same rows), and (c) the byte curve
-    * of both legs. Run: `... r15knnrecall` (×27) / `r15knnrecallx243`.
-    */
-  private def r15KnnRecall(spark: SparkSession, ks: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    for (k <- ks) {
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val (k1, k2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-      val tl = graft.ops.Ivf.trainTwoLevel(emb, k1, k2, iters = 0)
-      val cells = graft.core.Materialize.once(
-        graft.ops.Ivf.assignTwoLevel(
-          emb.where(col("embedding").isNotNull)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-          tl)
-          .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
-      cells.count()
-      val over = cells.groupBy(col("cid")).count()
-        .where(col("count") > 256).count()
-      def leg(label: String)(f: => org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = {
-        flushListeners(spark); val (r0, w0, s0) = tap.snap
-        val t0 = System.nanoTime()
-        val out = graft.core.Materialize.once(f)
-        val n = out.count()
-        flushListeners(spark); val (r1, w1, s1) = tap.snap
-        println(f"[scale] $label%-44s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-          f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-          f"spill ${mb(s1 - s0)}")
-        out
-      }
-      println(s"[scale] x$k: $ne vecs, ${k1}x$k2 cells, $over cells over the 256 cap")
-      val capped = leg(s"knn_graph CAPPED(256) x$k") {
-        graft.ops.Ivf.knnGraphOnCells(cells, 5, maxCand = 256)
-      }
-      val coll = leg(s"knn_graph COLLAPSED(256) x$k") {
-        graft.ops.Ivf.knnGraphCollapsedOnCells(cells, 5, maxCand = 256)
-      }
-      val unc = leg(s"knn_graph UNCAPPED x$k") {
-        graft.ops.Ivf.knnGraphOnCells(cells, 5, maxCand = 1 << 20)
-      }
-      val collExact = unc.select(col("vec_id"), col("neighbor_id"), col("cos"), col("rn"))
-        .exceptAll(coll.select(col("vec_id"), col("neighbor_id"), col("cos"), col("rn")))
-        .count()
-      println(f"[scale] knn COLLAPSED vs UNCAPPED x$k: $collExact%d differing rows " +
-        "(0 = bit-exact)")
-      val nUnc = unc.count()
-      val kept = unc.select(col("vec_id"), col("neighbor_id"))
-        .join(capped.select(col("vec_id"), col("neighbor_id")),
-          Seq("vec_id", "neighbor_id"), "left_semi").count()
-      // score recall: per-vector mean neighbor cosine, capped vs uncapped
-      // — the joined per-vector frame is MATERIALIZED once and read by
-      // all three follow-ups (gap summary, worst-vector attribution,
-      // loss distribution); re-deriving it per read would triple the
-      // full-graph aggregations inside the very diagnostic that is
-      // attributing walls and bytes
-      def meanCos(g: org.apache.spark.sql.DataFrame) = g.groupBy(col("vec_id"))
-        .agg(avg(col("cos")).as("mc"))
-      val perVec = graft.core.Materialize.once(
-        meanCos(capped).withColumnRenamed("mc", "mc_cap")
-          .join(meanCos(unc).withColumnRenamed("mc", "mc_unc"), Seq("vec_id"))
-          .select(col("vec_id"), (col("mc_unc") - col("mc_cap")).as("gap")))
-      val gap = perVec
-        .agg(avg(col("gap")).as("mean_gap"), max(col("gap")).as("max_gap")).head()
-      println(f"[scale] knn cap quality x$k: edge-recall@5 ${kept.toDouble / nUnc}%.4f " +
-        f"($kept%d / $nUnc%d)  neighbor-cos gap mean ${gap.getDouble(0)}%.6f " +
-        f"max ${gap.getDouble(1)}%.6f")
-      // attribution for the tail: the worst-gap vectors with their cell
-      // size — is the loss concentrated where the cap bites, and why?
-      val worst = perVec
-        .join(cells.select(col("vec_id"), col("cid")), Seq("vec_id"))
-        .join(cells.groupBy(col("cid")).count(), Seq("cid"))
-        .orderBy(col("gap").desc).limit(8).collect()
-      worst.foreach { r =>
-        println(f"[scale]   worst gap: vec ${r.getLong(1)}%9d  cell ${r.getLong(0)}%5d " +
-          f"(size ${r.getLong(3)}%5d)  gap ${r.getDouble(2)}%.6f")
-      }
-      // gap distribution: how many vectors lose more than eps at all
-      val dist = perVec
-        .select((col("gap") > 0.01).cast("int").as("lossy"))
-        .agg(sum(col("lossy")), count(lit(1))).head()
-      println(f"[scale]   vectors with gap > 0.01: ${dist.getLong(0)} / ${dist.getLong(1)}")
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
-    }
-  }
-
-  /** r15 verdict ask #6: validate the twoLevelSizing POLICY end-to-end at
-    * ×729 — registries pin TL_K = 4 for oracle determinism, but a 100 TB
-    * user calls the sizing helper; this leg runs the semantic-dedup face
-    * (capped feed) at sized (k1,k2) for targetCell ∈ {250, 1000} against
-    * the fixed 4×4 control and records wall/bytes/spill for each.
-    * Run: `... r15tl729`.
-    */
-  /** r16 leg (verdict ask #7): validate that the SEALED iterative-kernel
-    * layout (Dedup.clusters' byte-derived nParts, declared on the cut)
-    * really widens with edge bytes — partitions must grow once the edge
-    * list crosses the 64 MB advisory, and no leg may collapse to
-    * too-few tasks relative to its bytes. Synthetic chain-blocks graph
-    * (blocks of 64 ⇒ ~7 pointer-jump rounds) at three edge scales; the
-    * final labels frame IS the declared layout, so its rdd partition
-    * count is the observable.
-    */
-  private def r16LayoutProbe(spark: SparkSession): Unit = {
-    // the engine sessions' size-respecting coalescing (GraftSession):
-    // without it this probe would measure the parallelism-first default
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    Seq(2000000L, 20000000L).foreach { n =>
-      val pairs = spark.range(n)
-        .where(col("id") % 64 =!= 63) // chain within each 64-block
-        .select(col("id").as("id1"), (col("id") + 1).as("id2"))
-      val t0 = System.nanoTime()
-      val labels = graft.ops.Dedup.clusters(pairs)
-      val rows = labels.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val parts = labels.rdd.getNumPartitions
-      println(f"[scale] cc_layout n=$n%-9d wall ${wall}%7.2f s  " +
-        f"labelParts=$parts%4d rows=$rows " +
-        f"(edgeRows=${2 * (n - n / 64)})")
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-    }
-  }
-
-  private def r15SizingSemantic(spark: SparkSession, k: Int): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val emb = (0 until k).map(i =>
-      Tables.table(spark, dir, "embeddings").select(
-        (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionByName _)
+  def knnRecall(k: Int): Unit = {
+    import graft.ops.Ivf
+    val emb = AmplifyCorpus.embeddings(table("embeddings"), k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ne = emb.count()
-    def leg(label: String, k1: Int, k2: Int): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime()
-      val n = graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-        maxCell = 64).count()
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] semantic_dedup_2level x$k $label%-22s (${k1}x$k2) " +
-        f"${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n%9d rows)  " +
-        f"shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  spill ${mb(s1 - s0)}")
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-    }
-    val (a1, a2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-    val (b1, b2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 1000)
-    println(s"[scale] x$k: $ne vecs; sized(250)=${a1}x$a2 sized(1000)=${b1}x$b2 control=4x4")
-    leg("SIZED targetCell=250", a1, a2)
-    leg("SIZED targetCell=1000", b1, b2)
-    leg("FIXED 4x4 control", 4, 4)
-    emb.unpersist(blocking = true)
-  }
-
-  /** The COLLAPSED dedup feed at ×729 — the counterfactual for the
-    * r15tl729 finding (capped feed at 4×4 lost 58 % of the corpus):
-    * exact-dup collapse must recover full membership at BOTH the coarse
-    * control and the sized configuration, with pair generation at
-    * distinct-scale. Run: `... r15semcollapse729`.
-    */
-  private def r15CollapsedSemantic(spark: SparkSession, k: Int): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val emb = (0 until k).map(i =>
-      Tables.table(spark, dir, "embeddings").select(
-        (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ne = emb.count()
-    def leg(label: String, k1: Int, k2: Int): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime()
-      val n = graft.ops.Ivf.semanticDedupCollapsedTwoLevel(emb, k1 = k1,
-        k2 = k2, maxCell = 64).count()
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] semantic_dedup COLLAPSED x$k $label%-18s (${k1}x$k2) " +
-        f"${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n%9d rows)  " +
-        f"shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  spill ${mb(s1 - s0)}")
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-    }
-    val (a1, a2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-    println(s"[scale] x$k: $ne vecs; collapsed at 4x4 and ${a1}x$a2")
-    leg("FIXED 4x4", 4, 4)
-    leg("SIZED targetCell=250", a1, a2)
-    emb.unpersist(blocking = true)
-  }
-
-  private def r14KnnCapCurve(spark: SparkSession, k: Int): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    spark.sparkContext.addSparkListener(tap)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    def time(label: String)(f: => Long): Unit = {
-      flushListeners(spark); val (r0, w0, s0) = tap.snap
-      val t0 = System.nanoTime(); val n = f
-      flushListeners(spark); val (r1, w1, s1) = tap.snap
-      println(f"[scale] $label%-48s ${(System.nanoTime() - t0) / 1e9}%8.2f s  " +
-        f"($n%9d rows)  shufR ${mb(r1 - r0)}  shufW ${mb(w1 - w0)}  " +
-        f"spill ${mb(s1 - s0)}")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val emb = (0 until k).map(i =>
-      Tables.table(spark, dir, "embeddings").select(
-        (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ne = emb.count()
-    val (k1, k2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-    val tl = graft.ops.Ivf.trainTwoLevel(emb, k1, k2, iters = 0)
-    val cells = graft.core.Materialize.once(
-      graft.ops.Ivf.assignTwoLevel(
+    val (k1, k2) = Ivf.twoLevelSizing(ne, targetCell = 250)
+    val tl = Ivf.trainTwoLevel(emb, k1, k2, iters = 0)
+    val cells = Materialize.once(
+      Ivf.assignTwoLevel(
         emb.where(col("embedding").isNotNull)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
         tl)
         .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
     cells.count()
-    time(s"knn_graph CAPPED(256) x$k ($ne vecs, ${k1}x$k2)") {
-      graft.ops.Ivf.knnGraphOnCells(cells, 5, maxCand = 256).count()
+    val over = cells.groupBy(col("cid")).count()
+      .where(col("count") > 256).count()
+    println(s"[scale] x$k: $ne vecs, ${k1}x$k2 cells, $over cells over the 256 cap")
+    def graph(label: String)(f: => DataFrame): DataFrame =
+      time(label) { val g = Materialize.once(f); g.count(); g }
+    val capped = graph(s"knn_graph CAPPED(256) x$k") {
+      Ivf.knnGraphOnCells(cells, 5, maxCand = 256)
     }
-    // NO release between legs: both read the one materialized cell frame
-    time(s"knn_graph UNCAPPED x$k (${k1}x$k2)") {
-      graft.ops.Ivf.knnGraphOnCells(cells, 5, maxCand = 1 << 20).count()
+    val coll = graph(s"knn_graph COLLAPSED(256) x$k") {
+      Ivf.knnGraphCollapsedOnCells(cells, 5, maxCand = 256)
     }
-    graft.core.Materialize.releaseAll(spark, blocking = true)
+    val unc = graph(s"knn_graph UNCAPPED x$k") {
+      Ivf.knnGraphOnCells(cells, 5, maxCand = 1 << 20)
+    }
+    val edge = Seq("vec_id", "neighbor_id", "cos", "rn").map(col)
+    val collExact = unc.select(edge: _*).exceptAll(coll.select(edge: _*)).count()
+    println(f"[scale] knn COLLAPSED vs UNCAPPED x$k: $collExact%d differing rows " +
+      "(0 = bit-exact)")
+    val nUnc = unc.count()
+    val kept = unc.select(col("vec_id"), col("neighbor_id"))
+      .join(capped.select(col("vec_id"), col("neighbor_id")),
+        Seq("vec_id", "neighbor_id"), "left_semi").count()
+    // the per-vector gap frame is cut once and read by all three
+    // follow-ups (gap summary, worst vectors, loss distribution)
+    def meanCos(g: DataFrame) = g.groupBy(col("vec_id"))
+      .agg(avg(col("cos")).as("mc"))
+    val perVec = Materialize.once(
+      meanCos(capped).withColumnRenamed("mc", "mc_cap")
+        .join(meanCos(unc).withColumnRenamed("mc", "mc_unc"), Seq("vec_id"))
+        .select(col("vec_id"), (col("mc_unc") - col("mc_cap")).as("gap")))
+    val gap = perVec
+      .agg(avg(col("gap")).as("mean_gap"), max(col("gap")).as("max_gap")).head()
+    println(f"[scale] knn cap quality x$k: edge-recall@5 ${kept.toDouble / nUnc}%.4f " +
+      f"($kept%d / $nUnc%d)  neighbor-cos gap mean ${gap.getDouble(0)}%.6f " +
+      f"max ${gap.getDouble(1)}%.6f")
+    // the worst-gap vectors with their cell size: is the loss
+    // concentrated where the cap bites?
+    perVec
+      .join(cells.select(col("vec_id"), col("cid")), Seq("vec_id"))
+      .join(cells.groupBy(col("cid")).count(), Seq("cid"))
+      .orderBy(col("gap").desc).limit(8).collect()
+      .foreach { r =>
+        println(f"[scale]   worst gap: vec ${r.getLong(1)}%9d  cell ${r.getLong(0)}%5d " +
+          f"(size ${r.getLong(3)}%5d)  gap ${r.getDouble(2)}%.6f")
+      }
+    val dist = perVec
+      .select((col("gap") > 0.01).cast("int").as("lossy"))
+      .agg(sum(col("lossy")), count(lit(1))).head()
+    println(f"[scale]   vectors with gap > 0.01: ${dist.getLong(0)} / ${dist.getLong(1)}")
     emb.unpersist(blocking = true)
   }
 
-  /** Stage-attribution diagnostic for the capped semantic byte curve:
-    * ONE capped leg with TaskTap per-stage histograms, so a superlinear
-    * byte step can be pinned to its stage. Run: `... r14semdiag81` /
-    * `r14semdiag243`.
+  /** Whether the SEALED iterative-kernel layout (`Dedup.clusters`'
+    * byte-derived nParts, declared on the cut) widens with edge bytes
+    * (ROADMAP item 7): partitions must grow once the edge list crosses
+    * the 64 MB advisory, and no leg may collapse to too few tasks for its
+    * bytes. Synthetic chain-blocks graph (blocks of 64 ⇒ ~7 pointer-jump
+    * rounds) at two edge scales; the final labels frame IS the declared
+    * layout, so its rdd partition count is the observable.
     */
-  private def r14SemanticDiag(spark: SparkSession, k: Int): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    val tap = new ByteTap
-    val tt = new TaskTap
-    spark.sparkContext.addSparkListener(tap)
-    spark.sparkContext.addSparkListener(tt)
-    def mb(b: Long): String = f"${b / 1e6}%10.1f MB"
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    val emb = (0 until k).map(i =>
-      Tables.table(spark, dir, "embeddings").select(
-        (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        col("embedding"), col("label")))
-      .reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ne = emb.count()
-    val (k1, k2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell = 250)
-    flushListeners(spark); tt.reset(); val (r0, w0, s0) = tap.snap
-    val t0 = System.nanoTime()
-    val n = graft.ops.Ivf.semanticDedupTwoLevel(emb, k1 = k1, k2 = k2,
-      maxCell = 64).count()
-    flushListeners(spark); val (r1, w1, s1) = tap.snap
-    println(f"[scale] semantic_dedup 2level CAPPED x$k (${k1}x$k2) " +
-      f"${(System.nanoTime() - t0) / 1e9}%8.2f s ($n rows) " +
-      f"shufR ${mb(r1 - r0)} shufW ${mb(w1 - w0)} spill ${mb(s1 - s0)}")
-    tt.report()
-    graft.core.Materialize.releaseAll(spark, blocking = true)
-    emb.unpersist(blocking = true)
-  }
-
-  /** r13 verdict ask #4: MEASURED recall for the two-level IVF-PQ serving
-    * family at a cells-∝-n sizing (the 4×4 registry config is
-    * oracle-determinism-scale) — recall@5 of `ivfPqSearchTwoLevel` (and
-    * the rerank face) vs exact brute force, at ×27+, two (k1,k2) sizings
-    * via [[graft.ops.Ivf.twoLevelSizing]], nprobe1 swept. Run: `... r14recall`.
-    */
-  private def r14PqRecallTable(spark: SparkSession, legs: Seq[Int]): Unit = {
-    val dir = "/root/testdata/sf0.1"
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-    legs.foreach { k =>
-      // PERTURBED amplification (±0.2% deterministic per copy×dim), NOT
-      // verbatim: the first run of this table measured recall 0.000
-      // across the board under verbatim copies — 27 exact dups of every
-      // vector make the m=4 PQ reconstruction tie hundreds of candidates
-      // at the same rounded-6 score, and the (cos desc, id2 asc) order
-      // then returns the cell's LOWEST IDS, not the true neighbors. That
-      // is a real serving property worth its ledger note (an exact-dup
-      // flood degrades PQ ranking to id order — dedup BEFORE indexing,
-      // which is what semantic_dedup is for), but it measures the tie
-      // pathology, not recall. Perturbed copies are near-dups with
-      // distinct exact cosines, so the index must actually rank.
-      val emb = (0 until k).map(i =>
-        Tables.table(spark, dir, "embeddings").select(
-          (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          transform(col("embedding").cast("array<double>"),
-            (x, pos) => x * (lit(1.0) + lit(0.002) *
-              (((lit(i * 37) + pos * 13) % 17) - lit(8)) / lit(8.0)))
-            .as("embedding"),
-          col("label")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ne = emb.count()
-      val q = emb.where(col("vec_id") < 10)
-      val truth = graft.ops.Similarity.bruteForceTopK(spark, emb, q, 5)
-        .select(col("qid"), col("id2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nTruth = truth.count()
-      for (targetCell <- Seq(250, 1000); nprobe1 <- Seq(1, 2, 4)) {
-        val (k1, k2) = graft.ops.Ivf.twoLevelSizing(ne, targetCell)
-        val nprobe = 4
-        // raw recall@5 (exact id match) AND family recall@5 (id mod 1e6:
-        // "found the right CONTENT, any copy"). On the amplified legs the
-        // exact truth asks the index to rank 26 near-identical copies at
-        // 1e-6 cosine resolution — no compressed index answers that, so
-        // family recall is the serving-quality number there; on the ×1
-        // leg the two coincide.
-        def recallOf(got: org.apache.spark.sql.DataFrame): (Double, Double) = {
-          val g = got.select(col("qid"), col("id2"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val hits = g.join(truth, Seq("qid", "id2"), "left_semi").count()
-          val gf = g.select(col("qid").as("gqid"),
-            (col("id2") % 1000000L).as("fam")).distinct()
-          val famHits = truth
-            .join(gf, truth("qid") === gf("gqid") &&
-              truth("id2") % 1000000L === gf("fam"), "left_semi")
-            .count()
-          g.unpersist(blocking = false)
-          (hits.toDouble / nTruth, famHits.toDouble / nTruth)
-        }
-        val t0 = System.nanoTime()
-        val (adc, adcF) = recallOf(graft.ops.Ivf.ivfPqSearchTwoLevel(emb, q, 5,
-          k1 = k1, k2 = k2, nprobe1 = nprobe1, nprobe = nprobe))
-        graft.core.Materialize.releaseAll(spark, blocking = true)
-        val t1 = System.nanoTime()
-        val (rr, rrF) = recallOf(graft.ops.Ivf.ivfPqSearchRerankTwoLevel(emb, q, 5,
-          k1 = k1, k2 = k2, nprobe1 = nprobe1, nprobe = nprobe))
-        graft.core.Materialize.releaseAll(spark, blocking = true)
-        val t2 = System.nanoTime()
-        // the serving-quality-vs-compute knob: a 16× ADC overfetch before
-        // the exact re-rank (k' = 80 raw-vector gathers per query — still
-        // bounded, still broadcastable)
-        val (rrW, rrWF) = recallOf(graft.ops.Ivf.ivfPqSearchRerankTwoLevel(emb, q, 5,
-          k1 = k1, k2 = k2, nprobe1 = nprobe1, nprobe = nprobe, kFactor = 16))
-        graft.core.Materialize.releaseAll(spark, blocking = true)
-        val t3 = System.nanoTime()
-        println(f"[recall] x$k ($ne vecs) cells ${k1}x$k2 (target $targetCell) " +
-          f"nprobe1=$nprobe1 nprobe=$nprobe: adc@5 $adc%.3f fam $adcF%.3f " +
-          f"(${(t1 - t0) / 1e9}%5.1f s)  rerank@5 $rr%.3f fam $rrF%.3f " +
-          f"(${(t2 - t1) / 1e9}%5.1f s)  rerank16x@5 $rrW%.3f fam $rrWF%.3f " +
-          f"(${(t3 - t2) / 1e9}%5.1f s)")
-      }
-      truth.unpersist(blocking = true)
-      graft.core.Materialize.releaseAll(spark, blocking = true)
-      emb.unpersist(blocking = true)
+  def layout(): Unit = Seq(2000000L, 20000000L).foreach { n =>
+    val pairs = spark.range(n)
+      .where(col("id") % 64 =!= 63) // chain within each 64-block
+      .select(col("id").as("id1"), (col("id") + 1).as("id2"))
+    val labels = time(s"cc_layout n=$n (edgeRows=${2 * (n - n / 64)})") {
+      val l = graft.ops.Dedup.clusters(pairs); l.count(); l
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.plans.GraftExtensions) // ASOF SQL + native fns
-      .config("spark.sql.shuffle.partitions", 32)
-      // events.parquet stores TIMESTAMP(NANOS): same setting Verify/Bench use
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bounded-buffer udaf aggregates must keep HASH aggregation past
-      // 128 keys (see GraftSession: the 49 GB knn spill finding)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 18).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (args.contains("recall")) { recallCurves(spark); spark.stop(); return }
-    if (args.contains("newops")) { newOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r6ops")) { r6OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r7ops")) { r7OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r8ops")) { r8OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r10w4")) { r10w4OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r10w7")) { r10w7OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11")) { r11OpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11b")) { r11bOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11c")) { r11cOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11d")) { r11dOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11e")) { r11eOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r11f")) { r11fOpsCurves(spark); spark.stop(); return }
-    if (args.contains("r15knnrecallx243")) { r15KnnRecall(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r15knnrecall")) { r15KnnRecall(spark, Seq(27)); spark.stop(); return }
-    if (args.contains("r16layout")) { r16LayoutProbe(spark); spark.stop(); return }
-    if (args.contains("r15tl729")) { r15SizingSemantic(spark, 729); spark.stop(); return }
-    if (args.contains("r15semcollapse729")) { r15CollapsedSemantic(spark, 729); spark.stop(); return }
-    if (args.contains("r14knn729")) { r14KnnCapCurve(spark, 729); spark.stop(); return }
-    if (args.contains("r14semx729")) { r14SemanticCapCurves(spark, Seq(729)); spark.stop(); return }
-    if (args.contains("r14semdiag81")) { r14SemanticDiag(spark, 81); spark.stop(); return }
-    if (args.contains("r14semdiag243")) { r14SemanticDiag(spark, 243); spark.stop(); return }
-    if (args.contains("r14semx243")) { r14SemanticCapCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r14sem")) { r14SemanticCapCurves(spark, Seq(27, 81)); spark.stop(); return }
-    if (args.contains("r14recallx81")) { r14PqRecallTable(spark, Seq(81)); spark.stop(); return }
-    if (args.contains("r14recall")) { r14PqRecallTable(spark, Seq(1, 27)); spark.stop(); return }
-    if (args.contains("r14pqx729")) { r13PqCurves(spark, Seq(729)); spark.stop(); return }
-    if (args.contains("r13pqx243")) { r13PqCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r13pq")) { r13PqCurves(spark, Seq(27, 81)); spark.stop(); return }
-    if (args.contains("r13semx243")) { r13SemanticCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r13sem")) { r13SemanticCurves(spark, Seq(27, 81)); spark.stop(); return }
-    if (args.contains("r13x729")) { r13x729Curves(spark); spark.stop(); return }
-    if (args.contains("r13lrx243")) { r13LongestRepeatCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r13lrx81")) { r13LongestRepeatCurves(spark, Seq(81)); spark.stop(); return }
-    if (args.contains("r13lr")) { r13LongestRepeatCurves(spark, Seq(81, 243)); spark.stop(); return }
-    if (args.contains("r12knn")) { r12KnnCurves(spark); spark.stop(); return }
-    if (args.contains("r12bx243")) { r12TwoLevelCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("r12b")) { r12TwoLevelCurves(spark, Seq(27, 81)); spark.stop(); return }
-    if (args.contains("r12")) { r12ScaleCurves(spark, Seq(1, 27, 81)); spark.stop(); return }
-    if (args.contains("r12x243")) { r12ScaleCurves(spark, Seq(243)); spark.stop(); return }
-    if (args.contains("rerank")) { rerankKnobCurves(spark); spark.stop(); return }
-    val dir = "/root/testdata/sf0.1"
-
-    def amplifyDocs(k: Int): DataFrame = {
-      val d = Tables.table(spark, dir, "documents")
-      (0 until k).map { i =>
-        d.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          // salt every word so copies share no shingles: constant dup-rate,
-          // pure corpus-size growth (the near-dup-explosion variant is the
-          // concat-suffix form, measured separately in BENCH_NOTES)
-          regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-    }
-    def amplifyEmb(k: Int): DataFrame = {
-      val e = Tables.table(spark, dir, "embeddings")
-      (0 until k).map { i =>
-        e.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding"), col("label"))
-      }.reduce(_ unionByName _)
-    }
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[scale] $label%-36s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
-    }
-    spark.range(1 << 20).agg(sum(col("id"))).collect() // warm
-
-    Seq(1, 8, 27).foreach { k =>
-      val docs = amplifyDocs(k).cache(); docs.count()
-      time(s"dedup_minhash x$k (${5000 * k} docs)") {
-        graft.ops.Dedup.minhashLsh(docs).count()
-      }
-      time(s"corpus_dedup x$k") {
-        graft.ops.Dedup.corpusDedup(docs).count()
-      }
-      time(s"contamination_check x$k") {
-        graft.ops.TextAnalysis.contaminationCheck(docs).count()
-      }
-      time(s"dedup_substring x$k") {
-        graft.ops.Dedup.substringDedup(docs).count()
-      }
-      time(s"dedup_incremental x$k") {
-        graft.ops.Dedup.incrementalDedup(
-          docs.where(col("source") === "src0"),
-          docs.where(col("source") =!= "src0")).count()
-      }
-      time(s"tfidf_topterms x$k") {
-        graft.ops.TextAnalysis.tfidfTopTerms(docs).count()
-      }
-      docs.unpersist()
-      val emb = amplifyEmb(k).cache(); emb.count()
-      val q = emb.where(col("vec_id") < 10)
-      time(s"ann_ivf x$k (${5000 * k} vecs)") {
-        graft.ops.Ivf.searchTopK(emb, q, 5, iters = 0).count()
-      }
-      time(s"ann_lsh_multi x$k") {
-        graft.ops.Similarity.lshTopKMulti(spark, emb, q, 5).count()
-      }
-      emb.unpersist()
-    }
-    spark.stop()
+    println(s"[scale]   labelParts=${labels.rdd.getNumPartitions}")
+    Materialize.releaseAll(spark, blocking = true)
   }
 }

@@ -24,8 +24,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * coalesces or splits a user-specified partition count) followed only by
   * partitioning-preserving operators (project/filter/aggregate-on-a-
   * superset-of-keys). Declaring a layout the rows do not have would
-  * silently co-locate joins wrongly — keep this private to the audited
-  * kernel call sites (it is package-gated to graft.core.Materialize).
+  * silently co-locate joins wrongly, and nothing checks the declaration:
+  * the object is PUBLIC, so any caller can make it. Its one caller is
+  * `graft.core.Materialize.cutPartitioned`, for the audited kernel call
+  * sites; making an unverified declaration impossible (or removing the
+  * shim) is ROADMAP item 7.
   *
   * Lives in org.apache.spark.sql because LogicalRDD construction and
   * Dataset.ofRows are private[sql]; everything referenced is Apache Spark

@@ -5,9 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {
