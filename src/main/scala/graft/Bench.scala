@@ -1,6 +1,7 @@
 package graft
 import graft.core.GraftSession
 import graft.tools.Diagnostics
+import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** Executor-CPU tap: sums taskMetrics.executorCpuTime (ns) across task
@@ -11,7 +12,9 @@ object Bench {
     * a same-box binary A/B; cpu-per-query makes the r14↔r13 comparison
     * one artifact read (wall grows + ecpu flat ⇒ box; both grow ⇒ code).
     */
-  private final class CpuTap extends org.apache.spark.scheduler.SparkListener {
+  private object DrawFailed extends scala.util.control.ControlThrowable
+
+  private[graft] final class CpuTap extends org.apache.spark.scheduler.SparkListener {
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     override def onTaskEnd(
         e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -19,6 +22,62 @@ object Bench {
       if (m != null) cpuNs.addAndGet(m.executorCpuTime)
     }
   }
+
+  // Process-CPU clock: lets a reader separate wall-time inflation caused
+  // by EXTERNAL box load (wall grows, this process's CPU doesn't) from a
+  // real regression (both grow) — the BENCH_r05 adjudication, made
+  // self-serving. Sum over all threads of this JVM, in seconds.
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private def cpuSec: Double = osBean.getProcessCpuTime / 1e9
+
+  /** One timed draw of `action` for query `name`: (wall s, process cpu s,
+    * executor cpu s from `tap`, external load), or None when the action
+    * throws — a failing query's wall is not a measurement.
+    */
+  private[graft] def drawWith(spark: SparkSession, tap: CpuTap, name: String)(
+      action: => Unit): Option[(Double, Double, Double, Double)] =
+    // Scope + BLOCKING release at the query boundary: this query's
+    // localCheckpoint blocks are fully dropped before the next query's
+    // timer starts (async removal would overlap into — and inflate —
+    // the next measurement). Without any release the 126-query session
+    // accumulates every query's materialized frames (MEMORY_AND_DISK)
+    // and late-alphabet queries run under eviction pressure — the
+    // round-4 dedup_minhash/simhash regression.
+    graft.core.Materialize.inScope { scope =>
+      // the tap snapshots must cover every task of the timed action
+      Diagnostics.drainListenerBus(spark)
+      val e0 = tap.cpuNs.get
+      val c0 = cpuSec
+      val t0 = System.nanoTime()
+      // a failing query must be VISIBLE in the log and in the artifact
+      val ok = try { action; true } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          false
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      val dc = cpuSec - c0
+      Diagnostics.drainListenerBus(spark)
+      val de = (tap.cpuNs.get - e0) / 1e9
+      scope.release(spark, blocking = true)
+      // a cut made OFF the query thread (e.g. a future foreachBatch-
+      // based query) lands in the default scope and would leak past
+      // the scoped release, re-opening the eviction-pressure
+      // regression this registry prevents — catch it immediately
+      if (graft.core.Materialize.liveBlockCount(spark) != 0) {
+        System.err.println(s"[bench] $name leaked " +
+          s"${graft.core.Materialize.liveBlockCount(spark)} tracked " +
+          "blocks past its scope; falling back to releaseAll")
+        graft.core.Materialize.releaseAll(spark, blocking = true)
+      }
+      // external-load estimate for THIS draw: OS 1-min load average
+      // minus the cores this process itself consumed over the draw
+      // (a negative value clamps to 0 — the load average lags)
+      val ext = math.max(0.0,
+        osBean.getSystemLoadAverage - dc / math.max(dt, 1e-9))
+      if (ok) Some((dt, dc, de, ext)) else None
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,13 +92,6 @@ object Bench {
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt
     // benched tables themselves stay untouched by the warmup
     Diagnostics.warm(spark)
-    // Process-CPU clock: lets a reader separate wall-time inflation caused
-    // by EXTERNAL box load (wall grows, this process's CPU doesn't) from a
-    // real regression (both grow) — the BENCH_r05 adjudication, made
-    // self-serving. Sum over all threads of this JVM, in seconds.
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuSec: Double = osBean.getProcessCpuTime / 1e9
     val tap = new CpuTap
     spark.sparkContext.addSparkListener(tap)
     val cpu0 = cpuSec
@@ -65,90 +117,54 @@ object Bench {
     // same repeat count, measured after the count draws, no load-regate —
     // the count channel's gate verdict covers the same box window).
     val noopOn = sys.env.getOrElse("SPARK_GRAFT_NOOP", "1") != "0"
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def drawWith(action: => Unit): (Double, Double, Double, Double) =
-        // Scope + BLOCKING release at the query boundary: this query's
-        // localCheckpoint blocks are fully dropped before the next query's
-        // timer starts (async removal would overlap into — and inflate —
-        // the next measurement). Without any release the 126-query session
-        // accumulates every query's materialized frames (MEMORY_AND_DISK)
-        // and late-alphabet queries run under eviction pressure — the
-        // round-4 dedup_minhash/simhash regression.
-        graft.core.Materialize.inScope { scope =>
-          // the tap snapshots must cover every task of the timed action
-          Diagnostics.drainListenerBus(spark)
-          val e0 = tap.cpuNs.get
-          val c0 = cpuSec
-          val t0 = System.nanoTime()
-          // a failing query must be VISIBLE in the log (its wall time alone
-          // reads as just-a-fast-query in the artifact)
-          try { action } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
-          val dc = cpuSec - c0
-          Diagnostics.drainListenerBus(spark)
-          val de = (tap.cpuNs.get - e0) / 1e9
-          scope.release(spark, blocking = true)
-          // a cut made OFF the query thread (e.g. a future foreachBatch-
-          // based query) lands in the default scope and would leak past
-          // the scoped release, re-opening the eviction-pressure
-          // regression this registry prevents — catch it immediately
-          if (graft.core.Materialize.liveBlockCount(spark) != 0) {
-            System.err.println(s"[bench] $name leaked " +
-              s"${graft.core.Materialize.liveBlockCount(spark)} tracked " +
-              "blocks past its scope; falling back to releaseAll")
-            graft.core.Materialize.releaseAll(spark, blocking = true)
-          }
-          // external-load estimate for THIS draw: OS 1-min load average
-          // minus the cores this process itself consumed over the draw
-          // (a negative value clamps to 0 — the load average lags)
-          val ext = math.max(0.0,
-            osBean.getSystemLoadAverage - dc / math.max(dt, 1e-9))
-          (dt, dc, de, ext)
+    val results = SparkEntry.queries.map { q =>
+      val name = q.name
+      // one throwing draw fails the query: it reads -1 in both channels,
+      // is listed in "failed", and stays out of value and noop_total
+      def timed(action: => Unit) =
+        drawWith(spark, tap, name)(action).getOrElse(throw DrawFailed)
+      try {
+        def draw() = timed(q.build(spark, sfDir).count())
+        var times = (1 to repeat).map(_ => draw())
+        // regate only when BOTH signals agree: every draw ran under external
+        // load AND the draws disagree materially (>25% wall spread). The
+        // load average alone over-triggers — it is box-wide and 1-minute
+        // lagged, so our OWN just-finished heavy query inflates the next
+        // light query's reading; a tight spread under high load means the
+        // measurement is stable and the min is trustworthy anyway.
+        def needsRegate(ts: Seq[(Double, Double, Double, Double)]): Boolean = {
+          val walls = ts.map(_._1)
+          ts.map(_._4).min > loadGate && walls.size > 1 &&
+            (walls.max - walls.min) > 0.25 * math.max(walls.min, 1e-9)
         }
-      def draw(): (Double, Double, Double, Double) =
-        drawWith(fn(spark, sfDir).count())
-      var times = (1 to repeat).map(_ => draw())
-      // regate only when BOTH signals agree: every draw ran under external
-      // load AND the draws disagree materially (>25% wall spread). The
-      // load average alone over-triggers — it is box-wide and 1-minute
-      // lagged, so our OWN just-finished heavy query inflates the next
-      // light query's reading; a tight spread under high load means the
-      // measurement is stable and the min is trustworthy anyway.
-      def needsRegate(ts: Seq[(Double, Double, Double, Double)]): Boolean = {
-        val walls = ts.map(_._1)
-        ts.map(_._4).min > loadGate && walls.size > 1 &&
-          (walls.max - walls.min) > 0.25 * math.max(walls.min, 1e-9)
-      }
-      var regated = 0
-      while (regated < gateMax && needsRegate(times)) {
-        regated += 1
-        System.err.println(f"[bench] $name: all draws contended " +
-          f"(min ext-load ${times.map(_._4).min}%.1f > $loadGate%.1f, " +
-          f"spread ${times.map(_._1).max - times.map(_._1).min}%.2f s) — " +
-          f"re-running (extra $regated/$gateMax)")
-        times = times :+ draw()
-      }
-      // contended = even after the gate's extra draws the leg never
-      // produced a trustworthy minimum; flagged in the artifact
-      val contended = needsRegate(times)
-      val best = times.minBy(_._1)
-      // spread = max−min across the repeat draws: the per-query contention
-      // signal the r8 adjudication wanted IN the artifact — a large spread
-      // on a flat-cpu query is box noise, not a regression
-      val spread = times.map(_._1).max - times.map(_._1).min
-      // noop channel: full-materialization draws, min over the same count
-      val noopWall =
-        if (!noopOn) -1.0
-        else (1 to repeat).map { _ =>
-          drawWith(fn(spark, sfDir)
-            .write.format("noop").mode("overwrite").save())._1
-        }.min
-      System.err.println(f"[bench] $name%-20s ${times.map(t => f"${t._1}%.2f").mkString(" ")} s" +
-        f" -> min ${best._1}%.2f (cpu ${best._2}%.2f s, ecpu ${best._3}%.2f s, noop $noopWall%.2f s)")
-      (name, best._1, best._2, spread, best._3, regated, contended, noopWall)
+        var regated = 0
+        while (regated < gateMax && needsRegate(times)) {
+          regated += 1
+          System.err.println(f"[bench] $name: all draws contended " +
+            f"(min ext-load ${times.map(_._4).min}%.1f > $loadGate%.1f, " +
+            f"spread ${times.map(_._1).max - times.map(_._1).min}%.2f s) — " +
+            f"re-running (extra $regated/$gateMax)")
+          times = times :+ draw()
+        }
+        // contended = even after the gate's extra draws the leg never
+        // produced a trustworthy minimum; flagged in the artifact
+        val contended = needsRegate(times)
+        val best = times.minBy(_._1)
+        // spread = max−min across the repeat draws: the per-query contention
+        // signal the r8 adjudication wanted IN the artifact — a large spread
+        // on a flat-cpu query is box noise, not a regression
+        val spread = times.map(_._1).max - times.map(_._1).min
+        // noop channel: full-materialization draws, min over the same count
+        val noopWall =
+          if (!noopOn) -1.0
+          else (1 to repeat).map { _ =>
+            timed(q.build(spark, sfDir)
+              .write.format("noop").mode("overwrite").save())._1
+          }.min
+        System.err.println(f"[bench] $name%-20s ${times.map(t => f"${t._1}%.2f").mkString(" ")} s" +
+          f" -> min ${best._1}%.2f (cpu ${best._2}%.2f s, ecpu ${best._3}%.2f s, noop $noopWall%.2f s)")
+        (name, best._1, best._2, spread, best._3, regated, contended, noopWall)
+      } catch { case DrawFailed => (name, -1.0, 0.0, 0.0, 0.0, 0, false, -1.0) }
     }
     // 4-decimal times keep the closing JSON line compact (BENCH_r03's
     // full-precision doubles overflowed the driver's bounded output tail
@@ -186,7 +202,11 @@ object Bench {
     val gate =
       s"""{"threshold":${fmt(loadGate)},"max_extra":$gateMax,""" +
         s""""regated":$regatedQs,"still_contended":$contendedQs}"""
-    val total = results.map(_._2).sum
+    // the queries whose draws threw: -1 in the per-query maps, left out of
+    // every total
+    val (failed, measured) = results.partition(_._2 < 0)
+    val failedQs = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val total = measured.map(_._2).sum
     val spreadSum = results.map(_._4).sum
     val totalCpu = cpuSec - cpu0
     val totalWall = (System.nanoTime() - wall0) / 1e9
@@ -206,10 +226,10 @@ object Bench {
         s""""spread_sum":${fmt(spreadSum)},""" +
         s""""sys_load_avg":${fmt(osBean.getSystemLoadAverage)}}"""
     val ecpuSum = results.map(_._5).sum
-    val noopTotal = if (noopOn) results.map(_._8).sum else -1.0
+    val noopTotal = if (noopOn) measured.map(_._8).sum else -1.0
     val noopPart = if (noopOn) s""","queries_noop":$noopQs,"noop_total":${fmt(noopTotal)}""" else ""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpuQs,"ecpu":$ecpuQs,"spread":$spreadQs$noopPart,"ecpu_sum":${fmt(ecpuSum)},"load":$load,"gate":$gate,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpuQs,"ecpu":$ecpuQs,"spread":$spreadQs$noopPart,"ecpu_sum":${fmt(ecpuSum)},"load":$load,"gate":$gate,"failed":$failedQs,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
@@ -225,7 +245,7 @@ object Bench {
     // cpu/ecpu/spread per-query maps stay in the file artifact above —
     // widening stdout with them would push the summary out of the tail.
     println(
-      s"""{"metric":"total","unit":"sec","n":${results.size},"queries":$qs$noopPart,"ecpu_sum":${fmt(ecpuSum)},"load":$load,"gate":$gate,"value":${fmt(total)},"sf":"$sfDir"}""")
+      s"""{"metric":"total","unit":"sec","n":${results.size},"queries":$qs$noopPart,"ecpu_sum":${fmt(ecpuSum)},"load":$load,"gate":$gate,"failed":$failedQs,"value":${fmt(total)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -20,7 +20,7 @@ object Explain {
       // cuts (they print as `Scan ExistingRDD` in the final plan) — the
       // iterative kernels' per-round shapes live there
       val (df, segs) = graft.core.Materialize.recordingSegmentPlans(
-        SparkEntry.queries(n)(spark, sfDir))
+        SparkEntry.query(n).build(spark, sfDir))
       df.explain("formatted")
       segs.zipWithIndex.foreach { case (p, i) =>
         println(s"---------- $n segment $i (pre-AQE sparkPlan) ----------")

@@ -8,9 +8,24 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory; every [SQL] operator has a `queries` entry and a matching
-  * DuckDB oracle in `oracleSql` with identical column names.
+/** One registered query: its Spark build over an sf directory and the
+  * DuckDB SQL that replays it, with identical column names.
+  */
+final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+                       oracleSql: String)
+
+object Query {
+  /** The name index over `qs`; fails naming every name that repeats. */
+  def index(qs: Seq[Query]): Map[String, Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> q).toMap
+  }
+}
+
+/** The query surface — see SURVEY.md §2 for the operator inventory; every
+  * [SQL] operator is one `Query` in a `graft.registry` object, and
+  * `queries` indexes them all by name.
   *
   * Determinism rules shared by both sides:
   *  - money/qty sums go through exact DECIMAL(18,2) partial sums, then
@@ -158,7 +173,7 @@ object SparkEntry {
 
   // ---- queries -------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  private lazy val byName: Map[String, Query] = Query.index(
     graft.registry.OhlcvRegistry.queries ++
     graft.registry.StudiesRegistry.queries ++
     graft.registry.OlapRegistry.queries ++
@@ -166,8 +181,13 @@ object SparkEntry {
     graft.registry.TextRegistry.queries ++
     graft.registry.DedupRegistry.queries ++
     graft.registry.VectorRegistry.queries ++
-    graft.registry.MultimodalRegistry.queries
+    graft.registry.MultimodalRegistry.queries)
 
+  /** Every registered query, sorted by name. */
+  lazy val queries: Seq[Query] = byName.values.toSeq.sortBy(_.name)
+
+  def query(name: String): Query =
+    byName.getOrElse(name, throw new NoSuchElementException(s"no query named $name"))
 
   /** TPC-H style revenue aggregate: exact decimal partial sums. */
   private[graft] def revenue = {
@@ -175,19 +195,6 @@ object SparkEntry {
     sum(col("l_extendedprice").cast(d) *
       (lit(1).cast(d) - col("l_discount").cast(d))).cast("double")
   }
-
-  // ---- oracles -------------------------------------------------------------
-
-  def oracleSql: Map[String, String] =
-    graft.registry.OhlcvRegistry.oracles ++
-    graft.registry.StudiesRegistry.oracles ++
-    graft.registry.OlapRegistry.oracles ++
-    graft.registry.EventsRegistry.oracles ++
-    graft.registry.TextRegistry.oracles ++
-    graft.registry.DedupRegistry.oracles ++
-    graft.registry.VectorRegistry.oracles ++
-    graft.registry.MultimodalRegistry.oracles
-
 
   /** Shared DuckDB replay of Ivf.pqEncoded: per-subspace codebooks from
     * the k lowest vec_ids' slices (the Ivf seed contract), assignment =

@@ -1,6 +1,6 @@
 package graft.ohlcv
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -17,6 +17,12 @@ import org.apache.spark.sql.types.DecimalType
 object Analytics {
 
   private val D = DecimalType(18, 2)
+
+  /** The routing every per-symbol sweep shares: each symbol's rows in one
+    * partition, in bucket order, so `mapPartitions` walks a series once.
+    */
+  private[ohlcv] def perSymbolSweep[T](ds: Dataset[T]): Dataset[T] =
+    ds.repartition(col("symbol")).sortWithinPartitions(col("symbol"), col("bucket_ts"))
 
   /** Per symbol/day volume-weighted average price. */
   def vwap(trades: DataFrame): DataFrame =
@@ -220,8 +226,7 @@ object Analytics {
     val a10 = 2.0 / 11.0; val b10 = 1.0 - 2.0 / 11.0
     adl(candles)
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var e3 = 0.0; var e10 = 0.0
@@ -286,8 +291,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var e = 0.0
@@ -383,8 +387,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var l = 0.0
@@ -510,8 +513,7 @@ object Analytics {
       .where(col("ret").isNotNull)
       .select(col("symbol"), col("bucket_ts"), col("ret"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var s2 = 0.0
@@ -543,8 +545,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var anchor = 0.0
@@ -629,8 +630,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var eF = 0.0; var eS = 0.0; var sig = 0.0
@@ -698,8 +698,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"), col("close"))
       .as[(String, java.sql.Timestamp, Double, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var ph, pl, pc = 0.0
@@ -897,8 +896,7 @@ object Analytics {
     candles.select(col("symbol"), col("bucket_ts"),
         col("open"), col("high"), col("low"), col("close"))
       .as[(String, java.sql.Timestamp, Double, Double, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var prevO = 0.0
@@ -1185,8 +1183,7 @@ object Analytics {
       .select(col("symbol"), col("bucket_ts"),
         ((col("ret") - col("mu")) / sqrt(col("variance"))).as("z"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var sp = 0.0; var sn = 0.0
@@ -1639,8 +1636,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"), col("close"))
       .as[(String, java.sql.Timestamp, Double, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var e = 0.0
@@ -1674,8 +1670,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("close"), col("volume"))
       .as[(String, java.sql.Timestamp, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var prevCents = 0L
@@ -1724,8 +1719,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"))
       .as[(String, java.sql.Timestamp, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         val ring = new Array[Long](span)
         var cur: String = null
@@ -1787,8 +1781,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var e1 = 0.0; var e2 = 0.0; var e3 = 0.0
@@ -1841,8 +1834,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         // ring of the last n+1 closes (cents) + circular n-deep |Δ| sum:
         // O(1) work and O(n) state per row, exact integer arithmetic
@@ -2144,8 +2136,7 @@ object Analytics {
     import spark.implicits._
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var eF = 0.0; var eS = 0.0
@@ -2216,8 +2207,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var prevClose = 0.0
@@ -2272,8 +2262,7 @@ object Analytics {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"))
       .as[(String, java.sql.Timestamp, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         val ring = new Array[Double](n)
@@ -2332,8 +2321,7 @@ object Analytics {
     val (sJ, sT, sL) = (8, 5, 3)
     candles.select(col("symbol"), col("bucket_ts"), col("close"))
       .as[(String, java.sql.Timestamp, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var j = 0.0; var tt = 0.0; var ll = 0.0

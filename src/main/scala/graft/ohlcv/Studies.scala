@@ -279,8 +279,7 @@ object Studies {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"), col("close"))
       .as[(String, java.sql.Timestamp, Double, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(Analytics.perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var prevClose = 0.0; var atr = 0.0; var fu = 0.0; var fl = 0.0
@@ -397,8 +396,7 @@ object Studies {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     candles.select(col("symbol"), col("bucket_ts"), col("high"), col("low"), col("close"))
       .as[(String, java.sql.Timestamp, Double, Double, Double)]
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("bucket_ts"))
+      .transform(Analytics.perSymbolSweep)
       .mapPartitions { it =>
         var cur: String = null
         var nSeen = 0

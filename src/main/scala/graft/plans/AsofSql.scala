@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** SQL surface for the native as-of join — the `ASOF JOIN` / `ASOF LEFT
   * JOIN` syntax DuckDB users write (and this repo's own oracle SQL uses,
-  * see SparkEntry.oracleSql "asof_join"), planned onto AsofJoinExec. The
+  * see the `asof_join` query's oracleSql), planned onto AsofJoinExec. The
   * extension syntax `ASOF NEAREST [LEFT] JOIN` plans onto the operator's
   * nearest sweep (closest right row in EITHER direction, ties backward);
   * a statement cannot mix plain and NEAREST variants (count-based

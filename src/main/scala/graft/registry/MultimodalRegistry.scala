@@ -7,46 +7,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Query
 import graft.SparkEntry._
 
 /** Multimodal columns: perceptual image/video dedup + decode/meta/frames (SURVEY §2.D).
   *
-  * Entries are verbatim extractions from the r11 SparkEntry registry
-  * (r12 split): the driver contract stays `SparkEntry.queries` /
-  * `SparkEntry.oracleSql`, composed from these per-family objects;
-  * shared oracle fragments stay in SparkEntry (imported above).
+  * Each `Query` holds a Spark build next to its DuckDB oracle;
+  * `SparkEntry.queries` indexes the eight registries by name. Shared
+  * oracle fragments stay in SparkEntry (imported above).
   */
 private[graft] object MultimodalRegistry {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "image_dedup" -> ((s, dir) =>
+  val queries: Seq[Query] = Seq(
+    Query("image_dedup", (s, dir) =>
       // perceptual dHash near-dup: stub luma grid -> 63-bit dHash ->
       // pigeonhole banding -> Hamming verify -> pointer-jumping CC ->
       // min-id keeper (real-codec face spec-tested on generated PNGs)
-      graft.ops.Dedup.imageDedup(Tables.table(s, dir, "documents"))),
-    "video_dedup" -> ((s, dir) =>
-      // per-frame stub dHash -> temporally-ALIGNED pigeonhole banding
-      // (frame_idx in the join key) -> majority-of-aligned-frames verify
-      // -> CC -> min-id keeper (real-codec face = Multimodal.frameDhash
-      // over extracted frame images, spec-tested on PNG sequences)
-      graft.ops.Dedup.videoDedup(Tables.table(s, dir, "documents"))),
-    "multimodal_meta" -> ((s, dir) =>
-      graft.ops.Multimodal.meta(Tables.table(s, dir, "documents"))),
-    "multimodal_decode" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeStub(Tables.table(s, dir, "documents"))),
-    "multimodal_framesample" -> ((s, dir) =>
-      graft.ops.Multimodal.frameSample(Tables.table(s, dir, "documents")))
-  )
-
-  val oracles: Map[String, String] = Map(
-
-    // dHash image-dedup replay: the stub luma grid is md5-hex byte pairs
-    // (position (2i mod 31)+1 — pure string/integer logic, no codec), the
-    // 63-bit dHash a sum of shifted gradient-sign bits, banding/Hamming/
-    // CC replayed exactly like corpus_dedup's recursive min-label CTE
-    "image_dedup" ->
-      ("WITH RECURSIVE hx AS (SELECT doc_id, md5(text) AS h FROM documents), " +
+      graft.ops.Dedup.imageDedup(Tables.table(s, dir, "documents")),
+      // dHash image-dedup replay: the stub luma grid is md5-hex byte pairs
+      // (position (2i mod 31)+1 — pure string/integer logic, no codec), the
+      // 63-bit dHash a sum of shifted gradient-sign bits, banding/Hamming/
+      // CC replayed exactly like corpus_dedup's recursive min-label CTE
+      "WITH RECURSIVE hx AS (SELECT doc_id, md5(text) AS h FROM documents), " +
         "lb AS (SELECT doc_id, h, b, b // 8 AS r, b % 8 AS c " +
         "FROM hx CROSS JOIN range(63) t(b)), " +
         "bits AS (SELECT doc_id, " +
@@ -69,11 +51,16 @@ private[graft] object MultimodalRegistry {
         "COALESCE(l.cluster_id, d.doc_id) AS cluster_id, " +
         "(d.doc_id = COALESCE(l.cluster_id, d.doc_id)) AS keep " +
         "FROM d LEFT JOIN labels l ON l.doc_id = d.doc_id"),
-    // videoDedup replay: per-frame md5(text||'#'||f) stub grids, aligned
-    // (f, chunk, cval) candidate join, strict-majority verify, same
-    // recursive-CTE CC as image_dedup
-    "video_dedup" ->
-      ("WITH RECURSIVE d0 AS (SELECT doc_id, text, " +
+    Query("video_dedup", (s, dir) =>
+      // per-frame stub dHash -> temporally-ALIGNED pigeonhole banding
+      // (frame_idx in the join key) -> majority-of-aligned-frames verify
+      // -> CC -> min-id keeper (real-codec face = Multimodal.frameDhash
+      // over extracted frame images, spec-tested on PNG sequences)
+      graft.ops.Dedup.videoDedup(Tables.table(s, dir, "documents")),
+      // videoDedup replay: per-frame md5(text||'#'||f) stub grids, aligned
+      // (f, chunk, cval) candidate join, strict-majority verify, same
+      // recursive-CTE CC as image_dedup
+      "WITH RECURSIVE d0 AS (SELECT doc_id, text, " +
         "LEAST(1 + len(text) // 256, 4) AS nf FROM documents), " +
         "fr AS (SELECT doc_id, nf, t.f AS f, " +
         "md5(text || '#' || CAST(t.f AS VARCHAR)) AS h " +
@@ -105,25 +92,28 @@ private[graft] object MultimodalRegistry {
         "COALESCE(l.cluster_id, d0.doc_id) AS cluster_id, " +
         "(d0.doc_id = COALESCE(l.cluster_id, d0.doc_id)) AS keep " +
         "FROM d0 LEFT JOIN labels l ON l.doc_id = d0.doc_id"),
-    "multimodal_meta" ->
-      ("SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, " +
+    Query("multimodal_meta", (s, dir) =>
+      graft.ops.Multimodal.meta(Tables.table(s, dir, "documents")),
+      "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, " +
         "md5(text) AS content_md5, " +
         "substr(hex(encode(text)), 1, 16) AS payload_hex_prefix, " +
         "'text' AS modality FROM documents"),
-    "multimodal_framesample" ->
-      ("WITH m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS duration_ms FROM documents), " +
-        "f AS (SELECT doc_id, duration_ms, least(duration_ms // 100 + 1, 8) AS n FROM m), " +
-        "x AS (SELECT doc_id, duration_ms, unnest(generate_series(0, n - 1)) AS frame_idx FROM f) " +
-        "SELECT doc_id, duration_ms, CAST(frame_idx AS BIGINT) AS frame_idx, " +
-        "CAST(frame_idx * 100 AS BIGINT) AS frame_ts_ms FROM x"),
-    "multimodal_decode" ->
-      ("WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) AS h32, " +
+    Query("multimodal_decode", (s, dir) =>
+      graft.ops.Multimodal.decodeStub(Tables.table(s, dir, "documents")),
+      "WITH h AS (SELECT doc_id, CAST('0x' || substr(md5(text), 1, 8) AS BIGINT) AS h32, " +
         "md5(text) AS hx FROM documents) " +
         "SELECT doc_id, 16 + h32 % 64 AS width, 16 + (h32 >> 8) % 64 AS height, " +
         "CAST(3 AS BIGINT) AS channels, " +
         (0 until 8).map(i =>
           s"CAST('0x' || substr(hx, ${2 * i + 1}, 2) AS BIGINT) / 255.0 AS f$i")
           .mkString(", ") +
-        " FROM h")
+        " FROM h"),
+    Query("multimodal_framesample", (s, dir) =>
+      graft.ops.Multimodal.frameSample(Tables.table(s, dir, "documents")),
+      "WITH m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS duration_ms FROM documents), " +
+        "f AS (SELECT doc_id, duration_ms, least(duration_ms // 100 + 1, 8) AS n FROM m), " +
+        "x AS (SELECT doc_id, duration_ms, unnest(generate_series(0, n - 1)) AS frame_idx FROM f) " +
+        "SELECT doc_id, duration_ms, CAST(frame_idx AS BIGINT) AS frame_idx, " +
+        "CAST(frame_idx * 100 AS BIGINT) AS frame_ts_ms FROM x")
   )
 }

@@ -7,22 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Query
 import graft.SparkEntry._
 
 /** General OLAP over the star schema: TPC-H-shaped queries, stats, layout (SURVEY §2.C).
   *
-  * Entries are verbatim extractions from the r11 SparkEntry registry
-  * (r12 split): the driver contract stays `SparkEntry.queries` /
-  * `SparkEntry.oracleSql`, composed from these per-family objects;
-  * shared oracle fragments stay in SparkEntry (imported above).
+  * Each `Query` holds a Spark build next to its DuckDB oracle;
+  * `SparkEntry.queries` indexes the eight registries by name. Shared
+  * oracle fragments stay in SparkEntry (imported above).
   */
 private[graft] object OlapRegistry {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-
+  val queries: Seq[Query] = Seq(
     // C. general OLAP --------------------------------------------------------
-    "q1_pricing" -> ((s, dir) => {
+    Query("q1_pricing", (s, dir) => {
       val d = DecimalType(18, 2)
       Tables.table(s, dir, "lineitem")
         .where(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
@@ -33,8 +31,14 @@ private[graft] object OlapRegistry {
           sum(col("l_extendedprice").cast(d) *
             (lit(1).cast(d) - col("l_discount").cast(d))).cast("double").as("sum_disc"),
           count(lit(1)).as("n"))
-    }),
-    "q3_revenue" -> ((s, dir) => {
+    },
+      "SELECT l_returnflag, l_linestatus, " +
+        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, " +
+        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base, " +
+        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc, " +
+        "count(*) AS n FROM lineitem " +
+        "WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' GROUP BY 1, 2"),
+    Query("q3_revenue", (s, dir) => {
       // fact-fact join shuffles on the key (AQE decides broadcast at small
       // SF); the customer dim is explicitly broadcast — no shuffle for it
       // even at 100 TB fact scale.
@@ -45,8 +49,11 @@ private[graft] object OlapRegistry {
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n"))
-    }),
-    "q5_region" -> ((s, dir) => {
+    },
+      s"SELECT c_mktsegment, $RevenueSql AS revenue, count(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey GROUP BY 1"),
+    Query("q5_region", (s, dir) => {
       // broadcast the whole dim chain region->nation->customer, shuffle only
       // the two facts.
       val li = Tables.table(s, dir, "lineitem")
@@ -60,8 +67,13 @@ private[graft] object OlapRegistry {
         .join(broadcast(dims), col("o_custkey") === col("c_custkey"))
         .groupBy(col("r_name"), col("n_name"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n"))
-    }),
-    "q7_nation_trade" -> ((s, dir) => {
+    },
+      s"SELECT r_name, n_name, $RevenueSql AS revenue, count(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey " +
+        "JOIN nation ON c_nationkey = n_nationkey " +
+        "JOIN region ON n_regionkey = r_regionkey GROUP BY 1, 2"),
+    Query("q7_nation_trade", (s, dir) => {
       // cross-border revenue flows by ship year: ONE fact-fact shuffle on
       // the order key; both nation dim chains broadcast (supplier side and
       // customer side resolve independently — never a second fact shuffle)
@@ -81,8 +93,16 @@ private[graft] object OlapRegistry {
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).cast("long").as("l_year"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n"))
-    }),
-    "q8_market_share" -> ((s, dir) => {
+    },
+      s"SELECT supp_nation, cust_nation, CAST(year(l_shipdate) AS BIGINT) AS l_year, " +
+        s"$RevenueSql AS revenue, count(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN (SELECT s_suppkey, n_name AS supp_nation FROM supplier " +
+        "JOIN nation ON s_nationkey = n_nationkey) sn ON l_suppkey = sn.s_suppkey " +
+        "JOIN (SELECT c_custkey, n_name AS cust_nation FROM customer " +
+        "JOIN nation ON c_nationkey = n_nationkey) cn ON o_custkey = cn.c_custkey " +
+        "WHERE supp_nation <> cust_nation GROUP BY 1, 2, 3"),
+    Query("q8_market_share", (s, dir) => {
       // one supplier nation's share of a region's import revenue per
       // order year: decimal-exact numerator/denominator in ONE aggregation
       // pass (never two scans), region filter pushed into the broadcast
@@ -113,8 +133,25 @@ private[graft] object OlapRegistry {
             sum(rev).cast("double"), 6).as("mkt_share"),
           sum(rev).cast("double").as("revenue"),
           count(lit(1)).as("n"))
-    }),
-    "q10_returned" -> ((s, dir) => {
+    },
+      {
+        val num = "CAST(sum(CASE WHEN supp_nation = 'NATION_0' THEN " +
+          "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
+          "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) " +
+          "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)"
+        s"SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
+          s"round($num / $RevenueSql, 6) AS mkt_share, " +
+          s"$RevenueSql AS revenue, count(*) AS n " +
+          "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+          "JOIN (SELECT c_custkey FROM customer " +
+          "JOIN nation ON c_nationkey = n_nationkey " +
+          "JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA') ca " +
+          "ON o_custkey = ca.c_custkey " +
+          "JOIN (SELECT s_suppkey, n_name AS supp_nation FROM supplier " +
+          "JOIN nation ON s_nationkey = n_nationkey) sn ON l_suppkey = sn.s_suppkey " +
+          "GROUP BY 1"
+      }),
+    Query("q10_returned", (s, dir) => {
       // returned-item revenue per customer: selective returnflag filter
       // pushed to the fact scan, customer->nation chain broadcast
       val li = Tables.table(s, dir, "lineitem")
@@ -128,8 +165,13 @@ private[graft] object OlapRegistry {
         .join(broadcast(custN), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n"))
-    }),
-    "q2_min_cost" -> ((s, dir) => {
+    },
+      s"SELECT c_custkey, c_name, n_name, $RevenueSql AS revenue, count(*) AS n " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey " +
+        "JOIN nation ON c_nationkey = n_nationkey " +
+        "WHERE l_returnflag = 'R' GROUP BY 1, 2, 3"),
+    Query("q2_min_cost", (s, dir) => {
       // q2-style correlated scalar subquery, decorrelated: cheapest
       // supplier(s) per part within a region (no partsupp table in this
       // data model — lineitem prices play the supply-cost role). The
@@ -160,8 +202,21 @@ private[graft] object OlapRegistry {
           col("l_partkey") === col("p_partkey"))
         .select(col("p_partkey"), col("p_brand"), col("s_name"), col("n_name"),
           col("min_price").cast("double").as("min_price"))
-    }),
-    "q13_order_dist" -> ((s, dir) => {
+    },
+      // q2 replay as the LITERAL correlated scalar subquery — DuckDB
+      // decorrelates it itself, proving the Spark window-min plan computes
+      // exactly the correlated semantics
+      "WITH eur AS (SELECT s_suppkey, s_name, n_name FROM supplier " +
+        "JOIN nation ON s_nationkey = n_nationkey " +
+        "JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'), " +
+        "o AS (SELECT l_partkey, s_name, n_name, l_extendedprice " +
+        "FROM lineitem JOIN eur ON l_suppkey = s_suppkey) " +
+        "SELECT p_partkey, p_brand, s_name, n_name, " +
+        "CAST(l_extendedprice AS DOUBLE) AS min_price " +
+        "FROM o JOIN part ON p_partkey = o.l_partkey " +
+        "WHERE l_extendedprice = (SELECT min(o2.l_extendedprice) FROM o o2 " +
+        "WHERE o2.l_partkey = o.l_partkey)"),
+    Query("q13_order_dist", (s, dir) => {
       // q13-style left-outer count distribution: orders-per-customer
       // histogram INCLUDING zero-order customers. Orders pre-aggregate to
       // one skinny row per custkey BEFORE the outer join (never join raw
@@ -173,8 +228,12 @@ private[graft] object OlapRegistry {
         .join(oc, col("c_custkey") === col("o_custkey"), "left")
         .select(coalesce(col("n_orders"), lit(0L)).as("c_count"))
         .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-    }),
-    "q4_order_priority" -> ((s, dir) => {
+    },
+      "SELECT c_count, count(*) AS custdist FROM (" +
+        "SELECT c_custkey, count(o_orderkey) AS c_count " +
+        "FROM customer LEFT JOIN orders ON c_custkey = o_custkey " +
+        "GROUP BY c_custkey) GROUP BY c_count"),
+    Query("q4_order_priority", (s, dir) => {
       // q4-style EXISTS correlated subquery, decorrelated to a LEFT SEMI
       // join: orders with at least one returned line, counted by priority
       // (no commit/receipt dates in this data model — the returnflag
@@ -187,8 +246,14 @@ private[graft] object OlapRegistry {
           col("o_orderkey") === col("l_orderkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-    }),
-    "q18_large_orders" -> ((s, dir) => {
+    },
+      // q4 replay as the LITERAL EXISTS correlated subquery — DuckDB turns
+      // it into the same semi join the Spark side declares
+      "SELECT o_orderpriority, count(*) AS n_orders FROM orders o " +
+        "WHERE EXISTS (SELECT 1 FROM lineitem l " +
+        "WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R') " +
+        "GROUP BY 1"),
+    Query("q18_large_orders", (s, dir) => {
       // q18-style HAVING-subquery shape: orders whose total line quantity
       // exceeds the threshold, with their customer. The lineitem
       // aggregation runs FIRST (one orderkey shuffle, map-side combined,
@@ -207,8 +272,14 @@ private[graft] object OlapRegistry {
           col("o_custkey") === col("c_custkey"))
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
           col("o_orderdate"), col("qty").cast("double").as("total_qty"))
-    }),
-    "q17_small_quantity" -> ((s, dir) => {
+    },
+      "WITH big AS (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty " +
+        "FROM lineitem GROUP BY 1 HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 150) " +
+        "SELECT c_custkey, c_name, o_orderkey, o_orderdate, " +
+        "CAST(qty AS DOUBLE) AS total_qty " +
+        "FROM orders JOIN big ON o_orderkey = l_orderkey " +
+        "JOIN customer ON o_custkey = c_custkey"),
+    Query("q17_small_quantity", (s, dir) => {
       // q17-style correlated-AVG shape: revenue locked in line items
       // below 20% of their part's average quantity, rolled up by brand.
       // The correlated avg decorrelates to a partkey-partitioned window
@@ -229,8 +300,18 @@ private[graft] object OlapRegistry {
         .groupBy(col("p_brand"))
         .agg(round(sum(col("l_extendedprice").cast(d)).cast("double") / 7.0, 2)
           .as("avg_yearly"), count(lit(1)).as("n"))
-    }),
-    "q22_dormant_value" -> ((s, dir) => {
+    },
+      // q17 replay as the LITERAL correlated-avg subquery (decimal-exact
+      // mean like the Spark window) — DuckDB decorrelates it itself
+      "SELECT p_brand, " +
+        "round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 2) AS avg_yearly, " +
+        "count(*) AS n " +
+        "FROM lineitem l JOIN part ON p_partkey = l_partkey " +
+        "WHERE l_quantity < 0.2 * (" +
+        "SELECT CAST(sum(CAST(l2.l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) " +
+        "FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey) " +
+        "GROUP BY 1"),
+    Query("q22_dormant_value", (s, dir) => {
       // q22-style anti-join + scalar-subquery shape: above-average-
       // balance customers with NO orders since the cutoff (high-value
       // dormant accounts) by nation. The global average is a 1-row
@@ -253,8 +334,18 @@ private[graft] object OlapRegistry {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_custs"),
           sum(col("c_acctbal").cast(d)).cast("double").as("total_bal"))
-    }),
-    "q21_waiting_suppliers" -> ((s, dir) => {
+    },
+      // q22 replay: literal scalar subquery + NOT EXISTS anti join
+      "SELECT n_name, count(*) AS n_custs, " +
+        "CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal " +
+        "FROM customer c JOIN nation ON c_nationkey = n_nationkey " +
+        "WHERE c_acctbal > (" +
+        "SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) " +
+        "FROM customer WHERE c_acctbal > 0) " +
+        "AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey " +
+        "AND o.o_orderdate >= DATE '2001-01-01') " +
+        "GROUP BY 1"),
+    Query("q21_waiting_suppliers", (s, dir) => {
       // q21-style MULTI-EXISTS self-join shape — the last classic
       // correlated pattern: EXISTS + NOT EXISTS against the SAME fact
       // under two aliases. Adapted like q4 (returnflag plays the
@@ -292,8 +383,21 @@ private[graft] object OlapRegistry {
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_name"))
         .agg(count(lit(1)).as("numwait"))
-    }),
-    "q15_top_supplier" -> ((s, dir) => {
+    },
+      // q21 replay as the LITERAL double-correlated subquery — EXISTS +
+      // NOT EXISTS on lineitem under two aliases; DuckDB decorrelates to
+      // the same semi + anti pair the Spark side declares
+      "SELECT s_name, count(*) AS numwait " +
+        "FROM lineitem l1 JOIN orders ON o_orderkey = l1.l_orderkey " +
+        "JOIN supplier ON s_suppkey = l1.l_suppkey " +
+        "WHERE l1.l_returnflag = 'R' AND o_orderstatus = 'F' " +
+        "AND EXISTS (SELECT 1 FROM lineitem l2 " +
+        "WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey) " +
+        "AND NOT EXISTS (SELECT 1 FROM lineitem l3 " +
+        "WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey " +
+        "AND l3.l_returnflag = 'R') " +
+        "GROUP BY 1"),
+    Query("q15_top_supplier", (s, dir) => {
       // q15-style AGGREGATE-OVER-AGGREGATE scalar: supplier(s) whose
       // revenue equals the max over the grouped revenue view. The view is
       // ONE fact shuffle (suppkey, map-side combined, exact decimal
@@ -323,8 +427,18 @@ private[graft] object OlapRegistry {
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
           col("rev").cast("double").as("total_revenue"))
-    }),
-    "q14_promo_share" -> ((s, dir) => {
+    },
+      // q15 replay: literal nested-aggregate scalar subquery (max over the
+      // same grouped revenue view), decimal-exact so the equality row set
+      // is engine-stable
+      "WITH revenue AS (SELECT l_suppkey, " +
+        "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
+        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
+        "FROM lineitem GROUP BY 1) " +
+        "SELECT s_suppkey, s_name, CAST(rev AS DOUBLE) AS total_revenue " +
+        "FROM revenue JOIN supplier ON s_suppkey = l_suppkey " +
+        "WHERE rev = (SELECT max(rev) FROM revenue)"),
+    Query("q14_promo_share", (s, dir) => {
       // q14 pattern — the CONDITIONAL-RATIO shape: promo revenue share of
       // one ship-month; numerator and denominator computed in ONE
       // aggregation pass (conditional sum, never two scans); the month
@@ -345,8 +459,16 @@ private[graft] object OlapRegistry {
             sum(rev).cast("double"), 6).as("promo_share"),
           sum(rev).cast("double").as("revenue"),
           count(lit(1)).as("n"))
-    }),
-    "q19_disjunctive" -> ((s, dir) => {
+    },
+      "SELECT round(CAST(sum(CASE WHEN p_type = 'PROMO' THEN " +
+        "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
+        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) " +
+        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) * 100.0 / " +
+        s"$RevenueSql, 6) AS promo_share, $RevenueSql AS revenue, " +
+        "count(*) AS n FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "WHERE l_shipdate >= TIMESTAMP '1997-03-01' " +
+        "AND l_shipdate < TIMESTAMP '1997-04-01'"),
+    Query("q19_disjunctive", (s, dir) => {
       // q19 pattern — the DISJUNCTIVE-PREDICATE shape: revenue from an OR
       // of three (brand, quantity-range, size-range) conjunctions. The
       // shared p_partkey equi-key keeps this a broadcast HASH join with
@@ -368,8 +490,14 @@ private[graft] object OlapRegistry {
           (col("p_brand") === "Brand#3" &&
             col("l_quantity") >= 20 && col("p_size").between(1, 15))))
         .agg(sum(rev).cast("double").as("revenue"), count(lit(1)).as("n"))
-    }),
-    "q12_late_lines" -> ((s, dir) => {
+    },
+      s"SELECT $RevenueSql AS revenue, count(*) AS n " +
+        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "WHERE l_quantity >= 1 AND l_quantity <= 30 AND (" +
+        "(p_brand = 'Brand#1' AND l_quantity <= 11 AND p_size BETWEEN 1 AND 5) OR " +
+        "(p_brand = 'Brand#2' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10) OR " +
+        "(p_brand = 'Brand#3' AND l_quantity >= 20 AND p_size BETWEEN 1 AND 15))"),
+    Query("q12_late_lines", (s, dir) => {
       // q12 pattern — the FACT-FACT CONDITIONAL-COUNT shape: shipping
       // delay classes (days from order date to ship date — this data
       // model's commit/receipt stand-in) × order-priority mix; both sides
@@ -390,8 +518,15 @@ private[graft] object OlapRegistry {
             .otherwise(0L)).as("high_line_count"),
           sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
             .otherwise(0L)).as("low_line_count"))
-    }),
-    "q9_profit" -> ((s, dir) => {
+    },
+      "SELECT CASE WHEN date_diff('day', CAST(o_orderdate AS DATE), " +
+        "CAST(l_shipdate AS DATE)) <= 30 THEN 'fast' " +
+        "WHEN date_diff('day', CAST(o_orderdate AS DATE), " +
+        "CAST(l_shipdate AS DATE)) <= 90 THEN 'normal' ELSE 'slow' END AS ship_class, " +
+        "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, " +
+        "CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count " +
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1"),
+    Query("q9_profit", (s, dir) => {
       // q9 pattern — the PROFIT ROLLUP shape: amount = revenue − cost
       // proxy (p_retailprice·l_quantity plays partsupp supplycost's role
       // in this data model) by supplier nation × order year; ONE
@@ -418,8 +553,18 @@ private[graft] object OlapRegistry {
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("nation"), year(col("o_orderdate")).cast("long").as("o_year"))
         .agg(sum(amount).cast("double").as("profit"), count(lit(1)).as("n"))
-    }),
-    "q16_supplier_parts" -> ((s, dir) => {
+    },
+      "SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
+        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
+        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) - " +
+        "CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) " +
+        "AS DOUBLE) AS profit, count(*) AS n " +
+        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "JOIN supplier ON l_suppkey = s_suppkey " +
+        "JOIN nation ON s_nationkey = n_nationkey " +
+        "JOIN orders ON l_orderkey = o_orderkey " +
+        "WHERE p_name LIKE '%widget%' GROUP BY 1, 2"),
+    Query("q16_supplier_parts", (s, dir) => {
       // q16 pattern — the NOT-IN + COUNT-DISTINCT shape: distinct
       // suppliers serving each (brand, size) part segment, excluding one
       // brand and excluding "complaint" suppliers (negative account
@@ -440,8 +585,13 @@ private[graft] object OlapRegistry {
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("p_size"))
         .agg(count_distinct(col("l_suppkey")).as("supplier_cnt"))
-    }),
-    "q20_dominant_suppliers" -> ((s, dir) => {
+    },
+      "SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt " +
+        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
+        "WHERE p_brand <> 'Brand#1' AND l_suppkey NOT IN (" +
+        "SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) " +
+        "GROUP BY 1, 2"),
+    Query("q20_dominant_suppliers", (s, dir) => {
       // q20 pattern — the NESTED-AGGREGATE SEMI-CHAIN shape: suppliers
       // that DOMINATE (>50% of shipped 1997 quantity) at least one widget
       // part (availqty-vs-half-demand's role in this data model). The
@@ -467,8 +617,18 @@ private[graft] object OlapRegistry {
           .select(col("s_suppkey"), col("s_name"))),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("n_dominated"))
-    }),
-    "q11_value_concentration" -> ((s, dir) => {
+    },
+      "WITH li AS (SELECT l_partkey, l_suppkey, l_quantity FROM lineitem " +
+        "JOIN part ON l_partkey = p_partkey " +
+        "WHERE p_name LIKE '%widget%' AND year(l_shipdate) = 1997), " +
+        "ps AS (SELECT l_partkey, l_suppkey, " +
+        "sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty FROM li GROUP BY 1, 2), " +
+        "tot AS (SELECT l_partkey, CAST(sum(qty) AS DECIMAL(38,2)) AS total FROM ps GROUP BY 1), " +
+        "dom AS (SELECT ps.l_suppkey FROM ps JOIN tot ON tot.l_partkey = ps.l_partkey " +
+        "WHERE ps.qty * 2 > tot.total) " +
+        "SELECT s_suppkey, s_name, count(*) AS n_dominated " +
+        "FROM dom JOIN supplier ON s_suppkey = l_suppkey GROUP BY 1, 2"),
+    Query("q11_value_concentration", (s, dir) => {
       // q11 pattern — the HAVING-ABOVE-GLOBAL-FRACTION shape (the last
       // classic TPC-H plan family not yet covered): per-part value within
       // one trade bloc's supplier flow, keeping parts whose value exceeds
@@ -511,8 +671,17 @@ private[graft] object OlapRegistry {
         .where(col("value") * col("n_parts") > col("bloc_total") * lit(2))
         .select(col("l_partkey").as("p_partkey"),
           col("value").cast("double").as("value"))
-    }),
-    "supplier_nation_revenue" -> ((s, dir) => {
+    },
+      "WITH bloc AS (SELECT s_suppkey FROM supplier JOIN nation " +
+        "ON s_nationkey = n_nationkey WHERE n_nationkey % 5 = 0), " +
+        "pp AS (SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
+        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS value " +
+        "FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM bloc) " +
+        "GROUP BY 1), " +
+        "tot AS (SELECT CAST(sum(value) AS DECIMAL(38,4)) AS bloc_total, count(*) AS n_parts FROM pp) " +
+        "SELECT l_partkey AS p_partkey, CAST(value AS DOUBLE) AS value " +
+        "FROM pp, tot WHERE value * n_parts > bloc_total * 2"),
+    Query("supplier_nation_revenue", (s, dir) => {
       // supplier-side dim chain (supplier→nation) broadcast, fact shuffles
       // only for the final aggregation — q5's sibling covering the two
       // otherwise-unused dimension tables
@@ -524,8 +693,12 @@ private[graft] object OlapRegistry {
         .groupBy(col("n_name"))
         .agg(revenue.as("revenue"), count(lit(1)).as("n"),
           countDistinct(col("s_suppkey")).as("n_suppliers"))
-    }),
-    "brand_revenue" -> ((s, dir) => {
+    },
+      s"SELECT n_name, $RevenueSql AS revenue, count(*) AS n, " +
+        "count(DISTINCT s_suppkey) AS n_suppliers " +
+        "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey " +
+        "JOIN nation ON s_nationkey = n_nationkey GROUP BY 1"),
+    Query("brand_revenue", (s, dir) => {
       val d = DecimalType(18, 2)
       Tables.table(s, dir, "lineitem")
         .join(broadcast(Tables.table(s, dir, "part")),
@@ -534,15 +707,21 @@ private[graft] object OlapRegistry {
         .agg(revenue.as("revenue"),
           sum(col("l_quantity").cast(d)).cast("double").as("sum_qty"),
           count(lit(1)).as("n"))
-    }),
-    "rollup_sales" -> ((s, dir) => {
+    },
+      s"SELECT p_brand, $RevenueSql AS revenue, " +
+        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
+        "FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1"),
+    Query("rollup_sales", (s, dir) => {
       val d = DecimalType(18, 2)
       Tables.table(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity").cast(d)).cast("double").as("sum_qty"),
           count(lit(1)).as("n"))
-    }),
-    "cube_sales" -> ((s, dir) => {
+    },
+      "SELECT l_returnflag, l_linestatus, " +
+        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
+        "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
+    Query("cube_sales", (s, dir) => {
       // full CUBE: all four grouping-set combinations in one Expand-based
       // aggregation pass (the rollup's lattice-complete sibling)
       val d = DecimalType(18, 2)
@@ -550,8 +729,11 @@ private[graft] object OlapRegistry {
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity").cast(d)).cast("double").as("sum_qty"),
           count(lit(1)).as("n"))
-    }),
-    "pivot_events" -> ((s, dir) => {
+    },
+      "SELECT l_returnflag, l_linestatus, " +
+        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
+        "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"),
+    Query("pivot_events", (s, dir) => {
       val d = DecimalType(18, 2)
       val e = Tables.events(s, dir)
       def cnt(t: String) = count(when(col("event_type") === t, 1)).as(s"n_$t")
@@ -559,11 +741,21 @@ private[graft] object OlapRegistry {
         .agg(cnt("click"), cnt("view"), cnt("purchase"), cnt("signup"), cnt("error"),
           sum(when(col("event_type") === "purchase", col("value"))
             .otherwise(lit(0)).cast(d)).cast("double").as("purchase_value"))
-    }),
-    "distinct_users" -> ((s, dir) =>
+    },
+      "SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, " +
+        "count(*) FILTER (WHERE event_type = 'click') AS n_click, " +
+        "count(*) FILTER (WHERE event_type = 'view') AS n_view, " +
+        "count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase, " +
+        "count(*) FILTER (WHERE event_type = 'signup') AS n_signup, " +
+        "count(*) FILTER (WHERE event_type = 'error') AS n_error, " +
+        "CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) " +
+        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value " +
+        "FROM events GROUP BY 1"),
+    Query("distinct_users", (s, dir) =>
       Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n"))),
-    "spend_quartiles" -> ((s, dir) => {
+        .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n")),
+      "SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n FROM events GROUP BY 1"),
+    Query("spend_quartiles", (s, dir) => {
       // exact global NTILE without the single-partition window trap:
       // range-partitioned rank + arithmetic bucketing (ops.Rank scaladoc)
       val d = DecimalType(18, 2)
@@ -573,8 +765,13 @@ private[graft] object OlapRegistry {
       graft.ops.Rank.withNtile(spend, 4,
           Seq(col("spend").desc, col("custkey")), "quartile")
         .withColumnRenamed("rank", "spend_rank")
-    }),
-    "rfm_segments" -> ((s, dir) => {
+    },
+      "WITH sp AS (SELECT o_custkey AS custkey, " +
+        "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend FROM orders GROUP BY 1) " +
+        "SELECT custkey, spend, " +
+        "row_number() OVER (ORDER BY spend DESC, custkey) AS spend_rank, " +
+        "CAST(ntile(4) OVER (ORDER BY spend DESC, custkey) AS BIGINT) AS quartile FROM sp"),
+    Query("rfm_segments", (s, dir) => {
       // classic RFM segmentation: recency/frequency/monetary quartiles per
       // customer — three exact global NTILEs via ops.Rank (range-partition
       // sort + zipWithIndex each; no single-partition window anywhere)
@@ -596,8 +793,20 @@ private[graft] object OlapRegistry {
       graft.ops.Rank.withNtile(withF, 4,
           Seq(col("monetary").desc, col("custkey")), "m_q").drop("rank")
         .withColumn("rfm", col("r_q") * 100 + col("f_q") * 10 + col("m_q"))
-    }),
-    "gini_by_nation" -> ((s, dir) => {
+    },
+      "WITH base AS (SELECT o_custkey AS custkey, max(o_orderdate) AS last_order, " +
+        "count(*) AS frequency, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary " +
+        "FROM orders GROUP BY 1), " +
+        "mx AS (SELECT max(last_order) AS max_date FROM base), " +
+        "b2 AS (SELECT custkey, CAST(date_diff('day', last_order, max_date) AS BIGINT) AS recency_days, " +
+        "frequency, monetary FROM base, mx) " +
+        "SELECT custkey, recency_days, frequency, monetary, r_q, f_q, m_q, " +
+        "r_q * 100 + f_q * 10 + m_q AS rfm FROM (" +
+        "SELECT custkey, recency_days, frequency, monetary, " +
+        "CAST(ntile(4) OVER (ORDER BY recency_days, custkey) AS BIGINT) AS r_q, " +
+        "CAST(ntile(4) OVER (ORDER BY frequency DESC, custkey) AS BIGINT) AS f_q, " +
+        "CAST(ntile(4) OVER (ORDER BY monetary DESC, custkey) AS BIGINT) AS m_q FROM b2) x"),
+    Query("gini_by_nation", (s, dir) => {
       // revenue-concentration (Gini) per nation over customer spend. The
       // rank-weighted sum Σ(rank·spend) stays EXACT: rank as DECIMAL(10,0)
       // × DECIMAL(18,2) spend sums without float drift, so the only
@@ -626,8 +835,20 @@ private[graft] object OlapRegistry {
           round(lit(2.0) * col("s_ix") / (col("n_customers") * col("total_spend")) -
             (col("n_customers") + 1).cast("double") / col("n_customers"), 6)
             .as("gini"))
-    }),
-    "q6_selective" -> ((s, dir) => {
+    },
+      "WITH sp AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend " +
+        "FROM orders GROUP BY 1), " +
+        "j AS (SELECT n.n_name, c.c_custkey, CAST(sp.spend AS DECIMAL(18,2)) AS spend " +
+        "FROM sp JOIN customer c ON sp.o_custkey = c.c_custkey " +
+        "JOIN nation n ON c.c_nationkey = n.n_nationkey), " +
+        "r AS (SELECT n_name, c_custkey, spend, " +
+        "row_number() OVER (PARTITION BY n_name ORDER BY spend, c_custkey) AS rk FROM j), " +
+        "a AS (SELECT n_name, count(*) AS n_customers, CAST(sum(spend) AS DOUBLE) AS total_spend, " +
+        "CAST(sum(CAST(rk AS DECIMAL(10,0)) * spend) AS DOUBLE) AS s_ix FROM r GROUP BY 1) " +
+        "SELECT n_name, n_customers, total_spend, " +
+        "round(2.0 * s_ix / (n_customers * total_spend) - " +
+        "CAST(n_customers + 1 AS DOUBLE) / n_customers, 6) AS gini FROM a"),
+    Query("q6_selective", (s, dir) => {
       // range-predicate showcase: every filter reaches the parquet scan
       val d = DecimalType(18, 2)
       Tables.table(s, dir, "lineitem")
@@ -637,27 +858,40 @@ private[graft] object OlapRegistry {
           col("l_quantity") < 24)
         .agg(sum(col("l_extendedprice").cast(d) * col("l_discount").cast(d))
           .cast("double").as("revenue"), count(lit(1)).as("n"))
-    }),
-    "customers_no_orders" -> ((s, dir) =>
+    },
+      "SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue, " +
+        "count(*) AS n FROM lineitem " +
+        "WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00' " +
+        "AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"),
+    Query("customers_no_orders", (s, dir) =>
       // anti join: customers with NO high-value order (NOT EXISTS)
       Tables.table(s, dir, "customer")
         .join(Tables.table(s, dir, "orders").where(col("o_totalprice") > 300000),
           col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))),
-    "big_spender_segments" -> ((s, dir) =>
+        .select(col("c_custkey"), col("c_name")),
+      "SELECT c_custkey, c_name FROM customer " +
+        "WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey " +
+        "AND o_totalprice > 300000)"),
+    Query("big_spender_segments", (s, dir) =>
       // semi join: EXISTS with a pushed-down predicate on the inner side
       Tables.table(s, dir, "customer")
         .join(Tables.table(s, dir, "orders").where(col("o_totalprice") > 200000),
           col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))),
-    "value_percentiles" -> ((s, dir) =>
+        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n")),
+      "SELECT c_mktsegment, count(*) AS n FROM customer " +
+        "WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 200000) " +
+        "GROUP BY 1"),
+    Query("value_percentiles", (s, dir) =>
       // exact percentiles (linear interpolation both engines); rounded so
       // co-moment accumulation order can't flip the last ulp
       Tables.events(s, dir).groupBy(col("event_type"))
         .agg(round(expr("percentile(value, 0.5)"), 6).as("p50"),
           round(expr("percentile(value, 0.9)"), 6).as("p90"),
-          round(expr("percentile(value, 0.99)"), 6).as("p99"))),
-    "clip_outliers" -> ((s, dir) => {
+          round(expr("percentile(value, 0.99)"), 6).as("p99")),
+      "SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50, " +
+        "round(quantile_cont(value, 0.9), 6) AS p90, " +
+        "round(quantile_cont(value, 0.99), 6) AS p99 FROM events GROUP BY 1"),
+    Query("clip_outliers", (s, dir) => {
       // winsorization — the value-normalization pass a training pipeline
       // runs before feature export: exact per-group p01/p99 bounds
       // (linear interpolation, rounded), broadcast back, values clipped.
@@ -670,8 +904,14 @@ private[graft] object OlapRegistry {
         .select(col("event_id"), col("event_type"), col("value"),
           least(greatest(col("value"), col("lo")), col("hi")).as("clipped"),
           (col("value") < col("lo") || col("value") > col("hi")).as("was_clipped"))
-    }),
-    "trimmed_mean" -> ((s, dir) => {
+    },
+      "WITH b AS (SELECT event_type, round(quantile_cont(value, 0.01), 6) AS lo, " +
+        "round(quantile_cont(value, 0.99), 6) AS hi FROM events GROUP BY 1) " +
+        "SELECT e.event_id, e.event_type, e.value, " +
+        "least(greatest(e.value, b.lo), b.hi) AS clipped, " +
+        "(e.value < b.lo OR e.value > b.hi) AS was_clipped " +
+        "FROM events e JOIN b ON b.event_type = e.event_type"),
+    Query("trimmed_mean", (s, dir) => {
       // robust per-group mean: drop values outside exact p01/p99 bounds,
       // then a decimal-exact mean over the survivors — clip_outliers'
       // sibling for when outliers should be EXCLUDED, not clamped. One
@@ -689,15 +929,26 @@ private[graft] object OlapRegistry {
             col("value").cast(DecimalType(18, 6)))).cast("double") /
             sum(when(col("value") >= col("lo") && col("value") <= col("hi"), 1L)
               .otherwise(0L)), 6).as("trimmed_mean"))
-    }),
-    "value_histogram" -> ((s, dir) =>
+    },
+      "WITH b AS (SELECT event_type, round(quantile_cont(value, 0.01), 6) AS lo, " +
+        "round(quantile_cont(value, 0.99), 6) AS hi FROM events GROUP BY 1) " +
+        "SELECT e.event_type, count(*) AS n, " +
+        "CAST(sum(CASE WHEN e.value < b.lo OR e.value > b.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_trimmed, " +
+        "round(CAST(sum(CASE WHEN e.value >= b.lo AND e.value <= b.hi THEN CAST(e.value AS DECIMAL(18,6)) END) AS DOUBLE) / " +
+        "CAST(sum(CASE WHEN e.value >= b.lo AND e.value <= b.hi THEN 1 ELSE 0 END) AS BIGINT), 6) AS trimmed_mean " +
+        "FROM events e JOIN b ON e.event_type = b.event_type GROUP BY 1"),
+    Query("value_histogram", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type"), floor(col("value") / 50).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"))),
-    "value_corr" -> ((s, dir) =>
+        .agg(count(lit(1)).as("n")),
+      "SELECT event_type, CAST(floor(value / 50) AS BIGINT) AS bucket, count(*) AS n " +
+        "FROM events GROUP BY 1, 2"),
+    Query("value_corr", (s, dir) =>
       Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(round(corr(col("value"), col("user_id").cast("double")), 6).as("corr_value_user"))),
-    "approx_percentiles" -> ((s, dir) =>
+        .agg(round(corr(col("value"), col("user_id").cast("double")), 6).as("corr_value_user")),
+      "SELECT event_type, round(corr(value, CAST(user_id AS DOUBLE)), 6) AS corr_value_user " +
+        "FROM events GROUP BY 1"),
+    Query("approx_percentiles", (s, dir) =>
       // GK-sketch percentiles surfaced as their accuracy contract. The
       // sketch guarantees RANK error, not value error, so the check is
       // rank-windowed: each approx percentile must lie between the exact
@@ -716,8 +967,12 @@ private[graft] object OlapRegistry {
           (element_at(col("approx"), 1).between(element_at(col("lo"), 1), element_at(col("hi"), 1)) &&
             element_at(col("approx"), 2).between(element_at(col("lo"), 2), element_at(col("hi"), 2)) &&
             element_at(col("approx"), 3).between(element_at(col("lo"), 3), element_at(col("hi"), 3)))
-            .as("approx_ok"))),
-    "approx_distinct" -> ((s, dir) =>
+            .as("approx_ok")),
+      "SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50, " +
+        "round(quantile_cont(value, 0.9), 6) AS p90, " +
+        "round(quantile_cont(value, 0.99), 6) AS p99, true AS approx_ok " +
+        "FROM events GROUP BY 1"),
+    Query("approx_distinct", (s, dir) =>
       // HLL sketch surfaced as a checkable contract: the estimate must land
       // within 5% of the exact count — deterministic given the data, so the
       // oracle (exact count + literal true) hash-matches iff the sketch
@@ -728,13 +983,30 @@ private[graft] object OlapRegistry {
           approx_count_distinct(col("user_id"), 0.01).as("n_approx"))
         .select(col("event_type"), col("n_exact"),
           (abs(col("n_approx") - col("n_exact")).cast("double") <=
-            lit(0.05) * col("n_exact")).as("approx_ok"))),
-    "benford_check" -> ((s, dir) =>
+            lit(0.05) * col("n_exact")).as("approx_ok")),
+      "SELECT event_type, count(DISTINCT user_id) AS n_exact, true AS approx_ok " +
+        "FROM events GROUP BY 1"),
+    Query("benford_check", (s, dir) =>
       // first-digit distribution of order values vs Benford's law: string
       // digit extraction (no float log10 boundary), literal expectations
       graft.ops.Dq.benford(
-        Tables.table(s, dir, "orders"), "o_totalprice")),
-    "zorder_key" -> ((s, dir) =>
+        Tables.table(s, dir, "orders"), "o_totalprice"),
+      // Benford replay: first [1-9] of the value's string form (notation
+      // changes preserve the leading significant digit), literal
+      // expectations cast to DOUBLE, share rounded before the deviation
+      "WITH cnt AS (SELECT CAST(NULLIF(regexp_extract(CAST(o_totalprice AS VARCHAR), '([1-9])', 1), '') AS INTEGER) AS digit, " +
+        "count(*) AS n FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0 GROUP BY 1), " +
+        "cnt2 AS (SELECT digit, n FROM cnt WHERE digit IS NOT NULL), " +
+        "spine AS (SELECT * FROM (VALUES (1, CAST(0.30103 AS DOUBLE)), (2, CAST(0.176091 AS DOUBLE)), " +
+        "(3, CAST(0.124939 AS DOUBLE)), (4, CAST(0.09691 AS DOUBLE)), (5, CAST(0.079181 AS DOUBLE)), " +
+        "(6, CAST(0.066947 AS DOUBLE)), (7, CAST(0.057992 AS DOUBLE)), (8, CAST(0.051153 AS DOUBLE)), " +
+        "(9, CAST(0.045757 AS DOUBLE))) AS s(digit, expected)), " +
+        "tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM cnt2), " +
+        "f AS (SELECT s.digit AS digit, COALESCE(n, 0) AS n, " +
+        "round(CAST(COALESCE(n, 0) AS DOUBLE) / (CASE WHEN tot > 0 THEN CAST(tot AS DOUBLE) END), 6) AS share, " +
+        "s.expected AS expected FROM spine s LEFT JOIN cnt2 ON s.digit = cnt2.digit CROSS JOIN tot) " +
+        "SELECT digit, n, share, expected, round(share - expected, 6) AS dev FROM f"),
+    Query("zorder_key", (s, dir) =>
       // compaction-time Morton layout key: pure shift/and/or bit terms,
       // map-only whole-stage codegen, slice filter + 4-column pruning
       // pushed to the parquet scan
@@ -745,26 +1017,70 @@ private[graft] object OlapRegistry {
           graft.ops.Layout.zorderKey(
             Seq(col("l_partkey").bitwiseAND(lit((1L << 21) - 1)),
               col("l_suppkey").bitwiseAND(lit((1L << 21) - 1))), 21)
-            .as("zval"))),
-    "zorder_skip" -> ((s, dir) =>
+            .as("zval")),
+      // Layout.zorderKey replay: the same 42 shift/and/or interleave terms
+      // over masked part/supp keys, on the same one-month slice
+      s"SELECT l_orderkey, l_linenumber, ${zorderSqlExpr(
+        Seq("(l_partkey & 2097151)", "(l_suppkey & 2097151)"), 21)} AS zval " +
+        "FROM lineitem " +
+        "WHERE l_shipdate >= TIMESTAMP '1995-03-01 00:00:00' " +
+        "AND l_shipdate < TIMESTAMP '1995-04-01 00:00:00'"),
+    Query("zorder_skip", (s, dir) =>
       // the layout win MEASURED: 64 equal "files" per layout, per-file
       // min/max boxes, and the file count a min/max-pruning reader must
       // touch for a centered 2-D box predicate — linear-by-x slabs
       // cannot prune on y, the z-order grid prunes on both
       graft.ops.Layout.zorderSkip(Tables.table(s, dir, "lineitem"),
-        "l_partkey", "l_suppkey")),
-    "hilbert_skip" -> ((s, dir) =>
+        "l_partkey", "l_suppkey"),
+      // Layout.zorderSkip replay: max-normalize to 8 bits with `//` integer
+      // division (Spark's exact-double floor), 16-bit interleave, 64 files
+      // per layout (xn>>2 slabs vs z>>10 grid), min/max-box overlap with
+      // the centered [64,95]^2 predicate
+      "WITH mx AS (SELECT max(l_partkey) AS mx, max(l_suppkey) AS my FROM lineitem), " +
+        "base AS (SELECT (l_partkey * 256) // (mx + 1) AS xn, " +
+        "(l_suppkey * 256) // (my + 1) AS yn FROM lineitem, mx), " +
+        s"z AS (SELECT xn, yn, ${zorderSqlExpr(Seq("xn", "yn"), 8)} AS z FROM base), " +
+        "lf AS (SELECT xn >> 2 AS file_id, min(xn) AS min_x, max(xn) AS max_x, " +
+        "min(yn) AS min_y, max(yn) AS max_y, count(*) AS n FROM z GROUP BY 1), " +
+        "zf AS (SELECT z >> 10 AS file_id, min(xn) AS min_x, max(xn) AS max_x, " +
+        "min(yn) AS min_y, max(yn) AS max_y, count(*) AS n FROM z GROUP BY 1) " +
+        "SELECT 'linear_x' AS layout, CAST(count(*) AS BIGINT) AS files_total, " +
+        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
+        "THEN 1 ELSE 0 END) AS BIGINT) AS files_read, " +
+        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
+        "THEN n ELSE 0 END) AS BIGINT) AS rows_read FROM lf " +
+        "UNION ALL " +
+        "SELECT 'zorder' AS layout, CAST(count(*) AS BIGINT) AS files_total, " +
+        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
+        "THEN 1 ELSE 0 END) AS BIGINT) AS files_read, " +
+        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
+        "THEN n ELSE 0 END) AS BIGINT) AS rows_read FROM zf"),
+    Query("hilbert_skip", (s, dir) =>
       // the three-way layout decision: linear vs z-order vs HILBERT
       // (unrolled xy->d bit-twiddle as chained projections) under the
       // quadrant-aligned box AND the midline y band that straddles the
       // z-curve's seam — per-(layout, pred) file/row read counts
       graft.ops.Layout.curveSkip(Tables.table(s, dir, "lineitem"),
-        "l_partkey", "l_suppkey")),
-    "skew_report" -> ((s, dir) =>
+        "l_partkey", "l_suppkey"),
+      // Layout.curveSkip replay: the same normalize + interleave CTEs, the
+      // Hilbert xy->d unroll as 8 generated per-level CTEs (the identical
+      // CASE/shift template Layout.withHilbert chains as projections),
+      // 64-file stats per layout, both predicates per layout
+      hilbertSkipSql),
+    Query("skew_report", (s, dir) =>
       // hot-key pre-flight for the salted join: one map-side-combined
       // count agg + broadcast stats + TakeOrdered top-10
-      graft.ops.Dq.skewReport(Tables.events(s, dir), "user_id")),
-    "mad_outliers" -> ((s, dir) => {
+      graft.ops.Dq.skewReport(Tables.events(s, dir), "user_id"),
+      // hot-key diagnostic replay: per-key counts, 1-row stats, top-10 heap
+      "WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1), " +
+        "s AS (SELECT count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows, max(cnt) AS max_cnt FROM c), " +
+        "t AS (SELECT user_id, cnt FROM c ORDER BY cnt DESC, user_id LIMIT 10) " +
+        "SELECT user_id, cnt, n_keys, n_rows, max_cnt, " +
+        "round(CAST(cnt AS DOUBLE) / n_rows, 6) AS share, " +
+        "round(CAST(cnt AS DOUBLE) * n_keys / n_rows, 6) AS skew_x, " +
+        "CAST(ceil(CAST(cnt AS DOUBLE) * n_keys / n_rows) AS BIGINT) AS salt_factor " +
+        "FROM t CROSS JOIN s"),
+    Query("mad_outliers", (s, dir) => {
       // robust per-type outlier flags: |x − median| > 3·MAD — the
       // z-score family (clip_outliers) breaks under fat tails;
       // median/MAD have a 50% breakdown point. TWO dim-scale grouped
@@ -784,12 +1100,21 @@ private[graft] object OlapRegistry {
       withMed.join(broadcast(mad), Seq("event_type"))
         .select(col("event_id"), col("event_type"), col("value"),
           col("med"), col("mad"), (col("adev") > col("mad") * 3).as("outlier"))
-    }),
-    "profile_lineitem" -> ((s, dir) =>
+    },
+      "WITH m AS (SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med " +
+        "FROM events GROUP BY 1), " +
+        "a AS (SELECT e.event_id, e.event_type, e.value, m.med, " +
+        "round(abs(e.value - m.med), 6) AS adev FROM events e JOIN m USING (event_type)), " +
+        "d AS (SELECT event_type, round(quantile_cont(adev, 0.5), 6) AS mad " +
+        "FROM a GROUP BY 1) " +
+        "SELECT a.event_id, a.event_type, a.value, a.med, d.mad, " +
+        "a.adev > d.mad * 3 AS outlier FROM a JOIN d USING (event_type)"),
+    Query("profile_lineitem", (s, dir) =>
       // single-pass data-quality profile with EXACT distinct counts
       // (count_distinct, which Catalyst expands ×columns; ROADMAP item 5)
-      graft.ops.Profile.profile(Tables.table(s, dir, "lineitem"))),
-    "dq_check" -> ((s, dir) => {
+      graft.ops.Profile.profile(Tables.table(s, dir, "lineitem")),
+      profileOracleSql),
+    Query("dq_check", (s, dir) => {
       // declarative constraint suite in ONE aggregation pass (Deequ idea):
       // integer-counter verdicts, one double division per metric. The
       // uniqueness check is a REAL violation in this corpus - the report
@@ -805,377 +1130,10 @@ private[graft] object OlapRegistry {
         Dq.inRange("l_extendedprice", 1.0, 100000000.0),
         Dq.inSet("l_returnflag", Seq("A", "N", "R")),
         Dq.inSet("l_linestatus", Seq("O", "F"))))
-    }),
-    "profile_approx" -> ((s, dir) => {
-      // the HLL-sketch profile path (the 100 TB default — fixed-size
-      // sketches instead of the Expand row multiplication) surfaced as its
-      // accuracy contract: every per-column estimate within 5% of exact.
-      // rsd=0.01 makes 5% a ~5 sigma bound, deterministic given the data.
-      val li = Tables.table(s, dir, "lineitem")
-      val ap = graft.ops.Profile.profile(li, exactDistinct = false, rsd = 0.01)
-        .select(col("column"), col("n_distinct").as("n_approx"))
-      val ex = graft.ops.Profile.profile(li)
-        .select(col("column"), col("n_rows"), col("n_null"),
-          col("n_distinct").as("n_exact"))
-      ex.join(ap, "column")
-        .select(col("column"), col("n_rows"), col("n_null"), col("n_exact"),
-          (abs(col("n_approx") - col("n_exact")).cast("double") <=
-            lit(0.05) * col("n_exact")).as("approx_ok"))
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-
-    // hot-key diagnostic replay: per-key counts, 1-row stats, top-10 heap
-    "skew_report" ->
-      ("WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1), " +
-        "s AS (SELECT count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows, max(cnt) AS max_cnt FROM c), " +
-        "t AS (SELECT user_id, cnt FROM c ORDER BY cnt DESC, user_id LIMIT 10) " +
-        "SELECT user_id, cnt, n_keys, n_rows, max_cnt, " +
-        "round(CAST(cnt AS DOUBLE) / n_rows, 6) AS share, " +
-        "round(CAST(cnt AS DOUBLE) * n_keys / n_rows, 6) AS skew_x, " +
-        "CAST(ceil(CAST(cnt AS DOUBLE) * n_keys / n_rows) AS BIGINT) AS salt_factor " +
-        "FROM t CROSS JOIN s"),
-    "rfm_segments" ->
-      ("WITH base AS (SELECT o_custkey AS custkey, max(o_orderdate) AS last_order, " +
-        "count(*) AS frequency, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary " +
-        "FROM orders GROUP BY 1), " +
-        "mx AS (SELECT max(last_order) AS max_date FROM base), " +
-        "b2 AS (SELECT custkey, CAST(date_diff('day', last_order, max_date) AS BIGINT) AS recency_days, " +
-        "frequency, monetary FROM base, mx) " +
-        "SELECT custkey, recency_days, frequency, monetary, r_q, f_q, m_q, " +
-        "r_q * 100 + f_q * 10 + m_q AS rfm FROM (" +
-        "SELECT custkey, recency_days, frequency, monetary, " +
-        "CAST(ntile(4) OVER (ORDER BY recency_days, custkey) AS BIGINT) AS r_q, " +
-        "CAST(ntile(4) OVER (ORDER BY frequency DESC, custkey) AS BIGINT) AS f_q, " +
-        "CAST(ntile(4) OVER (ORDER BY monetary DESC, custkey) AS BIGINT) AS m_q FROM b2) x"),
-    "gini_by_nation" ->
-      ("WITH sp AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend " +
-        "FROM orders GROUP BY 1), " +
-        "j AS (SELECT n.n_name, c.c_custkey, CAST(sp.spend AS DECIMAL(18,2)) AS spend " +
-        "FROM sp JOIN customer c ON sp.o_custkey = c.c_custkey " +
-        "JOIN nation n ON c.c_nationkey = n.n_nationkey), " +
-        "r AS (SELECT n_name, c_custkey, spend, " +
-        "row_number() OVER (PARTITION BY n_name ORDER BY spend, c_custkey) AS rk FROM j), " +
-        "a AS (SELECT n_name, count(*) AS n_customers, CAST(sum(spend) AS DOUBLE) AS total_spend, " +
-        "CAST(sum(CAST(rk AS DECIMAL(10,0)) * spend) AS DOUBLE) AS s_ix FROM r GROUP BY 1) " +
-        "SELECT n_name, n_customers, total_spend, " +
-        "round(2.0 * s_ix / (n_customers * total_spend) - " +
-        "CAST(n_customers + 1 AS DOUBLE) / n_customers, 6) AS gini FROM a"),
-    "spend_quartiles" ->
-      ("WITH sp AS (SELECT o_custkey AS custkey, " +
-        "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend FROM orders GROUP BY 1) " +
-        "SELECT custkey, spend, " +
-        "row_number() OVER (ORDER BY spend DESC, custkey) AS spend_rank, " +
-        "CAST(ntile(4) OVER (ORDER BY spend DESC, custkey) AS BIGINT) AS quartile FROM sp"),
-    "q1_pricing" ->
-      ("SELECT l_returnflag, l_linestatus, " +
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, " +
-        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base, " +
-        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc, " +
-        "count(*) AS n FROM lineitem " +
-        "WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' GROUP BY 1, 2"),
-    "q3_revenue" ->
-      (s"SELECT c_mktsegment, $RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey GROUP BY 1"),
-    "q5_region" ->
-      (s"SELECT r_name, n_name, $RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN nation ON c_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey GROUP BY 1, 2"),
-    "q7_nation_trade" ->
-      (s"SELECT supp_nation, cust_nation, CAST(year(l_shipdate) AS BIGINT) AS l_year, " +
-        s"$RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN (SELECT s_suppkey, n_name AS supp_nation FROM supplier " +
-        "JOIN nation ON s_nationkey = n_nationkey) sn ON l_suppkey = sn.s_suppkey " +
-        "JOIN (SELECT c_custkey, n_name AS cust_nation FROM customer " +
-        "JOIN nation ON c_nationkey = n_nationkey) cn ON o_custkey = cn.c_custkey " +
-        "WHERE supp_nation <> cust_nation GROUP BY 1, 2, 3"),
-    "q8_market_share" -> {
-      val num = "CAST(sum(CASE WHEN supp_nation = 'NATION_0' THEN " +
-        "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) " +
-        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)"
-      s"SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
-        s"round($num / $RevenueSql, 6) AS mkt_share, " +
-        s"$RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN (SELECT c_custkey FROM customer " +
-        "JOIN nation ON c_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA') ca " +
-        "ON o_custkey = ca.c_custkey " +
-        "JOIN (SELECT s_suppkey, n_name AS supp_nation FROM supplier " +
-        "JOIN nation ON s_nationkey = n_nationkey) sn ON l_suppkey = sn.s_suppkey " +
-        "GROUP BY 1"
     },
-    "q10_returned" ->
-      (s"SELECT c_custkey, c_name, n_name, $RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "JOIN nation ON c_nationkey = n_nationkey " +
-        "WHERE l_returnflag = 'R' GROUP BY 1, 2, 3"),
-    // q2 replay as the LITERAL correlated scalar subquery — DuckDB
-    // decorrelates it itself, proving the Spark window-min plan computes
-    // exactly the correlated semantics
-    "q2_min_cost" ->
-      ("WITH eur AS (SELECT s_suppkey, s_name, n_name FROM supplier " +
-        "JOIN nation ON s_nationkey = n_nationkey " +
-        "JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'EUROPE'), " +
-        "o AS (SELECT l_partkey, s_name, n_name, l_extendedprice " +
-        "FROM lineitem JOIN eur ON l_suppkey = s_suppkey) " +
-        "SELECT p_partkey, p_brand, s_name, n_name, " +
-        "CAST(l_extendedprice AS DOUBLE) AS min_price " +
-        "FROM o JOIN part ON p_partkey = o.l_partkey " +
-        "WHERE l_extendedprice = (SELECT min(o2.l_extendedprice) FROM o o2 " +
-        "WHERE o2.l_partkey = o.l_partkey)"),
-    "q13_order_dist" ->
-      ("SELECT c_count, count(*) AS custdist FROM (" +
-        "SELECT c_custkey, count(o_orderkey) AS c_count " +
-        "FROM customer LEFT JOIN orders ON c_custkey = o_custkey " +
-        "GROUP BY c_custkey) GROUP BY c_count"),
-    // q4 replay as the LITERAL EXISTS correlated subquery — DuckDB turns
-    // it into the same semi join the Spark side declares
-    "q4_order_priority" ->
-      ("SELECT o_orderpriority, count(*) AS n_orders FROM orders o " +
-        "WHERE EXISTS (SELECT 1 FROM lineitem l " +
-        "WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R') " +
-        "GROUP BY 1"),
-    "q18_large_orders" ->
-      ("WITH big AS (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty " +
-        "FROM lineitem GROUP BY 1 HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 150) " +
-        "SELECT c_custkey, c_name, o_orderkey, o_orderdate, " +
-        "CAST(qty AS DOUBLE) AS total_qty " +
-        "FROM orders JOIN big ON o_orderkey = l_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey"),
-    // q17 replay as the LITERAL correlated-avg subquery (decimal-exact
-    // mean like the Spark window) — DuckDB decorrelates it itself
-    "q17_small_quantity" ->
-      ("SELECT p_brand, " +
-        "round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 2) AS avg_yearly, " +
-        "count(*) AS n " +
-        "FROM lineitem l JOIN part ON p_partkey = l_partkey " +
-        "WHERE l_quantity < 0.2 * (" +
-        "SELECT CAST(sum(CAST(l2.l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) " +
-        "FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey) " +
-        "GROUP BY 1"),
-    // q22 replay: literal scalar subquery + NOT EXISTS anti join
-    "q22_dormant_value" ->
-      ("SELECT n_name, count(*) AS n_custs, " +
-        "CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal " +
-        "FROM customer c JOIN nation ON c_nationkey = n_nationkey " +
-        "WHERE c_acctbal > (" +
-        "SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) " +
-        "FROM customer WHERE c_acctbal > 0) " +
-        "AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey " +
-        "AND o.o_orderdate >= DATE '2001-01-01') " +
-        "GROUP BY 1"),
-    // q21 replay as the LITERAL double-correlated subquery — EXISTS +
-    // NOT EXISTS on lineitem under two aliases; DuckDB decorrelates to
-    // the same semi + anti pair the Spark side declares
-    "q21_waiting_suppliers" ->
-      ("SELECT s_name, count(*) AS numwait " +
-        "FROM lineitem l1 JOIN orders ON o_orderkey = l1.l_orderkey " +
-        "JOIN supplier ON s_suppkey = l1.l_suppkey " +
-        "WHERE l1.l_returnflag = 'R' AND o_orderstatus = 'F' " +
-        "AND EXISTS (SELECT 1 FROM lineitem l2 " +
-        "WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey) " +
-        "AND NOT EXISTS (SELECT 1 FROM lineitem l3 " +
-        "WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey " +
-        "AND l3.l_returnflag = 'R') " +
-        "GROUP BY 1"),
-    // q15 replay: literal nested-aggregate scalar subquery (max over the
-    // same grouped revenue view), decimal-exact so the equality row set
-    // is engine-stable
-    "q15_top_supplier" ->
-      ("WITH revenue AS (SELECT l_suppkey, " +
-        "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev " +
-        "FROM lineitem GROUP BY 1) " +
-        "SELECT s_suppkey, s_name, CAST(rev AS DOUBLE) AS total_revenue " +
-        "FROM revenue JOIN supplier ON s_suppkey = l_suppkey " +
-        "WHERE rev = (SELECT max(rev) FROM revenue)"),
-    "q14_promo_share" ->
-      ("SELECT round(CAST(sum(CASE WHEN p_type = 'PROMO' THEN " +
-        "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) " +
-        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) * 100.0 / " +
-        s"$RevenueSql, 6) AS promo_share, $RevenueSql AS revenue, " +
-        "count(*) AS n FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "WHERE l_shipdate >= TIMESTAMP '1997-03-01' " +
-        "AND l_shipdate < TIMESTAMP '1997-04-01'"),
-    "q19_disjunctive" ->
-      (s"SELECT $RevenueSql AS revenue, count(*) AS n " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "WHERE l_quantity >= 1 AND l_quantity <= 30 AND (" +
-        "(p_brand = 'Brand#1' AND l_quantity <= 11 AND p_size BETWEEN 1 AND 5) OR " +
-        "(p_brand = 'Brand#2' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10) OR " +
-        "(p_brand = 'Brand#3' AND l_quantity >= 20 AND p_size BETWEEN 1 AND 15))"),
-    "q12_late_lines" ->
-      ("SELECT CASE WHEN date_diff('day', CAST(o_orderdate AS DATE), " +
-        "CAST(l_shipdate AS DATE)) <= 30 THEN 'fast' " +
-        "WHEN date_diff('day', CAST(o_orderdate AS DATE), " +
-        "CAST(l_shipdate AS DATE)) <= 90 THEN 'normal' ELSE 'slow' END AS ship_class, " +
-        "CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, " +
-        "CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1"),
-    "q16_supplier_parts" ->
-      ("SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "WHERE p_brand <> 'Brand#1' AND l_suppkey NOT IN (" +
-        "SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) " +
-        "GROUP BY 1, 2"),
-    "q20_dominant_suppliers" ->
-      ("WITH li AS (SELECT l_partkey, l_suppkey, l_quantity FROM lineitem " +
-        "JOIN part ON l_partkey = p_partkey " +
-        "WHERE p_name LIKE '%widget%' AND year(l_shipdate) = 1997), " +
-        "ps AS (SELECT l_partkey, l_suppkey, " +
-        "sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty FROM li GROUP BY 1, 2), " +
-        "tot AS (SELECT l_partkey, CAST(sum(qty) AS DECIMAL(38,2)) AS total FROM ps GROUP BY 1), " +
-        "dom AS (SELECT ps.l_suppkey FROM ps JOIN tot ON tot.l_partkey = ps.l_partkey " +
-        "WHERE ps.qty * 2 > tot.total) " +
-        "SELECT s_suppkey, s_name, count(*) AS n_dominated " +
-        "FROM dom JOIN supplier ON s_suppkey = l_suppkey GROUP BY 1, 2"),
-    "q9_profit" ->
-      ("SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year, " +
-        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) - " +
-        "CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) " +
-        "AS DOUBLE) AS profit, count(*) AS n " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey " +
-        "JOIN supplier ON l_suppkey = s_suppkey " +
-        "JOIN nation ON s_nationkey = n_nationkey " +
-        "JOIN orders ON l_orderkey = o_orderkey " +
-        "WHERE p_name LIKE '%widget%' GROUP BY 1, 2"),
-    "q11_value_concentration" ->
-      ("WITH bloc AS (SELECT s_suppkey FROM supplier JOIN nation " +
-        "ON s_nationkey = n_nationkey WHERE n_nationkey % 5 = 0), " +
-        "pp AS (SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) * " +
-        "(CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS value " +
-        "FROM lineitem WHERE l_suppkey IN (SELECT s_suppkey FROM bloc) " +
-        "GROUP BY 1), " +
-        "tot AS (SELECT CAST(sum(value) AS DECIMAL(38,4)) AS bloc_total, count(*) AS n_parts FROM pp) " +
-        "SELECT l_partkey AS p_partkey, CAST(value AS DOUBLE) AS value " +
-        "FROM pp, tot WHERE value * n_parts > bloc_total * 2"),
-    "supplier_nation_revenue" ->
-      (s"SELECT n_name, $RevenueSql AS revenue, count(*) AS n, " +
-        "count(DISTINCT s_suppkey) AS n_suppliers " +
-        "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey " +
-        "JOIN nation ON s_nationkey = n_nationkey GROUP BY 1"),
-    "brand_revenue" ->
-      (s"SELECT p_brand, $RevenueSql AS revenue, " +
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
-        "FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1"),
-    "rollup_sales" ->
-      ("SELECT l_returnflag, l_linestatus, " +
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
-        "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
-    "cube_sales" ->
-      ("SELECT l_returnflag, l_linestatus, " +
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n " +
-        "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"),
-    "pivot_events" ->
-      ("SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, " +
-        "count(*) FILTER (WHERE event_type = 'click') AS n_click, " +
-        "count(*) FILTER (WHERE event_type = 'view') AS n_view, " +
-        "count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase, " +
-        "count(*) FILTER (WHERE event_type = 'signup') AS n_signup, " +
-        "count(*) FILTER (WHERE event_type = 'error') AS n_error, " +
-        "CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) " +
-        "ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value " +
-        "FROM events GROUP BY 1"),
-    "distinct_users" ->
-      "SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n FROM events GROUP BY 1",
-    "q6_selective" ->
-      ("SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue, " +
-        "count(*) AS n FROM lineitem " +
-        "WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00' " +
-        "AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"),
-    "customers_no_orders" ->
-      ("SELECT c_custkey, c_name FROM customer " +
-        "WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey " +
-        "AND o_totalprice > 300000)"),
-    "big_spender_segments" ->
-      ("SELECT c_mktsegment, count(*) AS n FROM customer " +
-        "WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 200000) " +
-        "GROUP BY 1"),
-    "value_percentiles" ->
-      ("SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50, " +
-        "round(quantile_cont(value, 0.9), 6) AS p90, " +
-        "round(quantile_cont(value, 0.99), 6) AS p99 FROM events GROUP BY 1"),
-    "trimmed_mean" ->
-      ("WITH b AS (SELECT event_type, round(quantile_cont(value, 0.01), 6) AS lo, " +
-        "round(quantile_cont(value, 0.99), 6) AS hi FROM events GROUP BY 1) " +
-        "SELECT e.event_type, count(*) AS n, " +
-        "CAST(sum(CASE WHEN e.value < b.lo OR e.value > b.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_trimmed, " +
-        "round(CAST(sum(CASE WHEN e.value >= b.lo AND e.value <= b.hi THEN CAST(e.value AS DECIMAL(18,6)) END) AS DOUBLE) / " +
-        "CAST(sum(CASE WHEN e.value >= b.lo AND e.value <= b.hi THEN 1 ELSE 0 END) AS BIGINT), 6) AS trimmed_mean " +
-        "FROM events e JOIN b ON e.event_type = b.event_type GROUP BY 1"),
-    "value_histogram" ->
-      ("SELECT event_type, CAST(floor(value / 50) AS BIGINT) AS bucket, count(*) AS n " +
-        "FROM events GROUP BY 1, 2"),
-    "clip_outliers" ->
-      ("WITH b AS (SELECT event_type, round(quantile_cont(value, 0.01), 6) AS lo, " +
-        "round(quantile_cont(value, 0.99), 6) AS hi FROM events GROUP BY 1) " +
-        "SELECT e.event_id, e.event_type, e.value, " +
-        "least(greatest(e.value, b.lo), b.hi) AS clipped, " +
-        "(e.value < b.lo OR e.value > b.hi) AS was_clipped " +
-        "FROM events e JOIN b ON b.event_type = e.event_type"),
-    "value_corr" ->
-      ("SELECT event_type, round(corr(value, CAST(user_id AS DOUBLE)), 6) AS corr_value_user " +
-        "FROM events GROUP BY 1"),
-    // Layout.zorderKey replay: the same 42 shift/and/or interleave terms
-    // over masked part/supp keys, on the same one-month slice
-    "zorder_key" ->
-      (s"SELECT l_orderkey, l_linenumber, ${zorderSqlExpr(
-        Seq("(l_partkey & 2097151)", "(l_suppkey & 2097151)"), 21)} AS zval " +
-        "FROM lineitem " +
-        "WHERE l_shipdate >= TIMESTAMP '1995-03-01 00:00:00' " +
-        "AND l_shipdate < TIMESTAMP '1995-04-01 00:00:00'"),
-    // Layout.zorderSkip replay: max-normalize to 8 bits with `//` integer
-    // division (Spark's exact-double floor), 16-bit interleave, 64 files
-    // per layout (xn>>2 slabs vs z>>10 grid), min/max-box overlap with
-    // the centered [64,95]^2 predicate
-    "zorder_skip" ->
-      ("WITH mx AS (SELECT max(l_partkey) AS mx, max(l_suppkey) AS my FROM lineitem), " +
-        "base AS (SELECT (l_partkey * 256) // (mx + 1) AS xn, " +
-        "(l_suppkey * 256) // (my + 1) AS yn FROM lineitem, mx), " +
-        s"z AS (SELECT xn, yn, ${zorderSqlExpr(Seq("xn", "yn"), 8)} AS z FROM base), " +
-        "lf AS (SELECT xn >> 2 AS file_id, min(xn) AS min_x, max(xn) AS max_x, " +
-        "min(yn) AS min_y, max(yn) AS max_y, count(*) AS n FROM z GROUP BY 1), " +
-        "zf AS (SELECT z >> 10 AS file_id, min(xn) AS min_x, max(xn) AS max_x, " +
-        "min(yn) AS min_y, max(yn) AS max_y, count(*) AS n FROM z GROUP BY 1) " +
-        "SELECT 'linear_x' AS layout, CAST(count(*) AS BIGINT) AS files_total, " +
-        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
-        "THEN 1 ELSE 0 END) AS BIGINT) AS files_read, " +
-        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
-        "THEN n ELSE 0 END) AS BIGINT) AS rows_read FROM lf " +
-        "UNION ALL " +
-        "SELECT 'zorder' AS layout, CAST(count(*) AS BIGINT) AS files_total, " +
-        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
-        "THEN 1 ELSE 0 END) AS BIGINT) AS files_read, " +
-        "CAST(sum(CASE WHEN min_x <= 95 AND max_x >= 64 AND min_y <= 95 AND max_y >= 64 " +
-        "THEN n ELSE 0 END) AS BIGINT) AS rows_read FROM zf"),
-    // Layout.curveSkip replay: the same normalize + interleave CTEs, the
-    // Hilbert xy->d unroll as 8 generated per-level CTEs (the identical
-    // CASE/shift template Layout.withHilbert chains as projections),
-    // 64-file stats per layout, both predicates per layout
-    "hilbert_skip" -> hilbertSkipSql,
-    "approx_distinct" ->
-      ("SELECT event_type, count(DISTINCT user_id) AS n_exact, true AS approx_ok " +
-        "FROM events GROUP BY 1"),
-    "approx_percentiles" ->
-      ("SELECT event_type, round(quantile_cont(value, 0.5), 6) AS p50, " +
-        "round(quantile_cont(value, 0.9), 6) AS p90, " +
-        "round(quantile_cont(value, 0.99), 6) AS p99, true AS approx_ok " +
-        "FROM events GROUP BY 1"),
-    "profile_lineitem" -> profileOracleSql,
-    // dq_check replay: ONE aggregation row of integer counters, then one
-    // SELECT per constraint; verdicts compare counters, never floats
-    "dq_check" ->
-      ("WITH a AS (SELECT count(*) AS n, count(l_shipdate) AS ship, " +
+      // dq_check replay: ONE aggregation row of integer counters, then one
+      // SELECT per constraint; verdicts compare counters, never floats
+      "WITH a AS (SELECT count(*) AS n, count(l_shipdate) AS ship, " +
         "count(DISTINCT (l_orderkey, l_linenumber)) AS pk, " +
         "CAST(sum(CASE WHEN l_quantity BETWEEN 1.0 AND 50.0 THEN 1 ELSE 0 END) AS BIGINT) AS q_ok, count(l_quantity) AS q_n, " +
         "CAST(sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1 THEN 1 ELSE 0 END) AS BIGINT) AS d_ok, count(l_discount) AS d_n, " +
@@ -1193,31 +1151,22 @@ private[graft] object OlapRegistry {
         "UNION ALL SELECT 'range_l_extendedprice', round(CAST(p_ok AS DOUBLE) / CAST(p_n AS DOUBLE), 6), p_ok = p_n FROM a " +
         "UNION ALL SELECT 'set_l_returnflag', round(CAST(rf_ok AS DOUBLE) / CAST(rf_n AS DOUBLE), 6), rf_ok = rf_n FROM a " +
         "UNION ALL SELECT 'set_l_linestatus', round(CAST(ls_ok AS DOUBLE) / CAST(ls_n AS DOUBLE), 6), ls_ok = ls_n FROM a"),
-    "profile_approx" -> profileApproxOracleSql,
-    "mad_outliers" ->
-      ("WITH m AS (SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med " +
-        "FROM events GROUP BY 1), " +
-        "a AS (SELECT e.event_id, e.event_type, e.value, m.med, " +
-        "round(abs(e.value - m.med), 6) AS adev FROM events e JOIN m USING (event_type)), " +
-        "d AS (SELECT event_type, round(quantile_cont(adev, 0.5), 6) AS mad " +
-        "FROM a GROUP BY 1) " +
-        "SELECT a.event_id, a.event_type, a.value, a.med, d.mad, " +
-        "a.adev > d.mad * 3 AS outlier FROM a JOIN d USING (event_type)"),
-    // Benford replay: first [1-9] of the value's string form (notation
-    // changes preserve the leading significant digit), literal
-    // expectations cast to DOUBLE, share rounded before the deviation
-    "benford_check" ->
-      ("WITH cnt AS (SELECT CAST(NULLIF(regexp_extract(CAST(o_totalprice AS VARCHAR), '([1-9])', 1), '') AS INTEGER) AS digit, " +
-        "count(*) AS n FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0 GROUP BY 1), " +
-        "cnt2 AS (SELECT digit, n FROM cnt WHERE digit IS NOT NULL), " +
-        "spine AS (SELECT * FROM (VALUES (1, CAST(0.30103 AS DOUBLE)), (2, CAST(0.176091 AS DOUBLE)), " +
-        "(3, CAST(0.124939 AS DOUBLE)), (4, CAST(0.09691 AS DOUBLE)), (5, CAST(0.079181 AS DOUBLE)), " +
-        "(6, CAST(0.066947 AS DOUBLE)), (7, CAST(0.057992 AS DOUBLE)), (8, CAST(0.051153 AS DOUBLE)), " +
-        "(9, CAST(0.045757 AS DOUBLE))) AS s(digit, expected)), " +
-        "tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM cnt2), " +
-        "f AS (SELECT s.digit AS digit, COALESCE(n, 0) AS n, " +
-        "round(CAST(COALESCE(n, 0) AS DOUBLE) / (CASE WHEN tot > 0 THEN CAST(tot AS DOUBLE) END), 6) AS share, " +
-        "s.expected AS expected FROM spine s LEFT JOIN cnt2 ON s.digit = cnt2.digit CROSS JOIN tot) " +
-        "SELECT digit, n, share, expected, round(share - expected, 6) AS dev FROM f")
+    Query("profile_approx", (s, dir) => {
+      // the HLL-sketch profile path (the 100 TB default — fixed-size
+      // sketches instead of the Expand row multiplication) surfaced as its
+      // accuracy contract: every per-column estimate within 5% of exact.
+      // rsd=0.01 makes 5% a ~5 sigma bound, deterministic given the data.
+      val li = Tables.table(s, dir, "lineitem")
+      val ap = graft.ops.Profile.profile(li, exactDistinct = false, rsd = 0.01)
+        .select(col("column"), col("n_distinct").as("n_approx"))
+      val ex = graft.ops.Profile.profile(li)
+        .select(col("column"), col("n_rows"), col("n_null"),
+          col("n_distinct").as("n_exact"))
+      ex.join(ap, "column")
+        .select(col("column"), col("n_rows"), col("n_null"), col("n_exact"),
+          (abs(col("n_approx") - col("n_exact")).cast("double") <=
+            lit(0.05) * col("n_exact")).as("approx_ok"))
+    },
+      profileApproxOracleSql)
   )
 }

@@ -131,17 +131,16 @@ object PlanLint {
   def sweep(spark: SparkSession, sfDir: String,
             only: Option[Set[String]] = None,
             strict: Boolean = false): Seq[String] =
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .flatMap { case (name, fn) =>
+    graft.SparkEntry.queries
+      .filter(q => only.forall(_.contains(q.name)))
+      .flatMap { q =>
         graft.core.Materialize.inScope { scope =>
           try {
             val (df, segs) = graft.core.Materialize.recordingSegmentPlans(
-              fn(spark, sfDir))
-            val vs = segs.zipWithIndex.flatMap { case (p, i) =>
-              violationsIn(p, name, s"segment $i", strict)
-            } ++ violationsIn(df.queryExecution.sparkPlan, name, "final", strict)
-            vs
+              q.build(spark, sfDir))
+            segs.zipWithIndex.flatMap { case (p, i) =>
+              violationsIn(p, q.name, s"segment $i", strict)
+            } ++ violationsIn(df.queryExecution.sparkPlan, q.name, "final", strict)
           } finally scope.release(spark, blocking = true)
         }
       }

@@ -87,7 +87,7 @@ object QueryProfile {
       val cc0 = (ccTime.getCount, ccTime.getSnapshot.getMean * ccTime.getCount)
       graft.core.Materialize.inScope { scope =>
         val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
+        graft.SparkEntry.query(name).build(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         Diagnostics.drainListenerBus(spark) // so the tap is complete
         val js = tap.jobs.synchronized(tap.jobs.values.toSeq)

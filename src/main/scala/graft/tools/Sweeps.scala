@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Query
 import graft.core.{GraftSession, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,29 +12,27 @@ import org.apache.spark.sql.types._
   * message or throws records a failure for that query.
   */
 object Sweep {
-  type Query = (SparkSession, String) => DataFrame
-
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def failures(spark: SparkSession, only: Option[Set[String]] = None)(
       check: Query => Option[String]): Seq[(String, String)] =
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .flatMap { case (name, fn) =>
+    graft.SparkEntry.queries
+      .filter(q => only.forall(_.contains(q.name)))
+      .flatMap { q =>
         Materialize.inScope { scope =>
-          try check(fn)
+          try check(q)
           catch { case e: Throwable =>
             Some(e.getClass.getSimpleName + ": " +
               String.valueOf(e.getMessage).linesIterator.take(1).mkString)
           }
           finally scope.release(spark, blocking = true)
-        }.map(name -> _)
+        }.map(q.name -> _)
       }
 
   /** Queries that throw when run (to a count) over the tables in `dir`. */
   def crashes(spark: SparkSession, dir: String): Seq[(String, String)] =
-    failures(spark) { fn => fn(spark, dir).count(); None }
+    failures(spark) { q => q.build(spark, dir).count(); None }
 
   /** Writes `f` of every table under `src` to the same name under `dst`. */
   def rewrite(spark: SparkSession, src: String, dst: String)(
@@ -177,11 +176,11 @@ object InvarianceSweep {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
-    def canon(fn: Sweep.Query): String =
-      fn(spark, dir).collect().map(_.toString).sorted.mkString("\n")
-    Sweep.failures(spark, only) { fn =>
-      val a = canon(fn)
-      val b = try { alt.foreach { case (k, v) => spark.conf.set(k, v) }; canon(fn) }
+    def canon(q: Query): String =
+      q.build(spark, dir).collect().map(_.toString).sorted.mkString("\n")
+    Sweep.failures(spark, only) { q =>
+      val a = canon(q)
+      val b = try { alt.foreach { case (k, v) => spark.conf.set(k, v) }; canon(q) }
         finally restore()
       if (a == b) None
       else {

@@ -42,7 +42,7 @@ class InvarianceSweepSpec extends SparkSpec {
     "volume_bars") // cumulative integer volume clock
 
   test("high-risk registry queries are partition-invariant") {
-    val missing = subset -- SparkEntry.queries.keySet
+    val missing = subset -- SparkEntry.queries.map(_.name)
     assert(missing.isEmpty, s"subset names unknown queries: $missing")
     val fs = graft.tools.InvarianceSweep.failures(spark, Sf0001, Some(subset))
     assert(fs.isEmpty, "queries whose results depend on partitioning:\n" +

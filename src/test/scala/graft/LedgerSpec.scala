@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The grading contract, enforced as a test: SURVEY §2's operator
   * inventory IS the coverage claim the judge set-compares against
-  * `SparkEntry.queries` / `oracleSql` / the correctness artifact — and it
+  * `SparkEntry.queries` / their oracleSql / the correctness artifact — and it
   * has drifted (r5: missing rows; r6: stale counts) whenever it was
   * maintained by hand. This spec parses §2 and fails the build on ANY
   * divergence, so the ledger cannot drift silently again.
@@ -44,18 +44,20 @@ class LedgerSpec extends AnyFunSuite {
     val sql = rows.collect { case (n, "SQL") => n }
     assert(sql.distinct.size == sql.size,
       s"duplicate §2 [SQL] rows: ${sql.diff(sql.distinct).mkString(", ")}")
-    val missing = SparkEntry.queries.keySet -- sql.toSet
-    val stale = sql.toSet -- SparkEntry.queries.keySet
+    val names = SparkEntry.queries.map(_.name).toSet
+    val missing = names -- sql.toSet
+    val stale = sql.toSet -- names
     assert(missing.isEmpty && stale.isEmpty,
       s"§2 drift — missing rows: ${missing.toSeq.sorted.mkString(", ")}; " +
         s"stale rows: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   test("every query has an oracle (the driver's hard-check contract)") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(noOracle.isEmpty, s"queries without oracleSql: ${noOracle.mkString(", ")}")
-    assert(orphaned.isEmpty, s"oracleSql without queries: ${orphaned.mkString(", ")}")
+    val names = SparkEntry.queries.map(_.name)
+    assert(names.size == 274 && names.distinct.size == names.size,
+      s"${names.size} queries, ${names.distinct.size} distinct names")
+    val noOracle = SparkEntry.queries.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(noOracle.isEmpty, s"queries with empty oracleSql: ${noOracle.mkString(", ")}")
   }
 
   test("every §2 [SPEC] row resolves to a referencing spec suite") {

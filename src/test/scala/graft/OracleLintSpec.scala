@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle is wrapped in an explicit CAST (to BIGINT if it reaches the
   * output schema, to DOUBLE/DECIMAL if it feeds float math).
   *
-  * The lint therefore scans every assembled `SparkEntry.oracleSql`
+  * The lint therefore scans every assembled `SparkEntry.queries` oracleSql
   * string and fails the build on any `sum(` call that is NEITHER
   *   (a) inside the balanced-paren extent of some enclosing `CAST(...)`
   *       — the cast pins that expression's final type, so a HUGEINT
@@ -91,8 +91,7 @@ class OracleLintSpec extends AnyFunSuite {
   }
 
   test("every integer sum() in oracleSql is CAST-wrapped (no HUGEINT can reach the driver's typed hash)") {
-    val offenders = SparkEntry.oracleSql.toList.sortBy(_._1)
-      .flatMap { case (name, sql) => offendersIn(name, sql) }
+    val offenders = SparkEntry.queries.flatMap(q => offendersIn(q.name, q.oracleSql))
     assert(offenders.isEmpty,
       s"\n${offenders.size} un-cast integer sum() calls in oracleSql " +
         "(DuckDB types these HUGEINT -> float64 in pandas -> typed-hash mismatch; " +

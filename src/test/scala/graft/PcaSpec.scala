@@ -84,7 +84,7 @@ class PcaSpec extends SparkSpec {
   test("treeAggregate covariance agrees with the quantized SQL face") {
     val m = Pca.train(emb, k = 1) // runs the accumulator; we recompute cov below
     assert(m.mean.nonEmpty)
-    val sqlFace = SparkEntry.queries("embedding_covariance")(spark, Sf0001)
+    val sqlFace = SparkEntry.query("embedding_covariance").build(spark, Sf0001)
       .where(col("i") < 4 && col("j") < 4)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // recompute the same entries from raw doubles (unquantized)

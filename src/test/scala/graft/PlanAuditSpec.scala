@@ -8,7 +8,7 @@ package graft
 class PlanAuditSpec extends SparkSpec {
 
   private def planOf(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, Sf0001)
+    val df = SparkEntry.query(name).build(spark, Sf0001)
     df.count() // finalize under AQE
     df.queryExecution.executedPlan.toString
   }
@@ -836,7 +836,7 @@ class PlanAuditSpec extends SparkSpec {
     graft.core.Materialize.inScope { scope =>
       try {
         val (df, segs) = graft.core.Materialize.recordingSegmentPlans(
-          SparkEntry.queries("ann_filtered_pq")(spark, Sf0001))
+          SparkEntry.query("ann_filtered_pq").build(spark, Sf0001))
         (segs :+ df.queryExecution.sparkPlan).foreach { p =>
           p.foreach {
             case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
@@ -858,7 +858,7 @@ class PlanAuditSpec extends SparkSpec {
     graft.core.Materialize.inScope { scope =>
       try {
         val (df, segs) = graft.core.Materialize.recordingSegmentPlans(
-          SparkEntry.queries("ann_ivfpq_2level")(spark, Sf0001))
+          SparkEntry.query("ann_ivfpq_2level").build(spark, Sf0001))
         (segs :+ df.queryExecution.sparkPlan).foreach { p =>
           p.foreach {
             case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>

@@ -190,7 +190,7 @@ class RankEventsSpecs extends SparkSpec {
     // one customer holds (almost) everything: gini → (n-1)/n
     assert(math.abs(gini(Seq.fill(9)(0.01) ++ Seq(1e6)) - 0.9) < 0.01)
     // the oracled per-nation query emits sane values on testdata
-    val q = SparkEntry.queries("gini_by_nation")(spark, Sf0001)
+    val q = SparkEntry.query("gini_by_nation").build(spark, Sf0001)
       .select(col("gini")).as[Double].collect()
     assert(q.nonEmpty && q.forall(g => g >= 0.0 && g < 1.0))
   }
@@ -699,7 +699,7 @@ class RankEventsSpecs extends SparkSpec {
   }
 
   test("rfm quartiles are balanced and the plan stays window-free") {
-    val rfm = SparkEntry.queries("rfm_segments")(spark, Sf0001)
+    val rfm = SparkEntry.query("rfm_segments").build(spark, Sf0001)
     rfm.count()
     assert(!rfm.queryExecution.executedPlan.toString.contains("Window"))
     val n = rfm.count()

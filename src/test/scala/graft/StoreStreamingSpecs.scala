@@ -994,15 +994,17 @@ class EntrySmokeSpec extends SparkSpec {
   }
 
   test("every declared query runs and returns rows at sf0.001") {
-    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { if (fn(spark, Sf0001).count() > 0) None else Some(s"$name: 0 rows") }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    val failures = SparkEntry.queries.flatMap { q =>
+      try { if (q.build(spark, Sf0001).count() > 0) None else Some(s"${q.name}: 0 rows") }
+      catch { case e: Throwable => Some(s"${q.name}: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
-  test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  test("query names are unique and every query has a non-empty oracle") {
+    val names = SparkEntry.queries.map(_.name)
+    assert(names.size == 274 && names.distinct.size == names.size)
+    assert(SparkEntry.queries.forall(_.oracleSql.nonEmpty))
   }
 }
 

@@ -17,6 +17,11 @@ for p in glob.glob(os.path.join(sfdir, "*.parquet")):
 
 oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
 fails = 0
+# every Spark output directory must have its oracle: an entry that went
+# missing would otherwise drop that query from the check silently
+for name in sorted(os.listdir(outdir)):
+    if os.path.isdir(os.path.join(outdir, name)) and name not in oracle:
+        print(f"FAIL {name}: no oracle entry"); fails += 1
 for name, sql in sorted(oracle.items()):
     spark_dir = os.path.join(outdir, name)
     if not os.path.isdir(spark_dir):
@@ -64,5 +69,5 @@ for name, sql in sorted(oracle.items()):
         fails += 1
     else:
         print(f"OK   {name} ({len(d)} rows)")
-print("ALL OK" if fails == 0 else f"{fails} FAILURES")
+print(f"ALL OK ({len(oracle)} queries)" if fails == 0 else f"{fails} FAILURES")
 sys.exit(1 if fails else 0)
