@@ -427,7 +427,7 @@ object SparkEntry {
       "SELECT qid, id2, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id2) AS rn " +
       s"FROM fin) WHERE rn <= $k"
 
-  /** DuckDB replay of Ivf.ivfPqSearchFilteredWith: the [[ivfPqCtes]]
+  /** DuckDB replay of Ivf.ivfPqSearchFiltered: the [[ivfPqCtes]]
     * encode chain, index rows filtered by the metadata join, probe +
     * rescue both scoring ADC reconstructions — the compressed-index
     * sibling of [[annIvfFilteredOracleSql]].

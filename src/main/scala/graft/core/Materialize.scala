@@ -177,14 +177,49 @@ object Materialize {
     * iterative kernels re-partition into their round layout): holding
     * both copies to the query boundary doubles the kernel's edge-scale
     * storage footprint (measured as the r16layout probe's heap headroom).
-    * CONTRACT: the frame must be fully consumed — its truncated lineage
-    * cannot recompute. No-op for frames that are not tracked cuts.
+    *
+    * CHECKED: `replacement`, the frame that took `df`'s place, must be an
+    * EAGER tracked cut ([[cut]] / [[cutPartitioned]]), already
+    * materialized. A lazy replacement still reads `df` on its first
+    * action, after `df`'s truncated lineage is gone; that fails before
+    * anything is unpersisted. No-op for a `df` that is not a tracked cut.
     */
-  def releaseFrame(spark: SparkSession, df: DataFrame,
-                   blocking: Boolean = false): Unit =
+  def releaseFrame(spark: SparkSession, df: DataFrame, replacement: DataFrame,
+                   blocking: Boolean = false): Unit = {
+    require(isEagerTrackedCut(replacement),
+      "releaseFrame: the replacement frame is not an eager tracked cut " +
+        "(Materialize.cut / cutPartitioned), so it may still read the frame " +
+        "being released; nothing was unpersisted")
     df.queryExecution.analyzed match {
       case lr: LogicalRDD => releaseWhere(spark, _.rddId == lr.rdd.id, blocking)
       case _ => ()
+    }
+  }
+
+  // a cut whose rdd is already checkpointed (eager cuts are; lazy ones
+  // only after their first action) and, for local checkpoints, tracked
+  // here (reliable checkpoints keep their files and are never tracked)
+  private def isEagerTrackedCut(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val sc = df.sparkSession.sparkContext
+        lr.rdd.isCheckpointed && (sc.getCheckpointDir.isDefined ||
+          tracked.synchronized {
+            tracked.exists(t => t.appId == sc.applicationId && t.rddId == lr.rdd.id)
+          })
+      case _ => false
+    }
+
+  /** Whether a frame can still be read: false only for a local cut whose
+    * blocks were released (its truncated lineage cannot recompute).
+    * Reliable checkpoints keep their files, and plain frames recompute.
+    */
+  private[graft] def isReadable(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val sc = df.sparkSession.sparkContext
+        sc.getCheckpointDir.isDefined || sc.getPersistentRDDs.contains(lr.rdd.id)
+      case _ => true
     }
 
   /** Number of tracked checkpoint blocks still persisted in the context.

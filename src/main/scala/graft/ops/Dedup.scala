@@ -633,7 +633,7 @@ object Dedup {
       Seq("b"), nParts, sortedBy = Seq("b"))
     // the sealed copy fully replaces the staging one — release it now or
     // the kernel holds TWO edge-scale block sets for the whole query
-    graft.core.Materialize.releaseFrame(pairs.sparkSession, pre, blocking = true)
+    graft.core.Materialize.releaseFrame(pairs.sparkSession, pre, edges, blocking = true)
     // seed with the first propagation round folded into init: each node
     // starts at min(self, min neighbor) — one aggregation over the edge
     // list instead of a distinct + a full join round; repartition first so

@@ -54,7 +54,7 @@ object Graph {
       pre.repartition(nParts, col("src")).sortWithinPartitions("src"),
       Seq("src"), nParts, sortedBy = Seq("src"))
     // the sealed copy fully replaces the staging one — release it now
-    graft.core.Materialize.releaseFrame(edges0.sparkSession, pre, blocking = true)
+    graft.core.Materialize.releaseFrame(edges0.sparkSession, pre, edges, blocking = true)
     // nodes born in the (v, nParts) layout: dropDuplicates rides its own
     // repartition (guide §2.4), so the per-iteration left join back onto
     // the rank sums needs no exchange either
@@ -185,7 +185,7 @@ object Graph {
       Seq("src"), nParts, sortedBy = Seq("src"))
     // the sealed copy fully replaces the staging one — release it now or
     // the kernel holds TWO edge-scale block sets for the whole query
-    graft.core.Materialize.releaseFrame(edges0.sparkSession, pre, blocking = true)
+    graft.core.Materialize.releaseFrame(edges0.sparkSession, pre, sym, blocking = true)
     var labels = sym.select(col("src").as("v"), col("src").as("label")).distinct()
     for (_ <- 1 to iters) {
       // symmetry means every node of sym appears as a dst, so the votes

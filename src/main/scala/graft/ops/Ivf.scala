@@ -9,6 +9,12 @@ import org.apache.spark.sql.types.DecimalType
   * corpus into cells; search scans only the query's `nprobe` nearest
   * cells. Complements the hyperplane-LSH path (ops.Similarity.lshTopK).
   *
+  * The cell-routed faces (kNN graph, SemDeDup, IVF-PQ) each exist once
+  * and take a [[Quantizer]]: the flat centroid matrix ([[Flat]], from
+  * [[train]]) or the two-level model ([[TwoLevelModel]], from
+  * [[trainTwoLevel]]). The quantizer owns routing, centroid lookups,
+  * probe ranking and persistence; the kernels never see which one ran.
+  *
   * Scale design: the centroid model is a k-row driver-side array (exactly
   * like an MLlib model); assignment is a single fused map-side argmax
   * expression over the broadcast centroid matrix (graft.functions
@@ -21,10 +27,12 @@ import org.apache.spark.sql.types.DecimalType
 object Ivf {
 
   // null embeddings (malformed feed rows) drop at the parse boundary —
-  // every collector below reads v with getSeq and would NPE otherwise
-  private def vecs(emb: DataFrame): DataFrame =
+  // every collector below reads v with getSeq and would NPE otherwise;
+  // `passthrough` metadata columns ride along (see ivfPqReconFrame)
+  private def vecs(emb: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
     emb.where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .select((Seq(col("vec_id"), col("embedding").cast("array<double>").as("v")) ++
+        passthrough.map(col)): _*)
 
   /** Map-only nearest-cell assignment via the fused native argmax.
     * Empty model (empty corpus at train time) → empty assignment with
@@ -231,21 +239,6 @@ object Ivf {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Persist a trained centroid model as a k-row parquet table — the
-    * cross-job half of train-once/search-many: train in the indexing
-    * job, `loadModel` in every serving job. (Within one session just
-    * keep the array.)
-    */
-  def saveModel(spark: SparkSession, cents: Array[Array[Double]], path: String): Unit =
-    centroidsDf(spark, cents).write.mode("overwrite").parquet(path)
-
-  /** Load a model written by `saveModel` (sorted by cid — the same
-    * contract `train` returns).
-    */
-  def loadModel(spark: SparkSession, path: String): Array[Array[Double]] =
-    localize(spark.read.parquet(path)
-      .select(col("cid").cast("int").as("cid"), col("cvec").cast("array<double>").as("cvec")))
-
   /** Product quantization encode: each vector split into `m` subspaces,
     * each subspace assigned to its nearest codebook centroid — the
     * compression step that turns a 100 TB float vector store into
@@ -332,81 +325,81 @@ object Ivf {
   }
 
   /** IVF-PQ residual index — the standard billion-vector serving layout,
-    * composing the coarse quantizer ([[train]]) with product quantization
+    * composing the coarse quantizer with product quantization
     * ([[pqEncode]]'s codebook machinery) the way FAISS's IVFPQ does: each
     * vector stores its coarse cell id plus PQ codes of the RESIDUAL
-    * (v − centroid[cid]), so the fine codebooks only have to cover the
-    * (much tighter) within-cell displacement distribution instead of the
-    * whole embedding space — better reconstruction at equal code bytes
-    * than plain PQ, and search can skip unprobed cells entirely.
+    * (v − its cell's centroid), so the fine codebooks only have to cover
+    * the (much tighter) within-cell displacement distribution instead of
+    * the whole embedding space — better reconstruction at equal code
+    * bytes than plain PQ, and search can skip unprobed cells entirely.
     *
-    * Scale design: both quantizer models are driver-side arrays (coarse
-    * centroids from `train`, residual codebooks from the k-lowest-vec_ids
-    * seed contract applied to residuals); cell assignment, residual
-    * subtraction, per-subspace code assignment, and reconstruction are ONE
-    * fused map-only pass (literal-array lookups, zero shuffle, zero join).
-    * Emits (vec_id, cid, code0..m-1, recon_cos).
+    * Scale design: the coarse model is the driver-side [[Quantizer]], the
+    * residual codebooks follow the seed contract of [[pqCodeResiduals]];
+    * cell assignment, residual subtraction, per-subspace code assignment
+    * and reconstruction are ONE map-only pass over one materialized
+    * routing scan (zero shuffle). Emits (vec_id, cid, code0..m-1,
+    * recon_cos).
     */
-  def ivfPqEncode(emb: DataFrame, numCells: Int = 16, iters: Int = 1,
+  def ivfPqEncode(emb: DataFrame, quantizer: Quantizer,
                   m: Int = 4, k: Int = 16): DataFrame =
-    ivfPqEncodeWith(emb, train(emb, numCells, iters), m, k)
-
-  /** [[ivfPqEncode]] against a PRE-TRAINED coarse quantizer. */
-  def ivfPqEncodeWith(emb: DataFrame, cents: Array[Array[Double]],
-                      m: Int = 4, k: Int = 16): DataFrame =
-    ivfPqEncodedFrame(vecs(emb), cents, m, k)
+    ivfPqEncodedFrame(emb, quantizer, m, k, Nil)
       .select(Seq(col("vec_id"), col("cid").cast("long").as("cid")) ++
         (0 until m).map(s => col(s"code$s").cast("long").as(s"code$s")) :+
         round(graft.functions.cosine_sim(col("v"), col("recon")), 6).as("recon_cos"): _*)
 
-  /** Shared IVF-PQ encode frame: (vec_id, v, cid, code0..m-1, recon) with
-    * recon = centroid[cid] + concatenated chosen residual-codebook
-    * centroids. Residual codebooks start from the k lowest vec_ids'
-    * residuals (the Ivf seed contract, computed by the SAME fused
-    * assignment expression the corpus pass runs) and are refined by
-    * `bookIters` Lloyd rounds ON THE RESIDUALS — the FAISS-style step
-    * that matters here: residual variance is exactly what distinguishes
-    * within-cell neighbors, and raw seed slices quantize it too coarsely
-    * to rank them (measured: full-probe recall 0.14 untrained vs ≥ plain
-    * PQ trained). Means are decimal-exact like `train`'s, so the whole
-    * encode — both quantizer trainings included — replays in SQL.
+  /** The (vec_id, cid, recon) compressed-corpus frame the IVF-PQ searches
+    * scan — encode once per corpus snapshot, search many times.
+    *
+    * `passthrough` names metadata columns of `emb` to CARRY THROUGH the
+    * (map-only) encode onto the index rows — the zero-shuffle way to
+    * make the index WHERE-composable on metadata. Joining the metadata
+    * table onto the returned frame is equivalent in rows but costs a
+    * corpus-scale equi-join (two exchanges + sorts at 100 TB, or a
+    * bucketing requirement); the encode already scans every row, so a
+    * predicate column rides along for free.
     */
-  private def ivfPqEncodedFrame(e: DataFrame, cents: Array[Array[Double]],
-                                m: Int, k: Int, bookIters: Int = 1): DataFrame = {
+  def ivfPqReconFrame(emb: DataFrame, quantizer: Quantizer,
+                      m: Int = 4, k: Int = 16,
+                      passthrough: Seq[String] = Nil): DataFrame =
+    ivfPqEncodedFrame(emb, quantizer, m, k, passthrough)
+      .select((Seq("vec_id", "cid", "recon") ++ passthrough).map(col): _*)
+
+  /** Shared IVF-PQ encode frame: (vec_id, v, passthrough…, cid,
+    * code0..m-1, recon) with recon = centroid[cid] + the concatenated
+    * chosen residual-codebook centroids. The quantizer supplies the
+    * residual frame and the centroid add-back; the codebooks are
+    * [[pqCodeResiduals]]' `bookIters` decimal-exact Lloyd rounds ON THE
+    * RESIDUALS — the FAISS-style step that matters here: residual
+    * variance is exactly what distinguishes within-cell neighbors, and
+    * raw seed slices quantize it too coarsely to rank them (measured:
+    * full-probe recall 0.14 untrained vs ≥ plain PQ trained). Means are
+    * decimal-exact like `train`'s, so the whole encode — both quantizer
+    * trainings included — replays in SQL.
+    */
+  private def ivfPqEncodedFrame(emb: DataFrame, quantizer: Quantizer,
+                                m: Int, k: Int, passthrough: Seq[String],
+                                bookIters: Int = 1): DataFrame = {
     // empty model (empty corpus, or an explicitly empty quantizer) →
     // empty frame with the full output schema — the
     // incrementalSemanticWith empty-model contract, not a crash
-    if (cents.isEmpty)
+    if (quantizer.isEmpty)
       return (0 until m).foldLeft(
-        e.limit(0).withColumn("cid", lit(0).cast("int"))
+        vecs(emb, passthrough).limit(0).withColumn("cid", lit(0).cast("int"))
           .withColumn("res", col("v"))) { (df, s) =>
         df.withColumn(s"code$s", lit(0).cast("int"))
       }.withColumn("recon", col("v"))
-    val dim = cents.head.length
-    val cl = centLit(cents)
-    // ONE materialized assign+residual scan (the assignedCells pattern):
-    // the codebook seeds, every Lloyd round, and the final code/recon
-    // pass all derive from it — without the cut, each of those re-runs
-    // the full corpus scan + argmax (2 avoidable full-corpus reads per
-    // index build at 100 TB)
-    val res = graft.core.Materialize.once(assign(e, cents)
-      .withColumn("res", zip_with(col("v"),
-        element_at(cl, (col("cid") + 1).cast("int")), (a, b) => a - b)))
-    pqCodeResiduals(res, m, k, dim, bookIters)
-      .withColumn("recon", zip_with(
-        element_at(cl, (col("cid") + 1).cast("int")), col("rescon"),
-        (a, b) => a + b))
-      .drop("rescon")
+    val (res, addCentroid) = quantizer.residuals(emb, passthrough)
+    addCentroid(pqCodeResiduals(res, m, k, quantizer.dim, bookIters))
   }
 
-  /** The residual-PQ codebook kernel shared VERBATIM by the flat and
-    * two-level encodes (the codebook math never sees which coarse
-    * quantizer produced the residuals): given a MATERIALIZED
-    * (vec_id, v, cid, res) frame, seed per-subspace codebooks from the k
-    * lowest vec_ids' residual slices (the Ivf seed contract), refine with
+  /** The residual-PQ codebook kernel (the codebook math never sees which
+    * coarse quantizer produced the residuals): given a MATERIALIZED
+    * (vec_id, v, cid, res) frame, seed per-subspace codebooks from k
+    * residual slices in portable md5-prefix order, refine with
     * `bookIters` decimal-exact Lloyd rounds, code every row, and emit the
     * input columns plus code0..m-1 and `rescon` — the concatenated chosen
-    * residual centroids (callers add their coarse base to finish recon).
+    * residual centroids (the quantizer adds its centroid back to finish
+    * recon).
     */
   private def pqCodeResiduals(res: DataFrame, m: Int, k: Int, dim: Int,
                               bookIters: Int): DataFrame = {
@@ -466,68 +459,33 @@ object Ivf {
       element_at(centLit(books(s)), col(s"code$s") + 1)): _*))
   }
 
-  /** IVF-PQ top-k search: probe the query's `nprobe` nearest cells and
-    * ADC-score ONLY those cells' members against the residual-reconstructed
-    * candidates — the memory-bound serving scan (`ann_ivf`'s cell pruning ×
-    * `pq_search`'s compressed scoring in one index). Self-contained form
-    * (trains in place, the oracle replays everything); for serving, train
-    * once and feed [[ivfPqSearchWith]] a persisted [[ivfPqReconFrame]].
+  /** IVF-PQ top-k search over an encoded corpus frame (from
+    * [[ivfPqReconFrame]]): probe each query's `nprobe` nearest cells and
+    * ADC-score ONLY those cells' members against their residual
+    * reconstructions — the memory-bound serving scan (`ann_ivf`'s cell
+    * pruning × `pq_search`'s compressed scoring in one index). The
+    * (qid, qv, cid) probe frame broadcasts onto the encoded corpus and
+    * the bounded top-k heap closes the ranking.
     */
-  def ivfPqSearch(emb: DataFrame, queries: DataFrame, k: Int,
-                  numCells: Int = 16, iters: Int = 1, m: Int = 4,
-                  kCode: Int = 16, nprobe: Int = 4): DataFrame = {
-    val cents = train(emb, numCells, iters)
-    ivfPqSearchWith(ivfPqReconFrame(emb, cents, m, kCode), cents, queries, k, nprobe)
-  }
-
-  /** The (vec_id, cid, recon) compressed-corpus frame [[ivfPqSearchWith]]
-    * scans — encode once per corpus snapshot, search many times.
-    *
-    * `passthrough` names metadata columns of `emb` to CARRY THROUGH the
-    * (map-only) encode onto the index rows — the zero-shuffle way to
-    * make the index WHERE-composable on metadata. Joining the metadata
-    * table onto the returned frame is equivalent in rows but costs a
-    * corpus-scale equi-join (two exchanges + sorts at 100 TB, or a
-    * bucketing requirement); the encode already scans every row, so a
-    * predicate column rides along for free.
-    */
-  def ivfPqReconFrame(emb: DataFrame, cents: Array[Array[Double]],
-                      m: Int = 4, k: Int = 16,
-                      passthrough: Seq[String] = Nil): DataFrame = {
-    val e = emb.where(col("embedding").isNotNull)
-      .select((Seq(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")) ++
-        passthrough.map(col)): _*)
-    ivfPqEncodedFrame(e, cents, m, k)
-      .select((Seq("vec_id", "cid", "recon") ++ passthrough).map(col): _*)
-  }
-
-  /** IVF-PQ top-k against an ALREADY-ENCODED corpus frame. */
-  def ivfPqSearchWith(enc: DataFrame, cents: Array[Array[Double]],
-                      queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame =
-    adcTopK(enc, probeFrame(queries, cents, nprobe), k)
-
-  /** The ADC serving scan shared by the flat and two-level searches:
-    * broadcast the (qid, qv, cid) probe frame onto the encoded corpus,
-    * score reconstructions, close with the bounded top-k heap.
-    */
-  private def adcTopK(enc: DataFrame, probes: DataFrame, k: Int): DataFrame =
-    Similarity.topK(enc.join(broadcast(probes), Seq("cid"))
+  def ivfPqSearch(enc: DataFrame, quantizer: Quantizer, queries: DataFrame,
+                  k: Int, nprobe: Int = 4): DataFrame =
+    Similarity.topK(enc.join(broadcast(quantizer.probes(queries, nprobe)), Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id2"),
         round(graft.functions.cosine_sim(col("qv"), col("recon")), 6).as("cos")), k)
 
   /** IVF-PQ search with an exact re-rank stage — the standard last mile
     * of the compressed serving story: the ADC scan surfaces top-k′
-    * (k′ = kFactor·k) candidates from the COMPRESSED corpus, then only
-    * those |q|·k′ rows gather their RAW vectors back for an exact-cosine
-    * re-rank that keeps the final top-k. Exact scores kill the ADC
-    * overestimation artifact inside the candidate set — measured ≈2× the
-    * plain ADC recall at every nprobe (§4). Strict monotonicity in nprobe
-    * is NOT restored, though: the k′ cut itself is taken in ADC order, so
-    * widening the probe set can let an overestimated newcomer displace a
-    * true neighbor from the top-k′ (measured: near-flat, ±0.01 dips).
-    * The recall knob that always helps is kFactor.
+    * (k′ = kFactor·k) candidates from the COMPRESSED corpus `enc`, then
+    * only those |q|·k′ rows gather their RAW vectors back from `emb` for
+    * an exact-cosine re-rank that keeps the final top-k. Exact scores
+    * kill the ADC overestimation artifact inside the candidate set —
+    * measured ≈2× the plain ADC recall at every nprobe (§4). Strict
+    * monotonicity in nprobe is NOT restored, though: the k′ cut itself is
+    * taken in ADC order, so widening the probe set can let an
+    * overestimated newcomer displace a true neighbor from the top-k′
+    * (measured: near-flat, ±0.01 dips). The recall knob that always
+    * helps is kFactor.
     *
     * Scale design: the gather is the bounded part — the ADC result is
     * |q|·k′ rows, broadcast to an equi-join against the raw vector frame
@@ -537,29 +495,16 @@ object Ivf {
     * for the gather — the price of exact scores without storing raw
     * vectors in the index.
     */
-  def ivfPqSearchRerank(emb: DataFrame, queries: DataFrame, k: Int,
-                        numCells: Int = 16, iters: Int = 1, m: Int = 4,
-                        kCode: Int = 16, nprobe: Int = 4,
-                        kFactor: Int = 4): DataFrame = {
-    val cents = train(emb, numCells, iters)
-    ivfPqRerankWith(ivfPqReconFrame(emb, cents, m, kCode), emb, cents,
-      queries, k, nprobe, kFactor)
-  }
-
-  /** [[ivfPqSearchRerank]] against an ALREADY-ENCODED corpus frame plus
-    * the raw vector table (the serving pair: compressed index + source of
-    * truth for the re-rank gather).
-    */
-  def ivfPqRerankWith(enc: DataFrame, emb: DataFrame,
-                      cents: Array[Array[Double]], queries: DataFrame,
-                      k: Int, nprobe: Int = 4, kFactor: Int = 4): DataFrame =
+  def ivfPqSearchRerank(enc: DataFrame, emb: DataFrame, quantizer: Quantizer,
+                        queries: DataFrame, k: Int, nprobe: Int = 4,
+                        kFactor: Int = 4): DataFrame =
     exactRerank(
-      ivfPqSearchWith(enc, cents, queries, k * kFactor, nprobe), emb, queries, k)
+      ivfPqSearch(enc, quantizer, queries, k * kFactor, nprobe), emb, queries, k)
 
-  /** The exact re-rank last mile shared by the flat and two-level rerank
-    * paths: the |q|·k′ ADC candidate pairs broadcast onto the raw vector
-    * table (a semi-join-shaped hash probe of the corpus scan, never a
-    * shuffle of it), exact rounded cosines keep the final top-k.
+  /** The exact re-rank last mile shared by the plain and filtered rerank
+    * searches: the |q|·k′ ADC candidate pairs broadcast onto the raw
+    * vector table (a semi-join-shaped hash probe of the corpus scan,
+    * never a shuffle of it), exact rounded cosines keep the final top-k.
     */
   private def exactRerank(adcTop: DataFrame, emb: DataFrame,
                           queries: DataFrame, k: Int): DataFrame = {
@@ -618,35 +563,17 @@ object Ivf {
     * rounded cosine ≥ `threshold`. The cell join bounds pair generation
     * at Σ|cell|² instead of n² (cells are the semantic analogue of LSH
     * buckets); pairs split across cells are the recall price, tuned by
-    * `numCells` — the same explicit tradeoff the LSH cap documents.
+    * the quantizer's cell count — the same explicit tradeoff the LSH cap
+    * documents. Both pair sides derive from ONE materialized cell scan.
     * Emits (cid, id1, id2, cos).
     */
-  def semanticNearDup(emb: DataFrame, numCells: Int = 16,
+  def semanticNearDup(emb: DataFrame, quantizer: Quantizer,
                       threshold: Double = 0.4,
                       maxCellGuard: Int = NearDupMaxCellGuard): DataFrame =
-    semanticNearDupWith(emb, train(emb, numCells, iters = 0), threshold,
-      maxCellGuard)
-
-  /** [[semanticNearDup]] against a PRE-TRAINED quantizer — the
-    * train-once/reuse sibling, like `searchTopKWith`.
-    */
-  def semanticNearDupWith(emb: DataFrame, cents: Array[Array[Double]],
-                          threshold: Double = 0.4,
-                          maxCellGuard: Int = NearDupMaxCellGuard): DataFrame =
-    if (cents.isEmpty) // empty model → no cells → no pairs (not a crash)
+    if (quantizer.isEmpty) // empty model → no cells → no pairs (not a crash)
       emb.select(lit(0L).as("cid"), col("vec_id").as("id1"),
         col("vec_id").as("id2"), lit(0d).as("cos")).limit(0)
-    else cellPairs(guardCells(assignedCells(vecs(emb), cents),
-      maxCellGuard, "semanticNearDup"), threshold)
-
-  /** ONE materialized argmax-assignment scan — both sides of the
-    * within-cell pair join (and semanticDedup's keeper scoring) derive
-    * from it, so the corpus is embedded-and-assigned exactly once (same
-    * pattern as minhashLsh's signature barrier).
-    */
-  private def assignedCells(e: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    graft.core.Materialize.once(assign(e, cents)
-      .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v")))
+    else cellPairs(guardCells(quantizer.cells(emb), maxCellGuard), threshold)
 
   /** Default oversized-cell bound for the UNCAPPED diagnostic faces
     * ([[semanticNearDup]] family): a cell of m members emits m(m−1)/2
@@ -669,14 +596,13 @@ object Ivf {
     * dedup caller should be on instead. Below the bound the face is
     * untouched (oracle output unchanged — spec-pinned).
     */
-  private def guardCells(cells: DataFrame, maxCell: Int,
-                         face: String): DataFrame = {
+  private def guardCells(cells: DataFrame, maxCell: Int): DataFrame = {
     val over = cells.groupBy(col("cid"))
       .agg(count(lit(1)).as("n")).where(col("n") > maxCell)
       .agg(count(lit(1)).as("cells"), max(col("n")).as("biggest")).head()
     if (over.getLong(0) > 0L)
       throw new IllegalStateException(
-        s"$face: ${over.getLong(0)} quantizer cell(s) exceed the " +
+        s"semanticNearDup: ${over.getLong(0)} quantizer cell(s) exceed the " +
           s"$maxCell-member guard (largest: ${over.getLong(1)} members, " +
           s"≈${over.getLong(1) * (over.getLong(1) - 1) / 2} within-cell " +
           "pairs). All-pairs emission at this size is the measured " +
@@ -755,8 +681,10 @@ object Ivf {
     * (single-probe). The graph is what graph-based curation consumes —
     * diversity sampling, cluster-connectivity audits, SemDeDup variants
     * that weight by neighborhood density. Cross-cell true neighbors are
-    * the recall price, tuned by `numCells` (the IVF nprobe tradeoff,
-    * graph-sided). Emits (vec_id, neighbor_id, cos, rn), rn 1-based by
+    * the recall price, tuned by the quantizer's cell count (the IVF
+    * nprobe tradeoff, graph-sided); a [[TwoLevelModel]] keeps cell SIZE,
+    * and so per-vector candidate count, constant as the corpus grows.
+    * Emits (vec_id, neighbor_id, cos, rn), rn 1-based by
     * (cos desc, neighbor_id asc).
     *
     * Scale design: candidates bounded at Σ|cell|·min(|cell|, KnnMaxCand)
@@ -768,17 +696,13 @@ object Ivf {
     * the shuffle, never a row_number window sorting a giant candidate
     * partition.
     */
-  def knnGraph(emb: DataFrame, numCells: Int = 16, k: Int = 5): DataFrame =
-    knnGraphWith(emb, train(emb, numCells, iters = 0), k)
+  def knnGraph(emb: DataFrame, quantizer: Quantizer, k: Int = 5): DataFrame =
+    if (quantizer.isEmpty) emptyGraph(emb) // no cells → empty graph (not a crash)
+    else knnGraphOnCells(quantizer.cells(emb), k)
 
-  /** [[knnGraph]] against a PRE-TRAINED quantizer (train-once/reuse). */
-  def knnGraphWith(emb: DataFrame, cents: Array[Array[Double]],
-                   k: Int = 5): DataFrame = {
-    if (cents.isEmpty) // empty model → no cells → empty graph (not a crash)
-      return emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
-        lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
-    knnGraphOnCells(assignedCells(vecs(emb), cents), k)
-  }
+  private def emptyGraph(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
+      lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
 
   /** The per-cell CANDIDATE cap for the kNN-graph kernel — the
     * [[cellPairsCapped]] hot-cell argument applied to neighbor
@@ -853,14 +777,10 @@ object Ivf {
     * tie at the k-th slot it may swap equal-cosine neighbors — the same
     * contract class as the cap, with the gap measured at 0.
     */
-  def knnGraphCollapsed(emb: DataFrame, numCells: Int = 16,
-                        k: Int = 5): DataFrame = {
-    val cents = train(emb, numCells, iters = 0)
-    if (cents.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
-        lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
-    knnGraphCollapsedOnCells(assignedCells(vecs(emb), cents), k)
-  }
+  def knnGraphCollapsed(emb: DataFrame, quantizer: Quantizer,
+                        k: Int = 5): DataFrame =
+    if (quantizer.isEmpty) emptyGraph(emb)
+    else knnGraphCollapsedOnCells(quantizer.cells(emb), k)
 
   private[graft] def knnGraphCollapsedOnCells(cells: DataFrame, k: Int,
                                               maxCand: Int = KnnMaxCand): DataFrame = {
@@ -920,15 +840,9 @@ object Ivf {
     * is a self left-semi equi-join on (a, b); CC inherits clusters'
     * bounded-round guarantees.
     */
-  def knnComponents(emb: DataFrame, numCells: Int = 16, k: Int = 5): DataFrame =
-    componentsOfGraph(knnGraph(emb, numCells, k))
-
-  /** The mutual-kNN + connected-components kernel over a kNN graph frame
-    * — shared by the flat and two-level quantizer faces.
-    */
-  private def componentsOfGraph(graph: DataFrame): DataFrame = {
-    val g = graft.core.Materialize.once(
-      graph.select(col("vec_id").as("a"), col("neighbor_id").as("b")))
+  def knnComponents(emb: DataFrame, quantizer: Quantizer, k: Int = 5): DataFrame = {
+    val g = graft.core.Materialize.once(knnGraph(emb, quantizer, k)
+      .select(col("vec_id").as("a"), col("neighbor_id").as("b")))
     val mutual = g
       .join(g.select(col("b").as("a"), col("a").as("b")), Seq("a", "b"), "left_semi")
       .where(col("a") < col("b"))
@@ -937,10 +851,103 @@ object Ivf {
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
   }
 
-  // ──────────────────── two-level (hierarchical) quantizer ────────────────────
+  // ─────────────────────────── the coarse quantizer ───────────────────────────
 
-  /** Two-level coarse quantizer model: `l1` routes (k1 cells), `l2` is the
-    * (k1·k2)-row sub-centroid matrix, block c covering rows
+  /** The coarse quantizer the cell-routed faces take: [[knnGraph]],
+    * [[knnGraphCollapsed]], [[knnComponents]], [[semanticNearDup]], the
+    * [[semanticDedup]] family, the IVF-PQ encode and searches, and the
+    * streaming screen and server. Every face runs the same kernels
+    * whichever quantizer routes it; the quantizer owns exactly what
+    * differs between its two implementations:
+    *  - assignment to the materialized (cid: long, vec_id, v) cell frame;
+    *  - the centroid a member is scored against (the dedup keeper) or
+    *    residualized against (IVF-PQ residuals and `recon`);
+    *  - query probe ranking (each query's `nprobe` nearest cells);
+    *  - the on-disk form ([[saveModel]] / [[loadModel]]).
+    *
+    * [[Flat]] looks its centroids up through literal arrays (no join).
+    * [[TwoLevelModel]] looks them up through broadcast model-scale
+    * frames: its effective cell count is meant to reach FAISS scale
+    * (1e6), where a literal array blows up the expression tree and falls
+    * out of codegen. With k1 = 1 a two-level model is the flat seed
+    * matrix, and every face returns its flat rows (TwoLevelIvfSpec).
+    */
+  sealed trait Quantizer {
+    def isEmpty: Boolean
+
+    /** Vector dimension (non-empty models). */
+    private[Ivf] def dim: Int
+
+    /** `e`, a (vec_id, v, …) frame, plus the effective cell id `cid`
+      * (long) — a fused map-side argmax usable on a stream. */
+    private[graft] def route(e: DataFrame): DataFrame
+
+    /** ONE materialized (cid: long, vec_id, v) cell scan of `emb`'s
+      * vectors: pair sides, candidate joins and keeper scores all derive
+      * from it, so the corpus is embedded and assigned exactly once. */
+    private[graft] def cells(emb: DataFrame): DataFrame
+
+    /** Keeper scores (doc_id, ccos): each member's rounded cosine to its
+      * own cell's centroid. */
+    private[Ivf] def keeperCos(cells: DataFrame): DataFrame
+
+    /** The MATERIALIZED IVF-PQ residual frame of `emb` (vec_id, v,
+      * passthrough…, cid, res = v − centroid[cid]) and the add-back that
+      * turns the codebook kernel's `rescon` into `recon`. */
+    private[Ivf] def residuals(emb: DataFrame, passthrough: Seq[String])
+        : (DataFrame, DataFrame => DataFrame)
+
+    /** Each query's `nprobe` nearest cells: (qid, qv, cid), ranked by
+      * rounded cosine desc, cid asc; |q| × nprobe rows. */
+    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame
+
+    /** The parquet rows [[saveModel]] writes. */
+    private[Ivf] def modelRows(spark: SparkSession): DataFrame
+  }
+
+  /** The flat quantizer: the k-row centroid matrix [[train]] returns.
+    * Assignment costs k per row; lookups are literal arrays (`centLit`),
+    * fine at coarse-quantizer k; the probe ranks all k cells per query.
+    */
+  final case class Flat(cents: Array[Array[Double]]) extends Quantizer {
+    def isEmpty: Boolean = cents.isEmpty
+    private[Ivf] def dim: Int = cents.head.length
+
+    private[graft] def route(e: DataFrame): DataFrame =
+      e.withColumn("cid", graft.functions.nearest_cell(
+        col("v"), cents.flatten, cents.length, dim).cast("long"))
+
+    private[graft] def cells(emb: DataFrame): DataFrame =
+      graft.core.Materialize.once(assign(vecs(emb), cents)
+        .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v")))
+
+    // element_at(centLit, cid + 1): the member's centroid, map-side
+    private def centroid: Column =
+      element_at(centLit(cents), (col("cid") + 1).cast("int"))
+
+    private[Ivf] def keeperCos(cells: DataFrame): DataFrame =
+      cells.select(col("vec_id").as("doc_id"),
+        round(graft.functions.cosine_sim(col("v"), centroid), 6).as("ccos"))
+
+    private[Ivf] def residuals(emb: DataFrame, passthrough: Seq[String])
+        : (DataFrame, DataFrame => DataFrame) = {
+      // ONE materialized assign+residual scan: the codebook seeds, every
+      // Lloyd round, and the final code/recon pass all derive from it
+      val res = graft.core.Materialize.once(assign(vecs(emb, passthrough), cents)
+        .withColumn("res", zip_with(col("v"), centroid, (a, b) => a - b)))
+      (res, _.withColumn("recon", zip_with(centroid, col("rescon"), (a, b) => a + b))
+        .drop("rescon"))
+    }
+
+    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame =
+      probeFrame(queries, cents, nprobe)
+
+    private[Ivf] def modelRows(spark: SparkSession): DataFrame =
+      centroidsDf(spark, cents)
+  }
+
+  /** The two-level (hierarchical) quantizer: `l1` routes (k1 cells), `l2`
+    * is the (k1·k2)-row sub-centroid matrix, block c covering rows
     * [c·k2, (c+1)·k2). Effective cell id = cid1·k2 + local.
     *
     * This is the "cells ∝ n at constant cell size" configuration the flat
@@ -951,11 +958,99 @@ object Ivf {
     * effective cell count k1·k2 still grows linearly with n. Both levels
     * stay driver-side matrices (the MLlib model altitude; FAISS holds the
     * same matrix in RAM at 1e6 cells).
+    *
+    * `nprobe1` is the query probe's L1 width: the `nprobe` best sub-cells
+    * are ranked among the `nprobe1` nearest blocks' k2 sub-centroids each.
+    * It is a serving setting, not stored by [[saveModel]]: a loaded model
+    * probes 2 blocks.
+    *
+    * A model from [[trainTwoLevel]] keeps its training corpus and that
+    * corpus's materialized L1 assignment (`fit`): a face handed the SAME
+    * DataFrame sub-assigns that cut instead of re-running the L1 argmax,
+    * so train-then-face pays one routing scan, not two. Once the training
+    * scope releases the cut, faces re-assign; loaded models carry none.
     */
-  case class TwoLevelModel(l1: Array[Array[Double]],
-                           l2: Array[Array[Double]], k2: Int) {
+  final case class TwoLevelModel(l1: Array[Array[Double]],
+                                 l2: Array[Array[Double]], k2: Int,
+                                 nprobe1: Int = 2)(
+      private[Ivf] val fit: Option[(DataFrame, DataFrame)] = None)
+      extends Quantizer {
     def k1: Int = l1.length
     def isEmpty: Boolean = l1.isEmpty
+    private[Ivf] def dim: Int = l1.head.length
+
+    // the fused own-block L2 argmax over an L1-assigned frame
+    private def subAssign(a: DataFrame): DataFrame =
+      a.withColumn("scid", graft.functions.nearest_sub_cell(
+        col("v"), col("cid"), l2.flatten, k1, k2, dim))
+
+    // the training cut, if `emb` is the training corpus and the cut's
+    // blocks were not released since (else the caller re-assigns)
+    private def trainedOn(emb: DataFrame): Option[DataFrame] =
+      fit.collect { case (corpus, a1)
+        if (corpus eq emb) && graft.core.Materialize.isReadable(a1) => a1 }
+
+    private[graft] def route(e: DataFrame): DataFrame =
+      subAssign(assign(e, l1)).withColumn("cid", col("scid").cast("long"))
+
+    private[graft] def cells(emb: DataFrame): DataFrame =
+      graft.core.Materialize.once(
+        subAssign(trainedOn(emb).getOrElse(assign(vecs(emb), l1)))
+          .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
+
+    // the (cid = scid: long, svec) sub-centroid frame — model-scale, so it
+    // broadcasts for free where a k1·k2-element literal would not
+    private def subCents(spark: SparkSession): DataFrame =
+      broadcast(subCentroidsDf(spark, this)
+        .select(col("scid").cast("long").as("cid"), col("svec")))
+
+    private[Ivf] def keeperCos(cells: DataFrame): DataFrame =
+      cells.join(subCents(cells.sparkSession), "cid")
+        .select(col("vec_id").as("doc_id"),
+          round(graft.functions.cosine_sim(col("v"), col("svec")), 6).as("ccos"))
+
+    /** Residuals are taken against the member's SUB-centroid (its actual
+      * region prototype, so residual variance shrinks with cell size as
+      * in the flat index) and the emitted `cid` IS the global scid, so
+      * every encoded-frame consumer joins candidates as the flat index
+      * does. On the training corpus the residuals come off the [[cells]]
+      * cut by a map-only broadcast join (no second cut); otherwise one
+      * materialized route+residual scan keeps every passthrough column.
+      */
+    private[Ivf] def residuals(emb: DataFrame, passthrough: Seq[String])
+        : (DataFrame, DataFrame => DataFrame) =
+      if (passthrough.isEmpty && trainedOn(emb).isDefined) {
+        val sc = subCents(emb.sparkSession)
+        (cells(emb).join(sc, "cid")
+          .select(col("vec_id"), col("v"), col("cid"),
+            zip_with(col("v"), col("svec"), (a, b) => a - b).as("res")),
+          _.join(sc, "cid")
+            .withColumn("recon", zip_with(col("svec"), col("rescon"), (a, b) => a + b))
+            .drop("rescon", "svec"))
+      } else {
+        val sc = broadcast(subCentroidsDf(emb.sparkSession, this))
+        (graft.core.Materialize.once(subAssign(assign(vecs(emb, passthrough), l1))
+          .join(sc, "scid")
+          .drop("cid") // the L1 block id; the emitted cid is the global scid
+          .withColumn("cid", col("scid").cast("int"))
+          .withColumn("res", zip_with(col("v"), col("svec"), (a, b) => a - b))
+          .drop("scid", "svec")),
+          _.join(sc, col("cid") === col("scid"))
+            .withColumn("recon", zip_with(col("svec"), col("rescon"), (a, b) => a + b))
+            .drop("rescon", "svec", "scid"))
+      }
+
+    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame =
+      probeFrameTwoLevel(queries, this, nprobe)
+
+    /** One parquet of (level, cid, cvec) rows: level 1 = the k1 router
+      * centroids, level 2 = the k1·k2 sub-centroids keyed by global scid. */
+    private[Ivf] def modelRows(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      (l1.zipWithIndex.map { case (c, i) => (1, i, c.toSeq) } ++
+        l2.zipWithIndex.map { case (c, i) => (2, i, c.toSeq) })
+        .toSeq.toDF("level", "cid", "cvec")
+    }
   }
 
   /** The (k1, k2) sizing policy for a corpus of `n` vectors at a target
@@ -999,6 +1094,8 @@ object Ivf {
     * [[graft.functions.NearestSubCell]] argmax (map-only, k2 candidates
     * per row), means are the same exact DECIMAL(30,15) partial sums as
     * [[train]], so every round is bit-identical under any shuffle order.
+    * L2 trains on ONE materialized L1 assignment, which the model keeps
+    * for faces run on the same `emb` (see [[TwoLevelModel]]).
     *
     * Deviations from [[train]], both deliberate: sub-cells that lose every
     * member KEEP their previous centroid (no compaction — cid1 = scid/k2
@@ -1013,23 +1110,11 @@ object Ivf {
     */
   def trainTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
                     iters: Int = 0): TwoLevelModel = {
-    val cents1 = train(emb, k1, iters)
-    if (cents1.isEmpty) return TwoLevelModel(cents1, Array.empty, k2)
-    trainTwoLevelOn(
-      graft.core.Materialize.once(assign(vecs(emb), cents1)),
-      cents1, k2, iters)
-  }
-
-  /** The L2 trainer over an ALREADY materialized L1 assignment — split
-    * out so the graph faces can reuse ONE assignment scan for training,
-    * sub-assignment, and the candidate join (the flat faces' one-scan
-    * convention; before the split the end-to-end path paid the L1 corpus
-    * argmax twice).
-    */
-  private def trainTwoLevelOn(a1: DataFrame, cents1: Array[Array[Double]],
-                              k2: Int, iters: Int): TwoLevelModel = {
     import graft.functions.{ScoredId, TopKByScore}
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    val cents1 = train(emb, k1, iters)
+    if (cents1.isEmpty) return TwoLevelModel(cents1, Array.empty, k2)()
+    val a1 = graft.core.Materialize.once(assign(vecs(emb), cents1))
     val k1c = cents1.length
     val dim = cents1.head.length
     // seed ids: the k2 lowest vec_ids per L1 cell — bounded heap keyed on
@@ -1079,160 +1164,9 @@ object Ivf {
     }
     TwoLevelModel(cents1,
       Array.tabulate(k1c * k2)(i =>
-        java.util.Arrays.copyOfRange(l2m, i * dim, (i + 1) * dim)), k2)
+        java.util.Arrays.copyOfRange(l2m, i * dim, (i + 1) * dim)), k2)(
+      Some((emb, a1)))
   }
-
-  /** Map-only two-level assignment: coarse [[assign]] (k1 candidates per
-    * row), then the fused sub-block argmax (k2 candidates) — emits both
-    * `cid` (L1) and the global `scid`. Empty model → empty assignment with
-    * the full schema (the [[assign]] empty contract).
-    */
-  def assignTwoLevel(e: DataFrame, m: TwoLevelModel): DataFrame =
-    if (m.isEmpty)
-      e.limit(0).withColumn("cid", lit(0).cast("int"))
-        .withColumn("scid", lit(0).cast("int"))
-    else assign(e, m.l1).withColumn("scid", graft.functions.nearest_sub_cell(
-      col("v"), col("cid"), m.l2.flatten, m.k1, m.k2, m.l1.head.length))
-
-  /** [[knnGraph]] on the two-level quantizer — same emit contract, but the
-    * cell structure scales: k1·k2 effective cells at k1 + k2 per-row
-    * assignment cost, so cell SIZE (the Σ|cell|² candidate-join bound,
-    * hence per-vector candidate count) stays constant as the corpus grows
-    * instead of √n. Cross-cell true neighbors remain the recall price,
-    * now tuned by (k1, k2).
-    */
-  /** The one-scan two-level cell structure shared by every end-to-end
-    * two-level face: train L1, materialize ONE L1 assignment, train L2
-    * on it, sub-assign the SAME frame (with-model serving re-assigns by
-    * necessity; end-to-end paths must not — the ×81 A/B inversion was
-    * exactly this pass paid twice). Returns the materialized
-    * (cid = global scid, vec_id, v) frame — the assignedCells shape —
-    * plus the model; None on an empty corpus.
-    */
-  private def twoLevelCells(emb: DataFrame, k1: Int, k2: Int)
-      : Option[(DataFrame, TwoLevelModel)] = {
-    val cents1 = train(emb, k1, iters = 0)
-    if (cents1.isEmpty) return None
-    val a1 = graft.core.Materialize.once(assign(vecs(emb), cents1))
-    val m = trainTwoLevelOn(a1, cents1, k2, iters = 0)
-    val cells = graft.core.Materialize.once(
-      a1.withColumn("scid", graft.functions.nearest_sub_cell(
-          col("v"), col("cid"), m.l2.flatten, m.k1, m.k2, cents1.head.length))
-        .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
-    Some((cells, m))
-  }
-
-  def knnGraphTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
-                       k: Int = 5): DataFrame =
-    twoLevelCells(emb, k1, k2) match {
-      case None =>
-        emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
-          lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
-      case Some((cells, _)) => knnGraphOnCells(cells, k)
-    }
-
-  /** [[semanticNearDup]] on the two-level quantizer — the Σ|cell|² pair
-    * bound is where constant cell size matters MOST: at flat √n cells
-    * the within-cell pair volume grows as n^1.5; at cells ∝ n it stays
-    * n·c. Emits the same (cid, id1, id2, cos) rows, cid = global scid.
-    */
-  def semanticNearDupTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
-                              threshold: Double = 0.4,
-                              maxCellGuard: Int = NearDupMaxCellGuard): DataFrame =
-    twoLevelCells(emb, k1, k2) match {
-      case None =>
-        emb.select(lit(0L).as("cid"), col("vec_id").as("id1"),
-          col("vec_id").as("id2"), lit(0d).as("cos")).limit(0)
-      case Some((cells, _)) =>
-        cellPairs(guardCells(cells, maxCellGuard,
-          "semanticNearDupTwoLevel"), threshold)
-    }
-
-  /** [[semanticDedup]] on the two-level quantizer: the same within-cell
-    * pairs → CC → diversity-keeper pipeline, with the keeper scored
-    * against its SUB-centroid (the member's actual region prototype).
-    * One materialized cell scan feeds pairs and keeper score, as in the
-    * flat face.
-    */
-  /** [[semanticDedupCollapsed]] on the two-level quantizer — the scale
-    * face a dup-flooded 100 TB corpus should run: pair volume at
-    * distinct-scale, family membership exact (see
-    * [[cellPairsCollapsed]]; the ×729 4×4 control's 58 % recall loss
-    * measured to zero under this feed).
-    */
-  def semanticDedupCollapsedTwoLevel(emb: DataFrame, k1: Int = 16,
-                                     k2: Int = 16, threshold: Double = 0.4,
-                                     maxCell: Int = 64): DataFrame =
-    twoLevelCells(emb, k1, k2) match {
-      case None =>
-        emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-          lit(true).as("keep")).limit(0)
-      case Some((cells, m)) =>
-        val sc = broadcast(
-          centroidsDf(emb.sparkSession, m.l2)
-            .select(col("cid").cast("long").as("cid"), col("cvec").as("svec")))
-        keeperOf(Dedup.clusters(cellPairsCollapsed(cells, threshold, maxCell)),
-          subCcos(cells, sc))
-    }
-
-  def semanticDedupTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
-                            threshold: Double = 0.4,
-                            maxCell: Int = 64): DataFrame =
-    twoLevelCells(emb, k1, k2) match {
-      case None =>
-        emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-          lit(true).as("keep")).limit(0)
-      case Some((cells, m)) =>
-        // keeper score via a broadcast (scid, svec) join, NOT a
-        // k1·k2-element centLit literal: the whole point of the two-level
-        // structure is LARGE effective cell counts (FAISS-scale 1e6),
-        // where a literal array blows up the expression tree / forces
-        // codegen fallback — the sub-centroid frame is model-scale
-        // (k1·k2 rows) and broadcasts for free
-        val sc = broadcast(
-          centroidsDf(emb.sparkSession, m.l2)
-            .select(col("cid").cast("long").as("cid"), col("cvec").as("svec")))
-        keeperOf(Dedup.clusters(cellPairsCapped(cells, threshold, maxCell)),
-          subCcos(cells, sc))
-    }
-
-  /** [[semanticNearDupTwoLevel]] against a PRE-TRAINED two-level model —
-    * the serving-side sibling (train once per corpus snapshot, screen
-    * many), and the batch comparator the streaming two-level screen
-    * (StreamingSemanticNearDup.runTwoLevel) is spec-pinned against.
-    */
-  def semanticNearDupWithTwoLevel(emb: DataFrame, m: TwoLevelModel,
-                                  threshold: Double = 0.4,
-                                  maxCellGuard: Int = NearDupMaxCellGuard): DataFrame = {
-    if (m.isEmpty)
-      return emb.select(lit(0L).as("cid"), col("vec_id").as("id1"),
-        col("vec_id").as("id2"), lit(0d).as("cos")).limit(0)
-    val cells = graft.core.Materialize.once(
-      assignTwoLevel(vecs(emb), m)
-        .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
-    cellPairs(guardCells(cells, maxCellGuard,
-      "semanticNearDupWithTwoLevel"), threshold)
-  }
-
-  /** [[knnGraphTwoLevel]] against a PRE-TRAINED two-level model. */
-  def knnGraphWithTwoLevel(emb: DataFrame, m: TwoLevelModel,
-                           k: Int = 5): DataFrame = {
-    if (m.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
-        lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
-    val cells = graft.core.Materialize.once(
-      assignTwoLevel(vecs(emb), m)
-        .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
-    knnGraphOnCells(cells, k)
-  }
-
-  /** [[knnComponents]] on the two-level quantizer — the mutual-kNN + CC
-    * kernel unchanged; only the cell structure (and so the candidate
-    * volume) scales differently.
-    */
-  def knnComponentsTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
-                            k: Int = 5): DataFrame =
-    componentsOfGraph(knnGraphTwoLevel(emb, k1, k2, k))
 
   /** The (scid, svec) sub-centroid table of a two-level model as a local
     * DataFrame — the broadcast-join form of every sub-centroid lookup
@@ -1243,78 +1177,6 @@ object Ivf {
   private def subCentroidsDf(spark: SparkSession, m: TwoLevelModel): DataFrame =
     centroidsDf(spark, m.l2)
       .select(col("cid").as("scid"), col("cvec").as("svec"))
-
-  /** IVF-PQ on the TWO-LEVEL coarse quantizer — the serving-family answer
-    * to the r12 ×243 finding (flat √n-cells is the wrong structure past
-    * ~×100; reference point: FAISS's IVF_HNSW/IMI coarse quantizers exist
-    * for exactly this regime). Residuals are taken against the member's
-    * SUB-centroid (v − l2[scid], the member's actual region prototype, so
-    * residual variance shrinks with cell size exactly as in the flat
-    * index), codebooks train on those residuals via the shared
-    * [[pqCodeResiduals]] kernel, and the emitted `cid` IS the global scid
-    * — so every encoded-frame consumer (search/rerank/filtered) joins
-    * candidates exactly as the flat index does. With k1 = 1 the model
-    * degenerates to the flat seed matrix (trainTwoLevel contract) and
-    * every face below equals its flat iters=0 sibling row-for-row
-    * (spec-pinned in TwoLevelIvfSpec).
-    */
-  private def ivfPqEncodedFrameTwoLevel(e: DataFrame, tl: TwoLevelModel,
-                                        m: Int, k: Int,
-                                        bookIters: Int = 1): DataFrame = {
-    if (tl.isEmpty)
-      return (0 until m).foldLeft(
-        e.limit(0).withColumn("cid", lit(0).cast("int"))
-          .withColumn("res", col("v"))) { (df, s) =>
-        df.withColumn(s"code$s", lit(0).cast("int"))
-      }.withColumn("recon", col("v"))
-    val dim = tl.l1.head.length
-    val sc = broadcast(subCentroidsDf(e.sparkSession, tl))
-    // ONE materialized route+residual scan, like the flat encode; the
-    // sub-centroid subtraction rides the broadcast (scid, svec) join.
-    // e's OTHER columns (the reconFrame passthrough contract) survive —
-    // drop only the routing/join internals.
-    val res = graft.core.Materialize.once(assignTwoLevel(e, tl)
-      .join(sc, "scid")
-      .drop("cid") // the L1 block id; the emitted cid is the global scid
-      .withColumn("cid", col("scid").cast("int"))
-      .withColumn("res", zip_with(col("v"), col("svec"), (a, b) => a - b))
-      .drop("scid", "svec"))
-    pqCodeResiduals(res, m, k, dim, bookIters)
-      .join(sc, col("cid") === col("scid"))
-      .withColumn("recon", zip_with(col("svec"), col("rescon"), (a, b) => a + b))
-      .drop("rescon", "svec", "scid")
-  }
-
-  /** [[ivfPqEncode]] on the two-level quantizer: (vec_id, cid = global
-    * scid, code0..m-1, recon_cos) in one fused route+encode pass.
-    */
-  def ivfPqEncodeTwoLevel(emb: DataFrame, k1: Int = 16, k2: Int = 16,
-                          m: Int = 4, k: Int = 16): DataFrame =
-    ivfPqEncodeWithTwoLevel(emb, trainTwoLevel(emb, k1, k2, iters = 0), m, k)
-
-  /** [[ivfPqEncodeTwoLevel]] against a PRE-TRAINED two-level model. */
-  def ivfPqEncodeWithTwoLevel(emb: DataFrame, tl: TwoLevelModel,
-                              m: Int = 4, k: Int = 16): DataFrame =
-    ivfPqEncodedFrameTwoLevel(vecs(emb), tl, m, k)
-      .select(Seq(col("vec_id"), col("cid").cast("long").as("cid")) ++
-        (0 until m).map(s => col(s"code$s").cast("long").as(s"code$s")) :+
-        round(graft.functions.cosine_sim(col("v"), col("recon")), 6).as("recon_cos"): _*)
-
-  /** The (vec_id, cid = scid, recon) compressed-corpus frame for two-level
-    * serving — [[ivfPqReconFrame]]'s sibling, same `passthrough` contract
-    * (metadata rides the map-only encode; joining it on afterwards costs
-    * a corpus-scale equi-join).
-    */
-  def ivfPqReconFrameTwoLevel(emb: DataFrame, tl: TwoLevelModel,
-                              m: Int = 4, k: Int = 16,
-                              passthrough: Seq[String] = Nil): DataFrame = {
-    val e = emb.where(col("embedding").isNotNull)
-      .select((Seq(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")) ++
-        passthrough.map(col)): _*)
-    ivfPqEncodedFrameTwoLevel(e, tl, m, k)
-      .select((Seq("vec_id", "cid", "recon") ++ passthrough).map(col): _*)
-  }
 
   /** Two-level query-side probe ranking: `nprobe1` nearest L1 blocks per
     * query (k1 candidates), then the best `nprobe` SUB-cells across those
@@ -1329,7 +1191,7 @@ object Ivf {
     * Emits (qid, qv, cid = scid); |q| × probes rows, dim-scale.
     */
   private def probeFrameTwoLevel(queries: DataFrame, tl: TwoLevelModel,
-                                 nprobe1: Int, nprobe: Int): DataFrame = {
+                                 nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     val wq1 = Window.partitionBy(col("qid")).orderBy(col("c1").desc, col("cid1"))
     val l1 = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1338,7 +1200,7 @@ object Ivf {
       .select(col("qid"), col("qv"), col("cid1"),
         round(graft.functions.cosine_sim(col("qv"), col("cvec")), 6).as("c1"))
       .withColumn("rn1", row_number().over(wq1))
-      .where(col("rn1") <= nprobe1)
+      .where(col("rn1") <= tl.nprobe1)
       .select(col("qid"), col("qv"), col("cid1"))
     val sc = broadcast(subCentroidsDf(spark, tl)
       .withColumn("cid1", floor(col("scid") / tl.k2).cast("int")))
@@ -1351,108 +1213,28 @@ object Ivf {
       .select(col("qid"), col("qv"), col("scid").as("cid"))
   }
 
-  /** IVF-PQ encode over an ALREADY-materialized two-level cell frame
-    * (cid = global scid, the [[twoLevelCells]] shape) — the one-scan
-    * discipline extended to the PQ encode: the self-contained
-    * search/rerank faces must NOT re-pay the corpus routing argmax the
-    * training pass already materialized (the r12 ×81-inversion class,
-    * measured again on the r13pq legs). The residual subtraction is a
-    * map-only broadcast join over the cut, so `res` needs no second cut:
-    * each codebook pass re-pays only a broadcast zip_with.
+  /** Persist a quantizer — the cross-job half of train-once/search-many:
+    * train in the indexing job, [[loadModel]] in every serving job (within
+    * one session just keep the model). A [[Flat]] model writes its k
+    * (cid, cvec) rows; a [[TwoLevelModel]] writes (level, cid, cvec) rows.
     */
-  private def ivfPqEncodedFrameOnCells(cells: DataFrame, tl: TwoLevelModel,
-                                       m: Int, k: Int,
-                                       bookIters: Int = 1): DataFrame = {
-    val dim = tl.l1.head.length
-    val sc = broadcast(subCentroidsDf(cells.sparkSession, tl)
-      .select(col("scid").cast("long").as("cid"), col("svec")))
-    val res = cells.join(sc, "cid")
-      .select(col("vec_id"), col("v"), col("cid"),
-        zip_with(col("v"), col("svec"), (a, b) => a - b).as("res"))
-    pqCodeResiduals(res, m, k, dim, bookIters)
-      .join(sc, "cid")
-      .withColumn("recon", zip_with(col("svec"), col("rescon"), (a, b) => a + b))
-      .drop("rescon", "svec")
-  }
+  def saveModel(spark: SparkSession, quantizer: Quantizer, path: String): Unit =
+    quantizer.modelRows(spark).write.mode("overwrite").parquet(path)
 
-  /** IVF-PQ top-k on the two-level index, self-contained (trains in
-    * place; the oracle replays everything): ONE materialized routing scan
-    * feeds L2 training, the residual encode, and the candidate join. For
-    * serving, train once and feed [[ivfPqSearchWithTwoLevel]] a persisted
-    * [[ivfPqReconFrameTwoLevel]] + [[loadTwoLevelModel]].
+  /** Load a model written by [[saveModel]]; the file's columns say which
+    * quantizer it is (a `level` column marks a two-level model). Centroids
+    * come back sorted by cid — the layout [[train]] / [[trainTwoLevel]]
+    * return; a two-level model's k2 is the level-2/level-1 row ratio.
     */
-  def ivfPqSearchTwoLevel(emb: DataFrame, queries: DataFrame, k: Int,
-                          k1: Int = 16, k2: Int = 16, m: Int = 4,
-                          kCode: Int = 16, nprobe1: Int = 2,
-                          nprobe: Int = 4): DataFrame =
-    twoLevelCells(emb, k1, k2) match {
-      case None =>
-        vecs(queries).select(col("vec_id").as("qid"),
-          col("vec_id").as("id2"), lit(0d).as("cos"), lit(0L).as("rn"))
-          .limit(0)
-      case Some((cells, tl)) =>
-        adcTopK(
-          ivfPqEncodedFrameOnCells(cells, tl, m, kCode)
-            .select(col("vec_id"), col("cid"), col("recon")),
-          probeFrameTwoLevel(queries, tl, nprobe1, nprobe), k)
-    }
-
-  /** [[ivfPqSearchTwoLevel]] against an ALREADY-ENCODED corpus frame. */
-  def ivfPqSearchWithTwoLevel(enc: DataFrame, tl: TwoLevelModel,
-                              queries: DataFrame, k: Int, nprobe1: Int = 2,
-                              nprobe: Int = 4): DataFrame =
-    adcTopK(enc, probeFrameTwoLevel(queries, tl, nprobe1, nprobe), k)
-
-  /** Two-level IVF-PQ search with the exact re-rank last mile — the
-    * [[ivfPqSearchRerank]] quality contract on the scalable coarse
-    * structure (ADC top-k′ from the compressed frame, bounded raw-vector
-    * gather, exact-cosine final top-k via the shared [[exactRerank]]).
-    */
-  def ivfPqSearchRerankTwoLevel(emb: DataFrame, queries: DataFrame, k: Int,
-                                k1: Int = 16, k2: Int = 16, m: Int = 4,
-                                kCode: Int = 16, nprobe1: Int = 2,
-                                nprobe: Int = 4, kFactor: Int = 4): DataFrame =
-    exactRerank(
-      ivfPqSearchTwoLevel(emb, queries, k * kFactor, k1, k2, m, kCode,
-        nprobe1, nprobe),
-      emb, queries, k)
-
-  /** [[ivfPqSearchRerankTwoLevel]] against the serving pair (compressed
-    * index + raw vector table).
-    */
-  def ivfPqRerankWithTwoLevel(enc: DataFrame, emb: DataFrame,
-                              tl: TwoLevelModel, queries: DataFrame, k: Int,
-                              nprobe1: Int = 2, nprobe: Int = 4,
-                              kFactor: Int = 4): DataFrame =
-    exactRerank(
-      ivfPqSearchWithTwoLevel(enc, tl, queries, k * kFactor, nprobe1, nprobe),
-      emb, queries, k)
-
-  /** Persist a two-level model: one parquet of (level, cid, cvec) rows —
-    * level 1 = the k1 router centroids, level 2 = the k1·k2 sub-centroid
-    * blocks keyed by global scid (the train-once/serve-nightly shape,
-    * mirroring [[saveModel]]).
-    */
-  def saveTwoLevelModel(spark: SparkSession, m: TwoLevelModel,
-                        path: String): Unit = {
-    import spark.implicits._
-    val rows =
-      m.l1.zipWithIndex.map { case (c, i) => (1, i, c.toSeq) } ++
-        m.l2.zipWithIndex.map { case (c, i) => (2, i, c.toSeq) }
-    rows.toSeq.toDF("level", "cid", "cvec")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a model written by [[saveTwoLevelModel]] (blocks sorted by id —
-    * the same layout [[trainTwoLevel]] returns; k2 recovered from the
-    * level-2/level-1 row ratio).
-    */
-  def loadTwoLevelModel(spark: SparkSession, path: String): TwoLevelModel = {
+  def loadModel(spark: SparkSession, path: String): Quantizer = {
     val df = spark.read.parquet(path)
-      .select(col("level").cast("int"), col("cid").cast("int"),
-        col("cvec").cast("array<double>"))
-    val l1 = localize(df.where(col("level") === 1).select(col("cid"), col("cvec")))
-    val l2 = localize(df.where(col("level") === 2).select(col("cid"), col("cvec")))
+    if (!df.columns.contains("level"))
+      return Flat(localize(df.select(col("cid").cast("int").as("cid"),
+        col("cvec").cast("array<double>").as("cvec"))))
+    val rows = df.select(col("level").cast("int"), col("cid").cast("int"),
+      col("cvec").cast("array<double>"))
+    val l1 = localize(rows.where(col("level") === 1).select(col("cid"), col("cvec")))
+    val l2 = localize(rows.where(col("level") === 2).select(col("cid"), col("cvec")))
     // a truncated/hand-edited model whose level-2 count is not an exact
     // multiple of k1 would otherwise load silently into a model whose
     // block arithmetic (scid = cid·k2 + local) routes garbage; dims must
@@ -1470,7 +1252,7 @@ object Ivf {
         s"(k1=${l1.length}, k2 would be 0)")
     require(l1.isEmpty || (l1 ++ l2).forall(_.length == l1.head.length),
       s"two-level model at $path is corrupt: mixed centroid dims")
-    TwoLevelModel(l1, l2, if (l1.isEmpty) 0 else l2.length / l1.length)
+    TwoLevelModel(l1, l2, if (l1.isEmpty) 0 else l2.length / l1.length)()
   }
 
   /** CENTROID-DISTANCE OUTLIER screen per quantizer cell — the embedding-
@@ -1503,7 +1285,7 @@ object Ivf {
         lit(0d).as("ccos"), lit(0d).as("zscore"),
         lit(false).as("is_outlier")).limit(0)
     val cl = centLit(cents)
-    val cells = assignedCells(vecs(emb), cents)
+    val cells = Flat(cents).cells(emb)
     val d6 = DecimalType(9, 6)
     val scored = cells.select(col("cid"), col("vec_id"),
       round(graft.functions.cosine_sim(col("v"),
@@ -1544,15 +1326,36 @@ object Ivf {
     * keeper window partitions by cluster_id, an O(m log m) sort per
     * cluster, not the O(m²) pair emission the cap retired.
     */
-  def semanticDedup(emb: DataFrame, numCells: Int = 16,
+  def semanticDedup(emb: DataFrame, quantizer: Quantizer,
                     threshold: Double = 0.4, maxCell: Int = 64): DataFrame =
-    semanticDedupWith(emb, train(emb, numCells, iters = 0), threshold, maxCell)
+    dedupOnCells(emb, quantizer,
+      cells => Dedup.clusters(cellPairsCapped(cells, threshold, maxCell)))
 
-  /** [[semanticDedup]] against a PRE-TRAINED quantizer. */
-  /** The ONE keeper tail all five dedup faces share (comp + per-doc
+  /** [[semanticDedup]] on the default quantizer: 16 flat cells seeded
+    * from the 16 lowest vec_ids (`train(emb, 16, iters = 0)`) — the
+    * curation pipeline's call.
+    */
+  def semanticDedup(emb: DataFrame): DataFrame =
+    semanticDedup(emb, Flat(train(emb, 16, iters = 0)))
+
+  /** The dedup faces' shared shape: ONE materialized cell scan feeds the
+    * component labels (`clusterCells`) and the keeper's centroid cosine.
+    * An empty model clusters nothing: empty frame, full output schema.
+    */
+  private def dedupOnCells(emb: DataFrame, quantizer: Quantizer,
+                           clusterCells: DataFrame => DataFrame): DataFrame =
+    if (quantizer.isEmpty)
+      emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
+        lit(true).as("keep")).limit(0)
+    else {
+      val cells = quantizer.cells(emb)
+      keeperOf(clusterCells(cells), quantizer.keeperCos(cells))
+    }
+
+  /** The ONE keeper tail all dedup faces share (comp + per-doc
     * centroid-cosine scores → keep = first by (ccos asc, doc_id asc) per
     * cluster): factored so keeper semantics can never silently diverge
-    * between the flat / stable / two-level / collapsed faces.
+    * between the plain / stable / collapsed faces or the quantizers.
     */
   private def keeperOf(comp: DataFrame, scoredDocs: DataFrame): DataFrame = {
     val scored = comp.join(scoredDocs, "doc_id")
@@ -1560,21 +1363,6 @@ object Ivf {
     scored.withColumn("keep", (row_number().over(w) === 1).cast("boolean"))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("keep"))
   }
-
-  /** Flat-face keeper scores: rounded cosine vs the member's L1 centroid
-    * through the literal-array lookup (no join). */
-  private def flatCcos(cells: DataFrame, cl: Column): DataFrame =
-    cells.select(col("vec_id").as("doc_id"),
-      round(graft.functions.cosine_sim(col("v"),
-        element_at(cl, (col("cid") + 1).cast("int"))), 6).as("ccos"))
-
-  /** Two-level keeper scores vs the broadcast (scid → sub-centroid)
-    * frame — model-scale, broadcasts for free (see semanticDedupTwoLevel's
-    * rationale for frame-over-literal at large k1·k2). */
-  private def subCcos(cells: DataFrame, sc: DataFrame): DataFrame =
-    cells.join(sc, "cid")
-      .select(col("vec_id").as("doc_id"),
-        round(graft.functions.cosine_sim(col("v"), col("svec")), 6).as("ccos"))
 
   /** EXACT-DUPLICATE COLLAPSE for the semantic-dedup CC feed — the
     * [[knnGraphCollapsedOnCells]] idea applied to the dedup family,
@@ -1623,37 +1411,16 @@ object Ivf {
     repPairs.unionByName(attach)
   }
 
-  /** [[semanticDedup]] through the collapsed feed — flat face. */
-  def semanticDedupCollapsed(emb: DataFrame, numCells: Int = 16,
+  /** [[semanticDedup]] through the collapsed feed ([[cellPairsCollapsed]])
+    * — the face a dup-flooded corpus should run: pair volume at
+    * distinct-scale, family membership exact (the ×729 4×4 two-level
+    * control's 58 % recall loss measured to zero under this feed).
+    */
+  def semanticDedupCollapsed(emb: DataFrame, quantizer: Quantizer,
                              threshold: Double = 0.4,
                              maxCell: Int = 64): DataFrame =
-    semanticDedupCollapsedWith(emb, train(emb, numCells, iters = 0),
-      threshold, maxCell)
-
-  /** [[semanticDedupCollapsed]] against a PRE-TRAINED quantizer. */
-  def semanticDedupCollapsedWith(emb: DataFrame, cents: Array[Array[Double]],
-                                 threshold: Double = 0.4,
-                                 maxCell: Int = 64): DataFrame = {
-    if (cents.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-        lit(true).as("keep")).limit(0)
-    val cells = assignedCells(vecs(emb), cents)
-    keeperOf(Dedup.clusters(cellPairsCollapsed(cells, threshold, maxCell)),
-      flatCcos(cells, centLit(cents)))
-  }
-
-  def semanticDedupWith(emb: DataFrame, cents: Array[Array[Double]],
-                        threshold: Double = 0.4, maxCell: Int = 64): DataFrame = {
-    // empty model → nothing clusters: empty frame, full output schema
-    if (cents.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-        lit(true).as("keep")).limit(0)
-    // centroid-cosine keeper score over the SAME materialized cells frame
-    // the pairs came from
-    val cells = assignedCells(vecs(emb), cents)
-    keeperOf(Dedup.clusters(cellPairsCapped(cells, threshold, maxCell)),
-      flatCcos(cells, centLit(cents)))
-  }
+    dedupOnCells(emb, quantizer,
+      cells => Dedup.clusters(cellPairsCollapsed(cells, threshold, maxCell)))
 
   /** [[semanticDedup]] with STABLE cluster ids across incremental runs
     * (Dedup.clustersStable's award semantics — growth never renames,
@@ -1662,26 +1429,12 @@ object Ivf {
     * recomputes over today's members, only the LABEL is pinned.
     */
   def semanticDedupStable(emb: DataFrame, prior: DataFrame,
-                          numCells: Int = 16,
-                          threshold: Double = 0.4, maxCell: Int = 64): DataFrame =
-    semanticDedupStableWith(emb, prior, train(emb, numCells, iters = 0),
-      threshold, maxCell)
-
-  /** [[semanticDedupStable]] against a PRE-TRAINED quantizer. */
-  def semanticDedupStableWith(emb: DataFrame, prior: DataFrame,
-                              cents: Array[Array[Double]],
-                              threshold: Double = 0.4,
-                              maxCell: Int = 64): DataFrame = {
-    if (cents.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-        lit(true).as("keep")).limit(0)
-    val cells = assignedCells(vecs(emb), cents)
-    keeperOf(
+                          quantizer: Quantizer, threshold: Double = 0.4,
+                          maxCell: Int = 64): DataFrame =
+    dedupOnCells(emb, quantizer, cells =>
       Dedup.clustersStable(
         cellPairsCapped(cells, threshold, maxCell),
-        prior.select(col("vec_id").as("doc_id"), col("cluster_id"))),
-      flatCcos(cells, centLit(cents)))
-  }
+        prior.select(col("vec_id").as("doc_id"), col("cluster_id"))))
 
   /** Incremental semantic screening — the embedding-side sibling of
     * Dedup.incrementalDedup (the nightly-crawl pass): score each vector
@@ -1724,7 +1477,7 @@ object Ivf {
     */
   private[graft] def screenSet(corpus: DataFrame, cents: Array[Array[Double]],
                                maxCell: Int): DataFrame =
-    screenOnCells(assignedCells(vecs(corpus), cents), maxCell)
+    screenOnCells(Flat(cents).cells(corpus), maxCell)
 
   /** The per-cell ≤ maxCell hash-sampled representative set over an
     * ALREADY-ASSIGNED (cid, vec_id, v) frame — the [[screenSet]] kernel,
@@ -1896,28 +1649,19 @@ object Ivf {
                              nprobe: Int = 4): DataFrame = {
     val survivors = vecs(emb.where(pred)) // pred pushed to the corpus scan
     val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    filteredTopK(assign(survivors, cents), q, cents, k, nprobe)
+    filteredTopK(assign(survivors, cents), q,
+      probeFrame(q.select(col("qid").as("vec_id"), col("qv").as("embedding")),
+        cents, nprobe), k)
   }
 
   /** Shared probe+rescue kernel over an assigned survivor frame
-    * (vec_id, v|recon as `scoreCol`, cid). Guarantees k rows per query
-    * whenever ≥ k survivors exist.
+    * (vec_id, v|recon as `scoreCol`, cid) and a (qid, qv, cid) probe
+    * frame — the raw-vector and IVF-PQ filtered searches share it.
+    * Guarantees k rows per query whenever ≥ k survivors exist.
     */
   private def filteredTopK(cells: DataFrame, q: DataFrame,
-                           cents: Array[Array[Double]], k: Int,
-                           nprobe: Int, scoreCol: String = "v"): DataFrame =
-    filteredTopKOnProbes(cells, q,
-      probeFrame(q.select(col("qid").as("vec_id"),
-        col("qv").as("embedding")), cents, nprobe), k, scoreCol)
-
-  /** The probe+rescue kernel with the PROBE FRAME as a parameter — the
-    * flat path builds it from the centroid matrix, the two-level path
-    * from the hierarchical (L1 → sub-cell) ranking; the k-guarantee and
-    * the rescue contract are identical.
-    */
-  private def filteredTopKOnProbes(cells: DataFrame, q: DataFrame,
-                                   probes: DataFrame, k: Int,
-                                   scoreCol: String = "v"): DataFrame = {
+                           probes: DataFrame, k: Int,
+                           scoreCol: String = "v"): DataFrame = {
     val cand = graft.core.Materialize.once(
       cells.join(broadcast(probes), Seq("cid"))
         .where(col("vec_id") =!= col("qid"))
@@ -1939,55 +1683,35 @@ object Ivf {
         .unionByName(rescue), k)
   }
 
-  /** FILTERED IVF-PQ top-k against an ALREADY-ENCODED corpus frame — the
+  /** FILTERED IVF-PQ top-k against an encoded corpus frame — the
     * compressed-index sibling of [[searchTopKFilteredWith]]. `pred` is a
-    * Column over `enc`'s columns (vec_id, cid, recon, plus anything the
-    * caller joined on — metadata filters compose by joining the metadata
-    * table onto `enc` before the call). Probe scan and rescue scan both
-    * score ADC (reconstructed) cosines; the k-guarantee is in ADC terms.
+    * Column over `enc`'s columns (vec_id, cid, recon, plus the
+    * `passthrough` metadata [[ivfPqReconFrame]] carried through the
+    * map-only encode — never a corpus-scale metadata join). The
+    * quantizer's probe supplies the candidate cells, and underfilled
+    * queries take the exact-ADC rescue over ALL survivors: the same
+    * probe+rescue kernel ([[filteredTopK]]) and k-guarantee as
+    * the raw-vector filtered search, in ADC terms.
     */
-  def ivfPqSearchFilteredWith(enc: DataFrame, cents: Array[Array[Double]],
-                              queries: DataFrame, k: Int, pred: Column,
-                              nprobe: Int = 4): DataFrame = {
+  def ivfPqSearchFiltered(enc: DataFrame, quantizer: Quantizer,
+                          queries: DataFrame, k: Int, pred: Column,
+                          nprobe: Int = 4): DataFrame = {
     val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    filteredTopK(enc.where(pred), q, cents, k, nprobe, scoreCol = "recon")
-  }
-
-  /** FILTERED two-level IVF-PQ top-k — the metadata-predicate serving
-    * path on the scalable coarse structure: `pred` filters the ENCODED
-    * two-level frame (metadata carried through the map-only encode via
-    * `ivfPqReconFrameTwoLevel(passthrough = …)` — never a corpus-scale
-    * metadata join), the hierarchical probe supplies the candidate cells,
-    * and underfilled queries take the exact-ADC rescue over ALL survivors
-    * — the same probe+rescue kernel ([[filteredTopKOnProbes]]) and the
-    * same k-guarantee as the flat [[ivfPqSearchFilteredWith]].
-    */
-  def ivfPqSearchFilteredWithTwoLevel(enc: DataFrame, tl: TwoLevelModel,
-                                      queries: DataFrame, k: Int,
-                                      pred: Column, nprobe1: Int = 2,
-                                      nprobe: Int = 4): DataFrame = {
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    filteredTopKOnProbes(enc.where(pred), q,
-      probeFrameTwoLevel(queries, tl, nprobe1, nprobe), k, scoreCol = "recon")
+    filteredTopK(enc.where(pred), q, quantizer.probes(queries, nprobe), k,
+      scoreCol = "recon")
   }
 
   /** FILTERED IVF-PQ search with the exact re-rank last mile: the
     * filtered ADC scan surfaces top-k′ (k′ = kFactor·k) survivors, then
     * only those |q|·k′ rows gather raw vectors for the exact-cosine
-    * re-rank ([[ivfPqRerankWith]]'s bounded-gather shape — the gather ids
-    * already passed the filter, so no second predicate evaluation).
+    * re-rank ([[ivfPqSearchRerank]]'s bounded-gather shape — the gather
+    * ids already passed the filter, so no second predicate evaluation).
     */
-  def ivfPqRerankFilteredWith(enc: DataFrame, emb: DataFrame,
-                              cents: Array[Array[Double]], queries: DataFrame,
-                              k: Int, pred: Column, nprobe: Int = 4,
-                              kFactor: Int = 4): DataFrame = {
-    val adc = ivfPqSearchFilteredWith(enc, cents, queries, k * kFactor, pred, nprobe)
-      .select(col("qid"), col("id2"))
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    Similarity.topK(vecs(emb).select(col("vec_id").as("id2"), col("v"))
-      .join(broadcast(adc), Seq("id2"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("v")), 6).as("cos")), k)
-  }
+  def ivfPqSearchRerankFiltered(enc: DataFrame, emb: DataFrame,
+                                quantizer: Quantizer, queries: DataFrame,
+                                k: Int, pred: Column, nprobe: Int = 4,
+                                kFactor: Int = 4): DataFrame =
+    exactRerank(
+      ivfPqSearchFiltered(enc, quantizer, queries, k * kFactor, pred, nprobe),
+      emb, queries, k)
 }

@@ -12,14 +12,20 @@ import graft.SparkEntry._
 
 /** Embedding operators: ANN, PQ, semantic dedup, kNN graph, classifier, fusion (SURVEY §2.D).
   *
+  * The cell-routed `Ivf` faces take their quantizer from the build: the
+  * flat queries run under `onFlat` (16 seed cells), the `*_2level`
+  * queries under `onTwoLevel` (TL_K × TL_K, trained on the same frame,
+  * so the face reuses the training's L1 assignment) or an explicit
+  * `trainTwoLevel` model for the IVF-PQ searches.
+  *
   * Each `Query` holds a Spark build next to its DuckDB oracle;
   * `SparkEntry.queries` indexes the eight registries by name. Shared
   * oracle fragments stay in SparkEntry (imported above).
   */
 private[graft] object VectorRegistry {
 
-  // The ONE 4×4 configuration constant shared by the four two-level
-  // Scala faces AND the SQL replay below — interpolated into the CTE
+  // The ONE 4×4 configuration constant shared by the two-level
+  // registry builds AND the SQL replay below — interpolated into the CTE
   // string so changing either side alone is impossible (the oracle and
   // the query cannot silently diverge onto different cell structures).
   private val TL_K = 4
@@ -30,6 +36,18 @@ private[graft] object VectorRegistry {
   // gate genuinely exercises the representative logic, not just the
   // small-cell identity case.
   private val SD_MAXCELL = 64
+
+  /** Run a cell-routed `Ivf` face on `e` under the 16-cell flat seed
+    * quantizer (`train(e, 16, iters = 0)`) the flat oracles replay. */
+  private def onFlat(e: DataFrame)(
+      face: (DataFrame, graft.ops.Ivf.Quantizer) => DataFrame): DataFrame =
+    face(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, iters = 0)))
+
+  /** The same under the TL_K × TL_K two-level quantizer trained on `e`:
+    * the face sub-assigns the training's own L1 cut (one routing scan). */
+  private def onTwoLevel(e: DataFrame)(
+      face: (DataFrame, graft.ops.Ivf.Quantizer) => DataFrame): DataFrame =
+    face(e, graft.ops.Ivf.trainTwoLevel(e, TL_K, TL_K))
 
   /** The cellPairsCapped replay (Ivf.scala): per-cell ≤ SD_MAXCELL
     * representatives in portable (md5-prefix, vec_id) order; rep×rep
@@ -91,11 +109,12 @@ private[graft] object VectorRegistry {
     TwoLevelBaseSql + ", " +
       graft.SparkEntry.knnCandSql("sassigned", "scid")
 
-  /** DuckDB replay of Ivf.ivfPqSearchTwoLevel: the two-level base CTEs
-    * route residuals to SUB-centroids, the shared residual-PQ chain
-    * (SparkEntry.pqResidualCtes) trains/codes against them, and the probe
-    * is hierarchical — nprobe1 L1 blocks, then the best `nprobe` sub-cells
-    * across those blocks' PADDED slots (the trainTwoLevel matrix).
+  /** DuckDB replay of Ivf.ivfPqSearch on the two-level quantizer: the
+    * base CTEs route residuals to SUB-centroids, the shared residual-PQ
+    * chain (SparkEntry.pqResidualCtes) trains/codes against them, and the
+    * probe is hierarchical — the model's nprobe1 L1 blocks, then the best
+    * `nprobe` sub-cells across those blocks' PADDED slots (the
+    * trainTwoLevel matrix).
     */
   private def ivfPqTwoLevelCtes(m: Int, k: Int, dim: Int,
                                 nprobe1: Int, nprobe: Int): String =
@@ -130,7 +149,7 @@ private[graft] object VectorRegistry {
       "SELECT qid, id2, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id2) AS rn " +
       s"FROM cand) WHERE rn <= $topK"
 
-  /** DuckDB replay of Ivf.ivfPqSearchFilteredWithTwoLevel: the two-level
+  /** DuckDB replay of Ivf.ivfPqSearchFiltered on the two-level quantizer: the
     * encode chain, index rows filtered by the metadata join, hierarchical
     * probes + rescue both scoring ADC reconstructions — the flat
     * ivfPqFilteredOracleSql shape on the padded two-level CTEs.
@@ -302,7 +321,7 @@ private[graft] object VectorRegistry {
     Query("semantic_neardup", (s, dir) =>
       // SemDeDup pass: exact cosine pairs WITHIN quantizer cells — the
       // cell join bounds pair generation at sum(|cell|^2), not n^2
-      graft.ops.Ivf.semanticNearDup(Tables.table(s, dir, "embeddings")),
+      onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.semanticNearDup(_, _)),
       // semanticNearDup replay: the ann_ivf seed/assignment CTEs + a
       // within-cell triangular self-join at the rounded-cosine threshold
       "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
@@ -321,8 +340,8 @@ private[graft] object VectorRegistry {
       // hash-sampled representatives per cell — the oversized-cell guard
       // against O(m^2) boilerplate mega-clusters) -> connected components
       // -> keeper = farthest-from-centroid member (the curation decision)
-      graft.ops.Ivf.semanticDedup(Tables.table(s, dir, "embeddings"),
-        maxCell = SD_MAXCELL),
+      onFlat(Tables.table(s, dir, "embeddings"))(
+        graft.ops.Ivf.semanticDedup(_, _, maxCell = SD_MAXCELL)),
       // semanticDedup replay: the semantic_neardup assignment CTEs + the
       // CAPPED pair feed (each cell's <= SD_MAXCELL md5-hash-order
       // representatives cross-pair; non-representatives attach to their
@@ -350,7 +369,7 @@ private[graft] object VectorRegistry {
     Query("knn_graph", (s, dir) =>
       // approximate k-NN graph: every vector's top-5 within its quantizer
       // cell — candidates cell-bounded, selection via the bounded heap
-      graft.ops.Ivf.knnGraph(Tables.table(s, dir, "embeddings")),
+      onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _)),
       // knnGraph replay: the semantic_neardup assignment CTEs + the CAPPED
       // within-cell candidate join (knnCandSql — ≤ KnnMaxCand hash-order
       // candidates per cell) ranked per vector (cos desc, neighbor asc) ≤ k
@@ -369,7 +388,7 @@ private[graft] object VectorRegistry {
     Query("knn_components", (s, dir) =>
       // mutual-kNN clustering: edges kept only when BOTH endpoints rank
       // each other top-k (hub pruning), then pointer-jumping CC
-      graft.ops.Ivf.knnComponents(Tables.table(s, dir, "embeddings")),
+      onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnComponents(_, _)),
       // knnComponents replay: the knn_graph CTEs + the mutual filter + the
       // recursive min-label CC mold
       "WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
@@ -397,8 +416,7 @@ private[graft] object VectorRegistry {
       // knn_graph on the TWO-LEVEL quantizer (4×4 cells): per-row routing
       // costs k1+k2 flops, so effective cells can grow ∝ corpus at
       // constant cell size — the 100 TB configuration (ScaleProbe r12b)
-      graft.ops.Ivf.knnGraphTwoLevel(Tables.table(s, dir, "embeddings"),
-        k1 = TL_K, k2 = TL_K),
+      onTwoLevel(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _)),
       "WITH " + TwoLevelAssignSql +
         "r AS (SELECT vec_id, neighbor_id, cos, CAST(row_number() OVER (" +
         "PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rn FROM p) " +
@@ -406,8 +424,7 @@ private[graft] object VectorRegistry {
     Query("knn_components_2level", (s, dir) =>
       // mutual-kNN components over the two-level cell structure — the
       // kernel unchanged (shared componentsOfGraph), only the cells scale
-      graft.ops.Ivf.knnComponentsTwoLevel(Tables.table(s, dir, "embeddings"),
-        k1 = TL_K, k2 = TL_K),
+      onTwoLevel(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnComponents(_, _)),
       "WITH RECURSIVE " + TwoLevelAssignSql +
         "r AS (SELECT vec_id, neighbor_id FROM (" +
         "SELECT vec_id, neighbor_id, row_number() OVER (" +
@@ -424,8 +441,7 @@ private[graft] object VectorRegistry {
     Query("semantic_neardup_2level", (s, dir) =>
       // SemDeDup pairs over two-level cells: the Σ|cell|² bound at
       // CONSTANT cell size — n·c total pairs instead of flat √n's n^1.5
-      graft.ops.Ivf.semanticNearDupTwoLevel(Tables.table(s, dir, "embeddings"),
-        k1 = TL_K, k2 = TL_K),
+      onTwoLevel(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.semanticNearDup(_, _)),
       "WITH " + TwoLevelAssignSql +
         "pairs AS (SELECT CAST(a.scid AS BIGINT) AS cid, a.vec_id AS id1, " +
         "b.vec_id AS id2, round(list_cosine_similarity(a.v, b.v), 6) AS cos " +
@@ -436,8 +452,8 @@ private[graft] object VectorRegistry {
       // SemDeDup end-to-end over two-level cells (capped pair feed, same
       // SD_MAXCELL guard); keeper scored against its SUB-centroid (the
       // member's actual region prototype)
-      graft.ops.Ivf.semanticDedupTwoLevel(Tables.table(s, dir, "embeddings"),
-        k1 = TL_K, k2 = TL_K, maxCell = SD_MAXCELL),
+      onTwoLevel(Tables.table(s, dir, "embeddings"))(
+        graft.ops.Ivf.semanticDedup(_, _, maxCell = SD_MAXCELL)),
       "WITH RECURSIVE " + TwoLevelAssignSql +
         cappedPairsSql("sassigned", "scid") +
         "edges AS (SELECT id1 AS a, id2 AS b FROM pairs UNION SELECT id2, id1 FROM pairs), " +
@@ -455,7 +471,7 @@ private[graft] object VectorRegistry {
       // centrality for density-weighted curation; every intermediate an
       // exact BIGINT so any engine/partitioning replays bit-identically
       graft.ops.Graph.pageRank(
-        graft.ops.Ivf.knnGraph(Tables.table(s, dir, "embeddings"))
+        onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _))
           .select(col("vec_id").as("src"), col("neighbor_id").as("dst")))
         .select(col("v").as("vec_id"), col("pr")),
       KnnGraphSql +
@@ -481,7 +497,7 @@ private[graft] object VectorRegistry {
       // min-label tie-break, fixed rounds, integer argmax — communities
       // without a target count (CC over-merges through any bridge)
       graft.ops.Graph.labelPropagation(
-        graft.ops.Ivf.knnGraph(Tables.table(s, dir, "embeddings"))
+        onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _))
           .select(col("vec_id").as("src"), col("neighbor_id").as("dst")))
         .select(col("v").as("vec_id"), col("label")),
       // LPA replay: same kNN graph CTEs, symmetrized distinct edges, then
@@ -500,7 +516,7 @@ private[graft] object VectorRegistry {
       // the kNN graph: wedges only at each edge's lower-(deg,id) source,
       // closure a semi equi-join — hub fan-out bounded, no pair blowup
       graft.ops.Graph.triangles(
-        graft.ops.Ivf.knnGraph(Tables.table(s, dir, "embeddings"))
+        onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _))
           .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))),
       // triangle replay: same canonical undirected set, same (deg, id)
       // orientation, wedges at the oriented source closed by an equi-join
@@ -526,7 +542,7 @@ private[graft] object VectorRegistry {
       // endpoint-degree co-moments via the symmetrization algebra (both
       // orderings folded per edge row), one closing aggregation
       graft.ops.Graph.assortativity(
-        graft.ops.Ivf.knnGraph(Tables.table(s, dir, "embeddings"))
+        onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.knnGraph(_, _))
           .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))),
       // pageRank replay: the knn_graph CTEs as the edge list, then THREE
       // unrolled integer-scaled iterations — every intermediate BIGINT
@@ -726,14 +742,19 @@ private[graft] object VectorRegistry {
     Query("ivfpq_encode", (s, dir) =>
       // IVF-PQ residual index build: coarse cell id + PQ codes of the
       // residual (v - centroid[cid]) in one fused map-only pass
-      graft.ops.Ivf.ivfPqEncode(Tables.table(s, dir, "embeddings")),
+      {
+        val e = Tables.table(s, dir, "embeddings")
+        graft.ops.Ivf.ivfPqEncode(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, 1)))
+      },
       ivfPqEncodeOracleSql(m = 4, k = 16, dim = 64,
         numCells = 16, iters = 1)),
     Query("ann_ivfpq", (s, dir) => {
       // IVF-PQ serving scan: probe nprobe cells, ADC over the residual
       // reconstruction — cell pruning x compressed scoring in one index
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.ivfPqSearch(e, e.where(col("vec_id") < 10), 5)
+      val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, 1))
+      graft.ops.Ivf.ivfPqSearch(graft.ops.Ivf.ivfPqReconFrame(e, cents), cents,
+        e.where(col("vec_id") < 10), 5)
     },
       ivfPqSearchOracleSql(m = 4, k = 16, dim = 64,
         numCells = 16, iters = 1, nprobe = 4, topK = 5)),
@@ -741,7 +762,9 @@ private[graft] object VectorRegistry {
       // ADC top-k' (k' = 4k) -> bounded raw-vector gather -> exact-cosine
       // re-rank keeping top-k: the standard compressed-serving last mile
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.ivfPqSearchRerank(e, e.where(col("vec_id") < 10), 5)
+      val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, 1))
+      graft.ops.Ivf.ivfPqSearchRerank(graft.ops.Ivf.ivfPqReconFrame(e, cents), e,
+        cents, e.where(col("vec_id") < 10), 5)
     },
       ivfPqRerankOracleSql(m = 4, k = 16, dim = 64,
         numCells = 16, iters = 1, nprobe = 4, topK = 5, kFactor = 4)),
@@ -752,8 +775,9 @@ private[graft] object VectorRegistry {
       // member's SUB-centroid, hierarchical probe (2 L1 blocks → best 4
       // sub-cells), ADC over the residual reconstruction
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.ivfPqSearchTwoLevel(e, e.where(col("vec_id") < 10), 5,
-        k1 = TL_K, k2 = TL_K, nprobe1 = 2, nprobe = 4)
+      val tl = graft.ops.Ivf.trainTwoLevel(e, TL_K, TL_K)
+      graft.ops.Ivf.ivfPqSearch(graft.ops.Ivf.ivfPqReconFrame(e, tl), tl,
+        e.where(col("vec_id") < 10), 5, nprobe = 4)
     },
       ivfPqTwoLevelOracleSql(m = 4, k = 16, dim = 64,
         nprobe1 = 2, nprobe = 4, topK = 5)),
@@ -761,8 +785,9 @@ private[graft] object VectorRegistry {
       // the exact re-rank last mile on the two-level index: ADC top-k'
       // (4k) -> bounded raw-vector gather -> exact-cosine final top-k
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.ivfPqSearchRerankTwoLevel(e, e.where(col("vec_id") < 10),
-        5, k1 = TL_K, k2 = TL_K, nprobe1 = 2, nprobe = 4)
+      val tl = graft.ops.Ivf.trainTwoLevel(e, TL_K, TL_K)
+      graft.ops.Ivf.ivfPqSearchRerank(graft.ops.Ivf.ivfPqReconFrame(e, tl), e, tl,
+        e.where(col("vec_id") < 10), 5, nprobe = 4)
     },
       ivfPqTwoLevelRerankOracleSql(m = 4, k = 16,
         dim = 64, nprobe1 = 2, nprobe = 4, topK = 5, kFactor = 4)),
@@ -773,11 +798,10 @@ private[graft] object VectorRegistry {
       // exact-ADC rescue guarantee k rows wherever >= k survivors exist
       val e = Tables.table(s, dir, "embeddings")
       val tl = graft.ops.Ivf.trainTwoLevel(e, TL_K, TL_K, iters = 0)
-      val enc = graft.ops.Ivf.ivfPqReconFrameTwoLevel(e, tl,
+      val enc = graft.ops.Ivf.ivfPqReconFrame(e, tl,
         passthrough = Seq("label"))
-      graft.ops.Ivf.ivfPqSearchFilteredWithTwoLevel(enc, tl,
-        e.where(col("vec_id") < 10), 10, col("label") === 7,
-        nprobe1 = 2, nprobe = 4)
+      graft.ops.Ivf.ivfPqSearchFiltered(enc, tl,
+        e.where(col("vec_id") < 10), 10, col("label") === 7, nprobe = 4)
     },
       ivfPqTwoLevelFilteredOracleSql(m = 4, k = 16,
         dim = 64, nprobe1 = 2, nprobe = 4, topK = 10, label = 7)),
@@ -802,10 +826,10 @@ private[graft] object VectorRegistry {
       // equi-join for rows the encode scan already had in hand), probe +
       // rescue both score ADC reconstructions
       val e = Tables.table(s, dir, "embeddings")
-      val cents = graft.ops.Ivf.train(e, 16, 1)
+      val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, 1))
       val enc = graft.ops.Ivf.ivfPqReconFrame(e, cents,
         passthrough = Seq("label"))
-      graft.ops.Ivf.ivfPqSearchFilteredWith(enc, cents,
+      graft.ops.Ivf.ivfPqSearchFiltered(enc, cents,
         e.where(col("vec_id") < 10), 10, col("label") === 7)
     },
       ivfPqFilteredOracleSql(m = 4, k = 16, dim = 64,

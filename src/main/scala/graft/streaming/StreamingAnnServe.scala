@@ -120,32 +120,45 @@ object StreamingAnnServe {
       .start()
 
   /** Serve IVF-PQ top-k per arriving query against a pre-encoded
-    * (vec_id, cid, recon) frame from `Ivf.ivfPqReconFrame` + the coarse
-    * centroid model — the full memory-bound serving path: map-only probe
-    * ranking (the [[probeCids]] literal-matrix contract), stateless
-    * stream-static join on the PROBED cell ids only, ADC scoring on the
-    * residual reconstruction, bounded top-k close per micro-batch. Same
-    * zero-state/no-watermark shape as [[serve]], same
-    * distinct-qid-per-stream assumption; stream results equal the batch
-    * `Ivf.ivfPqSearchWith` row-for-row (spec-pinned).
+    * (vec_id, cid, recon) frame from `Ivf.ivfPqReconFrame` plus the
+    * quantizer it was encoded under. Stream results equal the batch
+    * `Ivf.ivfPqSearch` row-for-row (spec-pinned, both quantizers); same
+    * zero-state/no-watermark shape and distinct-qid-per-stream
+    * assumption as [[serve]].
+    *  - [[Ivf.Flat]]: the full memory-bound serving path — map-only probe
+    *    ranking (the [[probeCids]] literal-matrix contract), stateless
+    *    stream-static join on the PROBED cell ids only, ADC scoring on
+    *    the residual reconstruction, bounded top-k close per micro-batch.
+    *  - [[Ivf.TwoLevelModel]]: its hierarchical probe (nprobe1 L1 blocks
+    *    → best nprobe sub-cells) ranks with windows over broadcast
+    *    model frames, which a stream cannot run, so each micro-batch
+    *    replays the batch kernel.
     */
   def serveIvfPq(queries: DataFrame, enc: DataFrame,
-                 cents: Array[Array[Double]], k: Int, nprobe: Int = 4)
+                 quantizer: Ivf.Quantizer, k: Int, nprobe: Int = 4)
                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queries
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("qv"))
-      .withColumn("cid", explode(probeCids(col("qv"), cents, nprobe)))
-      .join(enc, Seq("cid"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("recon")), 6).as("cos"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Similarity.topK(batch, k), batchId)
-      }
-      .start()
+    (quantizer match {
+      case Ivf.Flat(cents) =>
+        queries
+          .select(col("vec_id").as("qid"),
+            col("embedding").cast("array<double>").as("qv"))
+          .withColumn("cid", explode(probeCids(col("qv"), cents, nprobe)))
+          .join(enc, Seq("cid"))
+          .where(col("vec_id") =!= col("qid"))
+          .select(col("qid"), col("vec_id").as("id2"),
+            round(graft.functions.cosine_sim(col("qv"), col("recon")), 6).as("cos"))
+          .writeStream
+          .outputMode("append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            sink(Similarity.topK(batch, k), batchId)
+          }
+      case tl: Ivf.TwoLevelModel =>
+        queries.writeStream
+          .outputMode("append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            sink(Ivf.ivfPqSearch(enc, tl, batch, k, nprobe), batchId)
+          }
+    }).start()
 
   /** Serve FILTERED top-k per arriving query — the metadata-predicate
     * serving path matching batch `Ivf.searchTopKFilteredWith`: the
@@ -171,48 +184,25 @@ object StreamingAnnServe {
       }
       .start()
 
-  /** Serve two-level IVF-PQ top-k per arriving query — the serving path
-    * on the SCALABLE coarse structure (cells ∝ n at constant cell size;
-    * the r12 ×243 A/B showed flat √n-cells is the wrong quantizer past
-    * ~×100): each micro-batch replays the batch
-    * `Ivf.ivfPqSearchWithTwoLevel` kernel against the pre-encoded
-    * (vec_id, cid = scid, recon) frame from `Ivf.ivfPqReconFrameTwoLevel`
-    * plus the persisted two-level model (`Ivf.loadTwoLevelModel`) — the
-    * hierarchical probe (nprobe1 L1 blocks → best nprobe sub-cells) and
-    * the broadcast sub-centroid join happen inside the kernel, so stream
-    * results equal the batch answer by construction. Zero state, no
-    * watermark; same distinct-qid-per-stream assumption as [[serve]].
-    */
-  def serveIvfPqTwoLevel(queries: DataFrame, enc: DataFrame,
-                         tl: Ivf.TwoLevelModel, k: Int, nprobe1: Int = 2,
-                         nprobe: Int = 4)
-                        (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.ivfPqSearchWithTwoLevel(enc, tl, batch, k, nprobe1, nprobe),
-          batchId)
-      }
-      .start()
-
   /** Serve IVF-PQ top-k WITH the exact re-rank stage — the quality
-    * serving path matching batch `Ivf.ivfPqRerankWith`: per micro-batch,
+    * serving path matching batch `Ivf.ivfPqSearchRerank`: per micro-batch,
     * the ADC scan surfaces top-k′ (kFactor·k) candidates from the
     * compressed frame, only those |batch|·k′ rows gather raw vectors
     * from `emb` (the bounded gather — the raw corpus is touched per
     * candidate, never scanned into streaming state), exact rounded
     * cosine keeps top-k. Zero state, no watermark; same
     * distinct-qid-per-stream assumption as [[serve]]; stream results
-    * equal the batch `ivfPqRerankWith` row-for-row (spec-pinned).
+    * equal the batch `ivfPqSearchRerank` row-for-row (spec-pinned).
     */
   def serveIvfPqRerank(queries: DataFrame, enc: DataFrame, emb: DataFrame,
-                       cents: Array[Array[Double]], k: Int, nprobe: Int = 4,
+                       quantizer: Ivf.Quantizer, k: Int, nprobe: Int = 4,
                        kFactor: Int = 4)
                       (sink: (DataFrame, Long) => Unit): StreamingQuery =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.ivfPqRerankWith(enc, emb, cents, batch, k, nprobe, kFactor), batchId)
+        sink(Ivf.ivfPqSearchRerank(enc, emb, quantizer, batch, k, nprobe, kFactor),
+          batchId)
       }
       .start()
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * streaming triad the MinHash dedup family has.
   *
   * Scale design: cell assignment is the same fused map-side NearestCell
-  * argmax as batch, over a PRE-TRAINED driver-side centroid model (the
+  * argmax as batch, over a PRE-TRAINED driver-side quantizer (the
   * StreamingAnnServe serving contract — a stream cannot Lloyd-train);
   * state is keyed by cell id and holds at most `maxCell` vectors — once
   * full, newcomers still score against every retained member but are not
@@ -23,8 +23,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * unbounded streams. Cosines are computed with the exact accumulation
   * order and HALF_UP 6-decimal rounding of the batch
   * `round(cosine_sim(...), 6)` column, so emitted pairs are value-
-  * identical to `semanticNearDupWith` on the same data (spec-pinned
-  * across micro-batch splits).
+  * identical to batch `Ivf.semanticNearDup` under the same quantizer
+  * (spec-pinned across micro-batch splits, for both quantizers).
   */
 object StreamingSemanticNearDup {
 
@@ -52,59 +52,27 @@ object StreamingSemanticNearDup {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   }
 
-  /** `emb`: streaming (vec_id, ts, embedding); `cents`: the pre-trained
-    * coarse quantizer (Ivf.train / Ivf.loadModel).
+  /** `emb`: streaming (vec_id, ts, embedding); `quantizer`: the
+    * pre-trained coarse quantizer (Ivf.train wrapped in `Ivf.Flat`,
+    * Ivf.trainTwoLevel, or Ivf.loadModel). The state key is the
+    * quantizer's effective cell id (a two-level model's global sub-cell),
+    * assigned by the same fused map-side argmax as the batch face. A
+    * two-level model routes at k1 + k2 flops per row while state stays
+    * ≤ (live cells)·maxCell — the cells ∝ n configuration, streamed.
+    * Each arrival scores against the ≤ maxCell retained members of its
+    * cell, is retained until the cap, and idle cells time out.
     */
-  def run(emb: DataFrame, cents: Array[Array[Double]],
+  def run(emb: DataFrame, quantizer: graft.ops.Ivf.Quantizer,
           threshold: Double = 0.4, maxCell: Int = 1000,
           watermark: String = "10 minutes",
           idleRetentionMs: Long = 3600000L): Dataset[Pair] = {
-    require(cents.nonEmpty, "streaming semantic near-dup needs a non-empty " +
-      "pre-trained quantizer (Ivf.train on a corpus snapshot)")
-    val assigned = emb.withWatermark("ts", watermark)
-      .select(col("vec_id"), col("ts"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("cid", graft.functions.nearest_cell(
-        col("v"), cents.flatten, cents.length, cents.head.length).cast("long"))
+    require(!quantizer.isEmpty, "streaming semantic near-dup needs a " +
+      "non-empty pre-trained quantizer (Ivf.train or Ivf.trainTwoLevel on a " +
+      "corpus snapshot)")
+    val assigned = quantizer.route(emb.withWatermark("ts", watermark)
+        .select(col("vec_id"), col("ts"),
+          col("embedding").cast("array<double>").as("v")))
       .select(col("cid"), col("vec_id"), col("ts"), col("v"))
-    pairsByCell(assigned, threshold, maxCell, idleRetentionMs)
-  }
-
-  /** [[run]] on a pre-trained TWO-LEVEL quantizer (Ivf.trainTwoLevel /
-    * Ivf.loadTwoLevelModel): the state key is the global sub-cell id
-    * (scid), assigned by the same fused L1-argmax → own-block L2-argmax
-    * chain as the batch face, so emitted pairs are value-identical to
-    * `Ivf.semanticNearDupWithTwoLevel` on the same data (spec-pinned
-    * across micro-batch splits). Per-row routing costs k1 + k2 flops
-    * while state stays ≤ (live cells)·maxCell — the cells ∝ n serving
-    * configuration, streamed.
-    */
-  def runTwoLevel(emb: DataFrame, m: graft.ops.Ivf.TwoLevelModel,
-                  threshold: Double = 0.4, maxCell: Int = 1000,
-                  watermark: String = "10 minutes",
-                  idleRetentionMs: Long = 3600000L): Dataset[Pair] = {
-    require(!m.isEmpty, "streaming two-level semantic near-dup needs a " +
-      "non-empty pre-trained model (Ivf.trainTwoLevel on a corpus snapshot)")
-    val dim = m.l1.head.length
-    val assigned = emb.withWatermark("ts", watermark)
-      .select(col("vec_id"), col("ts"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("cid1", graft.functions.nearest_cell(
-        col("v"), m.l1.flatten, m.l1.length, dim))
-      .withColumn("cid", graft.functions.nearest_sub_cell(
-        col("v"), col("cid1"), m.l2.flatten, m.k1, m.k2, dim).cast("long"))
-      .select(col("cid"), col("vec_id"), col("ts"), col("v"))
-    pairsByCell(assigned, threshold, maxCell, idleRetentionMs)
-  }
-
-  /** The shared cell-keyed GroupState core: score each arrival against
-    * the ≤ maxCell retained members of its cell, retain until the cap,
-    * time out idle cells. The cell-id column is whatever quantizer the
-    * caller routed with (flat cid or two-level scid).
-    */
-  private def pairsByCell(assigned: DataFrame, threshold: Double,
-                          maxCell: Int,
-                          idleRetentionMs: Long): Dataset[Pair] = {
     val spark = assigned.sparkSession
     import spark.implicits._
     assigned.as[Arrived].groupByKey(_.cid)

@@ -154,11 +154,11 @@ private final class ScaleProbe(spark: SparkSession, dir: String) {
     // compressed-domain paths: plain PQ vs the residual IVF-PQ index at
     // the same code bytes (m=4 x 16 entries), pruning knob swept
     probe("pq m=4,k=16")(Ivf.pqSearch(emb, q, k))
-    val m1 = Ivf.train(emb, 16, 1)
+    val m1 = Ivf.Flat(Ivf.train(emb, 16, 1))
     val enc = Ivf.ivfPqReconFrame(emb, m1, 4, 16).cache()
     enc.count()
     Seq(4, 8, 16).foreach { p =>
-      probe(s"ivfpq nprobe=$p/16")(Ivf.ivfPqSearchWith(enc, m1, q, k, p))
+      probe(s"ivfpq nprobe=$p/16")(Ivf.ivfPqSearch(enc, m1, q, k, p))
     }
     // exact re-rank of the ADC top-4k: recall dominates plain ADC at
     // each nprobe, but is only NEAR-FLAT in nprobe, not strictly
@@ -167,7 +167,7 @@ private final class ScaleProbe(spark: SparkSession, dir: String) {
     // ivfPqSearchRerank's scaladoc and SURVEY §34s)
     Seq(4, 8, 16).foreach { p =>
       probe(s"ivfpq_rerank nprobe=$p/16")(
-        Ivf.ivfPqRerankWith(enc, emb, m1, q, k, p))
+        Ivf.ivfPqSearchRerank(enc, emb, m1, q, k, p))
     }
     enc.unpersist()
     Seq(1, 2, 4, 8).foreach { t =>
@@ -192,23 +192,21 @@ private final class ScaleProbe(spark: SparkSession, dir: String) {
     val ne = emb.count()
     val (k1, k2) = Ivf.twoLevelSizing(ne, targetCell = 250)
     val tl = Ivf.trainTwoLevel(emb, k1, k2, iters = 0)
-    val cells = Materialize.once(
-      Ivf.assignTwoLevel(
-        emb.where(col("embedding").isNotNull)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        tl)
-        .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
+    // the quantizer's own cell frame: cell sizes, the uncapped baseline
+    // and the worst-gap join read it (the faces below route the same way)
+    val cells = tl.cells(emb)
     cells.count()
     val over = cells.groupBy(col("cid")).count()
-      .where(col("count") > 256).count()
-    println(s"[scale] x$k: $ne vecs, ${k1}x$k2 cells, $over cells over the 256 cap")
+      .where(col("count") > Ivf.KnnMaxCand).count()
+    println(s"[scale] x$k: $ne vecs, ${k1}x$k2 cells, $over cells over the " +
+      s"${Ivf.KnnMaxCand} cap")
     def graph(label: String)(f: => DataFrame): DataFrame =
       time(label) { val g = Materialize.once(f); g.count(); g }
-    val capped = graph(s"knn_graph CAPPED(256) x$k") {
-      Ivf.knnGraphOnCells(cells, 5, maxCand = 256)
+    val capped = graph(s"knn_graph CAPPED(${Ivf.KnnMaxCand}) x$k") {
+      Ivf.knnGraph(emb, tl, 5)
     }
-    val coll = graph(s"knn_graph COLLAPSED(256) x$k") {
-      Ivf.knnGraphCollapsedOnCells(cells, 5, maxCand = 256)
+    val coll = graph(s"knn_graph COLLAPSED(${Ivf.KnnMaxCand}) x$k") {
+      Ivf.knnGraphCollapsed(emb, tl, 5)
     }
     val unc = graph(s"knn_graph UNCAPPED x$k") {
       Ivf.knnGraphOnCells(cells, 5, maxCand = 1 << 20)

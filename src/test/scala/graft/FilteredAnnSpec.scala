@@ -68,20 +68,20 @@ class FilteredAnnSpec extends SparkSpec {
   }
 
   test("full probe == post-filtered ADC exact (PQ), and rerank goes exact") {
-    val cents = Ivf.train(e, 16, 1)
+    val cents = Ivf.Flat(Ivf.train(e, 16, 1))
     val enc = Ivf.ivfPqReconFrame(e, cents)
       .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
     // ADC reference: brute-force cosine over the reconstructed survivors
     val encQ = enc.where(pred)
       .select(col("vec_id"), col("recon").as("embedding")) // already double[]
     val adcExact = Similarity.bruteForceTopK(spark, encQ, q, 10)
-    val adcFull = Ivf.ivfPqSearchFilteredWith(enc, cents, q, 10, pred, nprobe = 16)
+    val adcFull = Ivf.ivfPqSearchFiltered(enc, cents, q, 10, pred, nprobe = 16)
     assert(sameRows(adcFull, adcExact),
       "full-probe filtered ADC must equal post-filtered ADC exact")
     // rerank with every cell probed and k' >= survivor count: the ADC cut
     // keeps every survivor, so the exact-cosine re-rank IS post-filtered
     // exact search — the whole filtered chain collapses to ground truth
-    val rerank = Ivf.ivfPqRerankFilteredWith(enc, e, cents, q, 10, pred,
+    val rerank = Ivf.ivfPqSearchRerankFiltered(enc, e, cents, q, 10, pred,
       nprobe = 16, kFactor = 16)
     val exact = Similarity.bruteForceTopK(spark, e.where(pred), q, 10)
     assert(sameRows(rerank, exact),

@@ -116,4 +116,37 @@ class MaterializeSpecs extends SparkSpec {
     assert(Materialize.liveBlockCount(spark) == 0)
     assert(persistedIds == before)
   }
+
+  test("releaseFrame refuses a lazy replacement and leaves the staging frame readable") {
+    Materialize.releaseAll(spark, blocking = true)
+    val staging = Materialize.cut(spark.range(1000).toDF("id"))
+    // a lazy sealed copy: not materialized yet, so it still reads staging
+    val lazyCopy = Materialize.oncePartitioned(
+      staging.repartition(4, col("id")), Seq("id"), 4)
+    val ex = intercept[IllegalArgumentException] {
+      Materialize.releaseFrame(spark, staging, lazyCopy, blocking = true)
+    }
+    assert(ex.getMessage.contains("not an eager tracked cut"))
+    assert(staging.count() == 1000L, "the staging frame must still be readable")
+    assert(lazyCopy.count() == 1000L)
+    // a plain (uncut) frame is no replacement either
+    intercept[IllegalArgumentException] {
+      Materialize.releaseFrame(spark, staging, staging.select(col("id")), blocking = true)
+    }
+    assert(staging.count() == 1000L)
+    Materialize.releaseAll(spark, blocking = true)
+  }
+
+  test("releaseFrame drops the staging blocks once the replacement is an eager cut") {
+    Materialize.releaseAll(spark, blocking = true)
+    val staging = Materialize.cut(spark.range(1000).toDF("id"))
+    val sealedCopy = Materialize.cutPartitioned(
+      staging.repartition(4, col("id")), Seq("id"), 4)
+    val live = Materialize.liveBlockCount(spark)
+    Materialize.releaseFrame(spark, staging, sealedCopy, blocking = true)
+    assert(Materialize.liveBlockCount(spark) == live - 1)
+    assert(!Materialize.isReadable(staging))
+    assert(sealedCopy.count() == 1000L, "the replacement reads its own blocks")
+    Materialize.releaseAll(spark, blocking = true)
+  }
 }

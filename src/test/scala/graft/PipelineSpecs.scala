@@ -749,8 +749,8 @@ class SimilaritySpec extends SparkSpec {
     val queries = e.where(col("vec_id") < 10)
     val model = graft.ops.Ivf.train(e)
     val path = java.nio.file.Files.createTempDirectory("ivf_model").toString + "/m"
-    graft.ops.Ivf.saveModel(spark, model, path)
-    val loaded = graft.ops.Ivf.loadModel(spark, path)
+    graft.ops.Ivf.saveModel(spark, graft.ops.Ivf.Flat(model), path)
+    val graft.ops.Ivf.Flat(loaded) = graft.ops.Ivf.loadModel(spark, path)
     assert(loaded.length == model.length &&
       loaded.zip(model).forall { case (a, b) => a.sameElements(b) })
     import spark.implicits._

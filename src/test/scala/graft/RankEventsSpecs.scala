@@ -252,7 +252,8 @@ class RankEventsSpecs extends SparkSpec {
 
   test("ivfpq encode: map-only plan, valid cell/codes, residual recon beats plain pq") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val enc = graft.ops.Ivf.ivfPqEncode(emb)
+    val enc = graft.ops.Ivf.ivfPqEncode(emb,
+      graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 16, 1)))
     val p = enc.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"),
       "ivfpq encode must be map-only after the driver-side model jobs\n" + p)
@@ -278,7 +279,9 @@ class RankEventsSpecs extends SparkSpec {
     val exact = graft.ops.Similarity.bruteForceTopK(spark, emb, q, 5)
     // nprobe = numCells scans every cell: isolates quantization quality
     // (residual PQ vs plain PQ) from the cell-pruning recall knob
-    val ivfpq = graft.ops.Ivf.ivfPqSearch(emb, q, 5, nprobe = 16)
+    val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 16, 1))
+    val ivfpq = graft.ops.Ivf.ivfPqSearch(graft.ops.Ivf.ivfPqReconFrame(emb, cents),
+      cents, q, 5, nprobe = 16)
     val pq = graft.ops.Ivf.pqSearch(emb, q, 5)
     val rIvfPq = graft.ops.Similarity.recallAtK(exact, ivfpq)
     val rPq = graft.ops.Similarity.recallAtK(exact, pq)
@@ -290,12 +293,12 @@ class RankEventsSpecs extends SparkSpec {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
     val q = emb.where(col("vec_id") < 10)
     val exact = graft.ops.Similarity.bruteForceTopK(spark, emb, q, 5)
-    val cents = graft.ops.Ivf.train(emb, 16, 1)
+    val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 16, 1))
     val enc = graft.ops.Ivf.ivfPqReconFrame(emb, cents).cache()
     enc.count()
     Seq(4, 16).foreach { p =>
-      val adc = graft.ops.Ivf.ivfPqSearchWith(enc, cents, q, 5, p)
-      val rer = graft.ops.Ivf.ivfPqRerankWith(enc, emb, cents, q, 5, p)
+      val adc = graft.ops.Ivf.ivfPqSearch(enc, cents, q, 5, p)
+      val rer = graft.ops.Ivf.ivfPqSearchRerank(enc, emb, cents, q, 5, p)
       val rAdc = graft.ops.Similarity.recallAtK(exact, adc)
       val rRer = graft.ops.Similarity.recallAtK(exact, rer)
       // exact scores inside the candidate set can only rank it better —
@@ -307,7 +310,7 @@ class RankEventsSpecs extends SparkSpec {
     // reconstruction estimate): spot-check against brute-force scores
     val exactScores = exact.select(col("qid"), col("id2"), col("cos"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    graft.ops.Ivf.ivfPqRerankWith(enc, emb, cents, q, 5).collect().foreach { r =>
+    graft.ops.Ivf.ivfPqSearchRerank(enc, emb, cents, q, 5).collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
       exactScores.get(key).foreach(c => assert(c == r.getDouble(2),
         s"rerank cos for $key must equal the exact cosine"))
@@ -338,7 +341,8 @@ class RankEventsSpecs extends SparkSpec {
 
   test("semantic near-dup: exact subset of all-pairs truth, within-cell only") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val sem = graft.ops.Ivf.semanticNearDup(emb, numCells = 8, threshold = 0.4)
+    val sem = graft.ops.Ivf.semanticNearDup(emb,
+        graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0)), threshold = 0.4)
       .select(col("id1"), col("id2"), col("cos"))
       .as[(Long, Long, Double)].collect().toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)
@@ -359,10 +363,10 @@ class RankEventsSpecs extends SparkSpec {
 
   test("semantic dedup: clusters close the pair graph, one diversity keeper each") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val cents = graft.ops.Ivf.train(emb, 8, iters = 0)
-    val pairs = graft.ops.Ivf.semanticNearDupWith(emb, cents, 0.4)
+    val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0))
+    val pairs = graft.ops.Ivf.semanticNearDup(emb, cents, 0.4)
       .select(col("id1"), col("id2")).as[(Long, Long)].collect()
-    val dd = graft.ops.Ivf.semanticDedupWith(emb, cents, 0.4)
+    val dd = graft.ops.Ivf.semanticDedup(emb, cents, 0.4)
       .as[(Long, Long, Boolean)].collect()
     graft.core.Materialize.releaseAll(spark, blocking = true)
     val cluster = dd.map(r => r._1 -> r._2).toMap
@@ -620,17 +624,18 @@ class RankEventsSpecs extends SparkSpec {
     val m = Ivf.train(none)
     assert(m.isEmpty)
     // encode against the empty model: empty frame, full output schema
-    val enc = Ivf.ivfPqEncodeWith(emb, m)
+    val enc = Ivf.ivfPqEncode(emb, Ivf.Flat(m))
     assert(enc.count() == 0)
     assert(enc.columns.toSeq == Seq("vec_id", "cid", "code0", "code1",
       "code2", "code3", "recon_cos"))
     // search against an empty model: zero hits, no crash
-    assert(Ivf.ivfPqSearch(none, emb.where(col("vec_id") < 10), 5).count() == 0)
+    assert(Ivf.ivfPqSearch(Ivf.ivfPqReconFrame(none, Ivf.Flat(m)), Ivf.Flat(m),
+      emb.where(col("vec_id") < 10), 5).count() == 0)
     // dedup/near-dup against the empty model: empty, correctly schemed
-    val dd = Ivf.semanticDedupWith(emb, m)
+    val dd = Ivf.semanticDedup(emb, Ivf.Flat(m))
     assert(dd.count() == 0 &&
       dd.columns.toSeq == Seq("vec_id", "cluster_id", "keep"))
-    val nd = Ivf.semanticNearDupWith(emb, m)
+    val nd = Ivf.semanticNearDup(emb, Ivf.Flat(m))
     assert(nd.count() == 0 && nd.columns.toSeq == Seq("cid", "id1", "id2", "cos"))
     graft.core.Materialize.releaseAll(spark, blocking = true)
   }
@@ -639,16 +644,17 @@ class RankEventsSpecs extends SparkSpec {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("graft_sem_model").toString
     graft.ops.Ivf.saveModel(spark,
-      graft.ops.Ivf.train(emb, k = 8, iters = 0), dir)
-    val model = graft.ops.Ivf.loadModel(spark, dir)
+      graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, k = 8, iters = 0)), dir)
+    val graft.ops.Ivf.Flat(model) = graft.ops.Ivf.loadModel(spark, dir)
     val sampleInPlace = graft.ops.Ivf.semanticSample(emb, numCells = 8, perCell = 5)
       .collect().map(_.toSeq).toSet
     val sampleServed = graft.ops.Ivf.semanticSampleWith(emb, model, perCell = 5)
       .collect().map(_.toSeq).toSet
     assert(sampleServed == sampleInPlace)
-    val ndInPlace = graft.ops.Ivf.semanticNearDup(emb, numCells = 8)
+    val ndInPlace = graft.ops.Ivf.semanticNearDup(emb,
+        graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0)))
       .collect().map(_.toSeq).toSet
-    val ndServed = graft.ops.Ivf.semanticNearDupWith(emb, model)
+    val ndServed = graft.ops.Ivf.semanticNearDup(emb, graft.ops.Ivf.Flat(model))
       .collect().map(_.toSeq).toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(ndServed == ndInPlace)

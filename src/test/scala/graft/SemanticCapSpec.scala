@@ -206,10 +206,11 @@ class SemanticCapSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Boolean)].collect().toSet
-    val uncapped = rows(Ivf.semanticDedupTwoLevel(emb, k1 = 2, k2 = 2,
+    val tl = Ivf.trainTwoLevel(emb, k1 = 2, k2 = 2)
+    val uncapped = rows(Ivf.semanticDedup(emb, tl,
       threshold = 0.4, maxCell = Int.MaxValue))
-    val collapsed = rows(Ivf.semanticDedupCollapsedTwoLevel(emb, k1 = 2,
-      k2 = 2, threshold = 0.4, maxCell = 8))
+    val collapsed = rows(Ivf.semanticDedupCollapsed(emb, tl,
+      threshold = 0.4, maxCell = 8))
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(collapsed == uncapped,
       "collapsed dedup must equal the uncapped all-pairs dedup on a flood")
@@ -222,11 +223,11 @@ class SemanticCapSpec extends SparkSpec {
        "families PAIR like the all-pairs feed (NaN orders above every " +
        "number in both engines — the established contract)") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val cents = Ivf.train(emb, 4, iters = 0)
+    val cents = Ivf.Flat(Ivf.train(emb, 4, iters = 0))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Boolean)].collect().toSet
-    val a = rows(Ivf.semanticDedupWith(emb, cents, 0.4, maxCell = 64))
-    val b = rows(Ivf.semanticDedupCollapsedWith(emb, cents, 0.4, maxCell = 64))
+    val a = rows(Ivf.semanticDedup(emb, cents, 0.4, maxCell = 64))
+    val b = rows(Ivf.semanticDedupCollapsed(emb, cents, 0.4, maxCell = 64))
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(a == b, "collapse must be the identity on all-distinct data")
 
@@ -239,9 +240,9 @@ class SemanticCapSpec extends SparkSpec {
         (3L, Array(0f, 0f, 0f))) ++
       (10 to 30).map(i => (i.toLong, Array(1f, 1e-7f * i, 0f))))
       .toDF("vec_id", "embedding")
-    val zc = Ivf.train(z, 2, iters = 0)
-    val dz = rows(Ivf.semanticDedupCollapsedWith(z, zc, 0.4))
-    val du = rows(Ivf.semanticDedupWith(z, zc, 0.4, maxCell = Int.MaxValue))
+    val zc = Ivf.Flat(Ivf.train(z, 2, iters = 0))
+    val dz = rows(Ivf.semanticDedupCollapsed(z, zc, 0.4))
+    val du = rows(Ivf.semanticDedup(z, zc, 0.4, maxCell = Int.MaxValue))
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(dz == du,
       s"collapsed must equal uncapped NaN semantics:\n$dz\nvs\n$du")
@@ -256,10 +257,10 @@ class SemanticCapSpec extends SparkSpec {
     // drop members entirely (recall price, measured in BENCH_NOTES), but
     // must never SPLIT a surviving pair
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val cents = Ivf.train(emb, 4, iters = 0)
-    val truth = Ivf.semanticNearDupWith(emb, cents, 0.4)
+    val cents = Ivf.Flat(Ivf.train(emb, 4, iters = 0))
+    val truth = Ivf.semanticNearDup(emb, cents, 0.4)
       .select(col("id1"), col("id2")).as[(Long, Long)].collect()
-    val dd = Ivf.semanticDedupWith(emb, cents, 0.4, maxCell = 16)
+    val dd = Ivf.semanticDedup(emb, cents, 0.4, maxCell = 16)
       .as[(Long, Long, Boolean)].collect()
     graft.core.Materialize.releaseAll(spark, blocking = true)
     val cluster = dd.map(r => r._1 -> r._2).toMap
@@ -290,8 +291,9 @@ class SemanticCapSpec extends SparkSpec {
   test("neardup guard: a cell over maxCellGuard raises BEFORE pair emission, " +
        "naming the capped production path") {
     val ex = intercept[IllegalStateException] {
-      Ivf.semanticNearDup(floodEmb(40), numCells = 4, threshold = 0.4,
-        maxCellGuard = 16).count()
+      val flood = floodEmb(40)
+      Ivf.semanticNearDup(flood, Ivf.Flat(Ivf.train(flood, 4, iters = 0)),
+        threshold = 0.4, maxCellGuard = 16).count()
     }
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(ex.getMessage.contains("semanticDedup"),
@@ -304,7 +306,8 @@ class SemanticCapSpec extends SparkSpec {
 
   test("neardup guard: two-level face raises the same way") {
     val ex = intercept[IllegalStateException] {
-      Ivf.semanticNearDupTwoLevel(floodEmb(40), k1 = 2, k2 = 2,
+      val flood = floodEmb(40)
+      Ivf.semanticNearDup(flood, Ivf.trainTwoLevel(flood, k1 = 2, k2 = 2),
         threshold = 0.4, maxCellGuard = 16).count()
     }
     graft.core.Materialize.releaseAll(spark, blocking = true)
@@ -314,10 +317,10 @@ class SemanticCapSpec extends SparkSpec {
   test("neardup guard: below the bound the face is untouched (pairs " +
        "bit-identical to an unguarded run)") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val cents = Ivf.train(emb, 4, iters = 0)
-    val guarded = Ivf.semanticNearDupWith(emb, cents, 0.4)
+    val cents = Ivf.Flat(Ivf.train(emb, 4, iters = 0))
+    val guarded = Ivf.semanticNearDup(emb, cents, 0.4)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val unguarded = Ivf.semanticNearDupWith(emb, cents, 0.4,
+    val unguarded = Ivf.semanticNearDup(emb, cents, 0.4,
         maxCellGuard = Int.MaxValue)
       .as[(Long, Long, Long, Double)].collect().toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)

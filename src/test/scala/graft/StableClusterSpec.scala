@@ -92,11 +92,12 @@ class StableClusterSpec extends SparkSpec {
 
   test("semanticDedupStable: labels survive a two-batch replay") {
     val e = spark.read.parquet(s"$Sf0001/embeddings.parquet")
-    val run1 = Ivf.semanticDedup(e, threshold = 0.4)
+    val run1 = Ivf.semanticDedup(e, Ivf.Flat(Ivf.train(e, 16, iters = 0)), threshold = 0.4)
     val prior = run1.select(col("vec_id"), col("cluster_id"))
     assert(prior.count() > 0, "fixture must cluster something")
     // replay the SAME corpus with priors: labels must be identical
-    val run2 = Ivf.semanticDedupStable(e, prior, threshold = 0.4)
+    val run2 = Ivf.semanticDedupStable(e, prior,
+      Ivf.Flat(Ivf.train(e, 16, iters = 0)), threshold = 0.4)
     val a = run1.select(col("vec_id"), col("cluster_id")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = run2.select(col("vec_id"), col("cluster_id")).collect()

@@ -1155,8 +1155,8 @@ class StreamingAnnServeSpec extends SparkSpec {
     // the cross-job serving contract: train once, persist, load in the
     // serving job
     val dir = Files.createTempDirectory("graft_ivf_model").toString
-    Ivf.saveModel(spark, Ivf.train(emb, k = 8, iters = 1), dir)
-    val model = Ivf.loadModel(spark, dir)
+    Ivf.saveModel(spark, Ivf.Flat(Ivf.train(emb, k = 8, iters = 1)), dir)
+    val Ivf.Flat(model) = Ivf.loadModel(spark, dir)
 
     val qs = queryRows(6)
     val batchTruth = Ivf.searchTopKWith(
@@ -1268,9 +1268,9 @@ class StreamingAnnServeSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings
     // index once per corpus snapshot: coarse model + residual-encoded frame
-    val model = Ivf.train(emb, k = 8, iters = 1)
+    val model = Ivf.Flat(Ivf.train(emb, k = 8, iters = 1))
     val enc = Ivf.ivfPqReconFrame(emb, model).cache()
-    val batchTruth = Ivf.ivfPqSearchWith(
+    val batchTruth = Ivf.ivfPqSearch(
       enc, model, emb.where(col("vec_id") < 5), 5, nprobe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
 
@@ -1288,7 +1288,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       stream.addData(qs.drop(2): _*)
       q.processAllAvailable()
       assert(got.toSet == batchTruth,
-        "stream-served IVF-PQ top-k must equal the batch ivfPqSearchWith answer")
+        "stream-served IVF-PQ top-k must equal the batch ivfPqSearch answer")
       assert(q.lastProgress.stateOperators.isEmpty,
         "IVF-PQ serving must stay stateless")
     } finally { q.stop(); enc.unpersist() }
@@ -1301,16 +1301,16 @@ class StreamingAnnServeSpec extends SparkSpec {
     // index once per corpus snapshot: two-level model + residual frame
     // encoded against SUB-centroids (cid = global scid)
     val tl = Ivf.trainTwoLevel(emb, k1 = 3, k2 = 3, iters = 0)
-    val enc = Ivf.ivfPqReconFrameTwoLevel(emb, tl).cache()
-    val batchTruth = Ivf.ivfPqSearchWithTwoLevel(
-      enc, tl, emb.where(col("vec_id") < 5), 5, nprobe1 = 2, nprobe = 3)
+    val enc = Ivf.ivfPqReconFrame(emb, tl).cache()
+    val batchTruth = Ivf.ivfPqSearch(
+      enc, tl, emb.where(col("vec_id") < 5), 5, nprobe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
 
     val stream = MemoryStream[(Long, Seq[Double])]
     val got = scala.collection.mutable.Set[(Long, Long, Double, Long)]()
-    val q = graft.streaming.StreamingAnnServe.serveIvfPqTwoLevel(
+    val q = graft.streaming.StreamingAnnServe.serveIvfPq(
       stream.toDF.toDF("vec_id", "embedding"), enc, tl, k = 5,
-      nprobe1 = 2, nprobe = 3) { (topk, _) =>
+      nprobe = 3) { (topk, _) =>
       got.synchronized { got ++= topk.as[(Long, Long, Double, Long)].collect() }
     }
     try {
@@ -1330,9 +1330,9 @@ class StreamingAnnServeSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings
-    val model = Ivf.train(emb, k = 8, iters = 1)
+    val model = Ivf.Flat(Ivf.train(emb, k = 8, iters = 1))
     val enc = Ivf.ivfPqReconFrame(emb, model).cache()
-    val batchTruth = Ivf.ivfPqRerankWith(
+    val batchTruth = Ivf.ivfPqSearchRerank(
       enc, emb, model, emb.where(col("vec_id") < 5), 5, nprobe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
 
@@ -1350,7 +1350,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       stream.addData(qs.drop(2): _*)
       q.processAllAvailable()
       assert(got.toSet == batchTruth,
-        "stream-served re-ranked top-k must equal the batch ivfPqRerankWith answer")
+        "stream-served re-ranked top-k must equal the batch ivfPqSearchRerank answer")
       assert(q.lastProgress.stateOperators.isEmpty,
         "re-rank serving must stay stateless")
     } finally { q.stop(); enc.unpersist() }
@@ -1493,8 +1493,8 @@ class StreamingSemanticNearDupSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val cents = graft.ops.Ivf.train(emb, 8, iters = 0)
-    val truth = graft.ops.Ivf.semanticNearDupWith(emb, cents, 0.4)
+    val cents = graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0))
+    val truth = graft.ops.Ivf.semanticNearDup(emb, cents, 0.4)
       .select(col("cid"), col("id1"), col("id2"), col("cos"))
       .as[(Long, Long, Long, Double)].collect().toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)
@@ -1533,7 +1533,7 @@ class StreamingSemanticNearDupSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
     val m = graft.ops.Ivf.trainTwoLevel(emb, k1 = 3, k2 = 3, iters = 0)
-    val truth = graft.ops.Ivf.semanticNearDupWithTwoLevel(emb, m, 0.4)
+    val truth = graft.ops.Ivf.semanticNearDup(emb, m, 0.4)
       .select(col("cid"), col("id1"), col("id2"), col("cos"))
       .as[(Long, Long, Long, Double)].collect().toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)
@@ -1542,7 +1542,7 @@ class StreamingSemanticNearDupSpec extends SparkSpec {
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, ts(T0 + id), v.map(_.toDouble)) }
     val stream = MemoryStream[(Long, java.sql.Timestamp, Seq[Double])]
-    val pairs = graft.streaming.StreamingSemanticNearDup.runTwoLevel(
+    val pairs = graft.streaming.StreamingSemanticNearDup.run(
       stream.toDF.toDF("vec_id", "ts", "embedding"), m,
       watermark = "1 hour")
     val q = pairs.writeStream.outputMode("append").format("memory")
@@ -1564,7 +1564,7 @@ class StreamingSemanticNearDupSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // one cell (k=1); identical direction => cos 1.0 for every pair
-    val cents = Array(Array(1.0, 0.0))
+    val cents = graft.ops.Ivf.Flat(Array(Array(1.0, 0.0)))
     val stream = MemoryStream[(Long, java.sql.Timestamp, Seq[Double])]
     val pairs = graft.streaming.StreamingSemanticNearDup.run(
       stream.toDF.toDF("vec_id", "ts", "embedding"), cents,
@@ -1939,8 +1939,8 @@ class StreamingHybridServeSpec extends SparkSpec {
     val qframe = emb.join(qdefs.toDF("vec_id", "terms"), Seq("vec_id"))
       .select(col("vec_id"), col("terms"), col("embedding"))
     val dir = Files.createTempDirectory("graft_hybrid_model").toString
-    Ivf.saveModel(spark, Ivf.train(emb, k = 8, iters = 1), dir)
-    val model = Ivf.loadModel(spark, dir)
+    Ivf.saveModel(spark, Ivf.Flat(Ivf.train(emb, k = 8, iters = 1)), dir)
+    val Ivf.Flat(model) = Ivf.loadModel(spark, dir)
     val exact = graft.ops.Retrieval.hybridRrfMulti(docs, emb, qframe)
       .collect().map(_.toString).toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)

@@ -18,6 +18,91 @@ class TwoLevelIvfSpec extends SparkSpec {
   private def toyEmb(rows: Seq[(Long, Seq[Double])]): DataFrame =
     rows.toDF("vec_id", "embedding")
 
+  private def rows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** Every cell-routed face, run on `e` under a given quantizer. The
+    * IVF-PQ searches take `e`'s rows with vec_id < 10 as queries; the
+    * filtered ones keep label 7 (carried through the encode). */
+  private def faces(e: DataFrame): Seq[(String, Ivf.Quantizer => DataFrame)] = {
+    val q = e.where(col("vec_id") < 10)
+    val label7 = col("label") === 7
+    def enc(qz: Ivf.Quantizer) = Ivf.ivfPqReconFrame(e, qz, passthrough = Seq("label"))
+    Seq(
+      "knnGraph" -> (qz => Ivf.knnGraph(e, qz, 5)),
+      "knnGraphCollapsed" -> (qz => Ivf.knnGraphCollapsed(e, qz, 5)),
+      "knnComponents" -> (qz => Ivf.knnComponents(e, qz, 5)),
+      "semanticNearDup" -> (qz => Ivf.semanticNearDup(e, qz)),
+      "semanticDedup" -> (qz => Ivf.semanticDedup(e, qz)),
+      "semanticDedupCollapsed" -> (qz => Ivf.semanticDedupCollapsed(e, qz)),
+      "semanticDedupStable" -> (qz => Ivf.semanticDedupStable(e,
+        e.select(col("vec_id"), col("vec_id").as("cluster_id")).limit(0), qz)),
+      "ivfPqEncode" -> (qz => Ivf.ivfPqEncode(e, qz)),
+      "ivfPqReconFrame" -> (qz => Ivf.ivfPqReconFrame(e, qz)),
+      "ivfPqSearch" -> (qz => Ivf.ivfPqSearch(Ivf.ivfPqReconFrame(e, qz), qz, q, 5)),
+      "ivfPqSearchRerank" -> (qz =>
+        Ivf.ivfPqSearchRerank(Ivf.ivfPqReconFrame(e, qz), e, qz, q, 5)),
+      "ivfPqSearchFiltered" -> (qz => Ivf.ivfPqSearchFiltered(enc(qz), qz, q, 10, label7)),
+      "ivfPqSearchRerankFiltered" -> (qz =>
+        Ivf.ivfPqSearchRerankFiltered(enc(qz), e, qz, q, 10, label7)))
+  }
+
+  /** The streaming near-dup screen's pairs over `e`, fed in 3 micro-batches. */
+  private def streamedPairs(e: DataFrame, qz: Ivf.Quantizer, name: String): Set[Seq[Any]] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ts = new java.sql.Timestamp(0L)
+    val in = e.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().map { case (id, v) => (id, ts, v) }
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
+      (Long, java.sql.Timestamp, Seq[Double])]
+    val sq = graft.streaming.StreamingSemanticNearDup.run(
+        stream.toDF.toDF("vec_id", "ts", "embedding"), qz, watermark = "1 hour")
+      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    try {
+      in.grouped((in.length + 2) / 3).foreach { g =>
+        stream.addData(g.toIndexedSeq: _*)
+        sq.processAllAvailable()
+      }
+      rows(spark.sql(s"SELECT cid, id1, id2, cos FROM $name"))
+    } finally sq.stop()
+  }
+
+  test("every face: a k1=1 two-level model returns the flat iters=0 rows") {
+    // k1 = 1 → sub-seeds are the 16 lowest vec_ids = the flat seed matrix,
+    // scid = local id = flat cid, sub-centroid = flat centroid, and the
+    // hierarchical probe (1 block → nprobe sub-cells) is the flat probe.
+    // The trained model routes through its own L1 cut (one scan); the
+    // same model without it (as loaded) re-assigns — both must agree.
+    val flat = Ivf.Flat(Ivf.train(emb, 16, iters = 0))
+    faces(emb).foreach { case (face, run) =>
+      // trained per face: the training cut lives until the release below
+      val fitted = Ivf.trainTwoLevel(emb, k1 = 1, k2 = 16, iters = 0)
+      val loaded = Ivf.TwoLevelModel(fitted.l1, fitted.l2, fitted.k2)()
+      val want = rows(run(flat))
+      assert(want.nonEmpty, s"$face: fixture produced no rows")
+      assert(rows(run(fitted)) == want, s"$face: two-level (k1=1, training cut) != flat")
+      assert(rows(run(loaded)) == want, s"$face: two-level (k1=1, re-assigned) != flat")
+      graft.core.Materialize.releaseAll(spark, blocking = true)
+    }
+    val sub = emb.where(col("vec_id") < 200)
+    assert(streamedPairs(sub, Ivf.trainTwoLevel(sub, 1, 16), "tl_k1_pairs") ==
+      streamedPairs(sub, flat, "flat_pairs"),
+      "streaming near-dup screen: two-level (k1=1) != flat")
+  }
+
+  test("every face: an empty corpus is a result, not a crash, on both quantizers") {
+    val empty = Seq.empty[(Long, Seq[Double], Long)].toDF("vec_id", "embedding", "label")
+    val quantizers = Seq(
+      "flat" -> Ivf.Flat(Ivf.train(empty, 16, iters = 0)),
+      "two-level" -> Ivf.trainTwoLevel(empty, 2, 2))
+    quantizers.foreach { case (kind, qz) =>
+      assert(qz.isEmpty, s"$kind: empty corpus must train an empty model")
+      faces(empty).foreach { case (face, run) =>
+        assert(run(qz).count() == 0L, s"$kind $face on an empty corpus")
+      }
+    }
+  }
+
   private def graphRows(df: DataFrame): Set[(Long, Long, Double, Long)] =
     df.select(col("vec_id").cast("long"), col("neighbor_id").cast("long"),
         col("cos"), col("rn"))
@@ -34,20 +119,18 @@ class TwoLevelIvfSpec extends SparkSpec {
     }
   }
 
-  test("knnGraphTwoLevel: k1=1 equals the flat knnGraph exactly (sf0.001)") {
-    val two = graphRows(Ivf.knnGraphTwoLevel(emb, k1 = 1, k2 = 16, k = 5))
-    val flat = graphRows(Ivf.knnGraph(emb, numCells = 16, k = 5))
-    assert(two == flat, s"two-level(k1=1) != flat: ${two.size} vs ${flat.size} rows")
-  }
-
   test("assignTwoLevel: scid always routes back to its own L1 cell") {
     val m = Ivf.trainTwoLevel(emb, k1 = 4, k2 = 4, iters = 1)
     assert(m.l2.length == m.k1 * m.k2)
     val e = emb.where(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val bad = Ivf.assignTwoLevel(e, m)
-      .where(floor(col("scid") / m.k2) =!= col("cid")).count()
-    assert(bad == 0L, s"$bad rows routed outside their L1 block")
+    val l1 = Ivf.assign(e, m.l1).select(col("vec_id"), col("cid").as("cid1"))
+    // both routings: the fused map-side one and the training cut's cells
+    Seq(m.route(e), m.cells(emb)).foreach { routed =>
+      val bad = routed.join(l1, "vec_id")
+        .where(floor(col("cid") / m.k2) =!= col("cid1")).count()
+      assert(bad == 0L, s"$bad rows routed outside their L1 block")
+    }
   }
 
   test("knnComponentsTwoLevel: two tight clusters separate on a toy corpus") {
@@ -56,7 +139,7 @@ class TwoLevelIvfSpec extends SparkSpec {
     val e = toyEmb(Seq(
       1L -> Seq(1.00, 0.01), 3L -> Seq(0.99, 0.02), 5L -> Seq(0.98, 0.00),
       2L -> Seq(0.01, 1.00), 4L -> Seq(0.02, 0.99), 6L -> Seq(0.00, 0.98)))
-    val comps = Ivf.knnComponentsTwoLevel(e, k1 = 2, k2 = 1, k = 3)
+    val comps = Ivf.knnComponents(e, Ivf.trainTwoLevel(e, k1 = 2, k2 = 1), k = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
     assert(Set(comps(1L), comps(3L), comps(5L)).size == 1)
@@ -65,9 +148,11 @@ class TwoLevelIvfSpec extends SparkSpec {
   }
 
   test("knnComponentsTwoLevel: invariant under repartitioning (sf0.001)") {
-    def run(parts: Int): Set[(Long, Long)] =
-      Ivf.knnComponentsTwoLevel(emb.repartition(parts), k1 = 4, k2 = 4, k = 5)
+    def run(parts: Int): Set[(Long, Long)] = {
+      val e = emb.repartition(parts)
+      Ivf.knnComponents(e, Ivf.trainTwoLevel(e, k1 = 4, k2 = 4), k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(run(1) == run(13))
   }
 
@@ -78,22 +163,20 @@ class TwoLevelIvfSpec extends SparkSpec {
       1L -> Seq(1.0, 0.0), 2L -> Seq(0.9, 0.1), 3L -> Seq(0.0, 1.0)))
     val m = Ivf.trainTwoLevel(e, k1 = 2, k2 = 4, iters = 1)
     assert(m.l2.length == m.k1 * 4)
-    val assigned = Ivf.assignTwoLevel(
-      e.select(col("vec_id"), col("embedding").cast("array<double>").as("v")), m)
-    assert(assigned.count() == 3L)
+    assert(m.cells(e).count() == 3L)
     // cells with ≤ k2 members seed one sub-cell per member, so the
     // within-sub-cell graph is EMPTY — the documented over-partitioning
     // degenerate (flat knnGraph at numCells ≥ n behaves identically);
     // the configuration contract is k1·k2 ≪ n / k
-    val g = Ivf.knnGraphWithTwoLevel(e, m, k = 2)
+    val g = Ivf.knnGraph(e, m, k = 2)
     assert(g.count() == 0L)
   }
 
   test("two-level faces: empty corpus and null embeddings are results, not crashes") {
     val empty = toyEmb(Seq.empty)
     assert(Ivf.trainTwoLevel(empty, 2, 2).isEmpty)
-    assert(Ivf.knnGraphTwoLevel(empty, 2, 2, 3).count() == 0L)
-    assert(Ivf.knnComponentsTwoLevel(empty, 2, 2, 3).count() == 0L)
+    assert(Ivf.knnGraph(empty, Ivf.trainTwoLevel(empty, 2, 2), 3).count() == 0L)
+    assert(Ivf.knnComponents(empty, Ivf.trainTwoLevel(empty, 2, 2), 3).count() == 0L)
     // null embedding rows drop at the parse boundary (the vecs contract)
     val withNull = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
@@ -103,19 +186,8 @@ class TwoLevelIvfSpec extends SparkSpec {
       StructType(Seq(
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(DoubleType)))))
-    val g = Ivf.knnGraphTwoLevel(withNull, k1 = 1, k2 = 1, k = 2)
+    val g = Ivf.knnGraph(withNull, Ivf.trainTwoLevel(withNull, k1 = 1, k2 = 1), k = 2)
     assert(graphRows(g).map(_._1) == Set(1L, 2L))
-  }
-
-  test("semantic faces: k1=1 equals the flat SemDeDup faces exactly") {
-    // k1=1 → sub-seeds are the 16 lowest vec_ids = the flat seed matrix,
-    // scid = local id = flat cid, keeper sub-centroid = flat centroid
-    def rows(df: DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Ivf.semanticNearDupTwoLevel(emb, k1 = 1, k2 = 16)) ==
-      rows(Ivf.semanticNearDup(emb, numCells = 16)))
-    assert(rows(Ivf.semanticDedupTwoLevel(emb, k1 = 1, k2 = 16)) ==
-      rows(Ivf.semanticDedup(emb, numCells = 16)))
   }
 
   test("twoLevelSizing: cells ∝ n at (at most) the target cell size") {
@@ -148,20 +220,11 @@ class TwoLevelIvfSpec extends SparkSpec {
     assert(k1 == 3 && k2 == 3) // ceil(sqrt(500/64)) = ceil(2.79...)
     val m = Ivf.trainTwoLevel(emb, k1, k2, iters = 0)
     assert(m.k1 == k1 && m.k2 == k2 && m.l2.length == k1 * k2)
-    val cells = Ivf.assignTwoLevel(
-      emb.where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-      m)
+    val cells = m.cells(emb)
     // expected cell size ≈ 500/9 ≈ 56 ≤ target; the QUANTIZER can't bound
     // the max cell (dup skew goes to one cell — that's what the dedup
     // cap is for), so pin the count, not the distribution
-    assert(cells.select(col("scid")).distinct().count() <= (k1 * k2).toLong)
-  }
-
-  test("semantic 2level faces: empty corpus is a result, not a crash") {
-    val empty = toyEmb(Seq.empty)
-    assert(Ivf.semanticNearDupTwoLevel(empty, 2, 2).count() == 0L)
-    assert(Ivf.semanticDedupTwoLevel(empty, 2, 2).count() == 0L)
+    assert(cells.select(col("cid")).distinct().count() <= (k1 * k2).toLong)
   }
 
   test("two-level model round-trips through save/load; graph identical") {
@@ -169,60 +232,17 @@ class TwoLevelIvfSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tlm")
     try {
       val path = s"$dir/m"
-      Ivf.saveTwoLevelModel(spark, m, path)
-      val m2 = Ivf.loadTwoLevelModel(spark, path)
+      Ivf.saveModel(spark, m, path)
+      val m2 = Ivf.loadModel(spark, path) match {
+        case t: Ivf.TwoLevelModel => t
+        case other => fail(s"a two-level model loaded as $other")
+      }
       assert(m2.k1 == m.k1 && m2.k2 == m.k2)
       assert((m.l1 zip m2.l1).forall { case (a, b) => a.sameElements(b) })
       assert((m.l2 zip m2.l2).forall { case (a, b) => a.sameElements(b) })
-      assert(graphRows(Ivf.knnGraphWithTwoLevel(emb, m2, 5)) ==
-        graphRows(Ivf.knnGraphWithTwoLevel(emb, m, 5)))
+      assert(graphRows(Ivf.knnGraph(emb, m2, 5)) ==
+        graphRows(Ivf.knnGraph(emb, m, 5)))
     } finally graft.tools.NullSweep.deleteRecursively(dir.toString)
-  }
-
-  test("ivfPq two-level faces: k1=1 equals the flat iters=0 faces exactly") {
-    // with k1 = 1 the two-level model degenerates to the flat seed matrix
-    // (pinned above), the hierarchical probe (1 block → nprobe sub-cells)
-    // degenerates to the flat probe ranking over the same cells, and the
-    // residuals/codebooks are identical — so both serving faces must
-    // equal their flat iters=0 siblings ROW-FOR-ROW
-    val q = emb.where(col("vec_id") < 10)
-    def rows(df: DataFrame): Set[(Long, Long, Double, Long)] =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        .toSet
-    val twoS = rows(Ivf.ivfPqSearchTwoLevel(emb, q, 5,
-      k1 = 1, k2 = 16, nprobe1 = 1, nprobe = 4))
-    val flatS = rows(Ivf.ivfPqSearch(emb, q, 5,
-      numCells = 16, iters = 0, nprobe = 4))
-    assert(twoS == flatS, "two-level ADC search (k1=1) != flat")
-    val twoR = rows(Ivf.ivfPqSearchRerankTwoLevel(emb, q, 5,
-      k1 = 1, k2 = 16, nprobe1 = 1, nprobe = 4))
-    val flatR = rows(Ivf.ivfPqSearchRerank(emb, q, 5,
-      numCells = 16, iters = 0, nprobe = 4))
-    assert(twoR == flatR, "two-level rerank (k1=1) != flat")
-  }
-
-  test("filtered two-level IVF-PQ: k1=1 equals the flat filtered face") {
-    val q = emb.where(col("vec_id") < 10)
-    def rows(df: DataFrame): Set[(Long, Long, Double, Long)] =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-        .toSet
-    val tl = Ivf.trainTwoLevel(emb, k1 = 1, k2 = 16, iters = 0)
-    val encTl = Ivf.ivfPqReconFrameTwoLevel(emb, tl, passthrough = Seq("label"))
-    val two = rows(Ivf.ivfPqSearchFilteredWithTwoLevel(encTl, tl, q, 10,
-      col("label") === 7, nprobe1 = 1, nprobe = 4))
-    val cents = Ivf.train(emb, 16, iters = 0)
-    val encFlat = Ivf.ivfPqReconFrame(emb, cents, passthrough = Seq("label"))
-    val flat = rows(Ivf.ivfPqSearchFilteredWith(encFlat, cents, q, 10,
-      col("label") === 7, nprobe = 4))
-    assert(two == flat, "filtered two-level (k1=1) != flat filtered")
-  }
-
-  test("ivfPq two-level faces: empty corpus is a result, not a crash") {
-    val empty = toyEmb(Seq.empty)
-    assert(Ivf.ivfPqSearchTwoLevel(empty, empty, 5, k1 = 2, k2 = 2).count() == 0L)
-    assert(Ivf.ivfPqEncodeTwoLevel(empty, k1 = 2, k2 = 2).count() == 0L)
   }
 
   test("residual PQ codebooks are non-degenerate at iters = 0") {
@@ -233,11 +253,11 @@ class TwoLevelIvfSpec extends SparkSpec {
     // scores in a cell tied (measured adc@5 = 0.04, invariant in m).
     // Seeds now come in portable md5-hash order; codes must actually
     // spread. Pre-fix this assertion reads countDistinct(code0) == 1.
-    val enc = Ivf.ivfPqEncode(emb, numCells = 16, iters = 0)
+    val enc = Ivf.ivfPqEncode(emb, Ivf.Flat(Ivf.train(emb, 16, iters = 0)))
     val distinctCodes = enc.select(countDistinct(col("code0"))).head().getLong(0)
     assert(distinctCodes >= 8,
       s"code0 uses only $distinctCodes of 16 codebook entries — degenerate book")
-    val encTl = Ivf.ivfPqEncodeTwoLevel(emb, k1 = 4, k2 = 4)
+    val encTl = Ivf.ivfPqEncode(emb, Ivf.trainTwoLevel(emb, k1 = 4, k2 = 4))
     val distinctTl = encTl.select(countDistinct(col("code0"))).head().getLong(0)
     assert(distinctTl >= 8,
       s"two-level code0 uses only $distinctTl of 16 entries — degenerate book")
@@ -251,13 +271,13 @@ class TwoLevelIvfSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_tlm_bad")
     try {
       val path = s"$dir/m"
-      Ivf.saveTwoLevelModel(spark, m, path)
+      Ivf.saveModel(spark, m, path)
       val truncated = s"$dir/trunc"
       spark.read.parquet(path)
         .where(!(col("level") === 2 && col("cid") === 15))
         .write.parquet(truncated)
       val ex = intercept[IllegalArgumentException] {
-        Ivf.loadTwoLevelModel(spark, truncated)
+        Ivf.loadModel(spark, truncated)
       }
       assert(ex.getMessage.contains("not a multiple of k1"))
       // 0 % k1 == 0, so entirely-missing level-2 rows slip the multiple
@@ -267,7 +287,7 @@ class TwoLevelIvfSpec extends SparkSpec {
       spark.read.parquet(path).where(col("level") === 1)
         .write.parquet(noL2)
       val ex2 = intercept[IllegalArgumentException] {
-        Ivf.loadTwoLevelModel(spark, noL2)
+        Ivf.loadModel(spark, noL2)
       }
       assert(ex2.getMessage.contains("no level-2 rows"))
     } finally graft.tools.NullSweep.deleteRecursively(dir.toString)
@@ -316,8 +336,8 @@ class TwoLevelIvfSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     val truth = (0 until 6).map(s => (0 until 10).map(j => 1L + s + 6L * j).toSet).toSet
-    val two = comps(Ivf.knnComponentsTwoLevel(e, k1 = 3, k2 = 2, k = 9))
-    val flat = comps(Ivf.knnComponents(e, numCells = 6, k = 9))
+    val two = comps(Ivf.knnComponents(e, Ivf.trainTwoLevel(e, k1 = 3, k2 = 2), k = 9))
+    val flat = comps(Ivf.knnComponents(e, Ivf.Flat(Ivf.train(e, 6, iters = 0)), k = 9))
     assert(two == truth, "two-level components differ from ground truth")
     assert(flat == truth, "flat components differ from ground truth")
   }

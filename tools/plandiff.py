@@ -1,0 +1,97 @@
+#!/usr/bin/env python3
+"""Diff two `graft.Explain` outputs, ignoring run-specific ids.
+
+Usage: python3 tools/plandiff.py A B
+
+A and B are captured stdout of `graft.Explain` (the final plan plus every
+Materialize segment plan per query), e.g. from the parent and the change.
+Before diffing, each line is normalized for exactly these run-specific
+tokens, and nothing else:
+
+  - expression ids      `vec_id#367L`                  -> `vec_id#NL`
+  - plan ids            `plan_id=12`                   -> `plan_id=N`
+  - RDD ids             `MapPartitionsRDD[27]`, `rdd_27_0` -> `...RDD[N]`, `rdd_N_0`
+  - call-site suffixes  `Materialize.scala:128`        -> `Materialize.scala:N`
+  - JVM identity hashes `TopKByScore@57ac220f`, `[D@7475f57e` -> `...@H`
+    (objects printed by their default toString: these differ between two
+    runs of the same commit)
+  - operand order of `cosinesimilarity(a, b)`: the CanonicalizeCosine rule
+    orders the two operands by semantic hash, which follows the expression
+    ids, so the printed order is an expression-id artifact; both operands
+    are printed in sorted order
+
+Prints a unified diff of the normalized texts; prints nothing and exits 0
+when the plans are the same, exits 1 when they differ.
+"""
+import difflib
+import re
+import sys
+
+_RULES = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\brdd_\d+"), "rdd_N"),
+    (re.compile(r"\b(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"(?<=[\w\[$])@[0-9a-f]{1,8}\b"), "@H"),
+]
+
+
+_COS = "cosinesimilarity("
+
+
+def _sort_cosine_operands(line):
+    """Rewrite each complete `cosinesimilarity(a, b)` as its operands in
+    sorted order; a call cut off by plan-string truncation stays as is."""
+    out, i = [], 0
+    while True:
+        j = line.find(_COS, i)
+        if j < 0:
+            return "".join(out) + line[i:]
+        out.append(line[i:j + len(_COS)])
+        k, depth, comma = j + len(_COS), 0, None
+        while k < len(line):
+            c = line[k]
+            if c in "([":
+                depth += 1
+            elif c in ")]":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif c == "," and depth == 0 and comma is None:
+                comma = k
+            k += 1
+        if k == len(line) or comma is None:  # truncated: leave the rest
+            return "".join(out) + line[j + len(_COS):]
+        args = sorted(_sort_cosine_operands(x.strip())
+                      for x in (line[j + len(_COS):comma], line[comma + 1:k]))
+        out.append(", ".join(args) + ")")
+        i = k + 1
+
+
+def normalize(line):
+    for pat, rep in _RULES:
+        line = pat.sub(rep, line)
+    return _sort_cosine_operands(line)
+
+
+def load(path):
+    with open(path, encoding="utf-8") as f:
+        return [normalize(l) for l in f]
+
+
+def main(argv):
+    if len(argv) != 3:
+        sys.stderr.write("usage: plandiff.py A B\n")
+        return 2
+    a, b = load(argv[1]), load(argv[2])
+    diff = list(difflib.unified_diff(a, b, fromfile=argv[1], tofile=argv[2]))
+    try:
+        sys.stdout.writelines(diff)
+    except BrokenPipeError:  # piped into head
+        pass
+    return 1 if diff else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
