@@ -67,14 +67,18 @@ class TwoLevelIvfSpec extends SparkSpec {
     } finally sq.stop()
   }
 
-  test("every face: a k1=1 two-level model returns the flat iters=0 rows") {
-    // k1 = 1 → sub-seeds are the 16 lowest vec_ids = the flat seed matrix,
-    // scid = local id = flat cid, sub-centroid = flat centroid, and the
-    // hierarchical probe (1 block → nprobe sub-cells) is the flat probe.
-    // The trained model routes through its own L1 cut (one scan); the
-    // same model without it (as loaded) re-assigns — both must agree.
+  /** Runs the faces `pick` selects on the flat iters=0 model and on a k1=1
+    * two-level model, and asserts both give the same rows. k1 = 1 → sub-seeds
+    * are the 16 lowest vec_ids = the flat seed matrix, scid = local id = flat
+    * cid, sub-centroid = flat centroid, and the hierarchical probe (1 block →
+    * nprobe sub-cells) is the flat probe. The trained model routes through
+    * its own L1 cut (one scan); the same model without it (as loaded)
+    * re-assigns — both must agree. */
+  private def assertK1EqualsFlat(pick: String => Boolean): Unit = {
     val flat = Ivf.Flat(Ivf.train(emb, 16, iters = 0))
-    faces(emb).foreach { case (face, run) =>
+    val picked = faces(emb).filter { case (face, _) => pick(face) }
+    assert(picked.nonEmpty, "no face selected")
+    picked.foreach { case (face, run) =>
       // trained per face: the training cut lives until the release below
       val fitted = Ivf.trainTwoLevel(emb, k1 = 1, k2 = 16, iters = 0)
       val loaded = Ivf.TwoLevelModel(fitted.l1, fitted.l2, fitted.k2)()
@@ -84,23 +88,64 @@ class TwoLevelIvfSpec extends SparkSpec {
       assert(rows(run(loaded)) == want, s"$face: two-level (k1=1, re-assigned) != flat")
       graft.core.Materialize.releaseAll(spark, blocking = true)
     }
+  }
+
+  /** Runs the faces `pick` selects on an empty corpus, flat and two-level. */
+  private def assertEmptyIsResult(pick: String => Boolean): Unit = {
+    val empty = Seq.empty[(Long, Seq[Double], Long)].toDF("vec_id", "embedding", "label")
+    val quantizers = Seq(
+      "flat" -> Ivf.Flat(Ivf.train(empty, 16, iters = 0)),
+      "two-level" -> Ivf.trainTwoLevel(empty, 2, 2))
+    val picked = faces(empty).filter { case (face, _) => pick(face) }
+    assert(picked.nonEmpty, "no face selected")
+    quantizers.foreach { case (kind, qz) =>
+      assert(qz.isEmpty, s"$kind: empty corpus must train an empty model")
+      picked.foreach { case (face, run) =>
+        assert(run(qz).count() == 0L, s"$kind $face on an empty corpus")
+      }
+    }
+  }
+
+  // Which faces each of the tests below covers; "every face" runs the rest.
+  private def isSemantic(face: String) = face.startsWith("semantic")
+  private def isIvfPq(face: String) = face.startsWith("ivfPq")
+  private def isFiltered(face: String) = face.endsWith("Filtered")
+
+  test("knnGraphTwoLevel: k1=1 equals the flat knnGraph exactly (sf0.001)") {
+    assertK1EqualsFlat(_ == "knnGraph")
+  }
+
+  test("semantic faces: k1=1 equals the flat SemDeDup faces exactly") {
+    assertK1EqualsFlat(isSemantic)
+  }
+
+  test("ivfPq two-level faces: k1=1 equals the flat iters=0 faces exactly") {
+    assertK1EqualsFlat(f => isIvfPq(f) && !isFiltered(f))
+  }
+
+  test("filtered two-level IVF-PQ: k1=1 equals the flat filtered face") {
+    assertK1EqualsFlat(isFiltered)
+  }
+
+  test("every face: a k1=1 two-level model returns the flat iters=0 rows") {
+    assertK1EqualsFlat(f => f != "knnGraph" && !isSemantic(f) && !isIvfPq(f))
+    val flat = Ivf.Flat(Ivf.train(emb, 16, iters = 0))
     val sub = emb.where(col("vec_id") < 200)
     assert(streamedPairs(sub, Ivf.trainTwoLevel(sub, 1, 16), "tl_k1_pairs") ==
       streamedPairs(sub, flat, "flat_pairs"),
       "streaming near-dup screen: two-level (k1=1) != flat")
   }
 
+  test("semantic 2level faces: empty corpus is a result, not a crash") {
+    assertEmptyIsResult(isSemantic)
+  }
+
+  test("ivfPq two-level faces: empty corpus is a result, not a crash") {
+    assertEmptyIsResult(isIvfPq)
+  }
+
   test("every face: an empty corpus is a result, not a crash, on both quantizers") {
-    val empty = Seq.empty[(Long, Seq[Double], Long)].toDF("vec_id", "embedding", "label")
-    val quantizers = Seq(
-      "flat" -> Ivf.Flat(Ivf.train(empty, 16, iters = 0)),
-      "two-level" -> Ivf.trainTwoLevel(empty, 2, 2))
-    quantizers.foreach { case (kind, qz) =>
-      assert(qz.isEmpty, s"$kind: empty corpus must train an empty model")
-      faces(empty).foreach { case (face, run) =>
-        assert(run(qz).count() == 0L, s"$kind $face on an empty corpus")
-      }
-    }
+    assertEmptyIsResult(f => !isSemantic(f) && !isIvfPq(f))
   }
 
   private def graphRows(df: DataFrame): Set[(Long, Long, Double, Long)] =
