@@ -41,29 +41,33 @@ object Ingest {
     val trades0 = Tables.trades(spark, tradesDir)
     val trades = since.fold(trades0)(s =>
       trades0.where(org.apache.spark.sql.functions.col("ts") >= s))
-    val candles = Candles.fromTrades(trades, tf)
-    store.write(candles, exchange, tf)
+    // store write, symbol list, SQLite export and the closing count share
+    // one resample of the tape
+    val candles = Candles.fromTrades(trades, tf).cache()
+    try {
+      store.write(candles, exchange, tf)
 
-    val symbols = candles.select("symbol").distinct()
-      .collect().map(_.getString(0)).sorted
-    symbols.foreach { sym =>
-      val resume = store.resumeSince(spark, exchange, sym, tf)
-      println(s"[ingest] $exchange/$sym/$tf resume_since=${resume.orNull}")
-    }
-    // a batch with no candles (e.g. --since past the last trade) has
-    // nothing to export
-    for (csvOut <- pos.lift(4); sym <- symbols.headOption) {
-      store.exportCsv(spark, csvOut, exchange, sym, tf)
-      println(s"[ingest] exported $sym -> $csvOut")
-    }
-    // --sqlite=DIR additionally emits the reference's literal per-series
-    // .sqlite files (gen_db_name layout) for downstream sqlite tooling
-    flags.collectFirst { case f if f.startsWith("--sqlite=") =>
-      f.stripPrefix("--sqlite=")
-    }.foreach { dir =>
-      val files = graft.sinks.SqliteExport.export(candles, exchange, tf, dir)
-      println(s"[ingest] sqlite export: ${files.length} series files under $dir")
-    }
-    println(s"[ingest] wrote ${candles.count()} candles for ${symbols.length} symbols")
+      val symbols = candles.select("symbol").distinct()
+        .collect().map(_.getString(0)).sorted
+      symbols.foreach { sym =>
+        val resume = store.resumeSince(spark, exchange, sym, tf)
+        println(s"[ingest] $exchange/$sym/$tf resume_since=${resume.orNull}")
+      }
+      // a batch with no candles (e.g. --since past the last trade) has
+      // nothing to export
+      for (csvOut <- pos.lift(4); sym <- symbols.headOption) {
+        store.exportCsv(spark, csvOut, exchange, sym, tf)
+        println(s"[ingest] exported $sym -> $csvOut")
+      }
+      // --sqlite=DIR additionally emits the reference's literal per-series
+      // .sqlite files (gen_db_name layout) for downstream sqlite tooling
+      flags.collectFirst { case f if f.startsWith("--sqlite=") =>
+        f.stripPrefix("--sqlite=")
+      }.foreach { dir =>
+        val files = graft.sinks.SqliteExport.export(candles, exchange, tf, dir)
+        println(s"[ingest] sqlite export: ${files.length} series files under $dir")
+      }
+      println(s"[ingest] wrote ${candles.count()} candles for ${symbols.length} symbols")
+    } finally candles.unpersist()
   }
 }

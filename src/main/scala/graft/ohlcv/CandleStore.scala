@@ -1,8 +1,17 @@
 package graft.ohlcv
 
 import graft.core.Timeframe
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Partitioned candle store — the Spark-native equivalent of the
   * reference's per-(exchange, symbol, timeframe) SQLite files
@@ -10,9 +19,11 @@ import org.apache.spark.sql.functions._
   *
   *   root/exchange=X/symbol=S/timeframe=T/part-....parquet
   *
-  * Partition pruning turns "resume one symbol" (the reference's
-  * `get_last_candle_timestamp`, :86-91) into a handful-of-files scan no
-  * matter how big the store is; dynamic partition overwrite gives the
+  * A read opens only the series it addresses, with a declared schema
+  * taken from one parquet footer per series, so "resume one symbol" (the
+  * reference's `get_last_candle_timestamp`, :86-91) lists and scans a
+  * handful of files no matter how big the store is, and building the
+  * DataFrame runs no Spark job. Dynamic partition overwrite gives the
   * idempotent re-ingest the reference gets from its PK (:71-75).
   */
 final class CandleStore(val root: String) {
@@ -42,20 +53,30 @@ final class CandleStore(val root: String) {
       .mode(SaveMode.Overwrite)
       .parquet(root)
 
-  /** Partition-pruned read. Filters on partition columns never touch
-    * non-matching files.
+  /** Partition-pruned read of the addressed series. Building the
+    * DataFrame runs no Spark job: the series directories are listed on the
+    * driver (`CandleStore.series`) and the schema is declared
+    * (`CandleStore.schemaOf`), so Spark neither lists the whole store nor
+    * runs its schema-inference job. Filters on partition columns still
+    * apply, so the rows are exactly those of a root read plus the filters.
+    *
+    * When no series directory matches (missing root, empty store, unknown
+    * key) the read falls back to discovering the root, which keeps that
+    * case's exception or empty-frame schema.
     */
   def read(spark: SparkSession, exchange: Option[String] = None,
            symbol: Option[String] = None, timeframe: Option[String] = None): DataFrame = {
-    val loaded = spark.read.parquet(root)
-    val base = // internal ingest bookkeeping never reaches readers
-      if (loaded.columns.contains("ingest_batch")) loaded.drop("ingest_batch")
-      else loaded
-    Seq("exchange" -> exchange, "symbol" -> symbol, "timeframe" -> timeframe)
-      .foldLeft(base) {
-        case (df, (c, Some(v))) => df.where(col(c) === v)
-        case (df, _) => df
-      }
+    val keys = Seq("exchange" -> exchange, "symbol" -> symbol, "timeframe" -> timeframe)
+    val series = CandleStore.series(spark, root, keys)
+    val loaded =
+      if (series.isEmpty) spark.read.parquet(root)
+      else spark.read.schema(CandleStore.schemaOf(spark, series))
+        .option("basePath", root).parquet(series.map(_.dir.toString): _*)
+    // internal ingest bookkeeping never reaches readers
+    keys.foldLeft(loaded.drop("ingest_batch")) {
+      case (df, (c, Some(v))) => df.where(col(c) === v)
+      case (df, _) => df
+    }
   }
 
   /** Resume point for one series (reference :275: resume from last candle). */
@@ -106,19 +127,17 @@ final class CandleStore(val root: String) {
     * accretes small files; compaction jobs write a fresh generation and
     * the catalog/path pointer swaps atomically — the standard object-store
     * pattern (an in-place rewrite could never atomically drop the old
-    * batch directories).
+    * batch directories). The source is opened through `read`, so it sheds
+    * `ingest_batch` there and lists no staging directory.
     */
   def compactTo(spark: SparkSession, destRoot: String): CandleStore = {
-    val all = spark.read.parquet(root)
-    val clean =
-      if (all.columns.contains("ingest_batch")) all.drop("ingest_batch") else all
+    val all = read(spark)
     // a mergeable-partial store (LSM ingest) folds its partials during
     // compaction, resetting merge-on-read fold depth to one row per bucket
     val folded =
-      if (clean.columns.contains("first_ts"))
-        Candles.mergePartials(clean,
-          Seq("exchange", "symbol", "timeframe", "bucket_ts"))
-      else clean
+      if (all.columns.contains("first_ts"))
+        Candles.mergePartials(all, Seq("exchange", "symbol", "timeframe", "bucket_ts"))
+      else all
     // time-sorted row groups: stats prune range scans
     CandleStore.bySeries(folded, Seq("exchange", "symbol", "timeframe"), "bucket_ts")
       .write
@@ -168,4 +187,75 @@ object CandleStore {
   private[graft] def bySeries(df: DataFrame, series: Seq[String], time: String): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, series.map(col): _*)
       .sortWithinPartitions((series :+ time).map(col): _*)
+
+  /** One series directory (`root/exchange=/symbol=/timeframe=`) with one
+    * of its data files; `batched` when its files sit under
+    * `ingest_batch=` directories.
+    */
+  private final case class Series(dir: Path, batched: Boolean, file: FileStatus)
+
+  /** Children of `dir` that readers see: Spark's hidden `_`/`.` names, such
+    * as `_SUCCESS`, checksums or a running write's `.spark-staging-*`, are
+    * skipped.
+    */
+  private def visible(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+
+  /** The series a read addresses, listed on the driver. A given key is one
+    * child directory, its value escaped as the writer escapes it
+    * (`BTC/USDT` -> `symbol=BTC%2FUSDT`); an absent key lists its level.
+    * Series without a data file are left out.
+    */
+  private def series(spark: SparkSession, root: String,
+                     keys: Seq[(String, Option[String])]): Seq[Series] = {
+    val rootDir = new Path(root)
+    val fs = rootDir.getFileSystem(spark.sessionState.newHadoopConf())
+    def isDir(p: Path): Boolean =
+      try fs.getFileStatus(p).isDirectory catch { case _: FileNotFoundException => false }
+    val dirs = keys.foldLeft(Seq(rootDir).filter(isDir)) {
+      case (level, (k, Some(v))) =>
+        level.map(new Path(_, s"$k=${ExternalCatalogUtils.escapePathName(v)}")).filter(isDir)
+      case (level, (_, None)) =>
+        level.flatMap(visible(fs, _).filter(_.isDirectory).map(_.getPath))
+    }
+    dirs.flatMap { dir =>
+      val kids = visible(fs, dir)
+      val file = kids.find(_.isFile).orElse(kids.iterator.filter(_.isDirectory)
+        .flatMap(b => visible(fs, b.getPath).find(_.isFile)).nextOption())
+      file.map(Series(dir, kids.exists(_.isDirectory), _))
+    }
+  }
+
+  /** The declared read schema of `series`: the data columns from one
+    * parquet footer per series, then the partition columns as strings, and
+    * `ingest_batch` as long when a series is batch-addressed. The data
+    * columns come from Spark's own `org.apache.spark.sql.parquet.row.metadata`
+    * footer key (a file without it converts its parquet schema), as Spark's
+    * schema inference does, but on the driver with no job. Series whose
+    * data columns differ (names and types, ignoring nullability) fail the
+    * read rather than read as nulls.
+    */
+  private def schemaOf(spark: SparkSession, series: Seq[Series]): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val footers = series.map { s =>
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(s.file, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      s.file.getPath -> ParquetFileFormat.readSchemaFromFooter(
+        new Footer(s.file.getPath, meta), converter)
+    }
+    def columns(t: StructType) = t.fields.map(f => f.name -> f.dataType).toSet
+    val (firstFile, data) = footers.head
+    footers.tail.find { case (_, t) => columns(t) != columns(data) }.foreach {
+      case (file, t) => throw new IllegalStateException(
+        s"candle series differ in data schema: $firstFile has ${data.simpleString}, " +
+          s"$file has ${t.simpleString}")
+    }
+    val partitions = Seq("exchange", "symbol", "timeframe").map(StructField(_, StringType)) ++
+      (if (series.exists(_.batched)) Seq(StructField("ingest_batch", LongType)) else Nil)
+    StructType(data.fields ++ partitions)
+  }
 }

@@ -30,8 +30,9 @@ object TradeSource {
   def json(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema).json(path)
 
+  /** Parquet tapes: columns beyond the canonical four are not read. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    spark.read.schema(schema).parquet(path).select(schema.fieldNames.toIndexedSeq.map(col): _*)
 
   /** Streaming variants for the live tail. */
   def csvStream(spark: SparkSession, path: String): DataFrame =

@@ -62,4 +62,39 @@ class IngestCliSpec extends SparkSpec {
       assert(!new java.io.File(csv).exists(), "an empty batch exported a CSV")
     } finally graft.tools.NullSweep.deleteRecursively(root)
   }
+
+  test("ingest with --sqlite scans the trades directory once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val tape = new java.io.File(Sf0001).getCanonicalPath
+    // every scan node a query ran, the cached relation's plan included:
+    // a cached resample is one plan shared by the queries that read it
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val tapeScans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans(qe.executedPlan).filter(_.relation.location.rootPaths
+          .exists(_.toUri.getPath.startsWith(tape))).foreach(tapeScans.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_ingest_scan").toString
+    graft.tools.Diagnostics.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      Ingest.run(spark, Array(Sf0001, s"$root/store", "binance", "1h", s"--sqlite=$root/sqlite"))
+      graft.tools.Diagnostics.drainListenerBus(spark)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.tools.NullSweep.deleteRecursively(root)
+    }
+    assert(tapeScans.size == 1, s"${tapeScans.size} scans of the trades directory")
+  }
 }

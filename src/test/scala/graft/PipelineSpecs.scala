@@ -847,6 +847,31 @@ class SimilaritySpec extends SparkSpec {
       s"both cosine calls should be canonicalized to one order: $cosines")
   }
 
+  test("CanonicalizeCosine prints the same operand order on independent builds") {
+    // each `cosinesimilarity(a, b)` call in the final plan and in every
+    // Materialize segment plan, expression ids stripped
+    def cosines(plans: Seq[String]): Seq[String] = plans.flatMap { text =>
+      val t = text.replaceAll("#\\d+L?", "")
+      "cosinesimilarity\\(".r.findAllMatchIn(t).map { m =>
+        var (i, depth) = (m.end, 1)
+        while (i < t.length && depth > 0) {
+          if (t(i) == '(') depth += 1 else if (t(i) == ')') depth -= 1
+          i += 1
+        }
+        t.substring(m.start, i)
+      }
+    }
+    def build(): Seq[String] = {
+      val (df, segs) = graft.core.Materialize.recordingSegmentPlans(
+        SparkEntry.query("semantic_dedup").build(spark, Sf0001))
+      try cosines(df.queryExecution.optimizedPlan.toString +: segs.map(_.toString))
+      finally graft.core.Materialize.releaseAll(spark, blocking = true)
+    }
+    val builds = Seq.fill(6)(build())
+    assert(builds.head.nonEmpty)
+    assert(builds.forall(_ == builds.head), builds.mkString("\n"))
+  }
+
   test("approx_count_distinct within 5% of exact") {
     val e = Tables.events(spark, Sf0001)
     val exact = e.select(countDistinct(col("user_id"))).head().getLong(0)

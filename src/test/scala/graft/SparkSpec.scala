@@ -21,4 +21,22 @@ trait SparkSpec extends AnyFunSuite {
 
   /** 2024-01-01T00:00:00Z */
   val T0 = 1704067200L
+
+  /** Spark jobs started while `body` runs (the listener bus drained on
+    * both sides).
+    */
+  def jobsRun(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    graft.tools.Diagnostics.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      body
+      graft.tools.Diagnostics.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(tap)
+    n.get
+  }
 }

@@ -12,13 +12,10 @@ tokens, and nothing else:
   - plan ids            `plan_id=12`                   -> `plan_id=N`
   - RDD ids             `MapPartitionsRDD[27]`, `rdd_27_0` -> `...RDD[N]`, `rdd_N_0`
   - call-site suffixes  `Materialize.scala:128`        -> `Materialize.scala:N`
+  - JVM lambda classes  `Analytics$$$Lambda$4445/0x00007f8d3926b2a8` -> `...$Lambda$N`
   - JVM identity hashes `TopKByScore@57ac220f`, `[D@7475f57e` -> `...@H`
-    (objects printed by their default toString: these differ between two
-    runs of the same commit)
-  - operand order of `cosinesimilarity(a, b)`: the CanonicalizeCosine rule
-    orders the two operands by semantic hash, which follows the expression
-    ids, so the printed order is an expression-id artifact; both operands
-    are printed in sorted order
+    (lambda class names and objects printed by their default toString
+    differ between two runs of the same commit)
 
 Prints a unified diff of the normalized texts; prints nothing and exits 0
 when the plans are the same, exits 1 when they differ.
@@ -33,46 +30,15 @@ _RULES = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\brdd_\d+"), "rdd_N"),
     (re.compile(r"\b(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"(?<=[\w\[$])@[0-9a-f]{1,8}\b"), "@H"),
 ]
-
-
-_COS = "cosinesimilarity("
-
-
-def _sort_cosine_operands(line):
-    """Rewrite each complete `cosinesimilarity(a, b)` as its operands in
-    sorted order; a call cut off by plan-string truncation stays as is."""
-    out, i = [], 0
-    while True:
-        j = line.find(_COS, i)
-        if j < 0:
-            return "".join(out) + line[i:]
-        out.append(line[i:j + len(_COS)])
-        k, depth, comma = j + len(_COS), 0, None
-        while k < len(line):
-            c = line[k]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif c == "," and depth == 0 and comma is None:
-                comma = k
-            k += 1
-        if k == len(line) or comma is None:  # truncated: leave the rest
-            return "".join(out) + line[j + len(_COS):]
-        args = sorted(_sort_cosine_operands(x.strip())
-                      for x in (line[j + len(_COS):comma], line[comma + 1:k]))
-        out.append(", ".join(args) + ")")
-        i = k + 1
 
 
 def normalize(line):
     for pat, rep in _RULES:
         line = pat.sub(rep, line)
-    return _sort_cosine_operands(line)
+    return line
 
 
 def load(path):
