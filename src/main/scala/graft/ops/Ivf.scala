@@ -9,11 +9,12 @@ import org.apache.spark.sql.types.DecimalType
   * corpus into cells; search scans only the query's `nprobe` nearest
   * cells. Complements the hyperplane-LSH path (ops.Similarity.lshTopK).
   *
-  * The cell-routed faces (kNN graph, SemDeDup, IVF-PQ) each exist once
-  * and take a [[Quantizer]]: the flat centroid matrix ([[Flat]], from
-  * [[train]]) or the two-level model ([[TwoLevelModel]], from
-  * [[trainTwoLevel]]). The quantizer owns routing, centroid lookups,
-  * probe ranking and persistence; the kernels never see which one ran.
+  * Every centroid face (IVF search, kNN graph, SemDeDup, sampling,
+  * outliers, screening, IVF-PQ) exists once and takes a [[Quantizer]]:
+  * the flat centroid matrix ([[Flat]], from [[train]]) or the two-level
+  * model ([[TwoLevelModel]], from [[trainTwoLevel]]). The quantizer owns
+  * routing, centroid lookups, probe ranking and persistence; the kernels
+  * never see which one ran.
   *
   * Scale design: the centroid model is a k-row driver-side array (exactly
   * like an MLlib model); assignment is a single fused map-side argmax
@@ -34,6 +35,10 @@ object Ivf {
       .select((Seq(col("vec_id"), col("embedding").cast("array<double>").as("v")) ++
         passthrough.map(col)): _*)
 
+  // a query frame's parsed vectors as (qid, qv)
+  private def queryVecs(queries: DataFrame): DataFrame =
+    vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+
   /** Map-only nearest-cell assignment via the fused native argmax.
     * Empty model (empty corpus at train time) → empty assignment with
     * the full schema — the ivfPqEncodedFrame empty contract, applied at
@@ -41,7 +46,7 @@ object Ivf {
     * empty upstream partition yields empty RESULTS, not a 2am crash
     * (EmptySweep pins this for the whole registry).
     */
-  def assign(e: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+  private[graft] def assign(e: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     if (centroids.isEmpty) e.limit(0).withColumn("cid", lit(0).cast("int"))
     else e.withColumn("cid", graft.functions.nearest_cell(
       col("v"), centroids.flatten, centroids.length, centroids.head.length))
@@ -54,24 +59,8 @@ object Ivf {
   private def centLit(cents: Array[Array[Double]]): Column =
     array(cents.toIndexedSeq.map(c => array(c.toIndexedSeq.map(lit(_)): _*)): _*)
 
-  /** Query-side probe ranking: each query's `nprobe` nearest cells —
-    * |q| × k rows, tiny by contract (row_number window is fine here).
-    */
-  private def probeFrame(queries: DataFrame, cents: Array[Array[Double]],
-                         nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val wq = Window.partitionBy(col("qid")).orderBy(col("c").desc, col("cid"))
-    vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-      .crossJoin(broadcast(centroidsDf(spark, cents)))
-      .select(col("qid"), col("qv"), col("cid"),
-        round(graft.functions.cosine_sim(col("qv"), col("cvec")), 6).as("c"))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-  }
-
-  /** The k-row centroid table as a local DataFrame (for query-side probe
-    * ranking, where the query set is small).
+  /** The k-row (cid, cvec) centroid table as a local DataFrame: the
+    * on-disk model rows and the two-level probe's broadcast side.
     */
   private def centroidsDf(spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
@@ -317,7 +306,7 @@ object Ivf {
     * [[pqReconFrame]]) — skips codebook training + encode entirely.
     */
   def pqSearchWith(enc: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+    val q = queryVecs(queries)
     Similarity.topK(enc.crossJoin(broadcast(q))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id2"),
@@ -380,8 +369,8 @@ object Ivf {
                                 m: Int, k: Int, passthrough: Seq[String],
                                 bookIters: Int = 1): DataFrame = {
     // empty model (empty corpus, or an explicitly empty quantizer) →
-    // empty frame with the full output schema — the
-    // incrementalSemanticWith empty-model contract, not a crash
+    // empty frame with the full output schema, not a crash: the codebook
+    // kernel needs the model's dimension
     if (quantizer.isEmpty)
       return (0 until m).foldLeft(
         vecs(emb, passthrough).limit(0).withColumn("cid", lit(0).cast("int"))
@@ -414,7 +403,7 @@ object Ivf {
     // ties at the same rounded ADC score (the r14 recall table measured
     // adc@5 = 0.04, invariant in m, before this fix; 16/16 codes live
     // and recall restored after). Hash order is the same engine-wide
-    // portable pick (semanticSample/screenSet) and the oracle replays it
+    // portable pick (semanticSample/screenOnCells) and the oracle replays it
     // verbatim; slot order stays (vec_id asc) so the codebook layout is
     // deterministic regardless of pick order.
     val seeds = res
@@ -469,10 +458,19 @@ object Ivf {
     */
   def ivfPqSearch(enc: DataFrame, quantizer: Quantizer, queries: DataFrame,
                   k: Int, nprobe: Int = 4): DataFrame =
-    Similarity.topK(enc.join(broadcast(quantizer.probes(queries, nprobe)), Seq("cid"))
+    Similarity.topK(probed(enc, quantizer.probes(queries, nprobe), "recon"), k)
+
+  /** The probed-cell candidates every IVF search scores: the (qid, qv,
+    * cid) probe rows broadcast onto the corpus rows of those cells, each
+    * pair scored by rounded cosine to `scoreCol` (the raw `v`, or the
+    * IVF-PQ `recon`), self-matches dropped. Emits (qid, id2, cos).
+    */
+  private[graft] def probed(cells: DataFrame, probes: DataFrame,
+                            scoreCol: String = "v"): DataFrame =
+    cells.join(broadcast(probes), Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("recon")), 6).as("cos")), k)
+        round(graft.functions.cosine_sim(col("qv"), col(scoreCol)), 6).as("cos"))
 
   /** IVF-PQ search with an exact re-rank stage — the standard last mile
     * of the compressed serving story: the ADC scan surfaces top-k′
@@ -509,7 +507,7 @@ object Ivf {
   private def exactRerank(adcTop: DataFrame, emb: DataFrame,
                           queries: DataFrame, k: Int): DataFrame = {
     val adc = adcTop.select(col("qid"), col("id2"))
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+    val q = queryVecs(queries)
     Similarity.topK(vecs(emb).select(col("vec_id").as("id2"), col("v"))
       .join(broadcast(adc), Seq("id2"))
       .join(broadcast(q), Seq("qid"))
@@ -525,27 +523,19 @@ object Ivf {
     * semantic distribution of the kept set. Emits (cid, vec_id, rn) for
     * kept vectors.
     *
-    * Scale design: cell assignment is the same fused map-side argmax as
-    * `searchTopK` (driver-side seed centroids, zero shuffle); the
-    * per-cell pick is the bounded TopKByScore heap — O(perCell) rows per
-    * cell per map task, NEVER a window over the k giant cell partitions.
+    * Scale design: cell assignment is the quantizer's fused map-side
+    * route (driver-side model, zero shuffle); the per-cell pick is the
+    * bounded TopKByScore heap — O(perCell) rows per cell per map task,
+    * NEVER a window over the k giant cell partitions.
     * The pick order is a portable md5-prefix hash of the vec_id
     * (deterministic "random", replayable in any engine), ties on vec_id.
     */
-  def semanticSample(emb: DataFrame, numCells: Int = 16, perCell: Int = 20): DataFrame =
-    semanticSampleWith(emb, train(emb, numCells, iters = 0), perCell)
-
-  /** [[semanticSample]] against a PRE-TRAINED quantizer (e.g. from
-    * `loadModel`) — train once per corpus snapshot, sample many times
-    * with different budgets.
-    */
-  def semanticSampleWith(emb: DataFrame, cents: Array[Array[Double]],
-                         perCell: Int = 20): DataFrame = {
+  def semanticSample(emb: DataFrame, quantizer: Quantizer,
+                     perCell: Int = 20): DataFrame = {
     import graft.functions.{ScoredId, TopKByScore}
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val e = vecs(emb)
-    val assigned = assign(e, cents)
-      .select(col("cid").cast("long").as("cid"), col("vec_id"),
+    val assigned = quantizer.route(vecs(emb))
+      .select(col("cid"), col("vec_id"),
         graft.functions.md5_prefix_long(col("vec_id").cast("string"), 8).as("h"))
     val agg = udaf(new TopKByScore(perCell), ExpressionEncoder[ScoredId]())
     assigned.groupBy(col("cid"))
@@ -570,10 +560,7 @@ object Ivf {
   def semanticNearDup(emb: DataFrame, quantizer: Quantizer,
                       threshold: Double = 0.4,
                       maxCellGuard: Int = NearDupMaxCellGuard): DataFrame =
-    if (quantizer.isEmpty) // empty model → no cells → no pairs (not a crash)
-      emb.select(lit(0L).as("cid"), col("vec_id").as("id1"),
-        col("vec_id").as("id2"), lit(0d).as("cos")).limit(0)
-    else cellPairs(guardCells(quantizer.cells(emb), maxCellGuard), threshold)
+    cellPairs(guardCells(quantizer.cells(emb), maxCellGuard), threshold)
 
   /** Default oversized-cell bound for the UNCAPPED diagnostic faces
     * ([[semanticNearDup]] family): a cell of m members emits m(m−1)/2
@@ -697,12 +684,7 @@ object Ivf {
     * partition.
     */
   def knnGraph(emb: DataFrame, quantizer: Quantizer, k: Int = 5): DataFrame =
-    if (quantizer.isEmpty) emptyGraph(emb) // no cells → empty graph (not a crash)
-    else knnGraphOnCells(quantizer.cells(emb), k)
-
-  private def emptyGraph(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("vec_id").as("neighbor_id"),
-      lit(0d).as("cos"), lit(0L).as("rn")).limit(0)
+    knnGraphOnCells(quantizer.cells(emb), k)
 
   /** The per-cell CANDIDATE cap for the kNN-graph kernel — the
     * [[cellPairsCapped]] hot-cell argument applied to neighbor
@@ -779,8 +761,7 @@ object Ivf {
     */
   def knnGraphCollapsed(emb: DataFrame, quantizer: Quantizer,
                         k: Int = 5): DataFrame =
-    if (quantizer.isEmpty) emptyGraph(emb)
-    else knnGraphCollapsedOnCells(quantizer.cells(emb), k)
+    knnGraphCollapsedOnCells(quantizer.cells(emb), k)
 
   private[graft] def knnGraphCollapsedOnCells(cells: DataFrame, k: Int,
                                               maxCand: Int = KnnMaxCand): DataFrame = {
@@ -853,17 +834,23 @@ object Ivf {
 
   // ─────────────────────────── the coarse quantizer ───────────────────────────
 
-  /** The coarse quantizer the cell-routed faces take: [[knnGraph]],
-    * [[knnGraphCollapsed]], [[knnComponents]], [[semanticNearDup]], the
-    * [[semanticDedup]] family, the IVF-PQ encode and searches, and the
-    * streaming screen and server. Every face runs the same kernels
-    * whichever quantizer routes it; the quantizer owns exactly what
-    * differs between its two implementations:
-    *  - assignment to the materialized (cid: long, vec_id, v) cell frame;
-    *  - the centroid a member is scored against (the dedup keeper) or
-    *    residualized against (IVF-PQ residuals and `recon`);
+  /** The coarse quantizer every centroid face takes: the IVF searches
+    * ([[searchTopK]], [[searchTopKFiltered]], [[annRecall]], the IVF-PQ
+    * encode and searches), the kNN graph faces, [[semanticNearDup]], the
+    * [[semanticDedup]] family, [[semanticSample]], [[embeddingOutliers]],
+    * [[incrementalSemantic]], hybrid retrieval and the streaming screens
+    * and servers. Every face runs the same kernels whichever quantizer
+    * routes it; the quantizer owns exactly what differs between its two
+    * implementations:
+    *  - routing: the map-side cell id of each row, and the materialized
+    *    (cid: long, vec_id, v) cell frame;
+    *  - the centroid a member is scored against (the dedup keeper, the
+    *    outlier score) or residualized against (IVF-PQ residuals and
+    *    `recon`);
     *  - query probe ranking (each query's `nprobe` nearest cells);
     *  - the on-disk form ([[saveModel]] / [[loadModel]]).
+    * An empty model (trained on an empty corpus) routes and probes
+    * nothing: empty frames with the full schema, never a crash.
     *
     * [[Flat]] looks its centroids up through literal arrays (no join).
     * [[TwoLevelModel]] looks them up through broadcast model-scale
@@ -882,14 +869,19 @@ object Ivf {
       * (long) — a fused map-side argmax usable on a stream. */
     private[graft] def route(e: DataFrame): DataFrame
 
+    /** The route of `emb`'s vectors cut once as (cid, vec_id, v). */
+    protected final def routeOnce(emb: DataFrame): DataFrame =
+      graft.core.Materialize.once(route(vecs(emb))
+        .select(col("cid"), col("vec_id"), col("v")))
+
     /** ONE materialized (cid: long, vec_id, v) cell scan of `emb`'s
       * vectors: pair sides, candidate joins and keeper scores all derive
       * from it, so the corpus is embedded and assigned exactly once. */
     private[graft] def cells(emb: DataFrame): DataFrame
 
-    /** Keeper scores (doc_id, ccos): each member's rounded cosine to its
-      * own cell's centroid. */
-    private[Ivf] def keeperCos(cells: DataFrame): DataFrame
+    /** (cid, vec_id, ccos) over a [[cells]] frame: each member's rounded
+      * cosine to its own cell's centroid. */
+    private[Ivf] def centroidCos(cells: DataFrame): DataFrame
 
     /** The MATERIALIZED IVF-PQ residual frame of `emb` (vec_id, v,
       * passthrough…, cid, res = v − centroid[cid]) and the add-back that
@@ -899,34 +891,44 @@ object Ivf {
 
     /** Each query's `nprobe` nearest cells: (qid, qv, cid), ranked by
       * rounded cosine desc, cid asc; |q| × nprobe rows. */
-    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame
+    private[graft] def probes(queries: DataFrame, nprobe: Int): DataFrame
 
     /** The parquet rows [[saveModel]] writes. */
     private[Ivf] def modelRows(spark: SparkSession): DataFrame
   }
 
+  // an empty model's route and probe: no rows, the full schema; a filter,
+  // not a limit, so a stream stays stateless
+  private def unrouted(e: DataFrame): DataFrame =
+    e.where(lit(false)).withColumn("cid", lit(0L))
+
+  private def unprobed(queries: DataFrame): DataFrame =
+    queryVecs(queries).where(lit(false)).withColumn("cid", lit(0))
+
   /** The flat quantizer: the k-row centroid matrix [[train]] returns.
     * Assignment costs k per row; lookups are literal arrays (`centLit`),
-    * fine at coarse-quantizer k; the probe ranks all k cells per query.
+    * fine at coarse-quantizer k; the probe ranks all k cells per query
+    * in one map-side expression, so a stream can run it.
     */
   final case class Flat(cents: Array[Array[Double]]) extends Quantizer {
     def isEmpty: Boolean = cents.isEmpty
     private[Ivf] def dim: Int = cents.head.length
 
     private[graft] def route(e: DataFrame): DataFrame =
-      e.withColumn("cid", graft.functions.nearest_cell(
+      if (isEmpty) unrouted(e)
+      else e.withColumn("cid", graft.functions.nearest_cell(
         col("v"), cents.flatten, cents.length, dim).cast("long"))
 
-    private[graft] def cells(emb: DataFrame): DataFrame =
-      graft.core.Materialize.once(assign(vecs(emb), cents)
-        .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v")))
+    private[graft] def cells(emb: DataFrame): DataFrame = routeOnce(emb)
 
-    // element_at(centLit, cid + 1): the member's centroid, map-side
+    // element_at(centLit, cid + 1): the member's centroid, map-side (an
+    // empty model has no cells to look up; the typed null keeps analysis)
     private def centroid: Column =
-      element_at(centLit(cents), (col("cid") + 1).cast("int"))
+      if (isEmpty) lit(null).cast("array<double>")
+      else element_at(centLit(cents), (col("cid") + 1).cast("int"))
 
-    private[Ivf] def keeperCos(cells: DataFrame): DataFrame =
-      cells.select(col("vec_id").as("doc_id"),
+    private[Ivf] def centroidCos(cells: DataFrame): DataFrame =
+      cells.select(col("cid"), col("vec_id"),
         round(graft.functions.cosine_sim(col("v"), centroid), 6).as("ccos"))
 
     private[Ivf] def residuals(emb: DataFrame, passthrough: Seq[String])
@@ -939,8 +941,29 @@ object Ivf {
         .drop("rescon"))
     }
 
-    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame =
-      probeFrame(queries, cents, nprobe)
+    /** Map-only: one array_sort of the k (rounded cosine, cid) structs
+      * per query over the literal centroid matrix, its first `nprobe`
+      * cids exploded. No window and no state, so a stream runs it. The
+      * expression embeds k·dim literals — the driver-side-model altitude
+      * of coarse k; a very large k pushes codegen to its interpreted
+      * fallback (still correct, slower). */
+    private[graft] def probes(queries: DataFrame, nprobe: Int): DataFrame = {
+      if (isEmpty) return unprobed(queries)
+      val scored = array(cents.indices.map { i =>
+        struct(
+          round(graft.functions.cosine_sim(col("qv"),
+            array(cents(i).toIndexedSeq.map(lit(_)): _*)), 6).as("c"),
+          lit(i).as("cid"))
+      }: _*)
+      val ranked = array_sort(scored, (l, r) =>
+        when(l.getField("c") > r.getField("c"), lit(-1))
+          .when(l.getField("c") < r.getField("c"), lit(1))
+          .when(l.getField("cid") < r.getField("cid"), lit(-1))
+          .when(l.getField("cid") > r.getField("cid"), lit(1))
+          .otherwise(lit(0)))
+      queryVecs(queries)
+        .withColumn("cid", explode(transform(slice(ranked, 1, nprobe), _.getField("cid"))))
+    }
 
     private[Ivf] def modelRows(spark: SparkSession): DataFrame =
       centroidsDf(spark, cents)
@@ -991,12 +1014,15 @@ object Ivf {
         if (corpus eq emb) && graft.core.Materialize.isReadable(a1) => a1 }
 
     private[graft] def route(e: DataFrame): DataFrame =
-      subAssign(assign(e, l1)).withColumn("cid", col("scid").cast("long"))
+      if (isEmpty) unrouted(e) else subRoute(assign(e, l1))
+
+    // the effective cell id over an L1-assigned frame
+    private def subRoute(a: DataFrame): DataFrame =
+      subAssign(a).withColumn("cid", col("scid").cast("long"))
 
     private[graft] def cells(emb: DataFrame): DataFrame =
-      graft.core.Materialize.once(
-        subAssign(trainedOn(emb).getOrElse(assign(vecs(emb), l1)))
-          .select(col("scid").cast("long").as("cid"), col("vec_id"), col("v")))
+      trainedOn(emb).fold(routeOnce(emb))(a1 => graft.core.Materialize.once(
+        subRoute(a1).select(col("cid"), col("vec_id"), col("v"))))
 
     // the (cid = scid: long, svec) sub-centroid frame — model-scale, so it
     // broadcasts for free where a k1·k2-element literal would not
@@ -1004,9 +1030,9 @@ object Ivf {
       broadcast(subCentroidsDf(spark, this)
         .select(col("scid").cast("long").as("cid"), col("svec")))
 
-    private[Ivf] def keeperCos(cells: DataFrame): DataFrame =
+    private[Ivf] def centroidCos(cells: DataFrame): DataFrame =
       cells.join(subCents(cells.sparkSession), "cid")
-        .select(col("vec_id").as("doc_id"),
+        .select(col("cid"), col("vec_id"),
           round(graft.functions.cosine_sim(col("v"), col("svec")), 6).as("ccos"))
 
     /** Residuals are taken against the member's SUB-centroid (its actual
@@ -1040,8 +1066,9 @@ object Ivf {
             .drop("rescon", "svec", "scid"))
       }
 
-    private[Ivf] def probes(queries: DataFrame, nprobe: Int): DataFrame =
-      probeFrameTwoLevel(queries, this, nprobe)
+    private[graft] def probes(queries: DataFrame, nprobe: Int): DataFrame =
+      if (isEmpty) unprobed(queries)
+      else probeFrameTwoLevel(queries, this, nprobe)
 
     /** One parquet of (level, cid, cvec) rows: level 1 = the k1 router
       * centroids, level 2 = the k1·k2 sub-centroids keyed by global scid. */
@@ -1194,7 +1221,7 @@ object Ivf {
                                  nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     val wq1 = Window.partitionBy(col("qid")).orderBy(col("c1").desc, col("cid1"))
-    val l1 = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+    val l1 = queryVecs(queries)
       .crossJoin(broadcast(centroidsDf(spark, tl.l1)
         .select(col("cid").as("cid1"), col("cvec"))))
       .select(col("qid"), col("qv"), col("cid1"),
@@ -1267,29 +1294,16 @@ object Ivf {
     * feature-engineering shape; downstream filters choose the action.
     *
     * Scale shape: the ONE materialized assignment scan feeds both the
-    * score (centroid lookup is a literal-array element_at, no join) and
+    * score (the quantizer's centroid lookup, as the dedup keeper's) and
     * the per-cell moments (rounded-6 scores in exact DECIMAL(9,6)/(18,12)
     * sums — the volumeAnomaly recipe); moments are cell-dim-scale and
     * broadcast back; z assembled in fixed-order doubles, single-member
     * cells null via guarded divisors.
     */
-  def embeddingOutliers(emb: DataFrame, numCells: Int = 16,
-                        z: Double = 2.0): DataFrame =
-    embeddingOutliersWith(emb, train(emb, numCells, iters = 0), z)
-
-  /** [[embeddingOutliers]] against a PRE-TRAINED quantizer. */
-  def embeddingOutliersWith(emb: DataFrame, cents: Array[Array[Double]],
-                            z: Double = 2.0): DataFrame = {
-    if (cents.isEmpty)
-      return emb.select(col("vec_id"), col("vec_id").cast("long").as("cid"),
-        lit(0d).as("ccos"), lit(0d).as("zscore"),
-        lit(false).as("is_outlier")).limit(0)
-    val cl = centLit(cents)
-    val cells = Flat(cents).cells(emb)
+  def embeddingOutliers(emb: DataFrame, quantizer: Quantizer,
+                        z: Double = 2.0): DataFrame = {
     val d6 = DecimalType(9, 6)
-    val scored = cells.select(col("cid"), col("vec_id"),
-      round(graft.functions.cosine_sim(col("v"),
-        element_at(cl, (col("cid") + 1).cast("int"))), 6).as("ccos"))
+    val scored = quantizer.centroidCos(quantizer.cells(emb))
     val stats = scored.groupBy(col("cid")).agg(
       count(lit(1)).as("n"),
       sum(col("ccos").cast(d6)).cast("double").as("s1"),
@@ -1340,17 +1354,13 @@ object Ivf {
 
   /** The dedup faces' shared shape: ONE materialized cell scan feeds the
     * component labels (`clusterCells`) and the keeper's centroid cosine.
-    * An empty model clusters nothing: empty frame, full output schema.
     */
   private def dedupOnCells(emb: DataFrame, quantizer: Quantizer,
-                           clusterCells: DataFrame => DataFrame): DataFrame =
-    if (quantizer.isEmpty)
-      emb.select(col("vec_id"), col("vec_id").as("cluster_id"),
-        lit(true).as("keep")).limit(0)
-    else {
-      val cells = quantizer.cells(emb)
-      keeperOf(clusterCells(cells), quantizer.keeperCos(cells))
-    }
+                           clusterCells: DataFrame => DataFrame): DataFrame = {
+    val cells = quantizer.cells(emb)
+    keeperOf(clusterCells(cells), quantizer.centroidCos(cells)
+      .select(col("vec_id").as("doc_id"), col("ccos")))
+  }
 
   /** The ONE keeper tail all dedup faces share (comp + per-doc
     * centroid-cosine scores → keep = first by (ccos asc, doc_id asc) per
@@ -1443,80 +1453,32 @@ object Ivf {
     * rounded cosine, ties on the lower corpus vec_id) and a `novel`
     * verdict (best cosine below `threshold`, or no comparison at all).
     *
-    * Scale design: the quantizer trains on the CORPUS (seed = k lowest
-    * corpus vec_ids, deterministic); each corpus cell contributes at most
-    * `maxCell` members to the screen set, drawn by portable md5-prefix
-    * hash order via the bounded TopKByScore heap (never a window over a
-    * giant cell partition — a cell is n/numCells of the corpus by
-    * construction). The screen set is therefore ≤ numCells·maxCell rows
-    * and BROADCASTS to the batch side: screening is map-only on the new
-    * batch, |batch|·maxCell comparisons, no shuffle of the corpus. The
-    * hash sample is the explicit recall price (same contract as the LSH
-    * bucket cap): a corpus near-dup cluster of m members in a cell of M
-    * is missed by the whole sample with probability ≈ (1 − maxCell/M)^m,
-    * and `novel` is a screening verdict, not an exact-nearest claim —
-    * semanticNearDup/searchTopK are the exact in-corpus tools. Both the
-    * sample and the member fetch derive from ONE materialized assignment
-    * scan; `incrementalSemanticWith` reuses a pre-trained model and the
-    * screen set is the reusable nightly artifact.
+    * Scale design: the quantizer is trained on the CORPUS; each corpus
+    * cell contributes at most `maxCell` members to the screen set, drawn
+    * by portable md5-prefix hash order via the bounded TopKByScore heap
+    * (never a window over a giant cell partition — a cell is n/cells of
+    * the corpus by construction). The screen set is therefore ≤
+    * cells·maxCell rows and BROADCASTS to the batch side: screening is
+    * map-only on the new batch, |batch|·maxCell comparisons, no shuffle
+    * of the corpus. The hash sample is the explicit recall price (same
+    * contract as the LSH bucket cap): a corpus near-dup cluster of m
+    * members in a cell of M is missed by the whole sample with
+    * probability ≈ (1 − maxCell/M)^m, and `novel` is a screening
+    * verdict, not an exact-nearest claim — semanticNearDup/searchTopK
+    * are the exact in-corpus tools. Both the sample and the member fetch
+    * derive from ONE materialized cell scan of the corpus
+    * ([[screenOnCells]]); the new batch takes the quantizer's map-side
+    * route. Train once per corpus snapshot and screen every nightly
+    * batch against the same model.
     */
   def incrementalSemantic(newEmb: DataFrame, corpus: DataFrame,
-                          numCells: Int = 16, threshold: Double = 0.4,
-                          maxCell: Int = 64): DataFrame =
-    incrementalSemanticWith(newEmb, corpus, train(corpus, numCells, iters = 0),
-      threshold, maxCell)
-
-  /** The ≤ numCells·maxCell hash-sampled screen set (cid, cvid, cv):
-    * each corpus cell's ≤ maxCell members drawn by portable md5-prefix
-    * order via the bounded TopKByScore heap (score = -h: h < 2^32 is
-    * exact in a double, so (h asc, vec_id asc) — the same portable total
-    * order semanticSample and the oracle replay), ids joined back to the
-    * ONE materialized assignment scan for their vectors. Dim-scale by
-    * construction — the broadcastable nightly screening artifact shared
-    * by [[incrementalSemanticWith]] and the streaming screen.
-    */
-  private[graft] def screenSet(corpus: DataFrame, cents: Array[Array[Double]],
-                               maxCell: Int): DataFrame =
-    screenOnCells(Flat(cents).cells(corpus), maxCell)
-
-  /** The per-cell ≤ maxCell hash-sampled representative set over an
-    * ALREADY-ASSIGNED (cid, vec_id, v) frame — the [[screenSet]] kernel,
-    * factored out so the batch semantic-dedup cap ([[cellPairsCapped]])
-    * and the incremental screen share one implementation (and one
-    * portable pick order: md5-prefix asc, vec_id asc — replayable by the
-    * oracle's row_number window). Emits (cid, cvid, cv).
-    */
-  private[graft] def screenOnCells(cells: DataFrame, maxCell: Int): DataFrame = {
-    import graft.functions.{ScoredId, TopKByScore}
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val agg = udaf(new TopKByScore(maxCell), ExpressionEncoder[ScoredId]())
-    cells
-      .select(col("cid"), col("vec_id"),
-        graft.functions.md5_prefix_long(col("vec_id").cast("string"), 8).as("h"))
-      .groupBy(col("cid"))
-      .agg(agg((-col("h")).cast("double"), col("vec_id")).as("top"))
-      .select(col("cid"), explode(col("top")).as("s"))
-      .select(col("cid"), col("s.id").as("vec_id"))
-      .join(cells, Seq("cid", "vec_id"))
-      .select(col("cid"), col("vec_id").as("cvid"), col("v").as("cv"))
-  }
-
-  /** [[incrementalSemantic]] against a PRE-TRAINED quantizer — train once
-    * per corpus snapshot, screen every nightly batch against it.
-    */
-  def incrementalSemanticWith(newEmb: DataFrame, corpus: DataFrame,
-                              cents: Array[Array[Double]],
-                              threshold: Double = 0.4,
-                              maxCell: Int = 64): DataFrame = {
-    // empty corpus -> empty model: everything is trivially novel (the
-    // incrementalDedup empty-corpus contract, not a crash)
-    if (cents.isEmpty)
-      return newEmb.select(col("vec_id"), lit(0L).as("n_screened"),
-        lit(null).cast("long").as("best_match"),
-        lit(null).cast("double").as("best_cos"), lit(true).as("novel"))
-    val screen = screenSet(corpus, cents, maxCell)
-    val scored = assign(vecs(newEmb), cents)
-      .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v"))
+                          quantizer: Quantizer, threshold: Double = 0.4,
+                          maxCell: Int = 64): DataFrame = {
+    // an empty model screens nothing: every vector is novel with
+    // n_screened 0 (the incrementalDedup empty-corpus contract)
+    val screen = screenOnCells(quantizer.cells(corpus), maxCell)
+    val scored = quantizer.route(vecs(newEmb))
+      .select(col("cid"), col("vec_id"), col("v"))
       .join(broadcast(screen), Seq("cid"))
       .select(col("vec_id"), col("cvid"),
         round(graft.functions.cosine_sim(col("v"), col("cv")), 6).as("cos"))
@@ -1535,32 +1497,49 @@ object Ivf {
         (col("best_cos").isNull || col("best_cos") < threshold).as("novel"))
   }
 
+  /** The per-cell ≤ maxCell hash-sampled representative set over an
+    * ALREADY-ASSIGNED (cid, vec_id, v) frame: each cell's ≤ maxCell
+    * members drawn by portable md5-prefix order via the bounded
+    * TopKByScore heap (score = -h: h < 2^32 is exact in a double, so
+    * (h asc, vec_id asc) — the order semanticSample and the oracle's
+    * row_number window replay), ids joined back to the cell frame for
+    * their vectors. Dim-scale by construction: the broadcastable screen
+    * set of [[incrementalSemantic]] and the streaming screen, and the
+    * representative set of the semantic-dedup cap ([[cellPairsCapped]]).
+    * Emits (cid, cvid, cv).
+    */
+  private[graft] def screenOnCells(cells: DataFrame, maxCell: Int): DataFrame = {
+    import graft.functions.{ScoredId, TopKByScore}
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    val agg = udaf(new TopKByScore(maxCell), ExpressionEncoder[ScoredId]())
+    cells
+      .select(col("cid"), col("vec_id"),
+        graft.functions.md5_prefix_long(col("vec_id").cast("string"), 8).as("h"))
+      .groupBy(col("cid"))
+      .agg(agg((-col("h")).cast("double"), col("vec_id")).as("top"))
+      .select(col("cid"), explode(col("top")).as("s"))
+      .select(col("cid"), col("s.id").as("vec_id"))
+      .join(cells, Seq("cid", "vec_id"))
+      .select(col("cid"), col("vec_id").as("cvid"), col("v").as("cv"))
+  }
+
   /** Approximate top-k: scan only each query's `nprobe` nearest cells.
     * Each vector lives in exactly one cell and probes are distinct cells,
-    * so candidates are never duplicated.
-    *
-    * Self-contained form: trains the quantizer in place (the oracle query
-    * replays the whole pipeline). For repeated searches over the same
-    * corpus, `train` once and pass the model to `searchTopKWith` — Lloyd
-    * does not re-run per query.
+    * so candidates are never duplicated. Train the quantizer once per
+    * corpus snapshot (or [[loadModel]] it) and search many times.
     */
-  def searchTopK(emb: DataFrame, queries: DataFrame, k: Int,
-                 numCells: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame =
-    searchTopKWith(emb, queries, k, train(emb, numCells, iters), nprobe)
+  def searchTopK(emb: DataFrame, quantizer: Quantizer, queries: DataFrame,
+                 k: Int, nprobe: Int = 4): DataFrame =
+    Similarity.topK(candidates(emb, quantizer, queries, nprobe), k)
 
-  /** Search against a PRE-TRAINED quantizer (the k-row driver-side
-    * centroid matrix returned by `train`) — the serving-path API: train
-    * once per corpus snapshot, search many times.
+  /** [[searchTopK]] before its top-k close: (qid, id2, cos) for every
+    * corpus vector in each query's probed cells. The corpus side is the
+    * quantizer's map-side route, so with a flat model (map-only probe)
+    * `queries` may be a stream (StreamingAnnServe).
     */
-  def searchTopKWith(emb: DataFrame, queries: DataFrame, k: Int,
-                     cents: Array[Array[Double]], nprobe: Int = 4): DataFrame = {
-    val cells = assign(vecs(emb), cents) // vec_id, v, cid
-    val probes = probeFrame(queries, cents, nprobe)
-    Similarity.topK(cells.join(broadcast(probes), Seq("cid"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("v")), 6).as("cos")), k)
-  }
+  private[graft] def candidates(emb: DataFrame, quantizer: Quantizer,
+                                queries: DataFrame, nprobe: Int): DataFrame =
+    probed(quantizer.route(vecs(emb)), quantizer.probes(queries, nprobe))
 
   /** INDEX-QUALITY monitor — recall@k of the IVF probe scan against the
     * exact brute-force top-k, per query: the production gauge a nightly
@@ -1570,29 +1549,24 @@ object Ivf {
     * (denominator from the exact set, so a corpus smaller than k+1
     * still reads 1.0 when the probe finds everything).
     *
-    * Scale design: ONE materialized corpus scan (assign fused map-side)
-    * feeds BOTH the brute scoring branch and the probed-cell branch —
-    * the corpus is read once, not twice; queries broadcast in both
-    * branches; each branch collapses through the bounded top-k heap
+    * Scale design: ONE materialized cell scan of the corpus feeds BOTH
+    * the brute scoring branch and the probed-cell branch — the corpus
+    * is read once, not twice; queries broadcast in both branches; each
+    * branch collapses through the bounded top-k heap
     * aggregate before the overlap join, which therefore joins two
     * |q|·k-row frames (broadcast). Ground truth is inherently a full
     * scan per query batch — run it on a SAMPLED query set at 100 TB
     * (the sampling is the caller's k/queries choice, not hidden here).
     */
-  def annRecall(emb: DataFrame, queries: DataFrame, k: Int,
-                numCells: Int = 16, nprobe: Int = 4): DataFrame = {
-    val cents = train(emb, numCells, iters = 0)
-    val base = graft.core.Materialize.once(assign(vecs(emb), cents))
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
+  def annRecall(emb: DataFrame, quantizer: Quantizer, queries: DataFrame,
+                k: Int, nprobe: Int = 4): DataFrame = {
+    val base = quantizer.cells(emb)
+    val q = queryVecs(queries)
     val brute = Similarity.topK(base.join(broadcast(q),
         col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id2"),
         round(graft.functions.cosine_sim(col("qv"), col("v")), 6).as("cos")), k)
-    val probes = probeFrame(queries, cents, nprobe)
-    val ivf = Similarity.topK(base.join(broadcast(probes), Seq("cid"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("v")), 6).as("cos")), k)
+    val ivf = Similarity.topK(probed(base, quantizer.probes(queries, nprobe)), k)
     brute.select(col("qid"), col("id2"))
       .join(broadcast(ivf.select(col("qid"), col("id2"), lit(1).as("hit"))),
         Seq("qid", "id2"), "left")
@@ -1634,39 +1608,25 @@ object Ivf {
     * vec_id, joined-in metadata) — WHERE-composable: pre-join metadata
     * onto `emb` and reference it in `pred`.
     */
-  def searchTopKFiltered(emb: DataFrame, queries: DataFrame, k: Int,
-                         pred: Column, numCells: Int = 16, nprobe: Int = 4,
-                         iters: Int = 2): DataFrame =
-    // the quantizer trains on the FULL corpus: the index is built once,
-    // unfiltered; predicates arrive per query at serving time
-    searchTopKFilteredWith(emb, queries, k, pred, train(emb, numCells, iters), nprobe)
+  def searchTopKFiltered(emb: DataFrame, quantizer: Quantizer,
+                         queries: DataFrame, k: Int, pred: Column,
+                         nprobe: Int = 4): DataFrame =
+    // pred pushed to the corpus scan; the quantizer was trained on the
+    // FULL corpus (the index is built once, unfiltered; predicates arrive
+    // per query at serving time)
+    filteredTopK(quantizer.route(vecs(emb.where(pred))), quantizer, queries, k, nprobe)
 
-  /** [[searchTopKFiltered]] against a PRE-TRAINED quantizer (the serving
-    * path: train once per corpus snapshot, search under many predicates).
+  /** Shared probe+rescue kernel over a routed survivor frame (vec_id,
+    * `scoreCol` = v or recon, cid) — the raw-vector and IVF-PQ filtered
+    * searches share it. Guarantees k rows per query whenever ≥ k
+    * survivors exist.
     */
-  def searchTopKFilteredWith(emb: DataFrame, queries: DataFrame, k: Int,
-                             pred: Column, cents: Array[Array[Double]],
-                             nprobe: Int = 4): DataFrame = {
-    val survivors = vecs(emb.where(pred)) // pred pushed to the corpus scan
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    filteredTopK(assign(survivors, cents), q,
-      probeFrame(q.select(col("qid").as("vec_id"), col("qv").as("embedding")),
-        cents, nprobe), k)
-  }
-
-  /** Shared probe+rescue kernel over an assigned survivor frame
-    * (vec_id, v|recon as `scoreCol`, cid) and a (qid, qv, cid) probe
-    * frame — the raw-vector and IVF-PQ filtered searches share it.
-    * Guarantees k rows per query whenever ≥ k survivors exist.
-    */
-  private def filteredTopK(cells: DataFrame, q: DataFrame,
-                           probes: DataFrame, k: Int,
+  private def filteredTopK(cells: DataFrame, quantizer: Quantizer,
+                           queries: DataFrame, k: Int, nprobe: Int,
                            scoreCol: String = "v"): DataFrame = {
+    val q = queryVecs(queries)
     val cand = graft.core.Materialize.once(
-      cells.join(broadcast(probes), Seq("cid"))
-        .where(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("id2"),
-          round(graft.functions.cosine_sim(col("qv"), col(scoreCol)), 6).as("cos")))
+      probed(cells, quantizer.probes(queries, nprobe), scoreCol))
     // per-query candidate counts are ≤ |q| rows — broadcast them (left
     // outer, build right) instead of letting the unknown-size aggregate
     // estimate fall into a sort-merge join of two query-dim frames
@@ -1684,7 +1644,7 @@ object Ivf {
   }
 
   /** FILTERED IVF-PQ top-k against an encoded corpus frame — the
-    * compressed-index sibling of [[searchTopKFilteredWith]]. `pred` is a
+    * compressed-index sibling of [[searchTopKFiltered]]. `pred` is a
     * Column over `enc`'s columns (vec_id, cid, recon, plus the
     * `passthrough` metadata [[ivfPqReconFrame]] carried through the
     * map-only encode — never a corpus-scale metadata join). The
@@ -1695,11 +1655,8 @@ object Ivf {
     */
   def ivfPqSearchFiltered(enc: DataFrame, quantizer: Quantizer,
                           queries: DataFrame, k: Int, pred: Column,
-                          nprobe: Int = 4): DataFrame = {
-    val q = vecs(queries).select(col("vec_id").as("qid"), col("v").as("qv"))
-    filteredTopK(enc.where(pred), q, quantizer.probes(queries, nprobe), k,
-      scoreCol = "recon")
-  }
+                          nprobe: Int = 4): DataFrame =
+    filteredTopK(enc.where(pred), quantizer, queries, k, nprobe, scoreCol = "recon")
 
   /** FILTERED IVF-PQ search with the exact re-rank last mile: the
     * filtered ADC scan surfaces top-k′ (k′ = kFactor·k) survivors, then

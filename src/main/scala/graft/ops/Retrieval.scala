@@ -78,16 +78,16 @@ object Retrieval {
   }
 
   /** [[hybridRrfMulti]] with the semantic branch served by a PRE-TRAINED
-    * IVF model (`Ivf.searchTopKWith` — probes prune the corpus to
+    * IVF quantizer ([[Ivf.searchTopK]] — probes prune the corpus to
     * `nprobe` cells) instead of the exact scan: the scale path a serving
-    * job runs against a persisted index. At nprobe = numCells the probe
-    * scan degenerates to the exact scan, so results equal
-    * [[hybridRrfMulti]] (the spec's equality anchor).
+    * job runs against a persisted index. Probing every cell degenerates
+    * to the exact scan, so results then equal [[hybridRrfMulti]] (the
+    * spec's equality anchor).
     */
-  def hybridRrfMultiWith(docs: DataFrame, emb: DataFrame, queries: DataFrame,
-                         cents: Array[Array[Double]], nprobe: Int = 4,
-                         n: Int = 20, k: Int = 10, c: Int = 60): DataFrame = {
-    val semTop = Ivf.searchTopKWith(emb, queries, n, cents, nprobe)
+  def hybridRrfIvf(docs: DataFrame, emb: DataFrame, queries: DataFrame,
+                   quantizer: Ivf.Quantizer, nprobe: Int = 4,
+                   n: Int = 20, k: Int = 10, c: Int = 60): DataFrame = {
+    val semTop = Ivf.searchTopK(emb, quantizer, queries, n, nprobe)
       .select(col("qid"), col("id2").as("doc_id"), col("rn").as("sem_rn"))
     fuse(lexTopMulti(docs, queries, n), semTop, k, c)
   }

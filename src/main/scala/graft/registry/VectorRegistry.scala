@@ -242,7 +242,7 @@ private[graft] object VectorRegistry {
       annLshMultiOracleSql(k = 5, numPlanes = 6, numTables = 4)),
     Query("ann_ivf", (s, dir) => {
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.searchTopK(e, e.where(col("vec_id") < 10), 5, iters = 0)
+      onFlat(e)(graft.ops.Ivf.searchTopK(_, _, e.where(col("vec_id") < 10), 5))
     },
       annIvfOracleSql(k = 5, numCells = 16, nprobe = 4)),
     Query("ann_recall", (s, dir) => {
@@ -250,7 +250,7 @@ private[graft] object VectorRegistry {
       // brute force, per query — ONE materialized corpus scan feeds both
       // branches, overlap joins two |q|·k frames (broadcast)
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.annRecall(e, e.where(col("vec_id") < 10), 5)
+      onFlat(e)(graft.ops.Ivf.annRecall(_, _, e.where(col("vec_id") < 10), 5))
     },
       // recall@k monitor: the ann_topk brute CTE and the ann_ivf probe
       // CTEs (same seeds/assign/probes templates), overlap-joined per query
@@ -282,7 +282,8 @@ private[graft] object VectorRegistry {
       // 2 Lloyd rounds — exercises deterministic distributed k-means; the
       // oracle replays both rounds (decimal-exact centroid means)
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.searchTopK(e, e.where(col("vec_id") < 10), 5, iters = 2)
+      graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, iters = 2)),
+        e.where(col("vec_id") < 10), 5)
     },
       annIvfTrainedOracleSql(k = 5, numCells = 16, nprobe = 4, iters = 2)),
     Query("label_confusion", (s, dir) =>
@@ -303,7 +304,7 @@ private[graft] object VectorRegistry {
       // cluster-balanced deterministic subsample: every quantizer cell
       // contributes up to perCell vectors picked by portable hash order —
       // the diversity-preserving alternative to a uniform corpus sample
-      graft.ops.Ivf.semanticSample(Tables.table(s, dir, "embeddings")),
+      onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.semanticSample(_, _)),
       // semanticSample replay: the ann_ivf seed/assignment CTEs + the
       // portable md5-prefix hash pick per cell (h asc, vec_id asc)
       "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
@@ -596,7 +597,7 @@ private[graft] object VectorRegistry {
     Query("embedding_outliers", (s, dir) =>
       // per-cell centroid-cosine z-score screen: the anti-prototype drop
       // (SemDeDup's complement); one assignment scan, broadcast moments
-      graft.ops.Ivf.embeddingOutliers(Tables.table(s, dir, "embeddings")),
+      onFlat(Tables.table(s, dir, "embeddings"))(graft.ops.Ivf.embeddingOutliers(_, _)),
       // outlier replay: the same seeded-centroid assignment argmax keeps the
       // rounded centroid cosine; per-cell moments in exact DECIMAL sums, z in
       // identical double op order, single-member cells null via CASE guards
@@ -696,8 +697,8 @@ private[graft] object VectorRegistry {
       // corpus, each cell contributes a hash-sampled <=maxCell screen
       // set that BROADCASTS to the batch
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.incrementalSemantic(
-        e.where(col("vec_id") % 10 === 0), e.where(col("vec_id") % 10 =!= 0))
+      onFlat(e.where(col("vec_id") % 10 =!= 0))(
+        graft.ops.Ivf.incrementalSemantic(e.where(col("vec_id") % 10 === 0), _, _))
     },
       // incrementalSemantic replay: corpus-trained seed centroids, both
       // sides assigned, per-cell hash-order screen sample (<= maxCell),
@@ -813,8 +814,8 @@ private[graft] object VectorRegistry {
       // k=10 over ~50 survivors across 16 cells so the oracle exercises
       // BOTH phases (some probes underfill, some don't)
       val e = Tables.table(s, dir, "embeddings")
-      graft.ops.Ivf.searchTopKFiltered(e, e.where(col("vec_id") < 10), 10,
-        col("label") === 7, iters = 0)
+      onFlat(e)(graft.ops.Ivf.searchTopKFiltered(_, _, e.where(col("vec_id") < 10), 10,
+        col("label") === 7))
     },
       annIvfFilteredOracleSql(k = 10, numCells = 16,
         nprobe = 4, label = 7)),

@@ -2,88 +2,48 @@ package graft.streaming
 
 import graft.ops.{Ivf, Similarity}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** ANN model SERVING: query vectors arriving on a stream, scored against
   * a static corpus under a PRE-TRAINED index model — the streaming
-  * sibling of `Ivf.searchTopKWith`/`Ivf.pqSearchWith` that completes the
+  * sibling of `Ivf.searchTopK`/`Ivf.pqSearchWith` that completes the
   * batch → incremental → streaming triad the dedup family already has
   * (train/encode once per corpus snapshot in the indexing job, serve
   * every arriving query against the persisted model via `Ivf.loadModel`).
   *
-  * Scale design: the centroid model is a driver-side k-row matrix
-  * (exactly like the batch path), so per-query probe ranking is a fused
-  * MAP-ONLY literal-array expression — top-`nprobe` cells by (rounded
-  * cosine desc, cid asc), the identical contract to the batch path's
-  * window ranking, with no window (streaming frames can't sort) and no
-  * state. Candidate generation is then a stream-STATIC equi-join on the
-  * cell id — stateless streaming, no watermark, plain append; the static
-  * side is fixed per corpus snapshot (persist it across micro-batches).
-  * A query's candidates all materialize inside its arrival micro-batch
+  * Scale design: the quantizer routes the corpus and ranks each query's
+  * probes, exactly as in the batch path. A flat model's probe is one
+  * map-only expression over its literal centroids (no window, no state),
+  * so candidate generation is a stream-STATIC equi-join on the cell id —
+  * stateless streaming, no watermark, plain append; the static side is
+  * fixed per corpus snapshot (persist it across micro-batches). A
+  * query's candidates all materialize inside its arrival micro-batch
   * (the corpus side is static), so the exact per-query top-k needs no
-  * cross-batch state either: [[serve]] closes each batch with the same
-  * bounded-heap TopKByScore aggregate the batch path uses — stream
-  * results equal `Ivf.searchTopKWith` row-for-row (spec-pinned).
+  * cross-batch state either: each batch closes with the same
+  * bounded-heap TopKByScore aggregate the batch path uses. A two-level
+  * model's hierarchical probe ranks with windows over broadcast model
+  * frames, which a stream cannot run, so each micro-batch replays the
+  * batch kernel. Either way stream results equal the batch search
+  * row-for-row (spec-pinned).
   */
 object StreamingAnnServe {
-
-  /** Top-`nprobe` cell ids for a query vector, by (rounded cosine desc,
-    * cid asc) — the batch probe-ranking contract (Ivf.searchTopKWith) as
-    * one map-side expression over the literal centroid matrix.
-    *
-    * The expression embeds k·dim literals (the model), which is exactly
-    * the driver-side-model altitude the batch path uses — fine for the
-    * k ≤ a-few-hundred coarse quantizers IVF wants; a very large k would
-    * push codegen to its interpreted fallback (still correct, slower).
-    */
-  private def probeCids(qv: Column, cents: Array[Array[Double]], nprobe: Int): Column = {
-    val scored = array(cents.indices.map { i =>
-      struct(
-        round(graft.functions.cosine_sim(qv,
-          array(cents(i).toIndexedSeq.map(lit(_)): _*)), 6).as("c"),
-        lit(i).as("cid"))
-    }: _*)
-    val sorted = array_sort(scored, (l, r) =>
-      when(l.getField("c") > r.getField("c"), lit(-1))
-        .when(l.getField("c") < r.getField("c"), lit(1))
-        .when(l.getField("cid") < r.getField("cid"), lit(-1))
-        .when(l.getField("cid") > r.getField("cid"), lit(1))
-        .otherwise(lit(0)))
-    transform(slice(sorted, 1, nprobe), s => s.getField("cid"))
-  }
 
   /** Stateless stream-static candidate scoring: (qid, id2, cos) for every
     * corpus vector in the query's probed cells. Append-mode safe (no
     * aggregation, no watermark, no state store); each match emits exactly
     * once, in the query's arrival micro-batch. Compose downstream (e.g.
     * a threshold filter for radius search) or close with [[serve]] for
-    * exact per-query top-k.
+    * exact per-query top-k. A stream needs a flat model here (the
+    * two-level probe's windows do not run on a stream); a batch query
+    * frame takes either quantizer.
     */
-  def candidates(queries: DataFrame, emb: DataFrame,
-                 cents: Array[Array[Double]], nprobe: Int = 4): DataFrame = {
-    val dim = cents.head.length
-    // static side: one fused map-side argmax per corpus vector, fixed per
-    // corpus snapshot — persist/cache the input across micro-batches
-    val cells = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("cid", graft.functions.nearest_cell(
-        col("v"), cents.flatten, cents.length, dim))
-    queries
-      .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
-      .withColumn("cid", explode(probeCids(col("qv"), cents, nprobe)))
-      .join(cells, Seq("cid"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("id2"),
-        round(graft.functions.cosine_sim(col("qv"), col("v")), 6).as("cos"))
-  }
+  def candidates(queries: DataFrame, emb: DataFrame, quantizer: Ivf.Quantizer,
+                 nprobe: Int = 4): DataFrame =
+    Ivf.candidates(emb, quantizer, queries, nprobe)
 
-  /** Serve exact IVF top-k per arriving query: candidates stream-static
-    * joined, each micro-batch closed with the bounded TopKByScore
-    * aggregate (at most k rows per query per map task — the batch
-    * ranking kernel). `sink` receives each batch's (qid, id2, cos, rn)
-    * top-k frame; at stream end the union of emissions equals the batch
-    * `Ivf.searchTopKWith` over the same queries.
+  /** Serve exact IVF top-k per arriving query. `sink` receives each
+    * batch's (qid, id2, cos, rn) top-k frame; at stream end the union of
+    * emissions equals the batch `Ivf.searchTopK` over the same queries.
     *
     * ASSUMES each qid arrives in exactly ONE micro-batch (like the
     * no-watermark note below, this is the serving contract, not a checked
@@ -92,14 +52,9 @@ object StreamingAnnServe {
     * `batchId` precisely so a delivery-ambiguous source can key or
     * deduplicate emissions per batch downstream.
     */
-  def serve(queries: DataFrame, emb: DataFrame, cents: Array[Array[Double]],
+  def serve(queries: DataFrame, emb: DataFrame, quantizer: Ivf.Quantizer,
             k: Int, nprobe: Int = 4)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    candidates(queries, emb, cents, nprobe).writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Similarity.topK(batch, k), batchId)
-      }
-      .start()
+    serveProbed(queries, quantizer, k, Ivf.candidates(emb, quantizer, _, nprobe))(sink)
 
   /** Serve PQ (compressed-corpus) top-k per arriving query against a
     * pre-encoded (vec_id, recon) frame from `Ivf.pqReconFrame` — the
@@ -121,47 +76,38 @@ object StreamingAnnServe {
 
   /** Serve IVF-PQ top-k per arriving query against a pre-encoded
     * (vec_id, cid, recon) frame from `Ivf.ivfPqReconFrame` plus the
-    * quantizer it was encoded under. Stream results equal the batch
+    * quantizer it was encoded under: probed cells only, ADC scoring on
+    * the residual reconstruction. Stream results equal the batch
     * `Ivf.ivfPqSearch` row-for-row (spec-pinned, both quantizers); same
-    * zero-state/no-watermark shape and distinct-qid-per-stream
+    * dispatch, zero-state/no-watermark shape and distinct-qid-per-stream
     * assumption as [[serve]].
-    *  - [[Ivf.Flat]]: the full memory-bound serving path — map-only probe
-    *    ranking (the [[probeCids]] literal-matrix contract), stateless
-    *    stream-static join on the PROBED cell ids only, ADC scoring on
-    *    the residual reconstruction, bounded top-k close per micro-batch.
-    *  - [[Ivf.TwoLevelModel]]: its hierarchical probe (nprobe1 L1 blocks
-    *    → best nprobe sub-cells) ranks with windows over broadcast
-    *    model frames, which a stream cannot run, so each micro-batch
-    *    replays the batch kernel.
     */
   def serveIvfPq(queries: DataFrame, enc: DataFrame,
                  quantizer: Ivf.Quantizer, k: Int, nprobe: Int = 4)
                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    serveProbed(queries, quantizer, k,
+      q => Ivf.probed(enc, quantizer.probes(q, nprobe), "recon"))(sink)
+
+  /** The one serving dispatch under [[serve]] and [[serveIvfPq]]: `cand`
+    * builds a query frame's probed-cell candidates, and each micro-batch
+    * closes with the bounded top-k. A flat model's map-only probe lets
+    * the stream itself join the static corpus (stateless stream-static);
+    * a two-level model replays the batch kernel in each micro-batch.
+    */
+  private def serveProbed(queries: DataFrame, quantizer: Ivf.Quantizer, k: Int,
+                          cand: DataFrame => DataFrame)
+                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val top = (batch: DataFrame, batchId: Long) => sink(Similarity.topK(batch, k), batchId)
     (quantizer match {
-      case Ivf.Flat(cents) =>
-        queries
-          .select(col("vec_id").as("qid"),
-            col("embedding").cast("array<double>").as("qv"))
-          .withColumn("cid", explode(probeCids(col("qv"), cents, nprobe)))
-          .join(enc, Seq("cid"))
-          .where(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id").as("id2"),
-            round(graft.functions.cosine_sim(col("qv"), col("recon")), 6).as("cos"))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            sink(Similarity.topK(batch, k), batchId)
-          }
-      case tl: Ivf.TwoLevelModel =>
-        queries.writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            sink(Ivf.ivfPqSearch(enc, tl, batch, k, nprobe), batchId)
-          }
+      case _: Ivf.Flat => cand(queries).writeStream.outputMode("append").foreachBatch(top)
+      case _: Ivf.TwoLevelModel =>
+        queries.writeStream.outputMode("append")
+          .foreachBatch((batch: DataFrame, batchId: Long) => top(cand(batch), batchId))
     }).start()
+  }
 
   /** Serve FILTERED top-k per arriving query — the metadata-predicate
-    * serving path matching batch `Ivf.searchTopKFilteredWith`: the
+    * serving path matching batch `Ivf.searchTopKFiltered`: the
     * predicate applies INSIDE the candidate scan (pushed to the static
     * corpus read) and underfilled queries take the exact rescue pass, so
     * every arriving query gets k results whenever ≥ k survivors exist.
@@ -175,12 +121,12 @@ object StreamingAnnServe {
     * `Materialize.releaseAll` at corpus-snapshot boundaries.
     */
   def serveFiltered(queries: DataFrame, emb: DataFrame,
-                    cents: Array[Array[Double]], k: Int, pred: Column,
+                    quantizer: Ivf.Quantizer, k: Int, pred: Column,
                     nprobe: Int = 4)(sink: (DataFrame, Long) => Unit): StreamingQuery =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.searchTopKFilteredWith(emb, batch, k, pred, cents, nprobe), batchId)
+        sink(Ivf.searchTopKFiltered(emb, quantizer, batch, k, pred, nprobe), batchId)
       }
       .start()
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Retrieval
+import graft.ops.{Ivf, Retrieval}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -46,18 +46,18 @@ object StreamingHybridServe {
       .start()
 
   /** Index-served semantic branch: the persisted-IVF scale path
-    * ([[Retrieval.hybridRrfMultiWith]] — probes prune the corpus to
-    * `nprobe` cells per query). At nprobe = numCells this equals
-    * [[serve]] row-for-row (the spec's equality anchor).
+    * ([[Retrieval.hybridRrfIvf]] — probes prune the corpus to `nprobe`
+    * cells per query), under either quantizer. Probing every cell
+    * equals [[serve]] row-for-row (the spec's equality anchor).
     */
   def serveIvf(queries: DataFrame, docs: DataFrame, emb: DataFrame,
-               cents: Array[Array[Double]], nprobe: Int = 4,
+               quantizer: Ivf.Quantizer, nprobe: Int = 4,
                n: Int = 20, k: Int = 10, c: Int = 60)
               (sink: (DataFrame, Long) => Unit): StreamingQuery =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Retrieval.hybridRrfMultiWith(docs, emb, batch, cents, nprobe,
+        sink(Retrieval.hybridRrfIvf(docs, emb, batch, quantizer, nprobe,
           n, k, c), batchId)
       }
       .start()

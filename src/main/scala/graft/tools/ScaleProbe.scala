@@ -121,7 +121,8 @@ private final class ScaleProbe(spark: SparkSession, dir: String) {
     val ne = emb.count()
     val q = emb.where(col("vec_id") < 10)
     time(s"ann_ivf x$k ($ne vecs)") {
-      graft.ops.Ivf.searchTopK(emb, q, 5, iters = 0).count()
+      graft.ops.Ivf.searchTopK(emb, graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 16, iters = 0)),
+        q, 5).count()
     }
     time(s"ann_lsh_multi x$k") {
       graft.ops.Similarity.lshTopKMulti(spark, emb, q, 5).count()
@@ -147,9 +148,9 @@ private final class ScaleProbe(spark: SparkSession, dir: String) {
     exact.count()
     def probe(label: String)(f: => DataFrame): Unit =
       time(s"$label ($n vecs)")(f"recall@$k=${Similarity.recallAtK(exact, f)}%.3f")
-    val model = Ivf.train(emb, 16, 2)
+    val model = Ivf.Flat(Ivf.train(emb, 16, 2))
     Seq(1, 2, 4, 8, 16).foreach { p =>
-      probe(s"ivf nprobe=$p/16")(Ivf.searchTopKWith(emb, q, k, model, p))
+      probe(s"ivf nprobe=$p/16")(Ivf.searchTopK(emb, model, q, k, p))
     }
     // compressed-domain paths: plain PQ vs the residual IVF-PQ index at
     // the same code bytes (m=4 x 16 entries), pruning knob swept

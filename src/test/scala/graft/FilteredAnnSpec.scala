@@ -18,6 +18,7 @@ class FilteredAnnSpec extends SparkSpec {
   private lazy val e = spark.read.parquet(s"$Sf0001/embeddings.parquet")
   private lazy val q = e.where(col("vec_id") < 10)
   private def pred = col("label") === 7
+  private def flat = Ivf.Flat(Ivf.train(e, 16, iters = 0))
 
   private def sameRows(a: org.apache.spark.sql.DataFrame,
                        b: org.apache.spark.sql.DataFrame): Boolean =
@@ -26,7 +27,7 @@ class FilteredAnnSpec extends SparkSpec {
   test("filtered search returns exactly k rows per query (k-guarantee)") {
     val survivors = e.where(pred).count()
     assert(survivors >= 11, s"fixture drift: want >= 11 label-7 rows, got $survivors")
-    val r = Ivf.searchTopKFiltered(e, q, 10, pred, iters = 0).cache()
+    val r = Ivf.searchTopKFiltered(e, flat, q, 10, pred).cache()
     val counts = r.groupBy(col("qid")).count().collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(counts.size == 10, s"expected all 10 queries answered: $counts")
@@ -39,7 +40,7 @@ class FilteredAnnSpec extends SparkSpec {
   }
 
   test("full probe == post-filtered exact (flat)") {
-    val full = Ivf.searchTopKFiltered(e, q, 10, pred, nprobe = 16, iters = 0)
+    val full = Ivf.searchTopKFiltered(e, flat, q, 10, pred, nprobe = 16)
     val exact = Similarity.bruteForceTopK(spark, e.where(pred), q, 10)
     assert(sameRows(full, exact),
       "probing every cell must reduce filtered IVF to post-filtered exact")
@@ -52,13 +53,13 @@ class FilteredAnnSpec extends SparkSpec {
     val sparse = pred && col("vec_id") % 7 === 0
     val n = e.where(sparse).count()
     assert(n > 0 && n < 10, s"fixture drift: want 1-9 sparse survivors, got $n")
-    val r = Ivf.searchTopKFiltered(e, q, 10, sparse, iters = 0)
+    val r = Ivf.searchTopKFiltered(e, flat, q, 10, sparse)
     val exact = Similarity.bruteForceTopK(spark, e.where(sparse), q, 10)
     assert(sameRows(r, exact), "starved filtered search must equal exact")
   }
 
   test("probe recall vs post-filtered exact is measured and floored") {
-    val approx = Ivf.searchTopKFiltered(e, q, 10, pred, iters = 0)
+    val approx = Ivf.searchTopKFiltered(e, flat, q, 10, pred)
     val exact = Similarity.bruteForceTopK(spark, e.where(pred), q, 10)
     val rec = Similarity.recallAtK(exact, approx)
     // nprobe/numCells = 1/4 of cells scanned; rescue tops up underfilled

@@ -719,7 +719,8 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val exact = Similarity.bruteForceTopK(spark, e, queries, 5)
       .select("qid", "id2").as[(Long, Long)].collect().toSet
-    val ivf = graft.ops.Ivf.searchTopK(e, queries, 5)
+    val ivf = graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e)),
+        queries, 5)
       .select("qid", "id2").as[(Long, Long)].collect().toSet
     assert(ivf.nonEmpty)
     val recall = (exact & ivf).size.toDouble / exact.size
@@ -732,9 +733,9 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(spark, e, queries, 5)
     // IVF: candidates grow as a superset with nprobe → recall never drops;
     // probing every cell scores the whole corpus → recall exactly 1
-    val model = graft.ops.Ivf.train(e, 16, 2)
+    val model = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, 2))
     val ivfCurve = Seq(1, 4, 16).map(p => Similarity.recallAtK(exact,
-      graft.ops.Ivf.searchTopKWith(e, queries, 5, model, p)))
+      graft.ops.Ivf.searchTopK(e, model, queries, 5, p)))
     assert(ivfCurve.sliding(2).forall(w => w(0) <= w(1)), s"ivf curve $ivfCurve")
     assert(ivfCurve.last == 1.0, s"full-probe ivf must be exact: $ivfCurve")
     // multi-LSH: tables 0..T-1 ⊆ 0..T → candidate superset → monotone
@@ -756,8 +757,8 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     def run(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id2", "cos").as[(Long, Long, Double)].collect().toSet
-    assert(run(graft.ops.Ivf.searchTopKWith(e, queries, 5, loaded)) ==
-      run(graft.ops.Ivf.searchTopKWith(e, queries, 5, model)))
+    assert(run(graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(loaded), queries, 5)) ==
+      run(graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(model), queries, 5)))
   }
 
   test("embedding profile reports per-dimension stats") {
@@ -772,13 +773,14 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.table(spark, Sf0001, "embeddings")
     val queries = e.where(col("vec_id") < 10)
     import spark.implicits._
-    val model = graft.ops.Ivf.train(e) // train ONCE
+    val model = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e)) // train ONCE
     def run(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id2", "cos").as[(Long, Long, Double)].collect().toSet
-    val selfTrained = run(graft.ops.Ivf.searchTopK(e, queries, 5))
+    val oneShot = run(graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e)),
+      queries, 5))
     // two searches against the shared model: both equal the one-shot path
-    assert(run(graft.ops.Ivf.searchTopKWith(e, queries, 5, model)) == selfTrained)
-    assert(run(graft.ops.Ivf.searchTopKWith(e, queries, 5, model)) == selfTrained)
+    assert(run(graft.ops.Ivf.searchTopK(e, model, queries, 5)) == oneShot)
+    assert(run(graft.ops.Ivf.searchTopK(e, model, queries, 5)) == oneShot)
   }
 
   test("blocked exact pair search matches the all-pairs reference") {
@@ -888,15 +890,16 @@ class TextAnalysisSpec extends SparkSpec {
     // minus self, so the probe top-k EQUALS the brute top-k — recall must
     // be exactly 1.0 for every query, with the full-k denominator
     val e = Tables.table(spark, Sf0001, "embeddings")
-    val out = graft.ops.Ivf.annRecall(e, e.where(col("vec_id") < 5), 5,
-      numCells = 16, nprobe = 16).collect()
+    val flat = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 16, iters = 0))
+    val out = graft.ops.Ivf.annRecall(e, flat, e.where(col("vec_id") < 5), 5,
+      nprobe = 16).collect()
     assert(out.length == 5)
     assert(out.forall(_.getAs[Long]("n_brute") == 5L))
     assert(out.forall(_.getAs[Double]("recall") == 1.0))
     // at the bench configuration (nprobe 4/16) recall is a real fraction
     // in (0, 1] and n_hits never exceeds the brute count
-    val part = graft.ops.Ivf.annRecall(e, e.where(col("vec_id") < 5), 5,
-      numCells = 16, nprobe = 4).collect()
+    val part = graft.ops.Ivf.annRecall(e, flat, e.where(col("vec_id") < 5), 5,
+      nprobe = 4).collect()
     assert(part.forall(r => r.getAs[Long]("n_hits") <= r.getAs[Long]("n_brute")))
     assert(part.forall(r => r.getAs[Double]("recall") > 0.0))
   }

@@ -321,7 +321,8 @@ class RankEventsSpecs extends SparkSpec {
 
   test("semantic sample: per-cell budget respected, window-free, partitioning-invariant") {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
-    val s = graft.ops.Ivf.semanticSample(emb, numCells = 8, perCell = 5)
+    val s = graft.ops.Ivf.semanticSample(emb,
+      graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0)), perCell = 5)
     // the per-cell pick must be the bounded heap aggregate, never a window
     // over the (giant at 100 TB) cell partitions
     assert(!s.queryExecution.executedPlan.toString.contains("Window"),
@@ -334,7 +335,9 @@ class RankEventsSpecs extends SparkSpec {
     byCell.values.foreach(c => assert(c.map(_._3).sorted.toSeq == (1L to c.length).toSeq))
     // deterministic under a different input partitioning (the hash order
     // is content-based, not physical)
-    val s2 = graft.ops.Ivf.semanticSample(emb.repartition(13), numCells = 8, perCell = 5)
+    val e13 = emb.repartition(13)
+    val s2 = graft.ops.Ivf.semanticSample(e13,
+        graft.ops.Ivf.Flat(graft.ops.Ivf.train(e13, 8, iters = 0)), perCell = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.toSet == s2.toSet)
   }
@@ -574,7 +577,7 @@ class RankEventsSpecs extends SparkSpec {
     val emb = graft.core.Tables.table(spark, Sf0001, "embeddings")
     val batch = emb.where(col("vec_id") % 10 === 0)
     val corpus = emb.where(col("vec_id") % 10 =!= 0)
-    val out = Ivf.incrementalSemantic(batch, corpus)
+    val out = Ivf.incrementalSemantic(batch, corpus, Ivf.Flat(Ivf.train(corpus, 16, iters = 0)))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
         Option(r.get(3)).map(_.asInstanceOf[Double]), r.getBoolean(4)))
@@ -607,12 +610,14 @@ class RankEventsSpecs extends SparkSpec {
     val cvecs = (1L to 150L).map(i => (i, Array.fill(dim)(0.1f + i * 1e-4f)))
     val c1 = cvecs.toDF("vec_id", "embedding")
     val b1 = Seq((1000L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    val capped = Ivf.incrementalSemantic(b1, c1, numCells = 1, maxCell = 20)
+    val capped = Ivf.incrementalSemantic(b1, c1, Ivf.Flat(Ivf.train(c1, 1, iters = 0)),
+        maxCell = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).head
     graft.core.Materialize.releaseAll(spark, blocking = true)
     assert(capped._2 == 20L, s"expected 20 screened, got ${capped._2}")
     // empty corpus -> empty model: trivially novel, never a crash
-    val none = Ivf.incrementalSemantic(b1, c1.where(col("vec_id") < 0))
+    val c0 = c1.where(col("vec_id") < 0)
+    val none = Ivf.incrementalSemantic(b1, c0, Ivf.Flat(Ivf.train(c0, 16, iters = 0)))
       .collect().head
     assert(none.getLong(1) == 0L && none.isNullAt(2) && none.getBoolean(4))
   }
@@ -646,9 +651,11 @@ class RankEventsSpecs extends SparkSpec {
     graft.ops.Ivf.saveModel(spark,
       graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, k = 8, iters = 0)), dir)
     val graft.ops.Ivf.Flat(model) = graft.ops.Ivf.loadModel(spark, dir)
-    val sampleInPlace = graft.ops.Ivf.semanticSample(emb, numCells = 8, perCell = 5)
+    val sampleInPlace = graft.ops.Ivf.semanticSample(emb,
+        graft.ops.Ivf.Flat(graft.ops.Ivf.train(emb, 8, iters = 0)), perCell = 5)
       .collect().map(_.toSeq).toSet
-    val sampleServed = graft.ops.Ivf.semanticSampleWith(emb, model, perCell = 5)
+    val sampleServed = graft.ops.Ivf.semanticSample(emb, graft.ops.Ivf.Flat(model),
+        perCell = 5)
       .collect().map(_.toSeq).toSet
     assert(sampleServed == sampleInPlace)
     val ndInPlace = graft.ops.Ivf.semanticNearDup(emb,

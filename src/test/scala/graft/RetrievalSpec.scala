@@ -73,9 +73,9 @@ class RetrievalSpec extends SparkSpec {
       assert(ours == single,
         s"qid $vid: the multi kernel must replay the single-query fusion")
     }
-    val cents = graft.ops.Ivf.train(e, 8, iters = 1)
+    val model = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e, 8, iters = 1))
     val ivf = graft.ops.Retrieval
-      .hybridRrfMultiWith(docs, e, qframe, cents, nprobe = 8)
+      .hybridRrfIvf(docs, e, qframe, model, nprobe = 8)
       .collect().map(_.toString).sorted
     assert(ivf.sameElements(multi.map(_.toString).sorted),
       "all cells probed ⇒ the index face equals the exact face")

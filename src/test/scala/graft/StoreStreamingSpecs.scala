@@ -1156,11 +1156,11 @@ class StreamingAnnServeSpec extends SparkSpec {
     // serving job
     val dir = Files.createTempDirectory("graft_ivf_model").toString
     Ivf.saveModel(spark, Ivf.Flat(Ivf.train(emb, k = 8, iters = 1)), dir)
-    val Ivf.Flat(model) = Ivf.loadModel(spark, dir)
+    val model = Ivf.loadModel(spark, dir)
 
     val qs = queryRows(6)
-    val batchTruth = Ivf.searchTopKWith(
-      emb, emb.where(col("vec_id") < 6), 5, model, nprobe = 3)
+    val batchTruth = Ivf.searchTopK(
+      emb, model, emb.where(col("vec_id") < 6), 5, nprobe = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
 
     val stream = MemoryStream[(Long, Seq[Double])]
@@ -1179,7 +1179,7 @@ class StreamingAnnServeSpec extends SparkSpec {
       stream.addData(qs.drop(2): _*)
       q.processAllAvailable()
       assert(got.toSet == batchTruth,
-        "stream-served IVF top-k must equal the batch searchTopKWith answer")
+        "stream-served IVF top-k must equal the batch searchTopK answer")
     } finally q.stop()
   }
 
@@ -1187,7 +1187,7 @@ class StreamingAnnServeSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings
-    val model = Ivf.train(emb, k = 4, iters = 0)
+    val model = Ivf.Flat(Ivf.train(emb, k = 4, iters = 0))
     val stream = MemoryStream[(Long, Seq[Double])]
     val cand = graft.streaming.StreamingAnnServe.candidates(
       stream.toDF.toDF("vec_id", "embedding"), emb, model, nprobe = 2)
@@ -1235,11 +1235,11 @@ class StreamingAnnServeSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val emb = embeddings
-    val model = Ivf.train(emb, k = 16, iters = 0)
+    val model = Ivf.Flat(Ivf.train(emb, k = 16, iters = 0))
     val pred = col("label") === 7
     // k above the per-cell survivor density so SOME queries rescue
-    val batchTruth = Ivf.searchTopKFilteredWith(
-      emb, emb.where(col("vec_id") < 6), 10, pred, model, nprobe = 4)
+    val batchTruth = Ivf.searchTopKFiltered(
+      emb, model, emb.where(col("vec_id") < 6), 10, pred, nprobe = 4)
       .as[(Long, Long, Double, Long)].collect().toSet
 
     val stream = MemoryStream[(Long, Seq[Double])]
@@ -1595,7 +1595,7 @@ class StreamingSemanticScreenSpec extends SparkSpec {
     val corpus = emb.where(col("vec_id") % 10 =!= 0)
     val cents = graft.ops.Ivf.train(corpus, 16, iters = 0)
     // batch truth: the same screen set, assign + join + rounded cosine
-    val screen = graft.ops.Ivf.screenSet(corpus, cents, 64)
+    val screen = graft.ops.Ivf.screenOnCells(graft.ops.Ivf.Flat(cents).cells(corpus), 64)
     val truth = graft.ops.Ivf.assign(
         batchSide.select(col("vec_id"),
           col("embedding").cast("array<double>").as("v")), cents)
@@ -1612,7 +1612,7 @@ class StreamingSemanticScreenSpec extends SparkSpec {
       .map { case (id, v) => (id, ts(T0 + id), v.map(_.toDouble)) }
     val stream = MemoryStream[(Long, java.sql.Timestamp, Seq[Double])]
     val out = graft.streaming.StreamingSemanticScreen.run(
-      stream.toDF.toDF("vec_id", "ts", "embedding"), corpus, cents)
+      stream.toDF.toDF("vec_id", "ts", "embedding"), corpus, graft.ops.Ivf.Flat(cents))
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("sem_screen_out").start()
     try {
@@ -1940,7 +1940,7 @@ class StreamingHybridServeSpec extends SparkSpec {
       .select(col("vec_id"), col("terms"), col("embedding"))
     val dir = Files.createTempDirectory("graft_hybrid_model").toString
     Ivf.saveModel(spark, Ivf.Flat(Ivf.train(emb, k = 8, iters = 1)), dir)
-    val Ivf.Flat(model) = Ivf.loadModel(spark, dir)
+    val model = Ivf.loadModel(spark, dir)
     val exact = graft.ops.Retrieval.hybridRrfMulti(docs, emb, qframe)
       .collect().map(_.toString).toSet
     graft.core.Materialize.releaseAll(spark, blocking = true)

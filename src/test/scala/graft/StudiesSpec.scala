@@ -184,7 +184,7 @@ class StudiesSpec extends SparkSpec {
       (10L, Seq(0f, 1f)), (11L, Seq(0f, 1f))) // flat cell: var 0 -> null z
       .toDF("vec_id", "embedding")
     val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-    val r = graft.ops.Ivf.embeddingOutliersWith(emb, cents, z = 1.0).collect()
+    val r = graft.ops.Ivf.embeddingOutliers(emb, graft.ops.Ivf.Flat(cents), z = 1.0).collect()
       .map(x => x.getAs[Long]("vec_id") ->
         (x.getAs[Double]("ccos"), x.isNullAt(x.fieldIndex("zscore")),
           x.getAs[Boolean]("is_outlier"))).toMap

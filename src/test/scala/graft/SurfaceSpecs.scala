@@ -336,3 +336,42 @@ class AsofSqlSpec extends SparkSpec {
     assert(lit == "ASOF JOIN c")
   }
 }
+
+/** No public face of the vector family takes a raw centroid matrix: each
+  * takes an `Ivf.Quantizer`, so both the flat and the two-level model
+  * serve every face, and a raw-matrix `*With` twin cannot come back.
+  * `Ivf.retrain` is the one exception: it refines a given matrix into the
+  * next one, a model-building step like `train`. The quantizer classes
+  * themselves (`Ivf.Flat`, `Ivf.TwoLevelModel`) hold the matrices and are
+  * not methods of these objects. Scala reflection, not Java's: a
+  * `private[graft]` def is public in bytecode but not part of the surface.
+  */
+class CentroidSurfaceSpec extends org.scalatest.funsuite.AnyFunSuite {
+  test("no public Ivf, Retrieval or streaming method takes an Array[Array[Double]]") {
+    import scala.reflect.runtime.{universe => ru}
+    val mirror = ru.runtimeMirror(getClass.getClassLoader)
+    val streamingDir = new java.io.File(
+      getClass.getClassLoader.getResource("graft/streaming").toURI)
+    // top-level objects compile to `Name$.class`; nested and anonymous
+    // classes carry a second `$`
+    val streaming = streamingDir.list().toSeq
+      .filter(f => f.endsWith("$.class") && f.count(_ == '$') == 1)
+      .map(f => "graft.streaming." + f.stripSuffix("$.class")).sorted
+    assert(streaming.contains("graft.streaming.StreamingAnnServe") &&
+      streaming.contains("graft.streaming.StreamingSemanticScreen"),
+      s"the streaming objects were not found: $streaming")
+    val matrix = ru.typeOf[Array[Array[Double]]]
+    val allowed = Set("graft.ops.Ivf.retrain")
+    val offenders = for {
+      obj <- Seq("graft.ops.Ivf", "graft.ops.Retrieval") ++ streaming
+      m <- mirror.staticModule(obj).moduleClass.asClass.toType.decls.toSeq
+        .collect { case s: ru.MethodSymbol if s.isPublic && !s.isConstructor => s }
+      if m.paramLists.flatten.exists(_.typeSignature =:= matrix)
+      name = s"$obj.${m.name.decodedName}"
+      if !allowed(name)
+    } yield name
+    assert(offenders.isEmpty,
+      "public methods taking a raw centroid matrix (take an Ivf.Quantizer): " +
+        offenders.distinct.mkString(", "))
+  }
+}

@@ -1,7 +1,9 @@
 package graft
 
-import graft.ops.Ivf
-import org.apache.spark.sql.DataFrame
+import graft.ops.{Ivf, Retrieval}
+import graft.streaming.{StreamingAnnServe, StreamingSemanticNearDup, StreamingSemanticScreen}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,6 +16,7 @@ class TwoLevelIvfSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val emb = spark.read.parquet(s"$Sf0001/embeddings.parquet")
+  private lazy val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
 
   private def toyEmb(rows: Seq[(Long, Seq[Double])]): DataFrame =
     rows.toDF("vec_id", "embedding")
@@ -21,12 +24,16 @@ class TwoLevelIvfSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  /** Every cell-routed face, run on `e` under a given quantizer. The
-    * IVF-PQ searches take `e`'s rows with vec_id < 10 as queries; the
-    * filtered ones keep label 7 (carried through the encode). */
-  private def faces(e: DataFrame): Seq[(String, Ivf.Quantizer => DataFrame)] = {
+  /** Every centroid face, run on `e` (and, for hybrid retrieval, `d`)
+    * under a given quantizer. The searches take `e`'s rows with vec_id <
+    * 10 as queries; the filtered ones keep label 7 (carried through the
+    * IVF-PQ encode); the incremental screens screen those rows against
+    * `e`. The streamed faces feed the queries through a MemoryStream. */
+  private def faces(e: DataFrame, d: DataFrame): Seq[(String, Ivf.Quantizer => DataFrame)] = {
     val q = e.where(col("vec_id") < 10)
     val label7 = col("label") === 7
+    val hybridQ = q.select(col("vec_id"), array(lit("data"), lit("model")).as("terms"),
+      col("embedding"))
     def enc(qz: Ivf.Quantizer) = Ivf.ivfPqReconFrame(e, qz, passthrough = Seq("label"))
     Seq(
       "knnGraph" -> (qz => Ivf.knnGraph(e, qz, 5)),
@@ -44,28 +51,51 @@ class TwoLevelIvfSpec extends SparkSpec {
         Ivf.ivfPqSearchRerank(Ivf.ivfPqReconFrame(e, qz), e, qz, q, 5)),
       "ivfPqSearchFiltered" -> (qz => Ivf.ivfPqSearchFiltered(enc(qz), qz, q, 10, label7)),
       "ivfPqSearchRerankFiltered" -> (qz =>
-        Ivf.ivfPqSearchRerankFiltered(enc(qz), e, qz, q, 10, label7)))
+        Ivf.ivfPqSearchRerankFiltered(enc(qz), e, qz, q, 10, label7)),
+      "searchTopK" -> (qz => Ivf.searchTopK(e, qz, q, 5)),
+      "searchTopKFiltered" -> (qz => Ivf.searchTopKFiltered(e, qz, q, 10, label7)),
+      "annRecall" -> (qz => Ivf.annRecall(e, qz, q, 5)),
+      "semanticSample" -> (qz => Ivf.semanticSample(e, qz)),
+      "embeddingOutliers" -> (qz => Ivf.embeddingOutliers(e, qz)),
+      "incrementalSemantic" -> (qz => Ivf.incrementalSemantic(q, e, qz)),
+      "hybridRrfIvf" -> (qz => Retrieval.hybridRrfIvf(d, e, hybridQ, qz)),
+      "StreamingAnnServe.serve" -> (qz =>
+        streamed(q)((in, sink) => StreamingAnnServe.serve(in, e, qz, 5)(sink))),
+      "StreamingSemanticScreen.run" -> (qz =>
+        streamed(q)((in, sink) => StreamingSemanticScreen.run(in, e, qz)
+          .writeStream.foreachBatch(sink).start())))
   }
 
-  /** The streaming near-dup screen's pairs over `e`, fed in 3 micro-batches. */
-  private def streamedPairs(e: DataFrame, qz: Ivf.Quantizer, name: String): Set[Seq[Any]] = {
+  /** Feeds `in`'s (vec_id, ts = 0, embedding) rows to the stream `start`
+    * builds, in 3 micro-batches, and returns every row its sink received. */
+  private def streamed(in: DataFrame)(
+      start: (DataFrame, (DataFrame, Long) => Unit) => StreamingQuery): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ts = new java.sql.Timestamp(0L)
-    val in = e.select(col("vec_id"), col("embedding").cast("array<double>"))
+    val rows = in.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().map { case (id, v) => (id, ts, v) }
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Long, java.sql.Timestamp, Seq[Double])]
-    val sq = graft.streaming.StreamingSemanticNearDup.run(
-        stream.toDF.toDF("vec_id", "ts", "embedding"), qz, watermark = "1 hour")
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    val got = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var schema = new StructType()
+    val sq = start(stream.toDF.toDF("vec_id", "ts", "embedding"), (batch, _) =>
+      got.synchronized { schema = batch.schema; got ++= batch.collect() })
     try {
-      in.grouped((in.length + 2) / 3).foreach { g =>
+      sq.processAllAvailable()
+      rows.grouped(math.max(1, (rows.length + 2) / 3)).foreach { g =>
         stream.addData(g.toIndexedSeq: _*)
         sq.processAllAvailable()
       }
-      rows(spark.sql(s"SELECT cid, id1, id2, cos FROM $name"))
     } finally sq.stop()
+    got.synchronized(spark.createDataFrame(
+      spark.sparkContext.parallelize(got.toSeq), schema))
   }
+
+  /** The streaming near-dup screen's pairs over `e`, fed in 3 micro-batches. */
+  private def streamedPairs(e: DataFrame, qz: Ivf.Quantizer): Set[Seq[Any]] =
+    rows(streamed(e)((in, sink) =>
+      StreamingSemanticNearDup.run(in, qz, watermark = "1 hour").toDF()
+        .writeStream.outputMode("append").foreachBatch(sink).start()))
 
   /** Runs the faces `pick` selects on the flat iters=0 model and on a k1=1
     * two-level model, and asserts both give the same rows. k1 = 1 → sub-seeds
@@ -76,7 +106,7 @@ class TwoLevelIvfSpec extends SparkSpec {
     * re-assigns — both must agree. */
   private def assertK1EqualsFlat(pick: String => Boolean): Unit = {
     val flat = Ivf.Flat(Ivf.train(emb, 16, iters = 0))
-    val picked = faces(emb).filter { case (face, _) => pick(face) }
+    val picked = faces(emb, docs).filter { case (face, _) => pick(face) }
     assert(picked.nonEmpty, "no face selected")
     picked.foreach { case (face, run) =>
       // trained per face: the training cut lives until the release below
@@ -93,10 +123,11 @@ class TwoLevelIvfSpec extends SparkSpec {
   /** Runs the faces `pick` selects on an empty corpus, flat and two-level. */
   private def assertEmptyIsResult(pick: String => Boolean): Unit = {
     val empty = Seq.empty[(Long, Seq[Double], Long)].toDF("vec_id", "embedding", "label")
+    val noDocs = docs.limit(0)
     val quantizers = Seq(
       "flat" -> Ivf.Flat(Ivf.train(empty, 16, iters = 0)),
       "two-level" -> Ivf.trainTwoLevel(empty, 2, 2))
-    val picked = faces(empty).filter { case (face, _) => pick(face) }
+    val picked = faces(empty, noDocs).filter { case (face, _) => pick(face) }
     assert(picked.nonEmpty, "no face selected")
     quantizers.foreach { case (kind, qz) =>
       assert(qz.isEmpty, s"$kind: empty corpus must train an empty model")
@@ -107,9 +138,10 @@ class TwoLevelIvfSpec extends SparkSpec {
   }
 
   // Which faces each of the tests below covers; "every face" runs the rest.
-  private def isSemantic(face: String) = face.startsWith("semantic")
+  private def isSemantic(face: String) =
+    face.startsWith("semanticNearDup") || face.startsWith("semanticDedup")
   private def isIvfPq(face: String) = face.startsWith("ivfPq")
-  private def isFiltered(face: String) = face.endsWith("Filtered")
+  private def isFiltered(face: String) = isIvfPq(face) && face.endsWith("Filtered")
 
   test("knnGraphTwoLevel: k1=1 equals the flat knnGraph exactly (sf0.001)") {
     assertK1EqualsFlat(_ == "knnGraph")
@@ -131,8 +163,8 @@ class TwoLevelIvfSpec extends SparkSpec {
     assertK1EqualsFlat(f => f != "knnGraph" && !isSemantic(f) && !isIvfPq(f))
     val flat = Ivf.Flat(Ivf.train(emb, 16, iters = 0))
     val sub = emb.where(col("vec_id") < 200)
-    assert(streamedPairs(sub, Ivf.trainTwoLevel(sub, 1, 16), "tl_k1_pairs") ==
-      streamedPairs(sub, flat, "flat_pairs"),
+    assert(streamedPairs(sub, Ivf.trainTwoLevel(sub, 1, 16)) ==
+      streamedPairs(sub, flat),
       "streaming near-dup screen: two-level (k1=1) != flat")
   }
 

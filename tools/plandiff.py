@@ -13,6 +13,9 @@ tokens, and nothing else:
   - RDD ids             `MapPartitionsRDD[27]`, `rdd_27_0` -> `...RDD[N]`, `rdd_N_0`
   - call-site suffixes  `Materialize.scala:128`        -> `Materialize.scala:N`
   - JVM lambda classes  `Analytics$$$Lambda$4445/0x00007f8d3926b2a8` -> `...$Lambda$N`
+  - lambda variables    `lambda x_6#N`, `lambda y_7#N`  -> `lambda x_N`, `lambda y_N`
+    (numbered by a JVM-wide counter, so building one more higher-order
+    function earlier in the run renumbers every later one)
   - JVM identity hashes `TopKByScore@57ac220f`, `[D@7475f57e` -> `...@H`
     (lambda class names and objects printed by their default toString
     differ between two runs of the same commit)
@@ -31,6 +34,7 @@ _RULES = [
     (re.compile(r"\brdd_\d+"), "rdd_N"),
     (re.compile(r"\b(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),
     (re.compile(r"(?<=[\w\[$])@[0-9a-f]{1,8}\b"), "@H"),
 ]
 
