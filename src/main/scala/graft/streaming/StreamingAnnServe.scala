@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Ivf, Similarity}
+import graft.ops.Ivf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,20 +11,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (train/encode once per corpus snapshot in the indexing job, serve
   * every arriving query against the persisted model via `Ivf.loadModel`).
   *
-  * Scale design: the quantizer routes the corpus and ranks each query's
-  * probes, exactly as in the batch path. A flat model's probe is one
-  * map-only expression over its literal centroids (no window, no state),
-  * so candidate generation is a stream-STATIC equi-join on the cell id —
-  * stateless streaming, no watermark, plain append; the static side is
-  * fixed per corpus snapshot (persist it across micro-batches). A
-  * query's candidates all materialize inside its arrival micro-batch
-  * (the corpus side is static), so the exact per-query top-k needs no
-  * cross-batch state either: each batch closes with the same
-  * bounded-heap TopKByScore aggregate the batch path uses. A two-level
-  * model's hierarchical probe ranks with windows over broadcast model
-  * frames, which a stream cannot run, so each micro-batch replays the
-  * batch kernel. Either way stream results equal the batch search
-  * row-for-row (spec-pinned).
+  * Scale design: every server replays its batch kernel in each
+  * micro-batch (`foreachBatch`), so stream results equal the batch
+  * search row-for-row (spec-pinned) on either quantizer. A query's
+  * candidates all materialize inside its arrival micro-batch (the
+  * corpus side is static), so the exact per-query top-k needs no
+  * cross-batch state: no state store, no watermark, plain append; the
+  * static side is fixed per corpus snapshot (persist it across
+  * micro-batches). [[candidates]] is the stream-static form for
+  * composing downstream: a flat model's probe is one map-only
+  * expression over its literal centroids, so the stream itself joins
+  * the static corpus.
   */
 object StreamingAnnServe {
 
@@ -32,14 +29,13 @@ object StreamingAnnServe {
     * corpus vector in the query's probed cells. Append-mode safe (no
     * aggregation, no watermark, no state store); each match emits exactly
     * once, in the query's arrival micro-batch. Compose downstream (e.g.
-    * a threshold filter for radius search) or close with [[serve]] for
-    * exact per-query top-k. A stream needs a flat model here (the
-    * two-level probe's windows do not run on a stream); a batch query
-    * frame takes either quantizer.
+    * a threshold filter for radius search) or use [[serve]] for exact
+    * per-query top-k. Flat models only: the two-level probe ranks with
+    * windows, which a stream cannot run.
     */
-  def candidates(queries: DataFrame, emb: DataFrame, quantizer: Ivf.Quantizer,
+  def candidates(queries: DataFrame, emb: DataFrame, model: Ivf.Flat,
                  nprobe: Int = 4): DataFrame =
-    Ivf.candidates(emb, quantizer, queries, nprobe)
+    Ivf.candidates(emb, model, queries, nprobe)
 
   /** Serve exact IVF top-k per arriving query. `sink` receives each
     * batch's (qid, id2, cos, rn) top-k frame; at stream end the union of
@@ -54,7 +50,7 @@ object StreamingAnnServe {
     */
   def serve(queries: DataFrame, emb: DataFrame, quantizer: Ivf.Quantizer,
             k: Int, nprobe: Int = 4)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    serveProbed(queries, quantizer, k, Ivf.candidates(emb, quantizer, _, nprobe))(sink)
+    replay(queries)(Ivf.searchTopK(emb, quantizer, _, k, nprobe))(sink)
 
   /** Serve PQ (compressed-corpus) top-k per arriving query against a
     * pre-encoded (vec_id, recon) frame from `Ivf.pqReconFrame` — the
@@ -67,54 +63,28 @@ object StreamingAnnServe {
     */
   def servePq(queries: DataFrame, recon: DataFrame, k: Int)
              (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.pqSearchWith(recon, batch, k), batchId)
-      }
-      .start()
+    replay(queries)(Ivf.pqSearchWith(recon, _, k))(sink)
 
   /** Serve IVF-PQ top-k per arriving query against a pre-encoded
     * (vec_id, cid, recon) frame from `Ivf.ivfPqReconFrame` plus the
     * quantizer it was encoded under: probed cells only, ADC scoring on
     * the residual reconstruction. Stream results equal the batch
     * `Ivf.ivfPqSearch` row-for-row (spec-pinned, both quantizers); same
-    * dispatch, zero-state/no-watermark shape and distinct-qid-per-stream
-    * assumption as [[serve]].
+    * zero-state/no-watermark shape and distinct-qid-per-stream assumption
+    * as [[serve]].
     */
   def serveIvfPq(queries: DataFrame, enc: DataFrame,
                  quantizer: Ivf.Quantizer, k: Int, nprobe: Int = 4)
                 (sink: (DataFrame, Long) => Unit): StreamingQuery =
-    serveProbed(queries, quantizer, k,
-      q => Ivf.probed(enc, quantizer.probes(q, nprobe), "recon"))(sink)
-
-  /** The one serving dispatch under [[serve]] and [[serveIvfPq]]: `cand`
-    * builds a query frame's probed-cell candidates, and each micro-batch
-    * closes with the bounded top-k. A flat model's map-only probe lets
-    * the stream itself join the static corpus (stateless stream-static);
-    * a two-level model replays the batch kernel in each micro-batch.
-    */
-  private def serveProbed(queries: DataFrame, quantizer: Ivf.Quantizer, k: Int,
-                          cand: DataFrame => DataFrame)
-                         (sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val top = (batch: DataFrame, batchId: Long) => sink(Similarity.topK(batch, k), batchId)
-    (quantizer match {
-      case _: Ivf.Flat => cand(queries).writeStream.outputMode("append").foreachBatch(top)
-      case _: Ivf.TwoLevelModel =>
-        queries.writeStream.outputMode("append")
-          .foreachBatch((batch: DataFrame, batchId: Long) => top(cand(batch), batchId))
-    }).start()
-  }
+    replay(queries)(Ivf.ivfPqSearch(enc, quantizer, _, k, nprobe))(sink)
 
   /** Serve FILTERED top-k per arriving query — the metadata-predicate
     * serving path matching batch `Ivf.searchTopKFiltered`: the
     * predicate applies INSIDE the candidate scan (pushed to the static
     * corpus read) and underfilled queries take the exact rescue pass, so
     * every arriving query gets k results whenever ≥ k survivors exist.
-    * Each micro-batch replays the batch kernel via foreachBatch (the
-    * rescue's per-batch candidate counting cannot be expressed as a
-    * stateless stream-static join), so stream results equal the batch
-    * answer by construction — same zero-state shape and
+    * Each micro-batch replays the batch kernel, so stream results equal
+    * the batch answer by construction — same zero-state shape and
     * distinct-qid-per-stream assumption as [[serve]]. The kernel's
     * internal Materialize.once cut runs on the stream-execution thread
     * (default scope): long-lived serving jobs should release via
@@ -123,12 +93,7 @@ object StreamingAnnServe {
   def serveFiltered(queries: DataFrame, emb: DataFrame,
                     quantizer: Ivf.Quantizer, k: Int, pred: Column,
                     nprobe: Int = 4)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.searchTopKFiltered(emb, quantizer, batch, k, pred, nprobe), batchId)
-      }
-      .start()
+    replay(queries)(Ivf.searchTopKFiltered(emb, quantizer, _, k, pred, nprobe))(sink)
 
   /** Serve IVF-PQ top-k WITH the exact re-rank stage — the quality
     * serving path matching batch `Ivf.ivfPqSearchRerank`: per micro-batch,
@@ -144,11 +109,15 @@ object StreamingAnnServe {
                        quantizer: Ivf.Quantizer, k: Int, nprobe: Int = 4,
                        kFactor: Int = 4)
                       (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    replay(queries)(Ivf.ivfPqSearchRerank(enc, emb, quantizer, _, k, nprobe, kFactor))(sink)
+
+  /** The one serving loop: each micro-batch of arriving queries runs the
+    * batch `kernel` and hands its result to `sink` with the batch id.
+    */
+  private def replay(queries: DataFrame)(kernel: DataFrame => DataFrame)
+                    (sink: (DataFrame, Long) => Unit): StreamingQuery =
     queries.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Ivf.ivfPqSearchRerank(enc, emb, quantizer, batch, k, nprobe, kFactor),
-          batchId)
-      }
+      .foreachBatch((batch: DataFrame, batchId: Long) => sink(kernel(batch), batchId))
       .start()
 }

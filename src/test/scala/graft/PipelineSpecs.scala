@@ -776,6 +776,9 @@ class SimilaritySpec extends SparkSpec {
     val model = graft.ops.Ivf.Flat(graft.ops.Ivf.train(e)) // train ONCE
     def run(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id2", "cos").as[(Long, Long, Double)].collect().toSet
+    // searchTopK no longer trains its own model, so the "self-training
+    // path" is now a fresh train per search: this pins train-once-and-reuse
+    // against it (the id is kept for history)
     val oneShot = run(graft.ops.Ivf.searchTopK(e, graft.ops.Ivf.Flat(graft.ops.Ivf.train(e)),
       queries, 5))
     // two searches against the shared model: both equal the one-shot path
